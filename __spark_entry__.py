@@ -5443,7 +5443,8 @@ WITH w AS (
                                  1, 8) AS BIGINT) + 1) / 4294967296.0)
            / CAST(n_chars AS DOUBLE) AS wkey
   FROM documents
-  WHERE n_chars IS NOT NULL AND CAST(n_chars AS DOUBLE) > 0
+  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))
+    AND CAST(n_chars AS DOUBLE) > 0
 )
 SELECT doc_id, weight, round(wkey, 9) AS wkey
 FROM w
@@ -5481,7 +5482,8 @@ WITH w AS (
                                  1, 8) AS BIGINT) + 1) / 4294967296.0)
            / CAST(n_chars AS DOUBLE) AS wkey
   FROM documents
-  WHERE n_chars IS NOT NULL AND CAST(n_chars AS DOUBLE) > 0
+  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))
+    AND CAST(n_chars AS DOUBLE) > 0
 ),
 r AS (
   SELECT *, row_number() OVER (PARTITION BY lang

@@ -733,68 +733,6 @@ def multi_drift_vs_state(
     return _results_from_states(covered, cur_rows, stored_rows)
 
 
-def ks_drift_vs_state(
-    df: DataFrame, col: str, state: DataFrame, threshold: float = 0.01
-) -> DriftResult:
-    """KS drift of ``df[col]`` against a STORED histogram (the prior
-    run's :func:`numeric_state`): the current side is bucketed on the
-    stored grid (one aggregation of the current table; the prior
-    snapshot is never touched), the statistic is the same exact
-    integer cross-multiplication over two ≤bins histograms,
-    driver-side over O(bins) numbers."""
-    srows = [r for r in state.collect() if r["test"] == "ks" and r["column_name"] == col]
-    if not srows:
-        raise ValueError(f"no stored ks state for column [{col}]")
-    lo, hi, bins = srows[0]["lo"], srows[0]["hi"], srows[0]["bins"]
-    m = srows[0]["n"]
-    prev = [0] * bins
-    for r in srows:
-        prev[int(r["bucket"])] = r["cnt"]
-    width = (hi - lo) / bins or 1.0
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(
-            F.lit(0),
-            F.floor((F.col(col).cast("double") - F.lit(lo)) / F.lit(width)),
-        ),
-    )
-    rows_ = (
-        df.filter(F.col(col).isNotNull())
-        .select(bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    cur = [0] * bins
-    for r in rows_:
-        cur[int(r["bucket"])] = r["cnt"]
-    d, n, m = _ks_stat_from_hists(cur, prev)
-    p = mathutil.ks_pvalue(d, n, m) if n and m else 1.0
-    return DriftResult(col, "ks", d, p, p < threshold, threshold, n, m)
-
-
-def chi2_drift_vs_state(
-    df: DataFrame, col: str, state: DataFrame, threshold: float = 0.01
-) -> DriftResult:
-    """Chi-square drift against stored category counts."""
-    srows = [
-        r for r in state.collect()
-        if r["test"] == "chi2" and r["column_name"] == col
-    ]
-    if not srows:
-        raise ValueError(f"no stored chi2 state for column [{col}]")
-    prev = {r["cat"]: r["cnt"] for r in srows}
-    cur = {
-        r["cat"]: r["cnt"]
-        for r in df.groupBy(F.col(col).cast("string").alias("cat"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    stat, dof, n, m = _chi2_stat_from_counts(cur, prev)
-    p = mathutil.chi2_pvalue(stat, dof) if n and m else 1.0
-    return DriftResult(col, "chi2", stat, p, p < threshold, threshold, n, m)
-
-
 def ks_drift(
     cur: DataFrame,
     prev: DataFrame,

@@ -13,11 +13,6 @@ from __future__ import annotations
 import math
 
 
-def ks_statistic(cdf_a: list[float], cdf_b: list[float]) -> float:
-    """sup |F_a - F_b| over shared bin edges."""
-    return max(abs(a - b) for a, b in zip(cdf_a, cdf_b)) if cdf_a else 0.0
-
-
 def ks_pvalue(d: float, n: int, m: int) -> float:
     """Asymptotic two-sample KS p-value (Kolmogorov distribution)."""
     if d <= 0:
@@ -72,14 +67,6 @@ def chi2_pvalue(stat: float, dof: int) -> float:
     if dof <= 0:
         return 1.0
     return min(max(1.0 - _gamma_p(dof / 2.0, stat / 2.0), 0.0), 1.0)
-
-
-def chi2_statistic(obs: list[float], exp: list[float]) -> float:
-    s = 0.0
-    for o, e in zip(obs, exp):
-        if e > 0:
-            s += (o - e) ** 2 / e
-    return s
 
 
 def chi2_critical(dof: int, threshold: float) -> float:

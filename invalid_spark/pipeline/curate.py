@@ -575,17 +575,19 @@ def weighted_sample(
       construction) and the ENTIRE sample replays in SQL — no RNG
       state anywhere.
 
-    Rows with NULL or non-positive weight are excluded (a zero-weight
-    row has zero inclusion probability by definition; negative
-    weights are a caller bug surfaced by exclusion, not by a skewed
-    exponent). Ties (md5 collisions at 8 hex chars) break by key ASC.
+    Rows with NULL, NaN or non-positive weight are excluded (a
+    zero-weight row has zero inclusion probability by definition;
+    negative weights are a caller bug surfaced by exclusion, not by a
+    skewed exponent; Spark orders NaN above every number, so a NaN
+    weight would otherwise rank first). Ties (md5 collisions at 8 hex
+    chars) break by key ASC.
     Returns ``(key, weight, wkey)`` ordered by rank — join back on
     ``key_col`` for the full rows."""
     if k <= 0:
         raise ValueError(f"need k > 0, got {k}")
     w, wkey = _aes_wkey(key_col, weight_col, salt)
     return (
-        df.filter(w.isNotNull() & (w > 0))
+        df.filter(w.isNotNull() & ~F.isnan(w) & (w > 0))
         .select(F.col(key_col), w.alias("weight"), wkey.alias("wkey"))
         .orderBy(F.col("wkey").desc(), F.col(key_col).asc())
         .limit(k)
@@ -641,7 +643,7 @@ def weighted_sample_by_group(
         raise ValueError(f"need k > 0, got {k}")
     w, wkey = _aes_wkey(key_col, weight_col, salt)
     proj = (
-        df.filter(w.isNotNull() & (w > 0))
+        df.filter(w.isNotNull() & ~F.isnan(w) & (w > 0))
         .select(
             F.col(key_col),
             F.col(group_col),
@@ -700,7 +702,8 @@ def top_fraction_by_group(
     sketch per group per partition). The join is null-safe so a NULL
     group is pruned against its own threshold, not silently dropped.
     Ties at a group's threshold are all kept (``>=``), as in
-    :func:`top_fraction`. Returns (key, group, score, keep)."""
+    :func:`top_fraction`; a NaN score is never kept and does not move
+    its group's threshold. Returns (key, group, score, keep)."""
     s = F.col(score_col).cast("double")
     q = 1.0 - float(frac)
     thr_expr = (
@@ -708,7 +711,13 @@ def top_fraction_by_group(
         if exact
         else F.percentile_approx(s, F.lit(q), F.lit(10000))
     )
-    thr = df.groupBy(F.col(group_col).alias("__g")).agg(thr_expr.alias("__thr"))
+    # NaN sorts above every number in Spark: it would lift the
+    # threshold and always pass ``>=``, so it neither sets nor passes
+    thr = (
+        df.filter(~F.isnan(s))
+        .groupBy(F.col(group_col).alias("__g"))
+        .agg(thr_expr.alias("__thr"))
+    )
     return (
         df.join(
             F.broadcast(thr),
@@ -719,7 +728,7 @@ def top_fraction_by_group(
             F.col(key_col),
             F.col(group_col),
             s.alias("score"),
-            (s >= F.col("__thr")).alias("keep"),
+            ((s >= F.col("__thr")) & ~F.isnan(s)).alias("keep"),
         )
     )
 

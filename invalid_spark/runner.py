@@ -6,16 +6,29 @@ Lifecycle (the Spark re-expression of the reference's
 
 1. rules load + compile on the driver (:mod:`invalid_spark.dsl` →
    :func:`invalid_spark.checks.rows.compile_row_checks`); DSL errors
-   surface here, never on executors (reference ``NewRule`` parity);
+   surface here, never on executors (reference ``NewRule`` parity),
+   and so does a dimension table a rule names but the caller did not
+   pass;
 2. the row-check plan also yields the table-scale directives
    (``$unique`` / ``$ref`` / ``$stats`` / ``$drift`` / ``$pixel`` /
-   ``$caption-eq``) which become the aggregate / join / UDF stages;
-3. stages run over the input restricted to NOT-yet-done work units
-   (see below), violations union into one DataFrame written per unit;
-   verdicts + metrics aggregate from the written violations;
-4. each completed unit is marked in the :class:`~invalid_spark.io.
-   Manifest` AFTER its outputs are written — a kill mid-run loses at
-   most the in-flight unit, and the re-run recomputes exactly that.
+   ``$caption-eq`` / ``$fd`` / ...) which become the aggregate / join /
+   UDF stages;
+3. :func:`validate` builds ONE stage table: an entry per pending
+   partition batch (:func:`stage_violations` over the slice: row
+   checks, ``$ref``, ``$pixel``, ``$vector``, ``$align``,
+   ``$caption-eq``), then an entry per whole-table stage in a fixed
+   order (``$unique``, composite ``$unique``, ``$fd``, ``$monotonic``,
+   ``$dupspan``, ``$reconcile``). One loop runs every entry through
+   the same lifecycle: skip if its units are done → bound by
+   ``max_batches`` → build → attribute rows to units → append to the
+   violations sink → mark;
+4. each unit is marked in the :class:`~invalid_spark.io.Manifest`
+   AFTER its outputs are written — a kill mid-run loses at most the
+   in-flight entry, and the re-run recomputes exactly that;
+5. the stage table's unit names are the completeness set:
+   :attr:`RunResult.complete` is true once every one is marked, and it
+   gates the quarantine publish and ``validate_appended``'s commit.
+   Verdicts + metrics aggregate from the written violations.
 
 **Work units**: the values of ``partition_col`` (a data column — at
 production scale the Iceberg partition key, e.g. a date bucket or
@@ -35,6 +48,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -43,10 +57,12 @@ from pyspark.sql import functions as F
 from invalid_spark import report
 from invalid_spark.checks import drift as drift_checks
 from invalid_spark.checks import image as image_checks
-from invalid_spark.checks import refint, stats, unique
+from invalid_spark.checks import refint, relations, stats, unique
 from invalid_spark.checks import rows as rowchecks
+from invalid_spark.checks import vector as vector_checks
 from invalid_spark.dsl import RuleSet
 from invalid_spark.io import Manifest, snapshot_id
+from invalid_spark.pipeline import dedup
 
 # Work-unit name for rows whose partition_col is NULL. A bare
 # cast-to-string + isin() silently drops NULL rows (NULL.isin → NULL)
@@ -74,8 +90,8 @@ class RunResult:
     # verdicts — consumers must not infer this from sink emptiness (a
     # legitimately empty table also yields zero verdict rows)
     fail_fast: bool = False
-    # True when EVERY expected unit (partition batches + the global
-    # uniqueness/fd/monotonic/... stages) is marked done — the signal
+    # True when every unit of the run's stage table (partition units +
+    # the whole-table stages) is marked done — the signal
     # validate_appended gates its TableLog commit on (a max_batches-
     # bounded partial run must leave the snapshot pending)
     complete: bool = False
@@ -134,7 +150,8 @@ def _prep_blooms(
 ) -> dict[tuple, DataFrame]:
     """Materialize each distinct Bloom screen ONCE per run (eager
     localCheckpoint): without this, every unit batch AND each of the
-    k broadcast joins would re-execute the dimension fold. The
+    k broadcast joins would re-execute the dimension fold (on a
+    stream, on every micro-batch). The
     checkpoint blocks are ≤ m/32 rows and reclaimed by the
     ContextCleaner when the run's frames go out of scope."""
     blooms: dict[tuple, DataFrame] = {}
@@ -149,7 +166,14 @@ def _prep_blooms(
     return blooms
 
 
-def _stage_violations(
+def _dim(dims: dict[str, DataFrame], directive: str, spec: dict) -> DataFrame:
+    name = spec.get("table")
+    if name not in dims:
+        raise ValueError(f"{directive} table [{name}] not provided")
+    return dims[name]
+
+
+def stage_violations(
     df: DataFrame,
     rules: RuleSet,
     row_key: str,
@@ -159,54 +183,56 @@ def _stage_violations(
     psnr_min: float = 40.0,
     udf_parallelism: int | None = None,
     blooms: dict[tuple, DataFrame] | None = None,
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Union of every check stage's violations for one input slice."""
-    v = rowchecks.run_row_checks(df, rules, row_key, run_id, plan=plan)
-    cols = v.columns
+    """Union of every per-row check stage's violations for one input
+    slice, batch or streaming. ``blooms`` defaults to materializing
+    the plan's Bloom screens now (:func:`_prep_blooms`). ``keep_cols``
+    threads source columns through the row-check projection onto each
+    row-check violation; rows from the other stages carry NULL there."""
+    v = rowchecks.run_row_checks(
+        df, rules, row_key, run_id, plan=plan, keep_cols=keep_cols
+    )
     if plan.fail_fast:
         # schema-level keyMissing aborts everything else
         # (reference rule.go:159-165 context cancel)
         return v
+    if blooms is None:
+        blooms = _prep_blooms(plan, dims)
+    parts: list[DataFrame] = []
     for col, spec in plan.ref_specs:
-        dim_name = spec.get("table")
-        if dim_name not in dims:
-            raise ValueError(f"$ref table [{dim_name}] not provided to runner")
+        dim = _dim(dims, "$ref", spec)
         dim_key = spec.get("key", col)
         if spec.get("mode") == "bloom":
             # Bloom screen: the middle regime — dim too big to
             # broadcast as rows, fact side too big to shuffle.
             # Reported violations are exact; misses bounded by the
-            # Bloom fpp at the configured sizing (PLANS.md §26).
+            # Bloom fpp at the configured sizing (PLANS.md §26). On a
+            # stream it is k stateless broadcast joins against a
+            # static ≤ m/32-row frame, no stream-static anti-join.
             key = _bloom_key(col, spec)
-            bloom = (blooms or {}).get(key)
-            if bloom is None:
-                bloom = refint.bloom_build(
-                    dims[dim_name], dim_key, m_bits=key[2], k=key[3]
-                )
-            r = refint.bloom_ref_violations(
-                df, col, bloom, dim_key, row_key,
+            parts.append(refint.bloom_ref_violations(
+                df, col, blooms[key], dim_key, row_key,
                 m_bits=key[2], k=key[3], run_id=run_id,
-            )
+            ))
         else:
-            r = refint.ref_violations(
-                df, col, dims[dim_name], dim_key, row_key, run_id
-            )
-        v = v.unionByName(r.select(*cols))
+            parts.append(refint.ref_violations(
+                df, col, dim, dim_key, row_key, run_id
+            ))
     for col, spec in plan.pixel_specs:
-        p = image_checks.pixel_violations(
+        parts.append(image_checks.pixel_violations(
             df,
             row_key=row_key,
             bytes_col=col,
             psnr_min=float(spec.get("psnr_min", psnr_min)),
             run_id=run_id,
             parallelism=udf_parallelism,
-        )
-        v = v.unionByName(p.select(*cols))
+        ))
+    # $vector / $align are stateless row-local projections (HOF folds,
+    # zero joins, zero state): streaming-legal as-is
     for col, spec in plan.vector_specs:
-        from invalid_spark.checks import vector as vector_checks
-
         norm = spec.get("norm") or {}
-        vv = vector_checks.vector_violations(
+        parts.append(vector_checks.vector_violations(
             df, col, row_key,
             dim=spec.get("dim"),
             no_nan=bool(spec.get("no_nan", True)),
@@ -214,25 +240,21 @@ def _stage_violations(
             norm_min=norm.get("min"),
             norm_max=norm.get("max"),
             run_id=run_id,
-        )
-        v = v.unionByName(vv.select(*cols))
+        ))
     for col, spec in plan.align_specs:
-        from invalid_spark.checks import vector as vector_checks
-
-        av = vector_checks.alignment_violations(
+        parts.append(vector_checks.alignment_violations(
             df, col, spec["with"], row_key,
             min_cos=float(spec["min_cos"]),
             run_id=run_id,
-        )
-        v = v.unionByName(av.select(*cols))
+        ))
     for col, spec in plan.caption_specs:
-        ref_name = spec.get("table")
-        if ref_name not in dims:
-            raise ValueError(f"$caption-eq table [{ref_name}] not provided")
-        c = image_checks.caption_violations(
-            df, dims[ref_name], key=spec.get("key", row_key), col=col, run_id=run_id
-        )
-        v = v.unionByName(c.select(*cols))
+        parts.append(image_checks.caption_violations(
+            df, _dim(dims, "$caption-eq", spec),
+            key=spec.get("key", row_key), col=col, run_id=run_id,
+        ))
+    cols = [c for c in v.columns if c not in (keep_cols or [])]
+    for p in parts:
+        v = v.unionByName(p.select(*cols), allowMissingColumns=True)
     return v
 
 
@@ -255,9 +277,10 @@ def validate(
 ) -> RunResult:
     """Run the full validation suite, resumably.
 
-    ``max_batches`` bounds how many unit batches this call processes
-    (for tests and incremental operation); a later call with the same
-    ``out_dir`` resumes where it stopped.
+    ``max_batches`` bounds how many stage-table entries (unit batches
+    and whole-table stages) this call runs (for tests and incremental
+    operation); a later call with the same ``out_dir`` resumes where
+    it stopped.
 
     A resume refuses to proceed when the manifest was written against
     a different ``snapshot``: done-unit marks from another table
@@ -295,6 +318,16 @@ def validate(
     run_id = run_id or uuid.uuid4().hex[:12]
     snapshot = snapshot or ""
     plan = rowchecks.compile_row_checks(df, rules)
+    if not plan.fail_fast:
+        # a missing dimension is a caller error: raise it before any
+        # unit is written or marked, not after the stages ahead of it
+        for directive, specs in (
+            ("$ref", plan.ref_specs),
+            ("$caption-eq", plan.caption_specs),
+            ("$reconcile", plan.reconcile_specs),
+        ):
+            for _, spec in specs:
+                _dim(dims, directive, spec)
     manifest = Manifest(manifest_dir or os.path.join(out_dir, "manifest"))
     meta = manifest.read_meta()
     stored_snaps = {m.get("snapshot_id", "") for m in meta}
@@ -323,27 +356,28 @@ def validate(
     }
     v_dir = os.path.join(out_dir, "violations")
     result = RunResult(run_id=run_id, snapshot=snapshot, out_dir=out_dir)
+    lineage = [
+        F.lit(run_id).alias("run_id"),
+        F.lit(snapshot).alias("snapshot_id"),
+    ]
+    done = manifest.done_units()
 
     # ---- schema-level violations: once per run, their own unit ---------
     # (per-batch emission would duplicate them across resumes)
-    if plan.schema_violations and not manifest.is_done("__schema__"):
+    if plan.schema_violations and "__schema__" not in done:
         from invalid_spark import model as _model
 
-        sdf = spark.createDataFrame(
+        spark.createDataFrame(
             [
                 {**sv, "partition_id": None, "run_id": run_id}
                 for sv in plan.schema_violations
             ],
             schema=_model.VIOLATION_SCHEMA,
-        ).select(
-            "*",
-            F.lit("__schema__").alias("unit"),
-        )
-        sdf = sdf.drop("run_id").select(
-            "*", F.lit(run_id).alias("run_id"), F.lit(snapshot).alias("snapshot_id")
-        )
-        sdf.write.mode("append").parquet(v_dir)
+        ).select("*", F.lit("__schema__").alias("unit")).drop(
+            "run_id"
+        ).select("*", *lineage).write.mode("append").parquet(v_dir)
         manifest.mark_done("__schema__", unit_meta)
+        done.add("__schema__")
         result.units_done.append("__schema__")
     if plan.fail_fast:
         # a missing REQUIRED column aborts the whole run (reference
@@ -353,10 +387,18 @@ def validate(
         return result
     plan.schema_violations = []  # batches emit row-level checks only
 
-    # ---- determine work units ------------------------------------------
+    # ---- the stage table -----------------------------------------------
+    # One entry (units it marks, build, unit attribution) per pending
+    # partition batch, then one per whole-table stage. Attribution is
+    # either a unit name for every row or a (row_key, unit) map joined
+    # onto the violations. Whole-table stages exist because their
+    # invariant spans units: a key duplicated across two units, a
+    # dependency broken across them or a span shared between them is
+    # invisible per batch. Their violations are real df rows and map
+    # back to their work units like batch rows do.
     if partition_col is None:
-        units = [["__all__"]]
-        unit_of = None
+        vals = ["__all__"]
+        whole: DataFrame | str = "__all__"
     else:
         vals = [
             r[0]
@@ -365,208 +407,112 @@ def validate(
             .orderBy("u")
             .collect()
         ]
-        done = manifest.done_units()
-        pending = [v for v in vals if v not in done]
-        result.units_skipped = [v for v in vals if v in done]
-        units = [
-            pending[i : i + unit_batch] for i in range(0, len(pending), unit_batch)
-        ]
-        unit_of = partition_col
 
-    if unit_of is None and manifest.is_done("__all__"):
-        result.units_skipped = ["__all__"]
-        units = []
-
-    # ---- per-batch jobs -------------------------------------------------
-    lineage = [
-        F.lit(run_id).alias("run_id"),
-        F.lit(snapshot).alias("snapshot_id"),
-    ]
-    n_batches = 0
-    blooms = _prep_blooms(plan, dims) if units else {}
-    for batch in units:
-        if max_batches is not None and n_batches >= max_batches:
-            break
-        n_batches += 1
-        if unit_of is None:
-            slice_df = df
-            unit_expr = F.lit("__all__")
-        else:
-            slice_df = df.filter(_unit_expr(unit_of).isin(batch))
-            unit_expr = _unit_expr(unit_of)
-
-        v = _stage_violations(
-            slice_df, rules, row_key, plan, dims, run_id,
-            udf_parallelism=udf_parallelism,
-            blooms=blooms,
-        )
-        # attribute each violation to its unit for lineage + verdicts
-        if unit_of is None:
-            unit_map = None
-            v_out = v.select("*", unit_expr.alias("unit"))
-        else:
+        def unit_map(frame: DataFrame) -> DataFrame:
             # one row per key: duplicate row keys (the thing the
             # uniqueness check flags!) must not fan out the join
-            unit_map = slice_df.select(
+            return frame.select(
                 F.col(row_key).cast("string").alias("row_key"),
-                unit_expr.alias("unit"),
+                _unit_expr(partition_col).alias("unit"),
             ).dropDuplicates(["row_key"])
-            v_out = (
-                v.join(unit_map, "row_key", "left")
-                .withColumn("unit", F.coalesce("unit", F.lit("__schema__")))
-            )
-        v_out = v_out.drop("run_id").select("*", *lineage)
-        v_out.write.mode("append").parquet(v_dir)
-        for u in batch:
-            manifest.mark_done(u, unit_meta)
-            result.units_done.append(u)
 
-    # ---- global stages --------------------------------------------------
-    # Uniqueness is a WHOLE-TABLE invariant: a key duplicated across
-    # two units would be invisible to per-batch evaluation. It runs as
-    # its own resumable unit over the full table (two-stage salted
-    # aggregate — the shuffle carries (key, count) pairs, never rows).
-    if not plan.fail_fast:
-        full_unit_map = (
-            None
-            if unit_of is None
-            else df.select(
-                F.col(row_key).cast("string").alias("row_key"),
-                _unit_expr(unit_of).alias("unit"),
-            ).dropDuplicates(["row_key"])
+        whole = unit_map(df)
+    result.units_skipped = [u for u in vals if u in done]
+    pending = [u for u in vals if u not in done]
+    blooms = _prep_blooms(plan, dims) if pending else {}
+    stages: list[
+        tuple[list[str], Callable[[], DataFrame], DataFrame | str]
+    ] = []
+    for i in range(0, len(pending), unit_batch):
+        batch = pending[i : i + unit_batch]
+        slice_df = (
+            df if partition_col is None
+            else df.filter(_unit_expr(partition_col).isin(batch))
         )
-        for col in plan.unique_cols:
-            gu = f"__unique__{col}"
-            if manifest.is_done(gu):
-                result.units_skipped.append(gu)
-                continue
-            if max_batches is not None and n_batches >= max_batches:
-                break
-            n_batches += 1
-            u_v = unique.uniqueness_violations(df, col, row_key, run_id)
-            if full_unit_map is None:
-                u_out = u_v.select("*", F.lit("__all__").alias("unit"))
-            else:
-                u_out = u_v.join(full_unit_map, "row_key", "left").withColumn(
-                    "unit", F.coalesce("unit", F.lit("__schema__"))
-                )
-            u_out.drop("run_id").select("*", *lineage).write.mode(
-                "append"
-            ).parquet(v_dir)
-            manifest.mark_done(gu, unit_meta)
-            result.units_done.append(gu)
+        stages.append((
+            batch,
+            lambda slice_df=slice_df: stage_violations(
+                slice_df, rules, row_key, plan, dims, run_id,
+                udf_parallelism=udf_parallelism, blooms=blooms,
+            ),
+            whole if partition_col is None else unit_map(slice_df),
+        ))
 
-        # composite natural keys ($unique: {with: [...]}) — same
-        # resumable global-unit contract as single-column uniqueness
-        for col, extra in plan.unique_composite:
-            cols = [col] + list(extra)
-            gu = "__unique__" + "~".join(cols)
-            if manifest.is_done(gu):
-                result.units_skipped.append(gu)
-                continue
-            if max_batches is not None and n_batches >= max_batches:
-                break
-            n_batches += 1
-            u_v = unique.composite_uniqueness_violations(
+    def add(
+        name: str, build: Callable[[], DataFrame], unit: DataFrame | str = whole
+    ) -> None:
+        stages.append(([name], build, unit))
+
+    # uniqueness is a two-stage salted aggregate: the shuffle carries
+    # (key, count) pairs, never rows
+    for c in plan.unique_cols:
+        add(f"__unique__{c}", lambda c=c: unique.uniqueness_violations(
+            df, c, row_key, run_id
+        ))
+    for c, extra in plan.unique_composite:
+        cols = [c, *extra]
+        add(
+            "__unique__" + "~".join(cols),
+            lambda cols=cols: unique.composite_uniqueness_violations(
                 df, cols, row_key, run_id
+            ),
+        )
+    for c, s in plan.fd_specs:
+        add(f"__fd__{c}->{s.get('dep')}", lambda c=c, s=s: (
+            relations.fd_violations(df, c, s["dep"], row_key, run_id)
+        ))
+    for c, s in plan.monotonic_specs:
+        add(f"__monotonic__{c}", lambda c=c, s=s: (
+            relations.sequence_violations(
+                df, s["per"], s["order"], c, row_key,
+                strict=bool(s.get("strict", False)), run_id=run_id,
             )
-            if full_unit_map is None:
-                u_out = u_v.select("*", F.lit("__all__").alias("unit"))
-            else:
-                u_out = u_v.join(full_unit_map, "row_key", "left").withColumn(
-                    "unit", F.coalesce("unit", F.lit("__schema__"))
-                )
-            u_out.drop("run_id").select("*", *lineage).write.mode(
-                "append"
-            ).parquet(v_dir)
-            manifest.mark_done(gu, unit_meta)
-            result.units_done.append(gu)
+        ))
+    for c, s in plan.dupspan_specs:
+        add(f"__dupspan__{c}", lambda c=c, s=s: dedup.dup_span_violations(
+            df, c, row_key, run_id,
+            n=int(s.get("n", 3)),
+            max_coverage=float(s.get("max_coverage", 0.5)),
+            min_df=int(s.get("min_df", 2)),
+        ))
+    for c, s in plan.reconcile_specs:
+        # key-level failures: row_key is the reconciliation key, not a
+        # df row, so the stage is its own unit (like __schema__)
+        # rather than polluting real units' verdicts
+        name = f"__reconcile__{c}~{s['value']}"
+        add(name, lambda c=c, s=s: relations.reconcile_violations(
+            df, dims[s["table"]], c, s["key"],
+            F.expr(s["term"]), s["order"], s["value"],
+            tol=float(s.get("tol", 0.01)), run_id=run_id,
+        ), unit=name)
 
-        # $fd / $monotonic are whole-table invariants like $unique
-        # (a dependency broken across two units, or a decrease across
-        # a unit boundary, is invisible per-batch): each runs as its
-        # own resumable unit; violations are real df rows, so they map
-        # back to their work units exactly like uniqueness rows do.
-        from invalid_spark.checks import relations as relation_checks
-
-        def _global_stage(gu: str, build):
-            nonlocal n_batches
-            if manifest.is_done(gu):
-                result.units_skipped.append(gu)
-                return
-            if max_batches is not None and n_batches >= max_batches:
-                return
-            n_batches += 1
-            g_v = build()
-            if full_unit_map is None:
-                g_out = g_v.select("*", F.lit("__all__").alias("unit"))
-            else:
-                g_out = g_v.join(full_unit_map, "row_key", "left").withColumn(
-                    "unit", F.coalesce("unit", F.lit("__schema__"))
-                )
-            g_out.drop("run_id").select("*", *lineage).write.mode(
-                "append"
-            ).parquet(v_dir)
-            manifest.mark_done(gu, unit_meta)
-            result.units_done.append(gu)
-
-        for col, spec in plan.fd_specs:
-            _global_stage(
-                f"__fd__{col}->{spec.get('dep')}",
-                lambda col=col, spec=spec: relation_checks.fd_violations(
-                    df, col, spec["dep"], row_key, run_id
-                ),
+    # ---- one lifecycle: skip → bound → build → attribute → write → mark
+    # Each unit is marked AFTER its violations are written, so a kill
+    # loses at most the in-flight entry.
+    n_run = 0
+    for units, build, unit in stages:
+        if set(units) <= done:
+            result.units_skipped.extend(units)
+            continue
+        if max_batches is not None and n_run >= max_batches:
+            continue
+        n_run += 1
+        v = build()
+        if isinstance(unit, str):
+            v = v.select("*", F.lit(unit).alias("unit"))
+        else:
+            v = v.join(unit, "row_key", "left").withColumn(
+                "unit", F.coalesce("unit", F.lit("__schema__"))
             )
-        for col, spec in plan.monotonic_specs:
-            _global_stage(
-                f"__monotonic__{col}",
-                lambda col=col, spec=spec: relation_checks.sequence_violations(
-                    df, spec["per"], spec["order"], col, row_key,
-                    strict=bool(spec.get("strict", False)), run_id=run_id,
-                ),
-            )
-        # $dupspan: cross-document duplicated-span coverage — whole-
-        # table semantics like $unique (a span shared across two work
-        # units is invisible per-batch) → one resumable global unit
-        from invalid_spark.pipeline import dedup as dedup_pipeline
-
-        for col, spec in plan.dupspan_specs:
-            _global_stage(
-                f"__dupspan__{col}",
-                lambda col=col, spec=spec: dedup_pipeline.dup_span_violations(
-                    df, col, row_key, run_id,
-                    n=int(spec.get("n", 3)),
-                    max_coverage=float(spec.get("max_coverage", 0.5)),
-                    min_df=int(spec.get("min_df", 2)),
-                ),
-            )
-        for col, spec in plan.reconcile_specs:
-            dim_name = spec["table"]
-            if dim_name not in dims:
-                raise ValueError(
-                    f"$reconcile table [{dim_name}] not provided to runner"
-                )
-            # key-level failures: row_key is the reconciliation key,
-            # not a df row, so units can't be attributed — the stage
-            # gets its own unit name (mirrors the __schema__ pseudo
-            # unit rather than polluting real units' verdicts)
-            gu = f"__reconcile__{col}~{spec['value']}"
-            if manifest.is_done(gu):
-                result.units_skipped.append(gu)
-            elif max_batches is None or n_batches < max_batches:
-                n_batches += 1
-                r_v = relation_checks.reconcile_violations(
-                    df, dims[dim_name], col, spec["key"],
-                    F.expr(spec["term"]), spec["order"], spec["value"],
-                    tol=float(spec.get("tol", 0.01)), run_id=run_id,
-                )
-                r_v.select("*", F.lit(gu).alias("unit")).drop(
-                    "run_id"
-                ).select("*", *lineage).write.mode("append").parquet(v_dir)
-                manifest.mark_done(
-                    gu, unit_meta
-                )
-                result.units_done.append(gu)
+        v = v.drop("run_id").select("*", *lineage)
+        v.write.mode("append").parquet(v_dir)
+        for u in units:
+            manifest.mark_done(u, unit_meta)
+            done.add(u)
+            result.units_done.append(u)
+    # the stage table is the completeness set: complete drives the
+    # quarantine publish and validate_appended's TableLog commit
+    result.complete = all(set(units) <= done for units, _, _ in stages)
 
     # ---- verdicts + metrics from the written violations ----------------
     # verdicts cover COMPLETED units only: a pending unit has no
@@ -582,37 +528,24 @@ def validate(
     all_v = spark.read.parquet(v_dir) if os.path.exists(v_dir) else None
     if all_v is not None:
         all_v = all_v.filter(F.col("snapshot_id") == F.lit(snapshot))
-    if all_v is not None:
-        if unit_of is None:
+        if partition_col is None:
             verd = report.partition_verdicts(df, all_v, run_id)
         else:
-            done_now = sorted(manifest.done_units())
             # group verdicts by the SAME unit naming the manifest and
             # violation rows use (NULL → __null__), so the three
             # outputs join by unit value
-            df_done = df.withColumn(unit_of, _unit_expr(unit_of)).filter(
-                F.col(unit_of).isin(done_now)
+            df_done = df.withColumn(
+                partition_col, _unit_expr(partition_col)
+            ).filter(F.col(partition_col).isin(sorted(done)))
+            verd = report.group_verdicts(
+                df_done, all_v, partition_col, row_key, run_id
             )
-            verd = report.group_verdicts(df_done, all_v, unit_of, row_key, run_id)
         verd.write.mode("overwrite").parquet(os.path.join(out_dir, "verdicts"))
         met = report.rule_metrics(all_v, run_id)
         met.write.mode("overwrite").parquet(os.path.join(out_dir, "metrics"))
 
-    # ---- run completeness (drives quarantine + the appended-commit) ----
-    expected = (
-        ({"__all__"} if unit_of is None else set(vals))
-        | {f"__unique__{c}" for c in plan.unique_cols}
-        | {"__unique__" + "~".join([c] + list(e))
-           for c, e in plan.unique_composite}
-        | {f"__fd__{c}->{s.get('dep')}" for c, s in plan.fd_specs}
-        | {f"__monotonic__{c}" for c, _ in plan.monotonic_specs}
-        | {f"__dupspan__{c}" for c, _ in plan.dupspan_specs}
-        | {f"__reconcile__{c}~{s['value']}" for c, s in plan.reconcile_specs}
-    )
-    result.complete = expected <= manifest.done_units()
-
     # ---- quarantine split (opt-in), only under FULL coverage -----------
-    if quarantine and all_v is not None and not plan.fail_fast:
+    if quarantine and all_v is not None:
         if result.complete:
             from invalid_spark.model import ErrorType as _ET
 
@@ -637,8 +570,6 @@ def validate(
     # across snapshots with a per-snapshot manifest_dir. A fresh
     # out_dir per snapshot forfeits schema (and drift) continuity —
     # there is nothing to compare against.
-    import json as _json
-
     from invalid_spark.checks import schema as schema_checks
 
     schema_path = os.path.join(out_dir, "schema_state.json")
@@ -646,7 +577,7 @@ def validate(
     stored_schema = None
     if os.path.exists(schema_path):
         with open(schema_path, encoding="utf-8") as f:
-            stored_schema = _json.load(f)
+            stored_schema = json.load(f)
     schema_stale = (
         stored_schema is None or stored_schema.get("snapshot") != snapshot
     )
@@ -663,11 +594,11 @@ def validate(
         # tmp + atomic replace, local-POSIX like the manifest
         tmp = schema_path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
-            _json.dump({"snapshot": snapshot, "schema": fp}, f)
+            json.dump({"snapshot": snapshot, "schema": fp}, f)
         os.replace(tmp, schema_path)
 
     # ---- table-level stat assertions ($assert), one aggregation --------
-    if plan.assert_specs and not plan.fail_fast:
+    if plan.assert_specs:
         a_specs = [
             {"col": col, "stat": spec.get("stat", "null_rate"),
              **{k: spec[k] for k in ("min", "max") if k in spec}}
@@ -682,7 +613,7 @@ def validate(
     # single-pass variant would follow multi_grid's tagged pattern if
     # wide $dist rule sets ever show up). Verdict rows are tiny and
     # snapshot-stamped; the sink is overwrite-mode like assertions.
-    if plan.dist_specs and not plan.fail_fast:
+    if plan.dist_specs:
         d_out = None
         for col, spec in plan.dist_specs:
             one = drift_checks.chi2_vs_expected(
@@ -702,7 +633,7 @@ def validate(
     # Like drift state and the schema fingerprint this requires ONE
     # out_dir across snapshots; evaluation is driver-side over the
     # collected tiny history, the only cluster work one aggregation.
-    if plan.anomaly_specs and not plan.fail_fast:
+    if plan.anomaly_specs:
         from invalid_spark.checks import anomaly as anomaly_checks
 
         hist_dir = os.path.join(out_dir, "metrics_history")
@@ -1084,45 +1015,37 @@ def validate_appended(
             .filter(F.col("change").isin("added", "changed"))
             .select("row_key")
         )
-        delta = cur.join(
+        df = cur.join(
             delta_keys,
             F.col(row_key).cast("string") == delta_keys["row_key"],
             "left_semi",
         )
-        kwargs.setdefault(
-            "manifest_dir", os.path.join(out_dir, f"manifest-{snap}")
+        mode = "row_diff_fallback"
+    elif pv["added"]:
+        # basePath keeps directory-partitioned layouts (date=.../part-*)
+        # yielding their partition columns even though only leaf files
+        # are read
+        df = spark.read.option("basePath", table_path).parquet(
+            *[os.path.join(table_path, p) for p in pv["added"]]
         )
-        kwargs["snapshot"] = snap
-        res = validate(
-            spark, delta, rules, row_key, out_dir, run_id=run_id, **kwargs
-        )
-        res.mode = "row_diff_fallback"
-        if res.complete and not res.fail_fast:
-            _record_mode(kwargs["manifest_dir"], res.mode, run_id, snap)
-            log.commit(table_path, entries=pv["entries"])
-        return res
-
-    added = pv["added"]
-    if not added:
+        mode = ""
+    else:
         result = RunResult(run_id=run_id, snapshot=snap, out_dir=out_dir)
         result.units_skipped = ["__no_new_files__"]
         return result
-    # basePath keeps directory-partitioned layouts (date=.../part-*)
-    # yielding their partition columns even though only leaf files
-    # are read
-    df = spark.read.option("basePath", table_path).parquet(
-        *[os.path.join(table_path, p) for p in added]
-    )
     kwargs.setdefault("manifest_dir", os.path.join(out_dir, f"manifest-{snap}"))
     kwargs["snapshot"] = snap
     res = validate(
         spark, df, rules, row_key, out_dir, run_id=run_id, **kwargs
     )
+    res.mode = mode
     # commit ONLY a fully validated snapshot: a fail-fast or a
     # max_batches-bounded partial run leaves the log untouched, so the
     # retry previews the same pending state and resumes via its
     # manifest instead of no-opping on an already-committed baseline
     if res.complete and not res.fail_fast:
+        if mode:
+            _record_mode(kwargs["manifest_dir"], mode, run_id, snap)
         log.commit(table_path, entries=pv["entries"])
     return res
 

@@ -5,10 +5,13 @@ projection, referential anti-join, and Arrow-UDF image checks apply
 to a streaming DataFrame unchanged — this module only adds the
 streaming-specific wiring:
 
-- :func:`validate_stream` — violations as an unbounded stream
-  (row checks + optional stream-static referential joins + pixel
-  checks). Stream-static joins are Spark-native: the dimension is a
-  batch DataFrame re-read per micro-batch.
+- :func:`validate_stream` — violations as an unbounded stream, built
+  by the batch runner's per-slice builder
+  (:func:`invalid_spark.runner.stage_violations`): row checks,
+  stream-static ``$ref`` and ``$caption-eq`` joins, ``$vector`` /
+  ``$align`` projections and optional pixel checks. Stream-static
+  joins are Spark-native: the dimension is a batch DataFrame re-read
+  per micro-batch.
 - :func:`windowed_metrics` — violations per (event-time window,
   rule_id, error_type) with a watermark, so late rows are counted
   until the watermark passes and state is bounded — the streaming
@@ -29,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from invalid_spark.checks import refint
+from invalid_spark import runner
 from invalid_spark.checks import rows as rowchecks
 from invalid_spark.dsl import RuleSet
 
@@ -50,92 +53,31 @@ def validate_stream(
     per micro-batch inside whole-stage codegen — identical physical
     shape to the batch path (scan → project → explode), so there is
     no separate streaming semantics to test for the checks
-    themselves. ``$ref`` rules become stream-static left-anti joins.
+    themselves: the stages are the batch runner's
+    :func:`invalid_spark.runner.stage_violations`. ``$ref`` rules
+    become stream-static left-anti joins (or Bloom screens,
+    materialized once when the query is built) and ``$caption-eq``
+    rules stream-static inner joins.
 
     ``keep_cols`` threads source columns (typically the event-time
     column for :func:`windowed_metrics`) through the row-check
     projection onto each violation row — the streaming-safe
     alternative to re-joining violations back to the source (a
     stream-stream join Spark rejects without watermarks). Violations
-    from `$ref`/pixel stages carry NULL for the kept columns.
+    from the other stages carry NULL for the kept columns.
     """
-    dims = dims or {}
     plan = rowchecks.compile_row_checks(stream_df, rules)
     if plan.fail_fast:
         raise ValueError(
             "required column missing from stream schema: "
             + "; ".join(sv["message"] for sv in plan.schema_violations)
         )
-    v = rowchecks.run_row_checks(
-        stream_df, rules, row_key, run_id, plan=plan, keep_cols=keep_cols
+    if not with_pixel_checks:
+        plan.pixel_specs = []
+    return runner.stage_violations(
+        stream_df, rules, row_key, plan, dims or {}, run_id,
+        udf_parallelism=udf_parallelism, keep_cols=keep_cols,
     )
-    cols = [c for c in v.columns if c not in (keep_cols or [])]
-    for col, spec in plan.ref_specs:
-        dim_name = spec.get("table")
-        if dim_name not in dims:
-            raise ValueError(f"$ref table [{dim_name}] not provided")
-        dim_key = spec.get("key", col)
-        if spec.get("mode") == "bloom":
-            # the Bloom screen is if anything MORE streaming-friendly
-            # than the left-anti: k stateless broadcast joins against
-            # a static ≤ m/32-row frame, no stream-static anti-join
-            m_bits = int(spec.get("bits", 1 << 20))
-            hashes = int(spec.get("hashes", 3))
-            # materialize ONCE regardless of mode: without it, each
-            # of the k broadcast joins re-runs the dimension fold —
-            # and on a stream, on EVERY micro-batch
-            bloom = refint.bloom_build(
-                dims[dim_name], dim_key, m_bits=m_bits, k=hashes
-            ).localCheckpoint(eager=True)
-            r = refint.bloom_ref_violations(
-                stream_df, col, bloom, dim_key, row_key,
-                m_bits=m_bits, k=hashes, run_id=run_id,
-            )
-        else:
-            r = refint.ref_violations(
-                stream_df, col, dims[dim_name], dim_key, row_key, run_id
-            )
-        v = v.unionByName(r.select(*cols), allowMissingColumns=True)
-    if with_pixel_checks and plan.pixel_specs:
-        from invalid_spark.checks import image as image_checks
-
-        for col, spec in plan.pixel_specs:
-            p = image_checks.pixel_violations(
-                stream_df,
-                row_key=row_key,
-                bytes_col=col,
-                psnr_min=float(spec.get("psnr_min", 40.0)),
-                run_id=run_id,
-                parallelism=udf_parallelism,
-            )
-            v = v.unionByName(p.select(*cols), allowMissingColumns=True)
-    # $vector / $align are stateless row-local projections (HOF folds,
-    # zero joins, zero state) — streaming-legal as-is, same compiled
-    # expressions as the batch runner stages
-    for col, spec in plan.vector_specs:
-        from invalid_spark.checks import vector as vector_checks
-
-        norm = spec.get("norm") or {}
-        vv = vector_checks.vector_violations(
-            stream_df, col, row_key,
-            dim=spec.get("dim"),
-            no_nan=bool(spec.get("no_nan", True)),
-            no_zero=bool(spec.get("no_zero", True)),
-            norm_min=norm.get("min"),
-            norm_max=norm.get("max"),
-            run_id=run_id,
-        )
-        v = v.unionByName(vv.select(*cols), allowMissingColumns=True)
-    for col, spec in plan.align_specs:
-        from invalid_spark.checks import vector as vector_checks
-
-        av = vector_checks.alignment_violations(
-            stream_df, col, spec["with"], row_key,
-            min_cos=float(spec["min_cos"]),
-            run_id=run_id,
-        )
-        v = v.unionByName(av.select(*cols), allowMissingColumns=True)
-    return v
 
 
 def with_event_time(

@@ -5,12 +5,15 @@ runner's resumable global stages for $fd / $monotonic / $reconcile."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from invalid_spark import runner
 from invalid_spark.checks import relations
 from invalid_spark.dsl import load_rules
+from invalid_spark.io import Manifest
 from invalid_spark.model import ErrorType
 
 
@@ -268,12 +271,56 @@ def test_runner_relation_stages_resume_no_duplicates(spark, tmp_path):
 
 
 def test_runner_reconcile_requires_dim(spark, tmp_path):
+    """A missing dimension raises before anything is written: no
+    stage ahead of $reconcile leaves violations or done marks."""
     df = _runner_df(spark)
+    out = str(tmp_path / "x")
     with pytest.raises(ValueError, match=r"\$reconcile table \[totals\]"):
         runner.validate(
-            spark, df, RELATION_RULES, "rid", str(tmp_path / "x"),
-            snapshot="s",
+            spark, df, RELATION_RULES, "rid", out, snapshot="s",
         )
+    assert not os.path.exists(os.path.join(out, "violations"))
+    assert Manifest(os.path.join(out, "manifest")).done_units() == set()
+
+
+def test_runner_complete_only_after_last_stage(spark, tmp_path):
+    """One entry per call (max_batches=1) through a ruleset with every
+    whole-table stage kind: the run is complete only on the call that
+    marks the last stage, and the done set is then exactly the
+    partition units plus every stage name."""
+    df = _runner_df(spark).withColumn(
+        "txt", F.concat(F.lit("shared words in every row "), F.col("rid"))
+    )
+    rules = load_rules(
+        """
+rid: {$type: $str, $unique: true}
+det: {$type: $str, $fd: {dep: dep}}
+dep: {$type: $str, $unique: {with: [grp]}}
+gauge: {$type: $float, $monotonic: {per: grp, order: seq}}
+txt: {$type: $str, $dupspan: {n: 3}}
+okey: {$type: $int, $reconcile: {table: totals, key: k, value: total,
+                                 term: "amount", order: seq, tol: 0.01}}
+"""
+    )
+    out = str(tmp_path / "stages")
+    stage_names = [
+        "__unique__rid", "__unique__dep~grp", "__fd__det->dep",
+        "__monotonic__gauge", "__dupspan__txt", "__reconcile__okey~total",
+    ]
+    kw = dict(
+        dims={"totals": _totals_dim(spark)}, snapshot="s",
+        partition_col="grp", max_batches=1,
+    )
+    done_order = []
+    for _ in range(1 + len(stage_names)):  # one batch covers g1 + g2
+        res = runner.validate(spark, df, rules, "rid", out, **kw)
+        done_order += res.units_done
+        assert res.complete == (len(done_order) == 2 + len(stage_names))
+    assert done_order == ["g1", "g2", *stage_names]
+    manifest = Manifest(os.path.join(out, "manifest"))
+    assert manifest.done_units() == {"g1", "g2", *stage_names}
+    again = runner.validate(spark, df, rules, "rid", out, **kw)
+    assert again.complete and not again.units_done
 
 
 def test_compile_time_column_validation(spark):

@@ -2749,13 +2749,14 @@ def test_top_fraction_by_group_per_group_thresholds(spark):
     one group's scores are uniformly below the other's (the global
     threshold would keep NOTHING from the low group); NULL group rows
     prune against their own threshold via the null-safe join; no sort
-    in the plan."""
+    in the plan; a NaN score neither sets nor passes the threshold."""
     from invalid_spark.pipeline import curate
 
     rows = (
         [(i, "hi", float(100 + i)) for i in range(10)]
         + [(100 + i, "lo", float(i)) for i in range(10)]
         + [(200 + i, None, float(50 + i)) for i in range(4)]
+        + [(300, "hi", float("nan"))]
     )
     df = spark.createDataFrame(rows, "doc_id long, lang string, s double")
     out = curate.top_fraction_by_group(
@@ -2768,6 +2769,8 @@ def test_top_fraction_by_group_per_group_thresholds(spark):
     assert kept & set(range(100, 110)) == {105, 106, 107, 108, 109}
     assert kept & set(range(0, 10)) == {5, 6, 7, 8, 9}
     assert kept & {200, 201, 202, 203} == {202, 203}
+    # a NaN score is never kept and does not lift its group's cut
+    assert 300 not in kept
     # global cut at the same overall fraction would empty the lo group
     glob = curate.top_fraction(df, "s", 0.5, key_col="doc_id")
     gk = {r["doc_id"] for r in glob.collect() if r["keep"]}
@@ -2778,7 +2781,7 @@ def test_weighted_sample_aes_exact_replay(spark):
     """A-ES weighted sampling: the md5-derived draw is replicated
     independently in Python (hashlib) and the engine's top-k must
     equal it EXACTLY — no RNG state, the sample is a pure function of
-    (salt, key, weight). Zero/negative/NULL weights are excluded; the
+    (salt, key, weight). Zero/negative/NULL/NaN weights are excluded; the
     plan is TakeOrderedAndProject (partial top-k), never a global
     sort of the corpus."""
     import hashlib
@@ -2787,7 +2790,7 @@ def test_weighted_sample_aes_exact_replay(spark):
     from invalid_spark.pipeline import curate
 
     rows = [(i, float(1 + (i * 7) % 50)) for i in range(200)]
-    rows += [(900, 0.0), (901, -3.0), (902, None)]
+    rows += [(900, 0.0), (901, -3.0), (902, None), (903, float("nan"))]
     df = spark.createDataFrame(rows, "doc_id long, w double").repartition(8)
     out = curate.weighted_sample(df, "w", 20, key_col="doc_id")
     got = [(r.doc_id, r.weight) for r in out.collect()]
@@ -2840,6 +2843,7 @@ def test_weighted_sample_by_group_prune_is_exact(spark):
 
     rows = [(i, ["a", "b", None][i % 3], float(1 + (i * 13) % 40))
             for i in range(120)]
+    rows += [(120, "a", float("nan"))]  # excluded, never a winner
     df = spark.createDataFrame(rows, "doc_id long, g string, w double")
     def _key(t):
         return (t[0] is None, t[0] or "", t[1], t[2])
@@ -2855,8 +2859,7 @@ def test_weighted_sample_by_group_prune_is_exact(spark):
 
     exp = []
     for g in ("a", "b", None):
-        grp = [(i, w) for i, w, in
-               ((i, w) for i, gg, w in rows if gg == g)]
+        grp = [(i, w) for i, gg, w in rows if gg == g and not m.isnan(w)]
         win = sorted(grp, key=lambda t: (-wkey(t[0], t[1]), t[0]))[:5]
         exp += [(g, r + 1, i) for r, (i, _) in enumerate(win)]
     assert got == sorted(exp, key=_key)

@@ -723,3 +723,28 @@ def test_windowed_watch_counts_batch_and_stream(spark, tmp_path):
         assert (r["n"], r["n_window"], r["share"]) == (
             bb["n"], bb["n_window"], bb["share"]
         )
+
+
+def test_validate_stream_caption_eq(spark, tmp_path):
+    """$caption-eq runs on a stream as a stream-static inner join
+    against the reference table: the one planted caption mismatch
+    yields one captionMismatch row."""
+    src = spark.createDataFrame(
+        [("a", "a cat"), ("b", "a dog"), ("c", "a bird")],
+        "image_id string, caption string",
+    )
+    ref = spark.createDataFrame(
+        [("a", "a cat"), ("b", "a wolf"), ("c", "a bird")],
+        "image_id string, caption string",
+    )
+    d = str(tmp_path / "cap_src")
+    src.coalesce(1).write.mode("overwrite").parquet(d)
+    rules = load_rules(
+        "caption: {$type: $str, $caption-eq: {table: refs, key: image_id}}\n"
+    )
+    sdf = spark.readStream.schema(src.schema).parquet(d)
+    v = streaming.validate_stream(sdf, rules, "image_id", dims={"refs": ref})
+    out = str(tmp_path / "cap_out")
+    streaming.write_stream(v, out, str(tmp_path / "cap_ck")).awaitTermination(120)
+    rows = spark.read.parquet(out).collect()
+    assert [(r.row_key, r.error_type) for r in rows] == [("b", "captionMismatch")]
