@@ -5448,7 +5448,7 @@ WITH w AS (
 )
 SELECT doc_id, weight, round(wkey, 9) AS wkey
 FROM w
-ORDER BY wkey DESC, doc_id ASC
+ORDER BY w.wkey DESC, doc_id ASC
 LIMIT 50
 """
 

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from invalid_spark import mathutil
+from invalid_spark.model import local_frame
 
 
 @dataclass
@@ -961,9 +962,8 @@ def chi2_vs_expected(
     shares = {c: float(w) / w_sum for c, w in expected.items()}
     dof = len(expected) - 1
     crit = mathutil.chi2_critical(dof, alpha)
-    spark = df.sparkSession
-    tgt = spark.createDataFrame(
-        [(c, p) for c, p in shares.items()], "cat string, p double"
+    tgt = local_frame(
+        df.sparkSession, shares.items(), "cat string, p double"
     )
     counts = (
         df.groupBy(F.col(col).cast("string").alias("cat"))

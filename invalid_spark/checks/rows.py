@@ -1127,7 +1127,7 @@ def run_row_checks(
             {**sv, "partition_id": None, "run_id": run_id}
             for sv in plan.schema_violations
         ]
-        sdf = spark.createDataFrame(rows, schema=model.VIOLATION_SCHEMA)
+        sdf = model.local_frame(spark, rows, model.VIOLATION_SCHEMA)
         for c in keep:
             sdf = sdf.withColumn(c, F.lit(None).cast(df.schema[c].dataType))
         out = sdf.unionByName(out) if not plan.fail_fast else sdf

@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from invalid_spark.model import local_frame
+
 
 def column_profile(
     df: DataFrame,
@@ -74,8 +76,9 @@ def column_profile(
             (colname.replace("__", "."), stat, float(val) if val is not None else None,
              int(n), run_id)
         )
-    return spark.createDataFrame(
-        out_rows, "column string, stat string, value double, n_rows long, run_id string"
+    return local_frame(
+        spark, out_rows,
+        "column string, stat string, value double, n_rows long, run_id string",
     )
 
 
@@ -241,8 +244,8 @@ def stat_assertions(
             float(hi) if hi is not None else None,
             bool(passed), run_id,
         ))
-    return spark.createDataFrame(
-        out,
+    return local_frame(
+        spark, out,
         "col_name string, stat string, value double, bound_min double, "
         "bound_max double, passed boolean, run_id string",
     )
@@ -349,8 +352,8 @@ def pearson_corr(
             if vx > 0 and vy > 0:
                 corr = (n * sxy - sx * sy) / (math.sqrt(vx) * math.sqrt(vy))
         out.append((cx, cy, corr, n))
-    return df.sparkSession.createDataFrame(
-        out, "col_x string, col_y string, corr double, n long"
+    return local_frame(
+        df.sparkSession, out, "col_x string, col_y string, corr double, n long"
     )
 
 

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from invalid_spark import yamlmeta
 from invalid_spark.dsl import Rule, RuleSet
+from invalid_spark.model import local_frame
 
 # reference ValueType names by core-schema tag (yaml.go:23-35,256-276)
 _VT_BY_TAG = {
@@ -251,7 +252,7 @@ def yaml_docs_df(spark: SparkSession, paths: list[str]) -> DataFrame:
                 continue
             did = base if len(docs) == 1 else f"{base}#{i}"
             rows.extend(flatten_document(node, did))
-    return spark.createDataFrame(rows, FIELD_SCHEMA)
+    return local_frame(spark, rows, FIELD_SCHEMA)
 
 
 def yaml_docs_from_table(
@@ -472,7 +473,7 @@ def validate_yaml_docs(fields: DataFrame, rules: RuleSet) -> DataFrame:
     config author finds (and an editor highlights) the offending
     span."""
     spark = fields.sparkSession
-    rdf = spark.createDataFrame(_flatten_rules(rules), _RULE_SCHEMA)
+    rdf = local_frame(spark, _flatten_rules(rules), _RULE_SCHEMA)
     r = F.broadcast(rdf)
 
     # ---- per-field scalar checks (type / length / regex / of) ------

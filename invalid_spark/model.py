@@ -13,11 +13,19 @@ constructors), including its quirks where tests depend on them:
 
 New engine-only error types extend the enum for the table-scale
 checks (SURVEY.md §2.3/§2.4).
+
+Every frame built from driver-side rows (sink rows, stat results,
+small dimension tables) goes through :func:`local_frame`.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class ErrorType:
@@ -156,3 +164,33 @@ METRIC_SCHEMA = T.StructType(
 
 def format_msg(key: str, fmt: str) -> str:
     return f"value of [{key}] must be a valid {fmt}"
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[tuple | dict],
+    schema: T.StructType | str,
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in field order or
+    dicts by field name) with exactly ``schema`` (a ``StructType`` or a
+    DDL string).
+
+    The rows cross to the JVM as one Arrow table, so the frame plans
+    as a ``LocalRelation``. ``spark.createDataFrame(<python list>)``
+    plans as a ``LogicalRDD`` over a ``PythonRDD`` instead: every
+    action on it starts one Python task per partition, and each task
+    pays its fixed worker set-up whatever the row count. Arrow coerces
+    each value to its field's type (an int into a ``double`` column);
+    a NULL in a non-nullable field raises, as ``createDataFrame``'s
+    schema check does."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    for f in schema.fields:
+        if not f.nullable and table.column(f.name).null_count:
+            raise ValueError(f"field {f.name}: not nullable, but got None")
+    return spark.createDataFrame(table, schema)

@@ -32,6 +32,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from invalid_spark.model import local_frame
 from invalid_spark.pipeline import dedup
 from invalid_spark.pipeline import text as T
 
@@ -279,9 +280,8 @@ def mix_report(
     one document's weight per domain, negligible at corpus scale).
     """
     shares = normalize_mix(target)
-    spark = df.sparkSession
-    tgt = spark.createDataFrame(
-        [(d, s) for d, s in shares.items()], "domain string, t double"
+    tgt = local_frame(
+        df.sparkSession, shares.items(), "domain string, t double"
     )
     measure = (
         F.sum(F.col(weight_col)).cast("double")
@@ -529,7 +529,8 @@ def top_fraction(
     Ties AT the threshold are all kept (``>=``), so the realized
     fraction can exceed ``frac`` on heavily tied scores — determinism
     over exactness-of-count, the same trade
-    :func:`deterministic_split` makes."""
+    :func:`deterministic_split` makes. A NaN score is never kept and
+    does not move the threshold, as in :func:`top_fraction_by_group`."""
     s = F.col(score_col).cast("double")
     q = 1.0 - float(frac)
     thr_expr = (
@@ -537,13 +538,15 @@ def top_fraction(
         if exact
         else F.percentile_approx(s, F.lit(q), F.lit(10000))
     )
-    thr = df.agg(thr_expr.alias("__thr"))
+    # NaN sorts above every number in Spark: it would lift the
+    # threshold and always pass ``>=``, so it neither sets nor passes
+    thr = df.filter(~F.isnan(s)).agg(thr_expr.alias("__thr"))
     return (
         df.crossJoin(F.broadcast(thr))
         .select(
             F.col(key_col),
             s.alias("score"),
-            (s >= F.col("__thr")).alias("keep"),
+            ((s >= F.col("__thr")) & ~F.isnan(s)).alias("keep"),
         )
     )
 

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from invalid_spark.model import local_frame
 from invalid_spark.pipeline import text as T
 
 
@@ -1473,7 +1474,8 @@ def semantic_dedup(
         .filter(F.col("cosine") >= threshold)
     )
     comp = dup_clusters(pairs.select("a", "b"))
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cluster int, cvec array<double>",
     )

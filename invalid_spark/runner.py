@@ -62,6 +62,7 @@ from invalid_spark.checks import rows as rowchecks
 from invalid_spark.checks import vector as vector_checks
 from invalid_spark.dsl import RuleSet
 from invalid_spark.io import Manifest, snapshot_id
+from invalid_spark.model import VIOLATION_SCHEMA, local_frame
 from invalid_spark.pipeline import dedup
 
 # Work-unit name for rows whose partition_col is NULL. A bare
@@ -365,14 +366,13 @@ def validate(
     # ---- schema-level violations: once per run, their own unit ---------
     # (per-batch emission would duplicate them across resumes)
     if plan.schema_violations and "__schema__" not in done:
-        from invalid_spark import model as _model
-
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 {**sv, "partition_id": None, "run_id": run_id}
                 for sv in plan.schema_violations
             ],
-            schema=_model.VIOLATION_SCHEMA,
+            VIOLATION_SCHEMA,
         ).select("*", F.lit("__schema__").alias("unit")).drop(
             "run_id"
         ).select("*", *lineage).write.mode("append").parquet(v_dir)
@@ -583,7 +583,8 @@ def validate(
     )
     if stored_schema is not None and schema_stale:
         changes = schema_checks.schema_changes(fp, stored_schema["schema"])
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(c, ch, b, a, run_id, snapshot) for c, ch, b, a in changes],
             "col_name string, change string, before string, after string, "
             "run_id string, snapshot_id string",
@@ -653,7 +654,8 @@ def validate(
         results = anomaly_checks.evaluate(
             plan.anomaly_specs, cur_vals, prior
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (r.col, r.metric, r.value, r.baseline, r.rel_change,
                  r.z, r.n_history, r.passed, run_id, snapshot)
@@ -666,8 +668,8 @@ def validate(
                 (col, m, v, max_seq + 1, run_id, snapshot)
                 for (col, m), v in sorted(cur_vals.items())
             ]
-            spark.createDataFrame(
-                new_rows, anomaly_checks.HISTORY_SCHEMA
+            local_frame(
+                spark, new_rows, anomaly_checks.HISTORY_SCHEMA
             ).write.mode("append").parquet(hist_dir)
 
     # ---- drift stage (snapshot-vs-snapshot, outside unit loop) ---------
@@ -739,7 +741,8 @@ def validate(
             for _, r in sorted(results.items())
         ]
         if rows:
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 rows,
                 "column string, test string, statistic double, p_value double, "
                 "drifted boolean, run_id string, snapshot_id string",

@@ -21,6 +21,19 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"))
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: $SPARK_DRIVER_MEM when set, else half of
+    the host's physical memory (``MemTotal`` on Linux), capped at 16g.
+    In local mode the driver JVM holds every executor too; the other
+    half is left to the Python workers, the page cache and whatever
+    else shares the host. A fixed 16g overcommits any host below 32 GB."""
+    explicit = os.environ.get("SPARK_DRIVER_MEM")
+    if explicit:
+        return explicit
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(total_mb // 2, 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "invalid_spark",
     cores: int | None = None,
@@ -50,7 +63,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -394,7 +394,9 @@ def windowed_watch_counts(
     (window, watched value) with the window total and the value's
     share — INCLUDING zero rows for watched values that never
     arrived, so a flatlined key (a source that silently stopped
-    shipping) alerts exactly like a spiking one.
+    shipping) alerts exactly like a spiking one. Zero-fill covers
+    windows with at least one arriving row; a window with none emits
+    nothing. ``"__other__"`` is the fold tag and cannot be watched.
 
     Streaming-legal shape (the :func:`windowed_chi2_drift` pattern):
     values collapse row-locally to ``value | __other__`` (state per
@@ -408,6 +410,13 @@ def windowed_watch_counts(
     vals = sorted({str(v) for v in watch})
     if not vals:
         raise ValueError("windowed_watch_counts needs a non-empty watchlist")
+    if "__other__" in vals:
+        # the fold tag: a watched "__other__" would absorb every
+        # unwatched row's count
+        raise ValueError(
+            "windowed_watch_counts: '__other__' is reserved for unwatched "
+            "values and cannot be on the watchlist"
+        )
     c = F.col(col).cast("string")
     tag = F.when(c.isin(vals), c).otherwise(F.lit("__other__"))
     counts = (

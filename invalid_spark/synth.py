@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from invalid_spark import codecs
+from invalid_spark.model import local_frame
 
 SCHEMA = (
     "image_id string, bytes binary, w int, h int, fmt string, "
@@ -134,8 +135,8 @@ def images_df(spark: SparkSession, n: int, seed: int = 42,
 
 
 def licenses_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        LICENSES, "license_id string, redistributable boolean"
+    return local_frame(
+        spark, LICENSES, "license_id string, redistributable boolean"
     )
 
 

@@ -1,0 +1,178 @@
+"""Driver-side rows become Arrow LocalRelations (``model.local_frame``):
+no Python worker, the same sink schemas as before, and one code path
+for every frame the package builds from driver rows."""
+
+from __future__ import annotations
+
+import ast
+import math
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from invalid_spark import model, runner
+from invalid_spark.dsl import load_rules
+from invalid_spark.io import TableLog
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "invalid_spark")
+
+
+def test_create_dataframe_only_inside_local_frame():
+    """Every ``.createDataFrame(`` call in the package sits inside
+    ``model.local_frame``: a Python-list frame would start Python
+    tasks on each action over it."""
+    calls = []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), path)
+            owner = {}
+            for fn in ast.walk(tree):
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    for n in ast.walk(fn):
+                        owner.setdefault(n, []).append(fn.name)
+            for n in ast.walk(tree):
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "createDataFrame"
+                ):
+                    rel = os.path.relpath(path, PKG)
+                    calls.append((rel, n.lineno, owner.get(n, [])))
+    assert calls, "the scan found no createDataFrame call at all"
+    stray = [
+        (p, line) for p, line, fns in calls
+        if not (p == "model.py" and "local_frame" in fns)
+    ]
+    assert stray == []
+
+
+def test_local_frame_plans_as_local_relation(spark):
+    df = model.local_frame(
+        spark, [("a", 1.0), ("b", None)], "k string, x double"
+    )
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    text = plan.toString()
+    assert "ExistingRDD" not in text and "LogicalRDD" not in text
+    assert df.count() == 2
+
+
+def test_local_frame_values_and_schema(spark):
+    """Tuples and dicts, None and NaN, an int into a double column,
+    nested arrays and an empty row list all keep the declared schema;
+    a NULL in a non-nullable field raises."""
+    ddl = "k string, x double, n long, xs array<double>"
+    rows = model.local_frame(
+        spark,
+        [("a", 1, 2, [1, 2.5]), ("b", None, None, None),
+         {"k": "c", "x": float("nan"), "n": 3, "xs": []}],
+        ddl,
+    )
+    assert rows.schema.simpleString() == (
+        "struct<k:string,x:double,n:bigint,xs:array<double>>"
+    )
+    got = {r["k"]: r for r in rows.collect()}
+    assert got["a"]["x"] == 1.0 and isinstance(got["a"]["x"], float)
+    assert got["a"]["xs"] == [1.0, 2.5]
+    assert got["b"]["x"] is None and got["b"]["n"] is None
+    assert math.isnan(got["c"]["x"]) and got["c"]["xs"] == []
+
+    empty = model.local_frame(spark, [], model.VIOLATION_SCHEMA)
+    assert empty.schema == model.VIOLATION_SCHEMA
+    assert empty.count() == 0
+
+    assert not model.VIOLATION_SCHEMA["error_type"].nullable
+    v = model.local_frame(
+        spark, [{"column": "c", "error_type": "keyMissing"}],
+        model.VIOLATION_SCHEMA,
+    )
+    assert not v.schema["error_type"].nullable
+    assert v.collect()[0]["row_key"] is None
+    with pytest.raises(ValueError, match="error_type"):
+        model.local_frame(spark, [{"column": "c"}], model.VIOLATION_SCHEMA)
+
+
+# the sinks' schemas as the createDataFrame(<python list>) code wrote them
+SINK_SCHEMAS = {
+    "drift": "struct<column:string,test:string,statistic:double,"
+    "p_value:double,drifted:boolean,run_id:string,snapshot_id:string>",
+    "anomalies": "struct<col_name:string,metric:string,value:double,"
+    "baseline:double,rel_change:double,z_score:double,n_history:int,"
+    "passed:boolean,run_id:string,snapshot_id:string>",
+    "metrics_history": "struct<col_name:string,metric:string,value:double,"
+    "seq:bigint,run_id:string,snapshot_id:string>",
+    "assertions": "struct<col_name:string,stat:string,value:double,"
+    "bound_min:double,bound_max:double,passed:boolean,run_id:string,"
+    "snapshot_id:string>",
+    "schema_changes": "struct<col_name:string,change:string,before:string,"
+    "after:string,run_id:string,snapshot_id:string>",
+    "violations": "struct<row_key:string,column:string,rule_id:string,"
+    "error_type:string,message:string,observed:string,partition_id:int,"
+    "unit:string,run_id:string,snapshot_id:string>",
+}
+
+
+def test_sink_schemas_unchanged(spark, tmp_path):
+    """Two appended snapshots through $drift, $anomaly, $assert and a
+    retyped column: every driver-built sink keeps its column names,
+    types and order, and NaN / NULL values land as they did."""
+    t = str(tmp_path / "tbl")
+    rules = load_rules(
+        "v: {$type: $float, $drift: {test: ks, threshold: 0.01}, "
+        "$anomaly: {metric: mean, max_rel_change: 0.5}, "
+        "$assert: {stat: mean, min: 0, max: 1000}}\n"
+        "lang: {$type: $str, $of: [en, fr], "
+        "$drift: {test: chi2, threshold: 0.01}, "
+        "$anomaly: {metric: violation_rate, max_rel_change: 0.5}}\n"
+        "tag: {$type: $str}\n"
+    )
+    log = TableLog(str(tmp_path / "log"))
+    out = str(tmp_path / "audit")
+    spark.createDataFrame(
+        [(i, float(i), "en" if i % 3 else "fr", "t") for i in range(40)],
+        "doc_id long, v double, lang string, tag string",
+    ).coalesce(1).write.parquet(os.path.join(t, "f0"))
+    r1 = runner.validate_appended(spark, t, log, rules, "doc_id", out)
+    # first snapshot: no baseline yet (NULL baseline / rel_change)
+    a1 = {r["col_name"]: r for r in r1.anomalies(spark).collect()}
+    assert a1["v"]["baseline"] is None and a1["v"]["n_history"] == 0
+    # second snapshot: a NaN and a NULL in v, 4 enum misses, and tag
+    # retyped string -> int (schema-level typeMismatch + a change row)
+    spark.createDataFrame(
+        [(100 + i, math.nan if i == 0 else None if i == 1 else i * 3.0,
+          "xx" if 2 <= i < 6 else "en", i) for i in range(40)],
+        "doc_id long, v double, lang string, tag int",
+    ).coalesce(1).write.parquet(os.path.join(t, "f1"))
+    r2 = runner.validate_appended(spark, t, log, rules, "doc_id", out)
+
+    sinks = {s: spark.read.parquet(os.path.join(out, s)) for s in SINK_SCHEMAS}
+    for name, want in SINK_SCHEMAS.items():
+        assert sinks[name].schema.simpleString() == want, name
+
+    snap = F.col("snapshot_id") == r2.snapshot
+    a2 = {r["col_name"]: r for r in sinks["anomalies"].collect()}
+    assert math.isnan(a2["v"]["value"]) and a2["v"]["baseline"] == 19.5
+    assert a2["v"]["z_score"] is None and not a2["v"]["passed"]
+    assert a2["lang"]["value"] == pytest.approx(4 / 40)
+    hist = sinks["metrics_history"]
+    assert hist.count() == 4 and hist.filter(snap).count() == 2
+    (asrt,) = sinks["assertions"].collect()
+    assert math.isnan(asrt["value"]) and not asrt["passed"]
+    assert (asrt["bound_min"], asrt["bound_max"]) == (0.0, 1000.0)
+    assert {r["column"] for r in sinks["drift"].filter(snap).collect()} == {
+        "lang", "v"
+    }
+    (chg,) = sinks["schema_changes"].collect()
+    assert (chg["col_name"], chg["change"], chg["before"], chg["after"]) == (
+        "tag", "type_changed", "string", "int"
+    )
+    (sv,) = sinks["violations"].filter(F.col("unit") == "__schema__").collect()
+    assert (sv["row_key"], sv["column"], sv["error_type"]) == (
+        None, "tag", "typeMismatch"
+    )
+    assert sv["snapshot_id"] == r2.snapshot and sv["partition_id"] is None

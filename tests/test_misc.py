@@ -265,3 +265,28 @@ def test_cli_contamination_in_process(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     # train == eval: every row is its own exact leak
     assert out["rate"] == 1.0
+
+
+
+def test_default_driver_memory_fits_host(monkeypatch):
+    """spark.driver.memory defaults to half the host's MemTotal, capped
+    at 16g; an explicit SPARK_DRIVER_MEM wins."""
+    from invalid_spark import session
+
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    with open("/proc/meminfo", encoding="ascii") as f:
+        total_kib = next(
+            int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+        )
+    got = session.driver_memory()
+    assert got.endswith("m")
+    assert 0 < int(got[:-1]) <= min(total_kib // 2048, 16 * 1024)
+
+    # a 256 GiB host still gets 16g
+    monkeypatch.setattr(
+        session.os, "sysconf",
+        {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": 64 << 20}.__getitem__,
+    )
+    assert session.driver_memory() == "16384m"
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    assert session.driver_memory() == "3g"

@@ -2470,20 +2470,26 @@ def test_top_fraction_threshold_selection(spark):
     frac on a tie-free score (0..99, frac 0.1 -> scores >= 90.1
     kept = 10 rows... threshold = 90.1, so 91..99 plus interpolation
     boundary); approx mode agrees away from the boundary; no global
-    sort in the plan."""
+    sort in the plan; a NaN score neither sets nor passes the
+    threshold."""
     from invalid_spark.pipeline import curate
 
-    df = spark.range(100).select(
-        F.col("id").alias("doc_id"), F.col("id").cast("double").alias("s")
+    df = spark.range(101).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") == 100, F.lit(float("nan")))
+        .otherwise(F.col("id").cast("double"))
+        .alias("s"),
     )
     out = curate.top_fraction(df, "s", 0.1, key_col="doc_id")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Sort " not in plan and "rangepartitioning" not in plan.lower()
     kept = {r["doc_id"] for r in out.collect() if r["keep"]}
-    # exact percentile(0.9) over 0..99 = 89.1 -> keep 90..99
+    # exact percentile(0.9) over 0..99 = 89.1 -> keep 90..99; the NaN
+    # row (doc 100) is not kept and does not lift the cut to 90.0
     assert kept == set(range(90, 100))
     approx = curate.top_fraction(df, "s", 0.1, key_col="doc_id", exact=False)
     kept_a = {r["doc_id"] for r in approx.collect() if r["keep"]}
+    assert 100 not in kept_a
     assert abs(len(kept_a) - 10) <= 1
 
 

@@ -725,6 +725,16 @@ def test_windowed_watch_counts_batch_and_stream(spark, tmp_path):
         )
 
 
+def test_windowed_watch_counts_rejects_fold_tag(spark):
+    """A watched '__other__' would collide with the tag unwatched
+    values fold into, so the watchlist refuses it."""
+    src = spark.range(1).select(
+        F.lit("x").alias("k"), F.current_timestamp().alias("ts")
+    )
+    with pytest.raises(ValueError, match="__other__"):
+        streaming.windowed_watch_counts(src, "k", ["bot", "__other__"])
+
+
 def test_validate_stream_caption_eq(spark, tmp_path):
     """$caption-eq runs on a stream as a stream-static inner join
     against the reference table: the one planted caption mismatch
