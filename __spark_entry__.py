@@ -487,9 +487,9 @@ def q_drift_chi2_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_drift_psi_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index drift (drift.psi_drift — the
     ML-monitoring standard alongside KS/chi²): event_type mix of odd
-    vs even event ids. The index folds driver-side in canonical
-    category order with eps-floored proportions, so DuckDB replays it
-    bit-for-bit; threshold bounds the index itself (no p-value)."""
+    vs even event ids. The index is a left fold in canonical
+    category order over eps-floored proportions, so DuckDB replays it;
+    threshold bounds the index itself (no p-value)."""
     ev = _t(spark, sf_dir, "events")
     cur = ev.filter(F.col("event_id") % 2 == 1)
     prev = ev.filter(F.col("event_id") % 2 == 0)
@@ -504,12 +504,12 @@ def q_drift_psi_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_drift_w1_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalized Wasserstein-1 drift (drift.w1_statistic_df): the
-    location-sensitive complement to KS — same union-tagged scan +
-    bucketed histogram, but the CDF gaps are SUMMED (area between the
-    CDFs, exact integer cross-products) instead of maxed, then
-    normalized by the grid span to [0, 1]. Empty buckets are
-    densified in (they still carry CDF area); DuckDB replays the
-    whole fold bit-for-bit with HUGEINT sums."""
+    location-sensitive complement to KS — same bucketed histogram,
+    but the CDF gaps are SUMMED (area between the CDFs, exact integer
+    cross-products) instead of maxed, then normalized by the grid
+    span to [0, 1]. Empty buckets still carry CDF area; DuckDB
+    replays the whole fold bit-for-bit with HUGEINT sums over a
+    densified grid."""
     ev = _t(spark, sf_dir, "events")
     cur = ev.filter(F.col("event_id") % 2 == 1)
     prev = ev.filter(F.col("event_id") % 2 == 0)
@@ -538,7 +538,8 @@ WITH b AS (
 ), dense AS (
   -- every bucket 0..255 appears: empty buckets between populated
   -- ones still carry the running CDF gap into the SUM (KS's max
-  -- doesn't care; W1's sum does — mirrors drift.w1_statistic_df)
+  -- doesn't care; W1's sum does — drift._fold counts the same gaps
+  -- by the step to the next populated bucket)
   SELECT g.range AS bucket,
          coalesce(h.c_cur, 0) AS c_cur, coalesce(h.c_prev, 0) AS c_prev
   FROM range(256) g LEFT JOIN hist h ON h.bucket = g.range
@@ -573,7 +574,7 @@ WITH b AS (
          CAST(sum(o2) OVER () AS BIGINT) AS m FROM tab
 ), terms AS (
   -- eps-floored proportions, term = (p - q) * ln(p / q); summed by a
-  -- strict left fold in category order (mirrors _psi_from_counts)
+  -- strict left fold in category order (mirrors drift._fold)
   SELECT cat, n, m,
          (greatest(CAST(o1 AS DOUBLE) / CAST(n AS DOUBLE), 1e-4)
           - greatest(CAST(o2 AS DOUBLE) / CAST(m AS DOUBLE), 1e-4))
@@ -1020,14 +1021,6 @@ FROM rec GROUP BY nprobe
 """
 
 
-def q_tdigest_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = _t(spark, sf_dir, "lineitem")
-    qs = stats.tdigest_quantiles(df, "l_extendedprice", (0.25, 0.5, 0.75))
-    return spark.createDataFrame(
-        sorted(qs.items()), "quantile double, value double"
-    )
-
-
 _PCT_QS = (0.25, 0.5, 0.75, 0.95, 0.99)
 
 
@@ -1372,7 +1365,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_recall_embeddings": q_ann_recall_embeddings,
         "ivf_tuning_embeddings": q_ivf_tuning_embeddings,
         "ann_ivf_embeddings": q_ann_ivf_embeddings,
-        "tdigest_quantiles_lineitem": q_tdigest_quantiles_lineitem,
         "percentiles_exact_lineitem": q_percentiles_exact_lineitem,
         "image_validate_synth": q_image_validate_synth,
         "caption_eq_documents": q_caption_eq_documents,
@@ -5209,7 +5201,6 @@ def oracle_sql() -> dict[str, str]:
         "ann_ivf_embeddings": _sql_ann_ivf(),
         # ann_ivf_embeddings: sampled-k-means codebook (iterative,
         #   driver-side numpy) — rows-only
-        # tdigest_quantiles_lineitem: sketch, not SQL-exact — rows-only
         # image_validate_synth: Arrow-UDF image decode — rows-only
         # streaming lifecycle oracle above replays the checks in SQL
     }

@@ -1,18 +1,30 @@
 """Distribution-drift checks across snapshots (SURVEY.md §2.3).
 
-Numeric columns: fixed-width histograms built with one union-tagged
-bucketed aggregation (partial combine applies), KS statistic computed
-as an exact integer cross-product over the ≤``bins``-row histogram —
-fully distributed, bit-reproducible in any SQL engine. Categorical
-columns: one contingency aggregation, chi-square in exact form
-(``d²/r`` terms, category-ordered fold). Only the one-row statistic
-frame crosses to the driver, where p-values come from
-:mod:`invalid_spark.mathutil` (no scipy) — the stage costs 1-2 scans
-and one tiny shuffle regardless of table size.
+Every two-sample test runs on one core:
+
+- :func:`multi_grid` — the numeric grids (lo, hi, bins) of all columns
+  in one aggregation: min/max, or approximate quantiles under ``clip``;
+- :func:`_bucket_expr` — the one bucketing expression, a clamped floor
+  on the grid (NULL and NaN values get no bucket, so they stay out of
+  the grid, the histogram and ``n``);
+- :func:`state_frame` — the one histogram builder: a single explode
+  pass counts every ``$drift`` column of a table (numeric buckets,
+  categorical values as strings), and its rows are the persistable
+  drift state (:data:`STATE_SCHEMA`);
+- :func:`_fold` — KS, W1, χ² and PSI, each written once as a Column
+  aggregation over a ``(key, bucket|cat, c_cur, c_prev)`` frame; every
+  statistic is an exact-rational or canonical-order fold that any SQL
+  engine replays bit for bit.
+
+The per-column, per-group, multi-column and stored-state functions
+below are thin front-ends over that core. Only one row per key
+crosses to the driver, where p-values come from
+:mod:`invalid_spark.mathutil` (no scipy).
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
@@ -34,293 +46,57 @@ class DriftResult:
     n_prior: int
 
 
-def ks_statistic_df(
-    cur: DataFrame,
-    prev: DataFrame,
-    col: str,
-    bins: int = 256,
-    clip: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Fully-distributed KS statistic: one row
-    (column, statistic, n_cur, n_prior).
-
-    Unlike :func:`ks_drift` (driver-side loop over collected
-    histograms), everything stays in DataFrames: union-tagged scan →
-    bucketed groupBy → cumulative window over ≤``bins`` rows → max
-    abs CDF gap. CDF values are exact rationals (cumulative int
-    count / total), so the statistic is bit-reproducible in any SQL
-    engine. This is also the shape that scales: the window runs over
-    the tiny histogram, never the data."""
-    both = cur.select(F.col(col).cast("double").alias("v"), F.lit(1).alias("is_cur")).unionByName(
-        prev.select(F.col(col).cast("double").alias("v"), F.lit(0).alias("is_cur"))
-    ).filter(F.col("v").isNotNull())
-    if clip is not None:
-        # quantile-bounded range: outliers (exactly what a validation
-        # run encounters) otherwise stretch the histogram until every
-        # real value lands in one bucket; clamped edge buckets catch
-        # the clipped tails
-        qlo, qhi = clip
-        mm = both.agg(
-            F.percentile_approx("v", F.lit(qlo), F.lit(10000)).alias("lo"),
-            F.percentile_approx("v", F.lit(qhi), F.lit(10000)).alias("hi"),
-        ).collect()[0]
-    else:
-        mm = both.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).collect()[0]
-    lo, hi = mm.lo, mm.hi
-    width = (hi - lo) / bins or 1.0
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor((F.col("v") - F.lit(lo)) / F.lit(width))),
-    ).alias("bucket")
-    hist = both.select(bucket, "is_cur").groupBy("bucket").agg(
-        F.sum("is_cur").alias("c_cur"),
-        F.sum(1 - F.col("is_cur")).alias("c_prev"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    # Exact-rational statistic: D = max|cdf_cur - cdf_prev|
-    #   = max|cum_cur*n_prior - cum_prev*n_cur| / (n_cur*n_prior).
-    # The cross-products stay in int64 (exact up to ~3e9 rows per
-    # side; beyond that switch the casts to decimal(38,0)), the max is
-    # order-independent, and the single final division makes the value
-    # bit-identical in any SQL engine — no per-bucket float division
-    # whose rounding could land on either side of round(x, 6).
-    cdfs = hist.select(
-        "bucket",
-        F.sum("c_cur").over(w).alias("cum_cur"),
-        F.sum("c_prev").over(w).alias("cum_prev"),
-        F.sum("c_cur").over(tot).alias("n_cur"),
-        F.sum("c_prev").over(tot).alias("n_prior"),
-    )
-    num = F.abs(
-        F.col("cum_cur") * F.col("n_prior") - F.col("cum_prev") * F.col("n_cur")
-    )
-    return cdfs.select(num.alias("num"), "n_cur", "n_prior").groupBy().agg(
-        F.first(F.lit(col)).alias("column_name"),
-        F.when(
-            (F.first("n_cur") > 0) & (F.first("n_prior") > 0),
-            F.max("num").cast("double")
-            / (F.first("n_cur") * F.first("n_prior")).cast("double"),
-        ).otherwise(F.lit(0.0)).alias("statistic"),
-        F.first("n_cur").alias("n_cur"),
-        F.first("n_prior").alias("n_prior"),
-    )
-
-
-def chi2_statistic_df(
-    cur: DataFrame,
-    prev: DataFrame,
-    col: str,
-) -> DataFrame:
-    """Fully-distributed chi-square homogeneity statistic: one row
-    (column_name, statistic, dof, n_cur, n_prior). Same contract as
-    :func:`ks_statistic_df` — contingency counts aggregate
-    distributed (partial combine), the O(|categories|) statistic is
-    a second tiny aggregation, all exact int/double math any SQL
-    engine reproduces."""
-    # categories compare as their STRING spellings everywhere (this
-    # frame, the persisted categorical_state, and multi_state), so the
-    # canonical fold order is identical for numeric category columns
-    # across all three drift paths
-    both = cur.select(
-        F.col(col).cast("string").alias("cat"), F.lit(1).alias("is_cur")
-    ).unionByName(
-        prev.select(
-            F.col(col).cast("string").alias("cat"), F.lit(0).alias("is_cur")
-        )
-    )
-    tab = both.groupBy("cat").agg(
-        F.sum("is_cur").alias("o1"), F.sum(1 - F.col("is_cur")).alias("o2")
-    )
-    from pyspark.sql import Window
-
-    tot = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t = tab.select(
-        "cat", "o1", "o2",
-        F.sum("o1").over(tot).alias("n"),
-        F.sum("o2").over(tot).alias("m"),
-    )
-    # Exact-form statistic. With d = o1*m - o2*n and r = o1 + o2 the
-    # textbook (o-e)^2/e homogeneity terms collapse algebraically to
-    #   term = d^2 / r,  statistic = (sum of terms) / (n*m)
-    # (both expected-count branches share the same integer numerator
-    # d^2). d is computed as an int64 cross-product, so each term is
-    # one exact division; the sum is a strict left fold over the
-    # category-sorted list (F.aggregate ≙ DuckDB list_reduce), which
-    # makes float accumulation order canonical across engines. The
-    # category list is histogram-sized — it never holds rows.
-    d = (F.col("o1") * F.col("m") - F.col("o2") * F.col("n")).cast("double")
-    r = (F.col("o1") + F.col("o2")).cast("double")
-    term = F.when(r > 0, d * d / r).otherwise(F.lit(0.0))
-    terms = t.select("cat", term.alias("term"), "n", "m")
-    folded = F.aggregate(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("cat", "term"))),
-            lambda x: x["term"],
-        ),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    return terms.groupBy().agg(
-        F.first(F.lit(col)).alias("column_name"),
-        F.when(
-            (F.first("n") > 0) & (F.first("m") > 0),
-            folded
-            / (F.first("n").cast("double") * F.first("m").cast("double")),
-        ).otherwise(F.lit(0.0)).alias("statistic"),
-        F.greatest(F.count(F.lit(1)) - 1, F.lit(1)).alias("dof"),
-        F.first("n").alias("n_cur"),
-        F.first("m").alias("n_prior"),
-    )
-
-
 STATE_SCHEMA = (
     "column_name string, test string, bucket long, cat string, cnt long, "
     "lo double, hi double, bins int, n long"
 )
 
-
-def numeric_state(
-    df: DataFrame, col: str, bins: int = 256,
-    clip: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Persistable drift state for a numeric column: the bucketed
-    histogram plus its grid (lo, hi, bins). O(bins) rows regardless
-    of table size — continuous validation stores this per run instead
-    of re-scanning the prior snapshot (cost per comparison drops from
-    O(prior table) to O(bins))."""
-    v = df.select(F.col(col).cast("double").alias("v")).filter(
-        F.col("v").isNotNull()
-    )
-    if clip is not None:
-        qlo, qhi = clip
-        mm = v.agg(
-            F.percentile_approx("v", F.lit(qlo), F.lit(10000)).alias("lo"),
-            F.percentile_approx("v", F.lit(qhi), F.lit(10000)).alias("hi"),
-        ).collect()[0]
-    else:
-        mm = v.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).collect()[0]
-    lo, hi = mm.lo, mm.hi
-    width = ((hi - lo) / bins or 1.0) if lo is not None else 1.0
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor((F.col("v") - F.lit(lo)) / F.lit(width))),
-    )
-    hist = v.select(bucket.alias("bucket")).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    tot = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return hist.select(
-        F.lit(col).alias("column_name"),
-        F.lit("ks").alias("test"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.lit(None).cast("string").alias("cat"),
-        F.col("cnt").cast("long").alias("cnt"),
-        F.lit(float(lo) if lo is not None else None).alias("lo"),
-        F.lit(float(hi) if hi is not None else None).alias("hi"),
-        F.lit(bins).alias("bins"),
-        F.sum("cnt").over(tot).cast("long").alias("n"),
-    )
+# categorical tests count values; the numeric tests share the KS
+# histogram (their state rows are tagged "ks")
+_CATEGORICAL = ("chi2", "psi")
+# ks/chi2 thresholds bound the p-value; psi/wasserstein bound the index
+_THRESHOLD = {"ks": 0.01, "chi2": 0.01, "psi": 0.25, "wasserstein": 0.1}
+_KEYS = ["column_name", "test", "bucket", "cat"]
 
 
-def categorical_state(df: DataFrame, col: str) -> DataFrame:
-    """Persistable drift state for a categorical column: value
-    counts. O(|categories|) rows."""
-    tab = df.groupBy(F.col(col).cast("string").alias("cat")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    tot = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return tab.select(
-        F.lit(col).alias("column_name"),
-        F.lit("chi2").alias("test"),
-        F.lit(None).cast("long").alias("bucket"),
-        "cat",
-        F.col("cnt").cast("long").alias("cnt"),
-        F.lit(None).cast("double").alias("lo"),
-        F.lit(None).cast("double").alias("hi"),
-        F.lit(None).cast("int").alias("bins"),
-        F.sum("cnt").over(tot).cast("long").alias("n"),
-    )
+def _num(c: Column) -> Column:
+    """A numeric drift value as double, with NaN read as NULL."""
+    return F.nanvl(c.cast("double"), F.lit(None).cast("double"))
 
 
-def _ks_stat_from_hists(cur: list[int], prev: list[int]) -> tuple[float, int, int]:
-    """Exact-rational KS statistic from two aligned bucket-count
-    lists (same integer cross-product as :func:`ks_statistic_df`,
-    driver-side over O(bins) numbers)."""
-    n, m = sum(cur), sum(prev)
-    num, cc, cp = 0, 0, 0
-    for a, b in zip(cur, prev):
-        cc += a
-        cp += b
-        num = max(num, abs(cc * m - cp * n))
-    d = (num / (n * m)) if n and m else 0.0
-    return d, n, m
+def _bucket_expr(c: Column, lo, hi, bins: int) -> Column:
+    """The clamped-floor bucket of ``c`` on the grid (lo, hi, bins).
+
+    ``lo``/``hi`` are literals (a collected or stored grid) or Columns
+    (a per-group grid joined in). Values outside the grid clamp into
+    the edge buckets; a zero-width grid reads as width 1; NULL and NaN
+    values get a NULL bucket."""
+    lo, hi = (x if isinstance(x, Column) else F.lit(x) for x in (lo, hi))
+    w = (hi - lo) / F.lit(bins)
+    width = F.when(w == 0, F.lit(1.0)).otherwise(w)
+    v = _num(c)
+    # the guard matters: least/greatest skip NULL operands
+    return F.when(
+        v.isNotNull(),
+        F.least(F.lit(bins - 1), F.greatest(F.lit(0), F.floor((v - lo) / width))),
+    ).cast("long")
 
 
-def _psi_from_counts(
-    cur: dict, prev: dict, eps: float = 1e-4
-) -> tuple[float, int, int]:
-    """Population Stability Index from two category-count dicts:
-    ``Σ (p_i − q_i)·ln(p_i/q_i)`` with proportions floored at ``eps``
-    (the standard guard for categories absent on one side — without
-    it a single new category makes the index infinite). Terms
-    accumulate by a strict left fold in canonical category order
-    (NULL first, then ascending), so the float sum is reproducible by
-    any SQL engine. PSI conventions: < 0.1 stable, 0.1–0.25 moderate
-    shift, > 0.25 drifted."""
-    import math
-
-    cats = sorted(set(prev) | set(cur), key=lambda c: (c is not None, c or ""))
-    n, m = sum(cur.values()), sum(prev.values())
-    psi = 0.0
-    for cat in cats:
-        p = max(cur.get(cat, 0) / n, eps) if n else eps
-        q = max(prev.get(cat, 0) / m, eps) if m else eps
-        psi += (p - q) * math.log(p / q)
-    return psi, n, m
-
-
-def _w1_from_hists(cur: list[int], prev: list[int]) -> tuple[float, int, int]:
-    """Normalized Wasserstein-1 (earth-mover) distance from two
-    aligned bucket-count lists: with unit bucket width the exact W1
-    between the binned distributions is ``Σ_b |cdf_cur(b) −
-    cdf_prev(b)|``; dividing by ``bins`` normalizes to the grid span
-    so the statistic lands in [0, 1] and is comparable across
-    columns. The sum accumulates the INTEGER cross-products
-    ``|cum_cur·m − cum_prev·n|`` (Python ints — arbitrary precision,
-    no overflow) with one final division by ``n·m·bins``, so the
-    value is bit-reproducible in any SQL engine with exact integer
-    sums (DuckDB widens to HUGEINT)."""
-    n, m = sum(cur), sum(prev)
-    num, cc, cp = 0, 0, 0
-    for a, b in zip(cur, prev):
-        cc += a
-        cp += b
-        num += abs(cc * m - cp * n)
-    w1 = (num / (n * m * len(cur))) if n and m and cur else 0.0
-    return w1, n, m
-
-
-def _chi2_stat_from_counts(
-    cur: dict, prev: dict
-) -> tuple[float, int, int, int]:
-    """Exact-form chi-square from two category-count dicts, terms
-    accumulated in canonical order (NULL category first, then
-    ascending — the same order :func:`chi2_statistic_df`'s
-    ``sort_array`` fold uses)."""
-    cats = sorted(set(prev) | set(cur), key=lambda c: (c is not None, c or ""))
-    n, m = sum(cur.values()), sum(prev.values())
-    stat = 0.0
-    for cat in cats:
-        o1, o2 = cur.get(cat, 0), prev.get(cat, 0)
-        r = o1 + o2
-        if r > 0:
-            d = o1 * m - o2 * n
-            stat += (float(d) * float(d)) / r
-    stat = stat / (n * m) if n and m else 0.0
-    return stat, max(len(cats) - 1, 1), n, m
+def _grid_aggs(specs: list[tuple[str, dict]]) -> list[Column]:
+    """``lo_i``/``hi_i`` aggregate expressions for numeric ``specs``."""
+    aggs = []
+    for i, (col, spec) in enumerate(specs):
+        v = _num(F.col(col))
+        clip = spec.get("clip")
+        if clip is None:
+            lo, hi = F.min(v), F.max(v)
+        else:
+            lo, hi = (
+                F.percentile_approx(v, F.lit(float(q)), F.lit(10000))
+                for q in clip
+            )
+        aggs += [lo.alias(f"lo_{i}"), hi.alias(f"hi_{i}")]
+    return aggs
 
 
 def multi_grid(
@@ -332,32 +108,16 @@ def multi_grid(
     aggregation pass: ``{col: (lo, hi, bins)}``.
 
     Per-spec ``clip: [qlo, qhi]`` switches that column's range from
-    min/max to approximate quantiles (outlier-proof grid — see
-    :func:`ks_statistic_df`); clipped and unclipped columns share the
-    same single scan because ``percentile_approx`` and ``min``/``max``
-    are both plain aggregate expressions."""
-    num = [
-        (c, s) for c, s in specs
-        if s.get("test", "ks") not in ("chi2", "psi")
-    ]
+    min/max to approximate quantiles: outliers (exactly what a
+    validation run encounters) otherwise stretch the histogram until
+    every real value lands in one bucket, while the clamped edge
+    buckets still catch the clipped tails. Clipped and unclipped
+    columns share the single scan because ``percentile_approx`` and
+    ``min``/``max`` are both plain aggregate expressions."""
+    num = [(c, s) for c, s in specs if s.get("test", "ks") not in _CATEGORICAL]
     if not num:
         return {}
-    aggs = []
-    for i, (col, spec) in enumerate(num):
-        v = F.col(col).cast("double")
-        clip = spec.get("clip")
-        if clip is not None:
-            qlo, qhi = float(clip[0]), float(clip[1])
-            aggs.append(
-                F.percentile_approx(v, F.lit(qlo), F.lit(10000)).alias(f"lo_{i}")
-            )
-            aggs.append(
-                F.percentile_approx(v, F.lit(qhi), F.lit(10000)).alias(f"hi_{i}")
-            )
-        else:
-            aggs.append(F.min(v).alias(f"lo_{i}"))
-            aggs.append(F.max(v).alias(f"hi_{i}"))
-    row = df.agg(*aggs).collect()[0]
+    row = df.agg(*_grid_aggs(num)).collect()[0]
     return {
         col: (row[f"lo_{i}"], row[f"hi_{i}"], int(spec.get("bins", bins_default)))
         for i, (col, spec) in enumerate(num)
@@ -384,199 +144,70 @@ def merge_grids(
     return out
 
 
-def multi_state(
+_SIDE = "__is_cur"  # the 0/1 side tag of a _tagged frame
+
+
+def _tagged(
+    specs: list[tuple[str, dict]],
+    cur: DataFrame,
+    prev: DataFrame | None = None,
+    by: tuple[str, ...] = (),
+) -> DataFrame:
+    """The ``$drift`` columns of ``cur`` (tag 1) and ``prev`` (tag 0)
+    as one frame, so one scan of each side feeds one histogram
+    aggregation for both."""
+    cols = [*by, *dict.fromkeys(c for c, _ in specs)]
+    out = cur.select(*cols, F.lit(1).alias(_SIDE))
+    if prev is not None:
+        out = out.unionByName(prev.select(*cols, F.lit(0).alias(_SIDE)))
+    return out
+
+
+def _hist(
     df: DataFrame,
     specs: list[tuple[str, dict]],
-    grids: dict[str, tuple[float | None, float | None, int]],
+    grids: dict[str, tuple],
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Drift state (:data:`STATE_SCHEMA`) for ALL ``$drift`` columns
-    in ONE scan: a single projection emits one tagged struct per
-    drift column per row, explodes, and one hash aggregation counts
-    — so the scan/shuffle count is independent of how many ``$drift``
-    rules the suite declares (the per-column
-    :func:`numeric_state`/:func:`categorical_state` pair costs 2
-    scans per column). Partial combine applies: the shuffle carries
-    (column, bucket) group counts, never rows.
-
-    ``grids`` supplies (lo, hi, bins) per numeric column — from
-    :func:`multi_grid` (fresh grid) or from a stored state frame
-    (comparison against the previous run's grid)."""
+    """``(*by, column_name, test, bucket, cat, c_cur, c_prev)`` of a
+    :func:`_tagged` frame for ALL ``$drift`` columns in ONE scan: a
+    single projection emits one tagged struct per drift column per
+    row, explodes, and one hash aggregation counts — so the
+    scan/shuffle count is independent of how many ``$drift`` rules
+    the suite declares. Partial combine applies: the shuffle carries
+    (column, bucket) group counts, never rows. Numeric NULL/NaN values
+    are excluded; a NULL *category* is a real category and stays.
+    Categories compare as their STRING spellings, so numeric category
+    columns fold in one canonical order everywhere."""
     structs = []
     for col, spec in specs:
         test = spec.get("test", "ks")
-        if test in ("chi2", "psi"):
-            # both categorical tests share the value-count state shape
-            structs.append(
-                F.struct(
-                    F.lit(col).alias("column_name"),
-                    F.lit(test).alias("test"),
-                    F.lit(None).cast("long").alias("bucket"),
-                    F.col(col).cast("string").alias("cat"),
-                )
+        cat = test in _CATEGORICAL
+        structs.append(
+            F.struct(
+                F.lit(col).alias("column_name"),
+                F.lit(test if cat else "ks").alias("test"),
+                (F.lit(None).cast("long") if cat
+                 else _bucket_expr(F.col(col), *grids[col])).alias("bucket"),
+                (F.col(col).cast("string") if cat
+                 else F.lit(None).cast("string")).alias("cat"),
             )
-        else:
-            structs.append(
-                F.struct(
-                    F.lit(col).alias("column_name"),
-                    F.lit("ks").alias("test"),
-                    # the SAME bucketing expression multi_state_wide
-                    # projects — bit-parity between variants by
-                    # construction
-                    _bucket_expr(col, grids[col]).alias("bucket"),
-                    F.lit(None).cast("string").alias("cat"),
-                )
-            )
-    tagged = (
-        df.select(F.explode(F.array(*structs)).alias("t"))
-        .select("t.*")
-        # numeric NULLs are excluded (same as numeric_state's filter);
-        # a NULL *category* is a real category and stays
-        .filter(~((F.col("test") == "ks") & F.col("bucket").isNull()))
-    )
-    hist = tagged.groupBy("column_name", "test", "bucket", "cat").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
-    )
-    return _decorate_state(hist, specs, grids)
-
-
-def _decorate_state(
-    hist: DataFrame,
-    specs: list[tuple[str, dict]],
-    grids: dict[str, tuple[float | None, float | None, int]],
-) -> DataFrame:
-    """Attach each column's grid metadata (lo/hi/bins) and total n to
-    the aggregated (column, bucket/cat) counts — the tail both
-    :func:`multi_state` variants share."""
-    lo_expr: Column | None = None
-    hi_expr: Column | None = None
-    bins_expr: Column | None = None
-    for col, spec in specs:
-        if spec.get("test", "ks") in ("chi2", "psi"):
-            continue
-        lo, hi, bins = grids[col]
-        cond = F.col("column_name") == col
-        lo_lit = F.lit(float(lo) if lo is not None else None)
-        hi_lit = F.lit(float(hi) if hi is not None else None)
-        lo_expr = F.when(cond, lo_lit) if lo_expr is None else lo_expr.when(cond, lo_lit)
-        hi_expr = F.when(cond, hi_lit) if hi_expr is None else hi_expr.when(cond, hi_lit)
-        bins_expr = (
-            F.when(cond, F.lit(bins)) if bins_expr is None
-            else bins_expr.when(cond, F.lit(bins))
         )
-    per_col = Window.partitionBy("column_name").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return hist.select(
-        "column_name",
-        "test",
-        "bucket",
-        "cat",
-        F.col("cnt").cast("long").alias("cnt"),
-        (lo_expr if lo_expr is not None else F.lit(None)).cast("double").alias("lo"),
-        (hi_expr if hi_expr is not None else F.lit(None)).cast("double").alias("hi"),
-        (bins_expr if bins_expr is not None else F.lit(None)).cast("int").alias("bins"),
-        F.sum("cnt").over(per_col).cast("long").alias("n"),
+    return (
+        df.select(*by, _SIDE, F.explode(F.array(*structs)).alias("t"))
+        .select(*by, _SIDE, "t.*")
+        .filter(~((F.col("test") == "ks") & F.col("bucket").isNull()))
+        .groupBy(*by, *_KEYS)
+        .agg(F.sum(_SIDE).alias("c_cur"), F.sum(1 - F.col(_SIDE)).alias("c_prev"))
     )
 
 
-def _bucket_expr(col: str, grid: tuple) -> Column:
-    """The shared KS bucketing expression (clamped floor on the
-    grid) — JVM-side so every state variant bit-matches."""
-    lo, hi, bins = grid
-    width = (
-        ((hi - lo) / bins or 1.0) if lo is not None and hi is not None
-        else 1.0
-    )
-    v = F.col(col).cast("double")
-    return F.when(
-        v.isNotNull(),
-        F.least(
-            F.lit(bins - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor((v - F.lit(lo if lo is not None else 0.0))
-                        / F.lit(width)),
-            ),
-        ),
-    ).cast("long")
-
-
-def multi_state_wide(
-    df: DataFrame,
-    specs: list[tuple[str, dict]],
-    grids: dict[str, tuple[float | None, float | None, int]],
-) -> DataFrame:
-    """:func:`multi_state` without the D× row amplification — the
-    wide-rule-set variant. The explode path emits one tagged struct
-    per ``$drift`` column per ROW before the hash aggregate's partial
-    combine, so its map-stage CPU grows linearly with D; here ONE
-    JVM-side projection computes every column's bucket (or category
-    string — both bit-identical to the explode path by construction,
-    the buckets/casts are the same Catalyst expressions), and an
-    Arrow-batched ``mapInPandas`` stage counts all D columns per
-    batch with numpy ``value_counts`` — zero extra rows, O(D·bins)
-    partials per partition. The shuffle then carries the same
-    (column, bucket) partial counts as the explode path.
-
-    Bit-parity with :func:`multi_state` is CI-tested; the runner
-    switches to this variant at ``WIDE_STATE_THRESHOLD`` drift rules
-    (crossover measured on the events table — see PLANS.md)."""
-    import pandas as pd
-
-    metas = []  # (field_name, column_name, test)
-    proj = []
-    for i, (col, spec) in enumerate(specs):
-        test = spec.get("test", "ks")
-        if test in ("chi2", "psi"):
-            proj.append(F.col(col).cast("string").alias(f"c_{i}"))
-            metas.append((f"c_{i}", col, test))
-        else:
-            proj.append(_bucket_expr(col, grids[col]).alias(f"c_{i}"))
-            metas.append((f"c_{i}", col, "ks"))
-
-    def count_batches(batches):
-        for pdf in batches:
-            out = {"column_name": [], "test": [], "bucket": [], "cat": [],
-                   "cnt": []}
-            for field, col, test in metas:
-                s = pdf[field]
-                if test == "ks":
-                    # numeric NULLs excluded (numeric_state parity);
-                    # nullable longs arrive as float64 — exact ≤ 2^53
-                    vc = s.dropna().value_counts()
-                    for b, c in vc.items():
-                        out["column_name"].append(col)
-                        out["test"].append("ks")
-                        out["bucket"].append(int(b))
-                        out["cat"].append(None)
-                        out["cnt"].append(int(c))
-                else:
-                    # a NULL category is a real category and stays
-                    vc = s.value_counts(dropna=False)
-                    for k, c in vc.items():
-                        out["column_name"].append(col)
-                        out["test"].append(test)
-                        out["bucket"].append(None)
-                        out["cat"].append(None if pd.isna(k) else str(k))
-                        out["cnt"].append(int(c))
-            yield pd.DataFrame(out)
-
-    partial = df.select(*proj).mapInPandas(
-        count_batches,
-        "column_name string, test string, bucket long, cat string, cnt long",
-    )
-    hist = partial.groupBy("column_name", "test", "bucket", "cat").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
-    return _decorate_state(hist, specs, grids)
-
-
-# Measured crossover (PLANS.md §drift): on 1M events × 16 cores the
-# explode path wins through D=8 rules (0.61-1.01s vs 0.91-1.14s —
-# struct explode beats Arrow transfer while D is small) and the
-# no-amplification wide path wins from D=16 up (0.91s vs 1.07s at 16,
-# 1.26s vs 1.84s at 32, the gap widening linearly with D).
-WIDE_STATE_THRESHOLD = 12
+def _by_column(values: dict[str, object], default: object = None) -> Column:
+    """A per-column constant on a frame keyed by ``column_name``."""
+    out = F.lit(default)
+    for col, val in values.items():
+        out = F.when(F.col("column_name") == col, F.lit(val)).otherwise(out)
+    return out
 
 
 def state_frame(
@@ -584,99 +215,169 @@ def state_frame(
     specs: list[tuple[str, dict]],
     grids: dict[str, tuple[float | None, float | None, int]],
 ) -> DataFrame:
-    """Dispatch between the bit-identical :func:`multi_state`
-    variants by rule-set width (see :data:`WIDE_STATE_THRESHOLD`)."""
-    if len(specs) >= WIDE_STATE_THRESHOLD:
-        return multi_state_wide(df, specs, grids)
-    return multi_state(df, specs, grids)
+    """Drift state (:data:`STATE_SCHEMA`) for ALL ``$drift`` columns
+    in ONE scan (see :func:`_hist`), decorated with each numeric
+    column's grid and total ``n``. O(bins·columns) rows regardless of
+    table size — continuous validation stores this per run instead of
+    re-scanning the prior snapshot.
+
+    ``grids`` supplies (lo, hi, bins) per numeric column — from
+    :func:`multi_grid` (fresh grid) or from a stored state frame
+    (comparison against the previous run's grid)."""
+    num = [c for c, s in specs if s.get("test", "ks") not in _CATEGORICAL]
+    per_col = Window.partitionBy("column_name").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    return _hist(_tagged(specs, df), specs, grids).select(
+        *_KEYS,
+        F.col("c_cur").alias("cnt"),
+        _by_column({c: grids[c][0] for c in num}).cast("double").alias("lo"),
+        _by_column({c: grids[c][1] for c in num}).cast("double").alias("hi"),
+        _by_column({c: grids[c][2] for c in num}).cast("int").alias("bins"),
+        F.sum("c_cur").over(per_col).cast("long").alias("n"),
+    )
 
 
-def _results_from_states(
-    specs: list[tuple[str, dict]],
-    cur_rows: list,
-    prev_rows: list,
+def _left_fold(term: Column) -> Column:
+    """Σ ``term`` as a strict left fold in canonical category order
+    (NULL first, then ascending — ``F.aggregate`` ≙ DuckDB
+    ``list_reduce``), so float accumulation order is the same in any
+    engine. The list is histogram-sized; it never holds rows."""
+    return F.aggregate(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("cat", term.alias("term")))),
+            lambda x: x["term"],
+        ),
+        F.lit(0.0),
+        lambda a, b: a + b,
+    )
+
+
+def _fold(
+    pairs: DataFrame,
+    keys: list[str],
+    tests: set[str],
+    bins: Column | None = None,
+    eps: Column | None = None,
+) -> DataFrame:
+    """The two-sample statistics named in ``tests`` (ks, wasserstein,
+    chi2, psi), each written once here: one row per key of
+    ``(*keys, *tests, dof, n_cur, n_prior)`` from a
+    ``(*keys, bucket|cat, c_cur, c_prev)`` frame (``keys=[]`` folds
+    the whole frame into exactly one row). ``bins`` (the W1
+    normalizer) and ``eps`` (the PSI floor) are per-key constants.
+
+    - KS: ``D = max|cdf_cur − cdf_prev| = max_b gap_b / (n·m)`` with
+      ``gap_b = |cum_cur(b)·m − cum_prev(b)·n|``. The cross-products
+      stay in int64 (exact up to ~3e9 rows per side), the max is
+      order-independent, and the single final division makes the value
+      bit-identical in any SQL engine.
+    - W1 (normalized earth-mover): the area between the binned CDFs,
+      ``Σ_b gap_b·(next_b − b) / (n·m·bins)`` over the populated
+      buckets — an empty bucket carries the previous bucket's gap,
+      which the step to the next populated bucket counts, so no dense
+      ``range(bins)`` frame is needed. The sum is exact
+      (``decimal(38,0)``) before the one division; the result lands in
+      [0, 1] and is comparable across columns.
+    - χ² homogeneity: with ``d = o1·m − o2·n`` and ``r = o1 + o2`` the
+      textbook (o−e)²/e terms collapse to ``d²/r``, statistic
+      ``Σ d²/r / (n·m)``; ``dof = max(categories − 1, 1)``.
+    - PSI: ``Σ (p − q)·ln(p/q)`` over proportions floored at ``eps``
+      (without the floor a single new category makes the index
+      infinite).
+
+    χ² and PSI sum by :func:`_left_fold`. A side with no rows gives
+    KS/W1/χ² = 0. Only the requested statistics are built: plan
+    construction, not execution, dominates a fold this small."""
+    part = Window.partitionBy(*keys)
+    tot_cur, tot_prev = F.sum("c_cur").over(part), F.sum("c_prev").over(part)
+    cols = [*keys, "cat", "c_cur", "c_prev", tot_cur.alias("n"), tot_prev.alias("m")]
+    ordered = part.orderBy("bucket")
+    upto = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    if tests & {"ks", "wasserstein"}:
+        cols.append(F.abs(F.sum("c_cur").over(upto) * tot_prev
+                          - F.sum("c_prev").over(upto) * tot_cur).alias("gap"))
+    if "wasserstein" in tests:
+        step = F.lead("bucket").over(ordered) - F.col("bucket")
+        cols += [F.coalesce(step, F.lit(0)).alias("step"), bins.alias("bins")]
+    if "psi" in tests:
+        cols.append(eps.alias("eps"))
+    t = pairs.select(*cols)
+
+    n, m = F.first("n"), F.first("m")
+
+    def both_sides(stat: Column) -> Column:
+        return F.when((n > 0) & (m > 0), stat).otherwise(F.lit(0.0))
+
+    c_cur, c_prev = F.col("c_cur"), F.col("c_prev")
+    stats = {}
+    if "ks" in tests:
+        stats["ks"] = both_sides(F.max("gap").cast("double") / (n * m).cast("double"))
+    if "wasserstein" in tests:
+        area = F.sum(F.col("gap").cast("decimal(38,0)") * F.col("step"))
+        stats["wasserstein"] = both_sides(
+            area.cast("double") / (n * m * F.first("bins")).cast("double")
+        )
+    if "chi2" in tests:
+        d = (c_cur * F.col("m") - c_prev * F.col("n")).cast("double")
+        r = (c_cur + c_prev).cast("double")
+        stats["chi2"] = both_sides(
+            _left_fold(F.when(r > 0, d * d / r).otherwise(F.lit(0.0)))
+            / (n.cast("double") * m.cast("double"))
+        )
+    if "psi" in tests:
+        p, q = (
+            F.when(F.col(tot) > 0, F.greatest(c / F.col(tot), F.col("eps")))
+            .otherwise(F.col("eps"))
+            for c, tot in ((c_cur, "n"), (c_prev, "m"))
+        )
+        stats["psi"] = _left_fold((p - q) * F.log(p / q))
+    return t.groupBy(*keys).agg(
+        *[v.alias(k) for k, v in stats.items()],
+        F.greatest(F.count(F.lit(1)) - 1, F.lit(1)).alias("dof"),
+        n.alias("n_cur"),
+        m.alias("n_prior"),
+    )
+
+
+def _result(col: str, test: str, threshold: float, stat, row) -> DriftResult:
+    """A DriftResult from a statistic and its :func:`_fold` row (dof,
+    n_cur, n_prior). KS and χ² flag on their p-value; PSI and W1 have
+    no p-value (NaN by contract) and flag when the index itself
+    exceeds ``threshold``."""
+    stat = float(stat or 0.0)
+    n, m = int(row["n_cur"] or 0), int(row["n_prior"] or 0)
+    if test in ("psi", "wasserstein"):
+        return DriftResult(col, test, stat, math.nan, stat > threshold, threshold, n, m)
+    if not (n and m):
+        p = 1.0
+    elif test == "ks":
+        p = mathutil.ks_pvalue(stat, n, m)
+    else:
+        p = mathutil.chi2_pvalue(stat, int(row["dof"]))
+    return DriftResult(col, test, stat, p, p < threshold, threshold, n, m)
+
+
+def _results(
+    specs: list[tuple[str, dict]], grids: dict[str, tuple], pairs: DataFrame
 ) -> dict[str, DriftResult]:
-    """Per-column DriftResults from two collected state frames
-    (O(bins·columns) rows — driver-side math only). Columns with no
-    prior-state rows are omitted (nothing to compare yet)."""
+    """Per-column DriftResults from a multi-column pair frame in ONE
+    job. Columns with no prior-side rows are omitted (nothing to
+    compare yet)."""
+    bins = _by_column({c: g[2] for c, g in grids.items()})
+    eps = _by_column({c: float(s.get("eps", 1e-4)) for c, s in specs}, 1e-4)
+    tests = {s.get("test", "ks") for _, s in specs}
+    rows = {
+        (r["column_name"], r["test"]): r
+        for r in _fold(pairs, ["column_name", "test"], tests, bins, eps).collect()
+    }
     out: dict[str, DriftResult] = {}
     for col, spec in specs:
         test = spec.get("test", "ks")
-        thr = float(spec.get("threshold", 0.01))
-        # numeric state rows are tagged "ks" whichever numeric test
-        # reads them — wasserstein shares KS's histogram state the way
-        # psi shares chi2's value counts
-        state_test = "ks" if test == "wasserstein" else test
-        prev_c = [r for r in prev_rows if r["column_name"] == col and r["test"] == state_test]
-        cur_c = [r for r in cur_rows if r["column_name"] == col and r["test"] == state_test]
-        if not prev_c:
-            continue
-        if test == "chi2":
-            cur_d = {r["cat"]: r["cnt"] for r in cur_c}
-            prev_d = {r["cat"]: r["cnt"] for r in prev_c}
-            stat, dof, n, m = _chi2_stat_from_counts(cur_d, prev_d)
-            p = mathutil.chi2_pvalue(stat, dof) if n and m else 1.0
-            out[col] = DriftResult(col, "chi2", stat, p, p < thr, thr, n, m)
-        elif test == "psi":
-            # PSI has no p-value: the threshold bounds the INDEX
-            # itself (> 0.25 = drifted by convention, the spec's
-            # threshold overrides); p_value is NaN by contract
-            thr = float(spec.get("threshold", 0.25))
-            cur_d = {r["cat"]: r["cnt"] for r in cur_c}
-            prev_d = {r["cat"]: r["cnt"] for r in prev_c}
-            stat, n, m = _psi_from_counts(
-                cur_d, prev_d, eps=float(spec.get("eps", 1e-4))
-            )
-            out[col] = DriftResult(
-                col, "psi", stat, float("nan"), stat > thr, thr, n, m
-            )
-        elif test == "wasserstein":
-            # threshold bounds the normalized index itself (PSI-style
-            # contract: no p-value)
-            thr = float(spec.get("threshold", 0.1))
-            bins = prev_c[0]["bins"] or 256
-            prev_h = [0] * bins
-            for r in prev_c:
-                b = int(r["bucket"])
-                if not 0 <= b < bins:
-                    raise ValueError(
-                        f"stored drift state for column [{col}] has "
-                        f"bucket {b} outside bins={bins}; the state "
-                        "directory is corrupt — delete it to rebuild"
-                    )
-                prev_h[b] = r["cnt"]
-            cur_h = [0] * bins
-            for r in cur_c:
-                b = int(r["bucket"])
-                if 0 <= b < bins:
-                    cur_h[b] = r["cnt"]
-            stat, n, m = _w1_from_hists(cur_h, prev_h)
-            out[col] = DriftResult(
-                col, "wasserstein", stat, float("nan"), stat > thr, thr, n, m
-            )
-        else:
-            bins = prev_c[0]["bins"] or 256
-            prev_h = [0] * bins
-            for r in prev_c:
-                b = int(r["bucket"])
-                if not 0 <= b < bins:
-                    # a stored state whose bins field disagrees with
-                    # its bucket values (hand-edited / legacy state)
-                    # must fail loudly, not alias via negative index
-                    raise ValueError(
-                        f"stored drift state for column [{col}] has "
-                        f"bucket {b} outside bins={bins}; the state "
-                        "directory is corrupt — delete it to rebuild"
-                    )
-                prev_h[b] = r["cnt"]
-            cur_h = [0] * bins
-            for r in cur_c:
-                b = int(r["bucket"])
-                if 0 <= b < bins:
-                    cur_h[b] = r["cnt"]
-            d, n, m = _ks_stat_from_hists(cur_h, prev_h)
-            p = mathutil.ks_pvalue(d, n, m) if n and m else 1.0
-            out[col] = DriftResult(col, "ks", d, p, p < thr, thr, n, m)
+        row = rows.get((col, test if test in _CATEGORICAL else "ks"))
+        if row is not None and row["n_prior"]:
+            thr = float(spec.get("threshold", _THRESHOLD[test]))
+            out[col] = _result(col, test, thr, row[test], row)
     return out
 
 
@@ -688,11 +389,11 @@ def multi_drift(
     cur_grids: dict[str, tuple[float | None, float | None, int]] | None = None,
 ) -> dict[str, DriftResult]:
     """Every ``$drift`` column's two-sample test in a CONSTANT number
-    of scans — 2 per side (grid aggregation + tagged histogram pass)
-    regardless of how many drift rules there are. For an unclipped
-    numeric column the shared grid and bucketing are identical to
-    :func:`ks_drift`'s, so the statistic is bit-identical; chi2
-    matches :func:`chi2_drift`'s canonical-order fold.
+    of jobs — one grid aggregation per side and one histogram + fold
+    job — regardless of how many drift rules there are. For an
+    unclipped numeric column the shared grid is the union min/max, so
+    the statistic is bit-identical to :func:`ks_drift`'s; chi2 matches
+    :func:`chi2_drift`'s canonical-order fold.
 
     ``cur_grids`` (a precomputed :func:`multi_grid` of ``cur``) lets a
     caller that also persists drift state reuse the current side's
@@ -702,9 +403,7 @@ def multi_drift(
         else multi_grid(cur, specs, bins_default),
         multi_grid(prev, specs, bins_default),
     )
-    cur_rows = state_frame(cur, specs, grids).collect()
-    prev_rows = state_frame(prev, specs, grids).collect()
-    return _results_from_states(specs, cur_rows, prev_rows)
+    return _results(specs, grids, _hist(_tagged(specs, cur, prev), specs, grids))
 
 
 def multi_drift_vs_state(
@@ -714,24 +413,111 @@ def multi_drift_vs_state(
 ) -> dict[str, DriftResult]:
     """Every ``$drift`` column against the STORED state frame in ONE
     scan of the current table: the current side is bucketed on each
-    column's stored grid (taken from the state rows), one tagged
-    histogram pass covers all columns, and the statistics are
-    driver-side over O(bins·columns) numbers. Columns absent from
-    the stored state (a ``$drift`` rule added since) are omitted —
-    their fresh state is still written by the caller."""
-    stored_rows = stored.collect()
-    grids = {}
-    for r in stored_rows:
-        if r["test"] == "ks" and r["column_name"] not in grids:
-            grids[r["column_name"]] = (r["lo"], r["hi"], r["bins"] or 256)
+    column's stored grid (taken from the state rows), and one job
+    builds the histogram and folds it against the stored counts.
+    Columns absent from the stored state (a ``$drift`` rule added
+    since) are omitted — their fresh state is still written by the
+    caller. A stored bucket outside its grid (hand-edited or legacy
+    state) raises ``ValueError``."""
+    grids: dict[str, tuple] = {}
+    for r in stored.collect():
+        if r["test"] != "ks":
+            continue
+        col = r["column_name"]
+        bins = grids.setdefault(col, (r["lo"], r["hi"], r["bins"] or 256))[2]
+        if not 0 <= r["bucket"] < bins:
+            raise ValueError(
+                f"stored drift state for column [{col}] has bucket "
+                f"{r['bucket']} outside bins={bins}; the state directory "
+                "is corrupt — delete it to rebuild"
+            )
     covered = [
         (c, s) for c, s in specs
-        if (s.get("test", "ks") in ("chi2", "psi")) or c in grids
+        if s.get("test", "ks") in _CATEGORICAL or c in grids
     ]
     if not covered:
         return {}
-    cur_rows = state_frame(df, covered, grids).collect()
-    return _results_from_states(covered, cur_rows, stored_rows)
+    prev = stored.filter(F.col("column_name").isin([c for c, _ in covered])).select(
+        *_KEYS, F.lit(0).cast("long").alias("c_cur"), F.col("cnt").alias("c_prev")
+    )
+    # merged AFTER the histogram aggregation (a union below it would cut
+    # the per-row explode out of whole-stage codegen); partitioning the
+    # merge by the fold's keys lets one exchange serve the merge and
+    # the fold's window
+    pairs = (
+        _hist(_tagged(covered, df), covered, grids).unionByName(prev)
+        .repartition("column_name", "test")
+        .groupBy(*_KEYS)
+        .agg(F.sum("c_cur").alias("c_cur"), F.sum("c_prev").alias("c_prev"))
+    )
+    return _results(covered, grids, pairs)
+
+
+def _column_fold(
+    cur: DataFrame, prev: DataFrame, col: str, spec: dict, eps: float = 1e-4
+) -> DataFrame:
+    """One column's statistic ``spec["test"]`` as the one-row frame
+    (column_name, statistic, dof, n_cur, n_prior). A numeric grid
+    covers the union of both sides (``clip`` takes the union's
+    quantiles)."""
+    specs = [(col, spec)]
+    both = _tagged(specs, cur, prev)
+    pairs = _hist(both, specs, multi_grid(both, specs))
+    test = spec["test"]
+    return _fold(pairs, [], {test}, F.lit(spec.get("bins")), F.lit(eps)).select(
+        F.lit(col).alias("column_name"), F.col(test).alias("statistic"),
+        "dof", "n_cur", "n_prior",
+    )
+
+
+def _drift(
+    cur: DataFrame, prev: DataFrame, col: str, spec: dict,
+    threshold: float, eps: float = 1e-4,
+) -> DriftResult:
+    """One column's two-sample test as a DriftResult."""
+    row = _column_fold(cur, prev, col, spec, eps).first()
+    return _result(col, spec["test"], threshold, row["statistic"], row)
+
+
+def ks_statistic_df(
+    cur: DataFrame,
+    prev: DataFrame,
+    col: str,
+    bins: int = 256,
+    clip: tuple[float, float] | None = None,
+) -> DataFrame:
+    """Fully-distributed KS statistic: one row
+    (column_name, statistic, n_cur, n_prior). ``clip=(qlo, qhi)``
+    bounds the histogram range by quantiles instead of min/max."""
+    return _column_fold(
+        cur, prev, col, {"test": "ks", "bins": bins, "clip": clip}
+    ).drop("dof")
+
+
+def w1_statistic_df(
+    cur: DataFrame,
+    prev: DataFrame,
+    col: str,
+    bins: int = 256,
+    clip: tuple[float, float] | None = None,
+) -> DataFrame:
+    """Fully-distributed normalized Wasserstein-1 statistic: one row
+    (column_name, statistic, n_cur, n_prior) — the same histogram as
+    :func:`ks_statistic_df`, with the CDF gaps summed instead of
+    maxed."""
+    return _column_fold(
+        cur, prev, col, {"test": "wasserstein", "bins": bins, "clip": clip}
+    ).drop("dof")
+
+
+def chi2_statistic_df(
+    cur: DataFrame,
+    prev: DataFrame,
+    col: str,
+) -> DataFrame:
+    """Fully-distributed chi-square homogeneity statistic: one row
+    (column_name, statistic, dof, n_cur, n_prior)."""
+    return _column_fold(cur, prev, col, {"test": "chi2"})
 
 
 def ks_drift(
@@ -743,114 +529,17 @@ def ks_drift(
     clip: tuple[float, float] | None = None,
 ) -> DriftResult:
     """Two-sample KS over binned CDFs. ``threshold`` is the p-value
-    below which drift is flagged.
-
-    Thin wrapper over the fully-distributed :func:`ks_statistic_df`
-    (one union-tagged scan for the range + one for the histogram —
-    never a per-side re-scan); only the one-row statistic frame
-    crosses to the driver, where the p-value is computed.
-
-    ``clip=(0.01, 0.99)`` bounds the histogram range by quantiles
-    instead of min/max — see :func:`ks_statistic_df`."""
-    row = ks_statistic_df(cur, prev, col, bins=bins, clip=clip).collect()[0]
-    d = float(row.statistic or 0.0)
-    n, m = int(row.n_cur or 0), int(row.n_prior or 0)
-    p = mathutil.ks_pvalue(d, n, m) if n and m else 1.0
-    return DriftResult(col, "ks", d, p, p < threshold, threshold, n, m)
+    below which drift is flagged; ``clip`` as in
+    :func:`ks_statistic_df`."""
+    return _drift(cur, prev, col, {"test": "ks", "bins": bins, "clip": clip},
+                  threshold)
 
 
 def chi2_drift(
     cur: DataFrame, prev: DataFrame, col: str, threshold: float = 0.01
 ) -> DriftResult:
-    """Chi-square homogeneity test on categorical value counts.
-
-    Thin wrapper over the fully-distributed
-    :func:`chi2_statistic_df` (one union-tagged scan, partial
-    combine); the driver only computes the p-value from the one-row
-    statistic frame."""
-    row = chi2_statistic_df(cur, prev, col).collect()[0]
-    stat, dof = float(row.statistic or 0.0), int(row.dof or 1)
-    n, m = int(row.n_cur or 0), int(row.n_prior or 0)
-    p = mathutil.chi2_pvalue(stat, dof) if n and m else 1.0
-    return DriftResult(col, "chi2", stat, p, p < threshold, threshold, n, m)
-
-
-def w1_statistic_df(
-    cur: DataFrame,
-    prev: DataFrame,
-    col: str,
-    bins: int = 256,
-    clip: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Fully-distributed normalized Wasserstein-1 statistic: one row
-    (column, statistic, n_cur, n_prior).
-
-    Same shape as :func:`ks_statistic_df` — union-tagged scan →
-    bucketed groupBy → cumulative window over ≤``bins`` rows — except
-    the per-bucket CDF gaps are SUMMED instead of maxed (W1 is the
-    area between the CDFs; KS is their sup-gap). Buckets with no rows
-    contribute the previous bucket's gap; with the clamped-floor
-    bucketing every populated bucket's cumulative count persists
-    through empty ones only if they appear as rows, so the histogram
-    is densified against a ``sequence`` frame first — the sum must
-    cover ALL ``bins`` buckets, not just the populated ones (an empty
-    bucket between two populated ones still carries CDF area). The
-    integer cross-products stay exact (int64 per bucket, sum widened
-    to decimal for the ≤bins-term total) and one final division by
-    ``n·m·bins`` yields the [0, 1]-normalized statistic — the same
-    value :func:`_w1_from_hists` folds driver-side."""
-    both = cur.select(F.col(col).cast("double").alias("v"), F.lit(1).alias("is_cur")).unionByName(
-        prev.select(F.col(col).cast("double").alias("v"), F.lit(0).alias("is_cur"))
-    ).filter(F.col("v").isNotNull())
-    if clip is not None:
-        qlo, qhi = clip
-        mm = both.agg(
-            F.percentile_approx("v", F.lit(qlo), F.lit(10000)).alias("lo"),
-            F.percentile_approx("v", F.lit(qhi), F.lit(10000)).alias("hi"),
-        ).collect()[0]
-    else:
-        mm = both.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).collect()[0]
-    lo, hi = mm.lo, mm.hi
-    width = ((hi - lo) / bins or 1.0) if lo is not None else 1.0
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor((F.col("v") - F.lit(lo if lo is not None else 0.0)) / F.lit(width))),
-    ).alias("bucket")
-    hist = both.select(bucket, "is_cur").groupBy("bucket").agg(
-        F.sum("is_cur").alias("c_cur"),
-        F.sum(1 - F.col("is_cur")).alias("c_prev"),
-    )
-    # densify: every bucket 0..bins-1 must appear, because an EMPTY
-    # bucket between populated ones still carries the running CDF gap
-    # into the sum (KS's max doesn't care; W1's sum does)
-    grid = cur.sparkSession.range(bins).select(F.col("id").cast("long").alias("bucket"))
-    dense = grid.join(hist, "bucket", "left").select(
-        "bucket",
-        F.coalesce("c_cur", F.lit(0)).alias("c_cur"),
-        F.coalesce("c_prev", F.lit(0)).alias("c_prev"),
-    )
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    tot = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    cdfs = dense.select(
-        "bucket",
-        F.sum("c_cur").over(w).alias("cum_cur"),
-        F.sum("c_prev").over(w).alias("cum_prev"),
-        F.sum("c_cur").over(tot).alias("n_cur"),
-        F.sum("c_prev").over(tot).alias("n_prior"),
-    )
-    num = F.abs(
-        F.col("cum_cur") * F.col("n_prior") - F.col("cum_prev") * F.col("n_cur")
-    ).cast("decimal(38,0)")
-    return cdfs.select(num.alias("num"), "n_cur", "n_prior").groupBy().agg(
-        F.first(F.lit(col)).alias("column_name"),
-        F.when(
-            (F.first("n_cur") > 0) & (F.first("n_prior") > 0),
-            F.sum("num").cast("double")
-            / (F.first("n_cur") * F.first("n_prior") * F.lit(bins)).cast("double"),
-        ).otherwise(F.lit(0.0)).alias("statistic"),
-        F.first("n_cur").alias("n_cur"),
-        F.first("n_prior").alias("n_prior"),
-    )
+    """Chi-square homogeneity test on categorical value counts."""
+    return _drift(cur, prev, col, {"test": "chi2"}, threshold)
 
 
 def wasserstein_drift(
@@ -874,11 +563,9 @@ def wasserstein_drift(
     persists/compares the SAME histogram state as KS (numeric state
     rows are tagged ``ks``), so continuous stored-state runs work
     unchanged and one stored histogram serves both tests."""
-    row = w1_statistic_df(cur, prev, col, bins=bins, clip=clip).collect()[0]
-    stat = float(row.statistic or 0.0)
-    n, m = int(row.n_cur or 0), int(row.n_prior or 0)
-    return DriftResult(
-        col, "wasserstein", stat, float("nan"), stat > threshold, threshold, n, m
+    return _drift(
+        cur, prev, col, {"test": "wasserstein", "bins": bins, "clip": clip},
+        threshold,
     )
 
 
@@ -891,31 +578,13 @@ def psi_drift(
 ) -> DriftResult:
     """Population Stability Index on categorical value counts — the
     ML-monitoring standard alongside KS/chi²; unlike them its
-    ``threshold`` bounds the INDEX itself (> 0.25 = population shift
-    by convention), so there is no p-value (NaN by contract).
-
-    Same distributed shape as :func:`chi2_drift`: one value-count
-    aggregation per side (partial combine, the shuffle carries
-    O(|categories|) counts), the index folded driver-side in
-    canonical category order (:func:`_psi_from_counts` — strict left
-    fold, SQL-replayable). Rule form: ``$drift {test: psi,
+    ``threshold`` bounds the INDEX itself (< 0.1 stable, 0.1–0.25
+    moderate shift, > 0.25 drifted by convention), so there is no
+    p-value (NaN by contract). Rule form: ``$drift {test: psi,
     threshold: 0.25, eps: 1e-4}`` — it persists/compares the same
     value-count state as chi2, so continuous (stored-state) runs work
     unchanged."""
-    cur_d = {
-        r["cat"]: r["cnt"]
-        for r in cur.groupBy(F.col(col).cast("string").alias("cat"))
-        .agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    prev_d = {
-        r["cat"]: r["cnt"]
-        for r in prev.groupBy(F.col(col).cast("string").alias("cat"))
-        .agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    stat, n, m = _psi_from_counts(cur_d, prev_d, eps=eps)
-    return DriftResult(
-        col, "psi", stat, float("nan"), stat > threshold, threshold, n, m
-    )
+    return _drift(cur, prev, col, {"test": "psi"}, threshold, eps)
 
 
 def chi2_vs_expected(
@@ -1119,7 +788,7 @@ def embedding_state(
 ) -> DataFrame:
     """Persistable drift state (:data:`STATE_SCHEMA`) of an embedding
     column: the per-plane projection histograms. Same contract as
-    :func:`numeric_state` — O(planes·bins) rows, mergeable into the
+    :func:`state_frame` — O(planes·bins) rows, mergeable into the
     runner's drift-state sink, so continuous runs compare tomorrow's
     embeddings against today's WITHOUT rescanning today."""
     if plane_matrix is None:
@@ -1158,6 +827,32 @@ def embedding_drift_vs_state(
     return {int(c.rsplit("_", 1)[1]): r for c, r in res.items()}
 
 
+def _group_fold(
+    cur: DataFrame, prev: DataFrame, col: str, group_col: str, spec: dict
+) -> DataFrame:
+    """Statistic ``spec["test"]`` of every non-NULL ``group_col``
+    value: (group_col, statistic, dof, n_cur, n_prior). A numeric
+    column is bucketed on its group's own min/max grid (one
+    aggregation, broadcast back)."""
+    specs, test = [("v", spec)], spec["test"]
+    both = _tagged(
+        specs,
+        *(d.select(F.col(group_col).alias("g"), F.col(col).alias("v"))
+          for d in (cur, prev)),
+        by=("g",),
+    ).filter(F.col("g").isNotNull())
+    grids: dict[str, tuple] = {}
+    if test not in _CATEGORICAL:
+        grid = both.groupBy("g").agg(*_grid_aggs(specs))
+        both = both.join(F.broadcast(grid), "g")
+        grids["v"] = (F.col("lo_0"), F.col("hi_0"), spec["bins"])
+    pairs = _hist(both, specs, grids, by=("g",))
+    return _fold(pairs, ["g"], {test}).select(
+        F.col("g").alias(group_col), F.col(test).alias("statistic"),
+        "dof", "n_cur", "n_prior",
+    )
+
+
 def ks_statistic_by_group(
     cur: DataFrame,
     prev: DataFrame,
@@ -1173,74 +868,15 @@ def ks_statistic_by_group(
     Fully distributed end to end, the :func:`ks_statistic_df` contract
     grouped: per-group min/max grid (one aggregation, broadcast back),
     one (group, bucket) histogram aggregation with partial combine,
-    cumulative windows over the per-group O(bins) histogram — never
-    over rows — and the exact-rational cross-product statistic, so
-    ANY number of partitions costs three shuffles of sketch-sized
-    data and every value replays bit-for-bit in SQL. With ``alpha``
-    the verdict is evaluated JVM-side in λ-space against one
-    Kolmogorov critical constant (no per-group driver round-trip —
-    the ``streaming_ks_windows`` trick)."""
-    both = cur.select(
-        F.col(group_col).alias("g"),
-        F.col(col).cast("double").alias("v"),
-        F.lit(1).alias("is_cur"),
-    ).unionByName(
-        prev.select(
-            F.col(group_col).alias("g"),
-            F.col(col).cast("double").alias("v"),
-            F.lit(0).alias("is_cur"),
-        )
-    ).filter(F.col("v").isNotNull() & F.col("g").isNotNull())
-    grids = both.groupBy("g").agg(
-        F.min("v").alias("lo"), F.max("v").alias("hi")
-    )
-    width = (F.col("hi") - F.col("lo")) / F.lit(bins)
-    b = both.join(F.broadcast(grids), "g").select(
-        "g", "is_cur",
-        F.least(
-            F.lit(bins - 1),
-            F.greatest(
-                F.lit(0),
-                F.floor(
-                    (F.col("v") - F.col("lo"))
-                    / F.when(width == 0, F.lit(1.0)).otherwise(width)
-                ),
-            ),
-        ).alias("bucket"),
-    )
-    hist = b.groupBy("g", "bucket").agg(
-        F.sum("is_cur").alias("c_cur"),
-        F.sum(1 - F.col("is_cur")).alias("c_prev"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("g").orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    tot = Window.partitionBy("g").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cdfs = hist.select(
-        "g",
-        F.sum("c_cur").over(w).alias("cum_cur"),
-        F.sum("c_prev").over(w).alias("cum_prev"),
-        F.sum("c_cur").over(tot).alias("n_cur"),
-        F.sum("c_prev").over(tot).alias("n_prior"),
-    )
-    num = F.abs(
-        F.col("cum_cur") * F.col("n_prior") - F.col("cum_prev") * F.col("n_cur")
-    )
-    out = cdfs.select(num.alias("num"), "g", "n_cur", "n_prior").groupBy(
-        "g"
-    ).agg(
-        F.when(
-            (F.first("n_cur") > 0) & (F.first("n_prior") > 0),
-            F.max("num").cast("double")
-            / (F.first("n_cur") * F.first("n_prior")).cast("double"),
-        ).otherwise(F.lit(0.0)).alias("statistic"),
-        F.first("n_cur").alias("n_cur"),
-        F.first("n_prior").alias("n_prior"),
-    ).select(F.col("g").alias(group_col), "statistic", "n_cur", "n_prior")
+    and the exact-rational fold per group — never over rows — so ANY
+    number of partitions costs a few shuffles of sketch-sized data
+    and every value replays bit-for-bit in SQL. With ``alpha`` the
+    verdict is evaluated JVM-side in λ-space against one Kolmogorov
+    critical constant (no per-group driver round-trip — the
+    ``streaming_ks_windows`` trick)."""
+    out = _group_fold(
+        cur, prev, col, group_col, {"test": "ks", "bins": bins}
+    ).drop("dof")
     if alpha is not None:
         lam = mathutil.kolmogorov_lambda_critical(alpha)
         nm = F.col("n_cur") * F.col("n_prior")
@@ -1262,53 +898,5 @@ def chi2_statistic_by_group(
 ) -> DataFrame:
     """Per-partition chi-square homogeneity: one row (group,
     statistic, dof, n_cur, n_prior) per ``group_col`` value — the
-    categorical sibling of :func:`ks_statistic_by_group`. Contingency
-    counts aggregate per (group, category) with partial combine; the
-    per-group statistic folds the category-sorted exact d²/r terms
-    with a strict left fold (canonical float order, SQL-replayable)."""
-    both = cur.select(
-        F.col(group_col).alias("g"),
-        F.col(col).cast("string").alias("cat"),
-        F.lit(1).alias("is_cur"),
-    ).unionByName(
-        prev.select(
-            F.col(group_col).alias("g"),
-            F.col(col).cast("string").alias("cat"),
-            F.lit(0).alias("is_cur"),
-        )
-    ).filter(F.col("g").isNotNull())
-    tab = both.groupBy("g", "cat").agg(
-        F.sum("is_cur").alias("o1"), F.sum(1 - F.col("is_cur")).alias("o2")
-    )
-    from pyspark.sql import Window
-
-    tot = Window.partitionBy("g").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    t = tab.select(
-        "g", "cat", "o1", "o2",
-        F.sum("o1").over(tot).alias("n"),
-        F.sum("o2").over(tot).alias("m"),
-    )
-    d = (F.col("o1") * F.col("m") - F.col("o2") * F.col("n")).cast("double")
-    r = (F.col("o1") + F.col("o2")).cast("double")
-    term = F.when(r > 0, d * d / r).otherwise(F.lit(0.0))
-    terms = t.select("g", "cat", term.alias("term"), "n", "m")
-    folded = F.aggregate(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("cat", "term"))),
-            lambda x: x["term"],
-        ),
-        F.lit(0.0),
-        lambda a, b: a + b,
-    )
-    return terms.groupBy("g").agg(
-        F.when(
-            (F.first("n") > 0) & (F.first("m") > 0),
-            folded
-            / (F.first("n").cast("double") * F.first("m").cast("double")),
-        ).otherwise(F.lit(0.0)).alias("statistic"),
-        F.greatest(F.count(F.lit(1)) - 1, F.lit(1)).alias("dof"),
-        F.first("n").alias("n_cur"),
-        F.first("m").alias("n_prior"),
-    ).select(F.col("g").alias(group_col), "statistic", "dof", "n_cur", "n_prior")
+    categorical sibling of :func:`ks_statistic_by_group`."""
+    return _group_fold(cur, prev, col, group_col, {"test": "chi2"})

@@ -9,10 +9,7 @@ never a per-column pass.
 - ndv: ``approx_count_distinct`` (HyperLogLog++, built-in) with an
   exact option for oracle parity at small scale;
 - quantiles: ``percentile_approx`` (built-in sketch) with an exact
-  option, plus a true **t-digest** path (:func:`tdigest_quantiles`)
-  built from per-partition digests merged on the driver — the
-  north-star's sketch, implemented with ``applyInPandas`` partials so
-  no row leaves its executor unaggregated.
+  option.
 """
 
 from __future__ import annotations
@@ -20,7 +17,6 @@ from __future__ import annotations
 import math
 from typing import Iterable
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -80,105 +76,6 @@ def column_profile(
         spark, out_rows,
         "column string, stat string, value double, n_rows long, run_id string",
     )
-
-
-# ---------------------------------------------------------------------------
-# t-digest (Dunning's public algorithm, compact merging variant)
-
-
-class TDigest:
-    """Merging t-digest over (mean, weight) centroids."""
-
-    def __init__(self, compression: float = 100.0):
-        self.compression = compression
-        self.means: list[float] = []
-        self.weights: list[float] = []
-
-    @staticmethod
-    def of(values: np.ndarray, compression: float = 100.0) -> "TDigest":
-        d = TDigest(compression)
-        if len(values):
-            vs = np.sort(values.astype(np.float64))
-            d.means = vs.tolist()
-            d.weights = [1.0] * len(vs)
-            d._compress()
-        return d
-
-    def merge(self, other: "TDigest") -> "TDigest":
-        self.means += other.means
-        self.weights += other.weights
-        self._compress()
-        return self
-
-    def _compress(self) -> None:
-        if not self.means:
-            return
-        order = np.argsort(np.array(self.means))
-        means = np.array(self.means)[order]
-        weights = np.array(self.weights)[order]
-        total = weights.sum()
-        out_m: list[float] = []
-        out_w: list[float] = []
-        q0 = 0.0
-        cur_m, cur_w = means[0], weights[0]
-        for m, w in zip(means[1:], weights[1:]):
-            q = q0 + (cur_w + w) / total
-            # k-size bound (scale function k1): limit centroid span
-            limit = 4 * total * q * (1 - q) / self.compression + 1
-            if cur_w + w <= limit:
-                cur_m = (cur_m * cur_w + m * w) / (cur_w + w)
-                cur_w += w
-            else:
-                out_m.append(float(cur_m))
-                out_w.append(float(cur_w))
-                q0 += cur_w / total
-                cur_m, cur_w = m, w
-        out_m.append(float(cur_m))
-        out_w.append(float(cur_w))
-        self.means, self.weights = out_m, out_w
-
-    def quantile(self, q: float) -> float:
-        if not self.means:
-            return math.nan
-        total = sum(self.weights)
-        target = q * total
-        cum = 0.0
-        for m, w in zip(self.means, self.weights):
-            if cum + w >= target:
-                return m
-            cum += w
-        return self.means[-1]
-
-    def to_arrays(self) -> tuple[list[float], list[float]]:
-        return self.means, self.weights
-
-
-def tdigest_quantiles(
-    df: DataFrame, col: str, qs: Iterable[float], compression: float = 100.0
-) -> dict[float, float]:
-    """True t-digest quantiles: per-partition digests (Arrow batches,
-    vectorized) → tiny centroid tables → driver merge. The shuffle-free
-    scale path; each partition ships ~compression centroids."""
-
-    def digest_partition(batches):
-        d = TDigest(compression)
-        for pdf in batches:
-            arr = pdf.iloc[:, 0].dropna().to_numpy(dtype=np.float64)
-            if len(arr):
-                d.merge(TDigest.of(arr, compression))
-        m, w = d.to_arrays()
-        yield pd.DataFrame({"mean": m, "weight": w})
-
-    parts = (
-        df.select(F.col(col).cast("double"))
-        .mapInPandas(digest_partition, schema="mean double, weight double")
-        .collect()
-    )
-    final = TDigest(compression)
-    final.means = [r["mean"] for r in parts]
-    final.weights = [r["weight"] for r in parts]
-    final._compress()
-    return {q: final.quantile(q) for q in qs}
 
 
 ASSERT_STATS = ("null_rate", "min", "max", "mean", "ndv")
@@ -460,7 +357,7 @@ def outlier_bounds(
     the bounds bit-for-bit). ``zscore``: mean ± k·stddev (sample
     stddev both engines). Exact percentiles hold the whole column in
     the aggregation buffer per group — fine for a single global group
-    even at scale, but prefer iqr with ``tdigest_quantiles`` feeding
+    even at scale, but prefer iqr with ``percentile_approx`` feeding
     custom fences when the cluster is memory-tight."""
     c = F.col(col).cast("double")
     if method == "iqr":

@@ -682,7 +682,7 @@ def validate(
     # Scan budget is CONSTANT in the number of $drift rules: one grid
     # aggregation (all numeric min/max or clip quantiles together) +
     # one tagged histogram pass covering every column
-    # (drift.multi_state), instead of 2 scans per column. A per-spec
+    # (drift.state_frame), instead of 2 scans per column. A per-spec
     # `clip: [qlo, qhi]` bounds that column's grid by quantiles on
     # both the comparison and the persisted state, so the stored
     # histogram is outlier-proof too.

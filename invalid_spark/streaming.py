@@ -34,6 +34,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from invalid_spark import runner
 from invalid_spark.checks import rows as rowchecks
+from invalid_spark.checks.drift import _bucket_expr
 from invalid_spark.dsl import RuleSet
 
 
@@ -138,9 +139,9 @@ def windowed_chi2_drift(
 ) -> DataFrame:
     """Per-event-time-window goodness-of-fit drift: chi-square of the
     window's categorical mix against a fixed reference distribution
-    (the prior snapshot's category probabilities — exactly what
-    :func:`invalid_spark.checks.drift.categorical_state` stores,
-    normalized).
+    (the prior snapshot's category probabilities — exactly the
+    categorical rows :func:`invalid_spark.checks.drift.state_frame`
+    stores, normalized).
 
     Streaming-legal shape: ONE watermarked windowed aggregation per
     (window, category), then the O(|categories|) statistic folds into
@@ -228,8 +229,8 @@ def windowed_ks_drift(
     """Per-event-time-window ONE-sample KS drift of a numeric column
     against a fixed reference histogram (``ref_probs`` = per-bucket
     probabilities on the grid [lo, hi) with ``len(ref_probs)``
-    buckets — exactly a normalized
-    :func:`invalid_spark.checks.drift.numeric_state`). The numeric
+    buckets — exactly a column's normalized numeric rows in
+    :func:`invalid_spark.checks.drift.state_frame`). The numeric
     sibling of :func:`windowed_chi2_drift`.
 
     Streaming-legal shape: one watermarked (window, bucket)
@@ -241,8 +242,9 @@ def windowed_ks_drift(
     round-trip. Emits (window_start, window_end, n, statistic,
     drifted); identical on a batch frame (tested both ways).
 
-    Values outside [lo, hi) clamp into the edge buckets (same
-    convention as the batch histogram grid)."""
+    Values outside [lo, hi) clamp into the edge buckets and NULL/NaN
+    values are excluded from the window's counts and ``n`` (the same
+    bucketing as the batch histogram)."""
     from invalid_spark import mathutil
 
     bins = len(ref_probs)
@@ -260,16 +262,12 @@ def windowed_ks_drift(
     for p in ref_probs:
         acc += p / total
         ref_cdf.append(acc)
-    width = (hi - lo) / bins
     lam_crit = mathutil.kolmogorov_lambda_critical(threshold)
 
-    v = F.col(num_col).cast("double")
-    bucket = F.least(
-        F.lit(bins - 1),
-        F.greatest(F.lit(0), F.floor((v - F.lit(lo)) / F.lit(width))),
-    ).cast("int")
+    # the batch drift bucketing: NULL and NaN values get no bucket
+    bucket = _bucket_expr(F.col(num_col), lo, hi, bins).cast("int")
     counts = (
-        events.filter(v.isNotNull())
+        events.filter(bucket.isNotNull())
         .withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, window).alias("w"), bucket.alias("b"))
         .agg(F.count(F.lit(1)).alias("c"))

@@ -1,15 +1,17 @@
 """Property-based tests (hypothesis): the reference's type-inference
-semantics, sketch accuracy bounds, and codec round-trips hold for
+semantics, the drift statistics, and codec round-trips hold for
 arbitrary inputs, not just the golden fixtures."""
 
 from __future__ import annotations
 
+import math
+from fractions import Fraction
+
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from invalid_spark import codecs
-from invalid_spark.checks.stats import TDigest
 from invalid_spark import yamlmeta
 
 
@@ -61,50 +63,95 @@ def test_inference_matches_reference_hex_octal(i):
 
 
 # ---------------------------------------------------------------------------
-# t-digest accuracy
+# drift folds vs a pure-Python reference
 
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(
-        st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
-        min_size=20,
-        max_size=2000,
-    ),
-    st.sampled_from([0.1, 0.25, 0.5, 0.75, 0.9]),
+def _ks_w1_ref(cur, prev, bins):
+    """Exact KS and normalized W1 over the clamped-floor histogram of
+    the union grid (NULL and NaN excluded), as Fractions."""
+    xs = [x for x in cur + prev if x is not None and not math.isnan(x)]
+    if not xs:
+        return 0.0, 0.0
+    lo, hi = min(xs), max(xs)
+    width = (hi - lo) / bins or 1.0
+
+    def hist(vals):
+        h = [0] * bins
+        for x in vals:
+            if x is not None and not math.isnan(x):
+                h[min(bins - 1, max(0, math.floor((x - lo) / width)))] += 1
+        return h
+
+    hc, hp = hist(cur), hist(prev)
+    n, m = sum(hc), sum(hp)
+    if not (n and m):
+        return 0.0, 0.0
+    gaps, cc, cp = [], 0, 0
+    for a, b in zip(hc, hp):
+        cc, cp = cc + a, cp + b
+        gaps.append(abs(Fraction(cc, n) - Fraction(cp, m)))
+    return float(max(gaps)), float(sum(gaps) / bins)
+
+
+def _chi2_psi_ref(cur, prev, eps=1e-4):
+    """χ² (exact d²/r terms) and PSI (eps-floored terms), each a left
+    fold in category order: NULL first, then ascending strings."""
+    cats = sorted(
+        {None if c is None else str(c) for c in cur + prev},
+        key=lambda c: (c is not None, c or ""),
+    )
+    cnt = lambda vals, c: sum(  # noqa: E731
+        1 for v in vals if (None if v is None else str(v)) == c)
+    n, m = len(cur), len(prev)
+    chi2 = psi = 0.0
+    for c in cats:
+        o1, o2 = cnt(cur, c), cnt(prev, c)
+        d = float(o1 * m - o2 * n)
+        chi2 += d * d / float(o1 + o2)
+        p = max(o1 / n, eps) if n else eps
+        q = max(o2 / m, eps) if m else eps
+        psi += (p - q) * math.log(p / q)
+    return (chi2 / (float(n) * float(m)) if n and m else 0.0), psi
+
+
+_value = st.one_of(
+    st.none(), st.just(math.nan), st.sampled_from([0.0, 1.0, 2.5]),
+    st.floats(min_value=-1e3, max_value=1e3, allow_nan=False),
 )
-def test_tdigest_quantile_rank_error(values, q):
-    arr = np.array(values, dtype=np.float64)
-    d = TDigest.of(arr, compression=100.0)
-    est = d.quantile(q)
-    # the estimate's rank INTERVAL (ties span a range) must come
-    # within 10% of the target rank
-    s = np.sort(arr)
-    lo = np.searchsorted(s, est, side="left") / len(arr)
-    hi = np.searchsorted(s, est, side="right") / len(arr)
-    tol = 0.1 + 2.0 / len(arr)
-    assert lo - tol <= q <= hi + tol
+_side = st.lists(st.tuples(_value, st.sampled_from([None, 1, 2, 9, 10])),
+                 max_size=12)
 
 
-@settings(max_examples=20, deadline=None)
-@given(
-    st.lists(
-        st.floats(min_value=-1e3, max_value=1e3, allow_nan=False),
-        min_size=10, max_size=500,
-    ),
-    st.lists(
-        st.floats(min_value=-1e3, max_value=1e3, allow_nan=False),
-        min_size=10, max_size=500,
-    ),
-)
-def test_tdigest_merge_equivalent_to_whole(a, b):
-    whole = TDigest.of(np.array(a + b))
-    merged = TDigest.of(np.array(a)).merge(TDigest.of(np.array(b)))
-    for q in (0.25, 0.5, 0.75):
-        w, m = whole.quantile(q), merged.quantile(q)
-        arr = np.sort(np.array(a + b))
-        rw = np.searchsorted(arr, w, side="right") / len(arr)
-        rm = np.searchsorted(arr, m, side="right") / len(arr)
-        assert abs(rw - rm) <= 0.15
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_side, _side, st.sampled_from([1, 2, 3, 7]), st.booleans())
+@example([], [(1.0, 1)], 4, False)                     # empty side
+@example([(2.5, 9)] * 3, [(2.5, 9)] * 2, 3, True)      # all equal
+@example([(0.0, None), (1.0, 10)], [(1.0, 9), (None, None)], 2, True)
+def test_drift_folds_match_reference(spark, cur, prev, bins, int_cats):
+    """KS, W1, χ² and PSI from the one drift core equal a short
+    pure-Python reference on small samples, including an empty side,
+    all-equal values, NULL/NaN numerics, a NULL category and
+    integer-valued categories (which order as strings: "10" < "9")."""
+    from invalid_spark.checks import drift
+    from invalid_spark.model import local_frame
+
+    schema = f"x double, c {'long' if int_cats else 'string'}"
+    fix = (lambda c: c) if int_cats else (lambda c: None if c is None else f"v{c}")
+    frame = lambda rows: local_frame(  # noqa: E731
+        spark, [(x, fix(c)) for x, c in rows], schema)
+    fc, fp = frame(cur), frame(prev)
+    xs_c, xs_p = [x for x, _ in cur], [x for x, _ in prev]
+    cs_c, cs_p = [fix(c) for _, c in cur], [fix(c) for _, c in prev]
+
+    ks, w1 = _ks_w1_ref(xs_c, xs_p, bins)
+    assert drift.ks_statistic_df(fc, fp, "x", bins=bins).first()["statistic"] == ks
+    assert drift.w1_statistic_df(fc, fp, "x", bins=bins).first()["statistic"] == w1
+    chi2, psi = _chi2_psi_ref(cs_c, cs_p)
+    got = drift.chi2_statistic_df(fc, fp, "c").first()
+    assert got["statistic"] == chi2
+    assert got["dof"] == max(len({str(c) for c in cs_c + cs_p}) - 1, 1)
+    assert math.isclose(drift.psi_drift(fc, fp, "c").statistic, psi,
+                        rel_tol=1e-12, abs_tol=1e-15)
 
 
 # ---------------------------------------------------------------------------

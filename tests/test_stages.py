@@ -541,37 +541,6 @@ def test_column_profile_single_pass(spark, images):
     assert d[("w", "ndv")] >= 9  # 8..16 sides + 2 planted extremes
 
 
-def test_tdigest_vs_exact_quantiles(spark):
-    df = spark.range(10000).select(
-        (F.col("id").cast("double") / 100.0).alias("v")
-    )
-    got = stats.tdigest_quantiles(df, "v", (0.1, 0.5, 0.9))
-    for q, expect in [(0.1, 10.0), (0.5, 50.0), (0.9, 90.0)]:
-        assert abs(got[q] - expect) < 1.5, (q, got[q])
-
-
-def test_tdigest_accuracy_vs_oracle_checked_exact(spark):
-    """The t-digest sketch bounded against the ORACLE-CHECKED exact
-    truth (percentiles_exact_lineitem replays Spark's percentile in
-    DuckDB bit-for-bit), on real skewed lineitem data: relative error
-    < 1% at every tracked quantile. This ties the un-SQL-able sketch
-    to an oracle-gated reference."""
-    import __spark_entry__ as entrymod
-
-    sf = "/root/testdata/sf0.01"
-    exact = {
-        r["quantile"]: r["value"]
-        for r in entrymod.q_percentiles_exact_lineitem(spark, sf).collect()
-    }
-    df = spark.read.parquet(f"{sf}/lineitem.parquet")
-    approx = stats.tdigest_quantiles(
-        df, "l_extendedprice", tuple(exact), compression=200.0
-    )
-    for q, truth in exact.items():
-        rel = abs(approx[q] - truth) / abs(truth)
-        assert rel < 0.01, (q, approx[q], truth, rel)
-
-
 def test_ks_drift_flags_shift(spark):
     cur = synth.images_df(spark, 300)
     prev_drifted = synth.images_prev_df(spark, 300, drifted=True)
@@ -707,8 +676,11 @@ def test_wasserstein_drift(spark, tmp_path):
     assert drift.wasserstein_drift(cur, cur, "h").statistic == 0.0
     # exact hand value: all mass one bucket apart over a 2-bin grid
     # -> W1 = 1 bucket-gap / 2 bins = 0.5
-    stat, n, m_ = drift._w1_from_hists([1, 0], [0, 1])
-    assert (stat, n, m_) == (0.5, 1, 1)
+    one = drift.w1_statistic_df(
+        spark.createDataFrame([(0.0,)], "h double"),
+        spark.createDataFrame([(1.0,)], "h double"), "h", bins=2,
+    ).collect()[0]
+    assert (one["statistic"], one["n_cur"], one["n_prior"]) == (0.5, 1, 1)
     # runner continuous path: ONE stored histogram serves both ks and
     # wasserstein rules on the same column
     from invalid_spark import runner
@@ -1247,6 +1219,45 @@ def test_drift_empty_side_returns_zero_not_crash(spark):
     assert r2.statistic == 0.0 and not r2.drifted
 
 
+def test_drift_nan_excluded_like_null(spark, tmp_path):
+    """One NaN must not blind numeric drift: max() over a column with
+    a NaN is NaN, and a (lo, NaN) grid puts every value in one bucket.
+    NaN is excluded like NULL — from the grid, the histogram and n —
+    in the two-sample tests and in the runner's persisted state, so
+    the next stored-state comparison still sees a +500 shift."""
+    import os
+
+    from invalid_spark import runner
+    from invalid_spark.dsl import load_rules
+
+    prev = spark.range(1000).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v"))
+    cur = spark.range(1000).select(
+        F.col("id").alias("k"), (F.col("id") + 500).cast("double").alias("v"))
+    nan = spark.range(1000, 1001).select(
+        F.col("id").alias("k"), F.lit(float("nan")).alias("v"))
+    for c, p in ((cur.unionByName(nan), prev), (cur, prev.unionByName(nan))):
+        r = drift.ks_drift(c, p, "v")
+        assert r.drifted and r.statistic == 0.5, r
+        assert (r.n_current, r.n_prior) == (1000, 1000)
+        m = drift.multi_drift(c, p, [("v", {"test": "ks"})])["v"]
+        assert (m.statistic, m.drifted) == (r.statistic, r.drifted)
+        w = drift.wasserstein_drift(c, p, "v")
+        assert w.drifted and w.statistic > 0.3
+    # stored state written from the NaN-carrying snapshot keeps a
+    # finite grid, and the next snapshot's comparison flags the shift
+    rules = load_rules("v: {$type: $float, $drift: {test: ks}}\n")
+    out = str(tmp_path / "nan")
+    runner.validate(spark, prev.unionByName(nan), rules, "k", out,
+                    snapshot="s1", manifest_dir=os.path.join(out, "m1"))
+    st = spark.read.parquet(os.path.join(out, "drift_state")).collect()
+    assert {(r["lo"], r["hi"], r["n"]) for r in st} == {(0.0, 999.0, 1000)}
+    runner.validate(spark, cur, rules, "k", out,
+                    snapshot="s2", manifest_dir=os.path.join(out, "m2"))
+    d = spark.read.parquet(os.path.join(out, "drift")).collect()
+    assert len(d) == 1 and d[0]["drifted"] and d[0]["statistic"] == 0.5
+
+
 def test_phash_neardup_planted_twins(spark, images):
     """Image near-dup over real synthetic phashes: twins planted 2
     bits away are all recovered; clean images produce no pairs; the
@@ -1363,9 +1374,36 @@ def test_multi_drift_matches_per_column(spark):
     )
 
 
-def test_multi_state_scan_count_independent_of_rules(spark):
+_PYTHON_NODES = ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython")
+
+
+def _per_column_counts(df, col, spec, grid):
+    """One column's drift-state counts the plain way: its own
+    ``groupBy(...).count()`` — numeric values bucketed on ``grid``
+    (NULL and NaN dropped), categories as strings (NULL kept)."""
+    if spec.get("test", "ks") in ("chi2", "psi"):
+        return {
+            (col, spec["test"], None, r["cat"]): r["count"]
+            for r in df.groupBy(F.col(col).cast("string").alias("cat"))
+            .count().collect()
+        }
+    lo, hi, bins = grid
+    width = (hi - lo) / bins or 1.0
+    v = F.col(col).cast("double")
+    b = F.least(F.lit(bins - 1), F.greatest(
+        F.lit(0), F.floor((v - F.lit(lo)) / F.lit(width))))
+    return {
+        (col, "ks", r["b"], None): r["count"]
+        for r in df.filter(v.isNotNull() & ~F.isnan(v))
+        .groupBy(b.alias("b")).count().collect()
+    }
+
+
+def test_multi_state_scan_count_independent_of_rules(spark, tmp_path, monkeypatch):
     """The tagged histogram pass reads the table ONCE however many
-    $drift rules there are (the per-column path costs 2 scans each)."""
+    $drift rules there are (the per-column path costs 2 scans each),
+    and neither it nor the stored-state comparison job starts a
+    Python worker: no MapInPandas / Python UDF node at any width."""
     import os as _os
 
     sf = _os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -1377,24 +1415,50 @@ def test_multi_state_scan_count_independent_of_rules(spark):
         ("l_discount", {}),
         ("l_returnflag", {"test": "chi2"}),
     ]
-    s1 = drift.multi_state(df, one, drift.multi_grid(df, one))
-    s4 = drift.multi_state(df, four, drift.multi_grid(df, four))
+    s1 = drift.state_frame(df, one, drift.multi_grid(df, one))
+    grids4 = drift.multi_grid(df, four)
+    s4 = drift.state_frame(df, four, grids4)
     assert _scan_count(s1) == _scan_count(s4) == 1
-    # and the per-column states agree with the one-pass state
+    # and per-column counts agree with the one-pass state
     rows4 = {
-        (r["column_name"], r["bucket"], r["cat"]): r["cnt"]
+        (r["column_name"], r["test"], r["bucket"], r["cat"]): r["cnt"]
         for r in s4.collect()
     }
-    ref_w = {
-        (r["column_name"], r["bucket"], r["cat"]): r["cnt"]
-        for r in drift.numeric_state(df, "l_quantity").collect()
-    }
-    ref_fmt = {
-        (r["column_name"], r["bucket"], r["cat"]): r["cnt"]
-        for r in drift.categorical_state(df, "l_returnflag").collect()
-    }
-    for k, v in {**ref_w, **ref_fmt}.items():
-        assert rows4[k] == v, k
+    for col, spec in (four[0], four[3]):
+        for k, v in _per_column_counts(df, col, spec, grids4.get(col)).items():
+            assert rows4[k] == v, k
+    # D=16: still one scan, still JVM-only
+    wide = df.select(
+        "l_returnflag", "l_linestatus",
+        *[(F.col("l_quantity") * (i + 1)).alias(f"q{i}") for i in range(8)],
+        *[(F.col("l_orderkey") % (i + 2)).alias(f"k{i}") for i in range(6)],
+    )
+    specs = (
+        [(f"q{i}", {"test": "ks"}) for i in range(8)]
+        + [("l_returnflag", {"test": "chi2"}), ("l_linestatus", {"test": "psi"})]
+        + [(f"k{i}", {"test": "chi2"}) for i in range(6)]
+    )
+    assert len(specs) == 16
+    state = drift.state_frame(wide, specs, drift.multi_grid(wide, specs))
+    plan = state._jdf.queryExecution().executedPlan().toString()
+    assert not [n for n in _PYTHON_NODES if n in plan], plan
+    assert _scan_count(state) == 1
+    # the stored-state comparison: one fold job over the current
+    # table (read once) and the stored rows
+    stored_dir = str(tmp_path / "state")
+    state.write.parquet(stored_dir)
+    folds = []
+    fold = drift._fold
+    monkeypatch.setattr(
+        drift, "_fold", lambda *a: folds.append(fold(*a)) or folds[-1]
+    )
+    res = drift.multi_drift_vs_state(wide, specs, spark.read.parquet(stored_dir))
+    assert len(res) == 16 and not any(r.drifted for r in res.values())
+    assert len(folds) == 1
+    # the physical plan before adaptive execution re-plans it
+    plan = folds[0]._jdf.queryExecution().sparkPlan().toString()
+    assert not [n for n in _PYTHON_NODES if n in plan], plan
+    assert plan.count("lineitem.parquet") == 1, plan
 
 
 def test_multi_grid_clip_bounds_outliers(spark):
@@ -1575,28 +1639,24 @@ def test_stat_assertions_single_pass(spark):
     assert row["value"] is None and not row["passed"]
 
 
-def test_drift_state_out_of_range_bucket_rejected():
+def test_drift_state_out_of_range_bucket_rejected(spark):
     """A stored drift state whose bucket values disagree with its bins
     field (legacy / hand-edited state) fails loudly instead of
-    aliasing via negative indices or raising a bare IndexError."""
-    prev = [{"column_name": "w", "test": "ks", "bucket": 9, "cnt": 3,
-             "bins": 4}]
-    with pytest.raises(ValueError, match="corrupt"):
-        drift._results_from_states([("w", {"test": "ks"})], [], prev)
-    neg = [{"column_name": "w", "test": "ks", "bucket": -1, "cnt": 3,
-            "bins": 4}]
-    with pytest.raises(ValueError, match="corrupt"):
-        drift._results_from_states([("w", {"test": "ks"})], [], neg)
+    aliasing into another bucket."""
+    cur = spark.createDataFrame([(1.0,), (2.0,)], "w double")
+    for bucket in (9, -1):
+        stored = spark.createDataFrame(
+            [("w", "ks", bucket, None, 3, 0.0, 4.0, 4, 3)], drift.STATE_SCHEMA
+        )
+        with pytest.raises(ValueError, match="corrupt"):
+            drift.multi_drift_vs_state(cur, [("w", {"test": "ks"})], stored)
 
 
 def test_multi_state_wide_bit_parity(spark):
-    """multi_state_wide (no-explode, Arrow-batched counting) emits
-    bit-identical state rows to the explode path at D=16 drift rules,
-    including NULL numeric exclusion, NULL categories kept, numeric
-    chi2 categories, and clipped grids; its plan has NO row-expanding
-    Generate node while the explode path's does."""
-    from pyspark.sql import functions as F
-
+    """The one histogram builder at D=16 drift rules equals each
+    column's own groupBy count on the same grid, including NULL
+    numeric exclusion, NULL categories kept, numeric chi2 categories
+    and clipped grids."""
     ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
     # 16 derived drift columns: 8 numeric (one clipped, one with
     # NULLs), 8 categorical (one numeric-valued, one with NULLs)
@@ -1623,23 +1683,17 @@ def test_multi_state_wide_bit_parity(spark):
     )
     assert len(specs) == 16
     grids = drift.multi_grid(df, specs)
-    a = drift.multi_state(df, specs, grids)
-    b = drift.multi_state_wide(df, specs, grids)
-    key = lambda r: (r[0], r[1], -1 if r[2] is None else r[2],  # noqa: E731
-                     "" if r[3] is None else r[3])
-    ra = sorted(map(tuple, a.collect()), key=key)
-    rb = sorted(map(tuple, b.collect()), key=key)
-    assert ra == rb and len(ra) > 0
-    # plan shapes: explode amplifies rows (Generate), wide does not
-    pa = a._jdf.queryExecution().executedPlan().toString()
-    pb = b._jdf.queryExecution().executedPlan().toString()
-    assert "Generate" in pa
-    assert "Generate" not in pb
-    assert "MapInPandas" in pb
-    # the dispatcher picks the wide variant at D >= threshold
-    assert len(specs) >= drift.WIDE_STATE_THRESHOLD
-    pd_plan = drift.state_frame(df, specs, grids)
-    assert "Generate" not in pd_plan._jdf.queryExecution().executedPlan().toString()
+    got = {
+        (r["column_name"], r["test"], r["bucket"], r["cat"]): r["cnt"]
+        for r in drift.state_frame(df, specs, grids).collect()
+    }
+    want = {}
+    for col, spec in specs:
+        want.update(_per_column_counts(df, col, spec, grids.get(col)))
+    assert got == want and len(got) > 0
+    # the clipped grid really clips: the clamped edge buckets are hit
+    assert got[("value", "ks", 0, None)] > 0
+    assert got[("value", "ks", 255, None)] > 0
 
 
 def test_anomaly_evaluate_semantics():

@@ -466,15 +466,18 @@ def test_phash_screen_batch_and_stream(spark, tmp_path):
 
 def test_windowed_ks_drift_batch_and_stream(spark, tmp_path):
     """One-sample windowed KS: a window matching the uniform
-    reference passes, a concentrated window flags; the same query
-    runs as Structured Streaming with identical statistics."""
+    reference passes, a concentrated window flags, NaN values are not
+    counted; the same query runs as Structured Streaming with
+    identical statistics."""
     ref = [0.25, 0.25, 0.25, 0.25]  # uniform on [0, 100), 4 buckets
     rows = []
     # window A: spread across all buckets evenly → no drift
     for i in range(48):
         rows.append((float((i % 4) * 25 + 5), "2024-01-01 00:00:%02d" % (i % 60)))
-    # window B: everything in bucket 0 → strong drift
+    # window B: everything in bucket 0 → strong drift; its NaNs are
+    # excluded like NULLs, from the buckets and from n
     rows += [(3.0, "2024-01-01 00:05:%02d" % (i % 60)) for i in range(48)]
+    rows += [(float("nan"), "2024-01-01 00:05:%02d" % i) for i in range(4)]
     # window C: far enough ahead that the 5-minute watermark passes
     # windows A and B — without it append mode would close NO window
     # and the streaming half of this test would assert nothing
@@ -487,6 +490,7 @@ def test_windowed_ks_drift_batch_and_stream(spark, tmp_path):
     assert not out["2024-01-01 00:00:00"]["drifted"]
     assert out["2024-01-01 00:05:00"]["drifted"]
     assert out["2024-01-01 00:05:00"]["statistic"] == pytest.approx(0.75)
+    assert out["2024-01-01 00:05:00"]["n"] == 48
     # streaming execution emits identical rows for closed windows
     d = str(tmp_path / "ks_ev")
     src.coalesce(1).write.mode("overwrite").parquet(d)
