@@ -1,30 +1,32 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH,
-SimHash, embedding-cosine near-dup.
+SimHash/phash Hamming, embedding-cosine and semantic (SemDeDup)
+near-dup, each also incremental (``*_vs_state``).
 
 Scale design (the point of each operator at 100 TB):
 
 - **exact**: hash-groupBy on the md5 fingerprint — one shuffle of
   (16-byte key, id); partial combine collapses per-partition dups.
-- **n-gram Jaccard**: explode distinct shingles → self-join on the
-  shingle → count common per pair. Quadratic in shingle *document
-  frequency*, so :func:`shingle_pairs` drops shingles whose df
-  exceeds ``max_df`` (stop-shingles: every pair they connect is
-  noise; standard suffix-array/minhash-paper trick). The join key is
-  the shingle string — high cardinality, well distributed, AQE
-  handles residual skew.
-- **MinHash + LSH**: the scale path. Per doc, a k-element signature
-  (min of md5(seed || shingle) per seed — string min is portable to
-  any engine); band the signature (b bands × r rows), hash each
-  band, bucket-join on (band, hash). Only documents sharing a band
-  bucket are candidates → candidate verification computes the exact
-  Jaccard on the (tiny) candidate set. Cost: one explode of b rows
-  per doc + one groupBy — linear, no all-pairs.
-- **SimHash**: 32-bit signature via per-bit majority vote over token
-  hashes (explode tokens → one groupBy(doc) with 32 conditional
-  sums). Hamming-close signatures → near-dup candidates.
-- **embedding cosine**: exact all-pairs for small corpora /
-  verification; production path is the LSH bucketing in
-  :mod:`invalid_spark.pipeline.similarity`.
+- **one candidate join**: every near-dup family is "explode each row
+  to bucket keys → :func:`bucket_pairs` → verify". The bucket join is
+  an equi-join (self-join with ``a < b``, or batch vs state / stream
+  vs static / corpus vs queries), so its repartition cost is reasoned
+  about in one place and no family is ever all-pairs. A family is
+  its key builder plus its similarity expression:
+
+  - n-gram Jaccard: key = the shingle ``g``; :func:`shingle_pairs`
+    drops stop-shingles whose df exceeds ``max_df`` (every pair they
+    connect is noise) and counts common shingles per pair.
+  - MinHash + LSH: key = ``(band, band_hash)`` from :func:`_bands`,
+    the one band builder (b bands × r rows of a k-element signature,
+    min of a Carter-Wegman hash of md5(shingle) per row); candidates
+    are verified with the exact Jaccard or the signature estimate.
+  - SimHash / phash: key = ``(blk, val)`` from :func:`_hamming_blocks`,
+    the one pigeonhole builder; verified by popcount distance.
+  - embedding LSH: key = the hyperplane sign ``code``, multi-probed;
+    SemDeDup: key = the coarse ``cluster``; both verified by cosine.
+
+  Incremental variants end in :func:`_vs_state`, the one
+  ``dup_of_corpus | dup_in_batch | new`` decision.
 
 Hash choice: md5 (not xxhash64) so every signature is reproducible
 in the DuckDB oracle — at production scale swap HASH_FN for
@@ -37,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from invalid_spark.model import local_frame
+from invalid_spark.pipeline import similarity
 from invalid_spark.pipeline import text as T
 
 
@@ -128,6 +131,94 @@ def exact_dedup_vs_state(
 
 
 # ---------------------------------------------------------------------------
+# the one candidate join
+
+def _side(df: DataFrame, s: str, keys=(), carry=()) -> DataFrame:
+    """One pair side: ``id`` renamed ``s``, the bucket keys as they
+    are, and each ``carry`` column this side has suffixed ``_s``."""
+    return df.select(
+        F.col("id").alias(s), *keys,
+        *[F.col(c).alias(f"{c}_{s}") for c in carry if c in df.columns],
+    )
+
+
+def bucket_pairs(
+    left: DataFrame, keys, right: DataFrame | None = None, carry=()
+) -> DataFrame:
+    """The candidate join behind every near-dup family, incremental
+    decision, streaming screen and ANN probe: ``(a, b, <carry>_a,
+    <carry>_b)``, one row per bucket the two ids share.
+
+    ``left`` and ``right`` are ``(id, *keys, *carry)`` frames; a carry
+    column only one side has is carried from that side alone. With
+    ``right=None`` it is a self-join that keeps ``a < b``; otherwise it
+    is a cross join (batch vs state, stream vs static, corpus vs
+    queries) and the caller may pass ``F.broadcast(right)``.
+
+    Repeats are NOT removed: a pair sharing several buckets (bands,
+    blocks, probes) appears once per bucket, so pair outputs take
+    ``.distinct()`` and best-per-row aggregates absorb the repeats in
+    their ``min``/``max``. The join is an equi-join on bucket keys, so
+    the shuffle is uniform unless one bucket holds a near-identical
+    cluster (AQE skew-join splits it; :func:`band_bucket_skew` and
+    :func:`semantic_cluster_skew` pre-flight it) — never all-pairs."""
+    keys = list(keys)
+    a = _side(left, "a", keys, carry)
+    b = _side(left if right is None else right, "b", keys, carry)
+    pairs = a.join(b, keys)
+    if right is None:
+        pairs = pairs.filter(F.col("a") < F.col("b"))
+    return pairs.select(
+        "a", "b", *a.columns[len(keys) + 1:], *b.columns[len(keys) + 1:]
+    )
+
+
+def _join_back(
+    pairs: DataFrame, cols, left: DataFrame, right: DataFrame | None = None
+) -> DataFrame:
+    """Attach payload columns to deduplicated pairs: ``<col>_a`` from
+    ``left`` by ``a``, ``<col>_b`` from ``right`` (default ``left``) by
+    ``b`` — for payloads too wide to ride the bucket join once per
+    shared bucket."""
+    other = left if right is None else right
+    return pairs.join(_side(left, "a", carry=cols), "a").join(
+        _side(other, "b", carry=cols), "b"
+    )
+
+
+def _vs_state(
+    ids: DataFrame, best_corpus: DataFrame, best_batch: DataFrame, is_dup
+) -> DataFrame:
+    """The one incremental decision: ``(id, decision, <best_corpus>,
+    <best_batch>)`` for every batch ``id`` in ``ids``.
+
+    ``best_corpus`` and ``best_batch`` are ``(id, best)`` frames: the
+    best candidate score of a batch row against the persisted state,
+    and against a SMALLER-keyed row of the same batch (the first-kept
+    rule of :func:`exact_dedup_vs_state`). A row with no candidate gets
+    NULL. ``is_dup`` maps a best-score Column to "is a duplicate".
+
+    - ``dup_of_corpus`` — the corpus best is a duplicate
+    - ``dup_in_batch``  — otherwise, the batch best is a duplicate
+    - ``new``           — first sighting; exactly the rows appended to
+      the state"""
+    c, b = best_corpus.columns[1], best_batch.columns[1]
+    return (
+        ids.join(best_corpus, "id", "left")
+        .join(best_batch, "id", "left")
+        .select(
+            "id",
+            F.when(is_dup(F.col(c)), F.lit("dup_of_corpus"))
+            .when(is_dup(F.col(b)), F.lit("dup_in_batch"))
+            .otherwise(F.lit("new"))
+            .alias("decision"),
+            c,
+            b,
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
 # shingles + n-gram Jaccard
 
 def _grams(toks: Column, n: int) -> Column:
@@ -184,13 +275,8 @@ def shingle_pairs(
     if max_df is not None:
         hot = ex.groupBy("g").count().filter(F.col("count") > max_df).select("g")
         ex = ex.join(F.broadcast(hot), "g", "left_anti")
-    a = ex.select(F.col("id").alias("a"), "g")
-    b = ex.select(F.col("id").alias("b"), "g")
-    pairs = (
-        a.join(b, "g")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("common"))
+    pairs = bucket_pairs(ex, ["g"]).groupBy("a", "b").agg(
+        F.count(F.lit(1)).alias("common")
     )
     ca = counts.select(F.col("id").alias("a"), F.col("ns").alias("na"))
     cb = counts.select(F.col("id").alias("b"), F.col("ns").alias("nb"))
@@ -258,77 +344,40 @@ def minhash_signatures(
     return h.groupBy("id").agg(*aggs)
 
 
-def _sig_bands(
-    sig: DataFrame, bands: int, rows: int, keep_sig: bool = False
-) -> DataFrame:
-    """Band rows (id, band, band_hash) derived from a signature
-    frame — a pure projection, so state bands never need storing.
-    ``keep_sig=True`` carries the signature columns along (the
-    stream-static screen verifies in the same row as the join)."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"s{b * rows + r}") for r in range(rows)]
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    extra = (
-        [F.col(f"s{j}") for j in range(bands * rows)] if keep_sig else []
-    )
-    return sig.select("id", *extra, F.explode(band_structs).alias("bh")).select(
-        "id",
-        *extra,
-        F.col("bh.band").alias("band"),
-        F.col("bh.band_hash").alias("band_hash"),
-    )
-
-
-def array_sig_bands(
-    frame: DataFrame,
-    sig_col: str,
-    bands: int,
-    rows: int,
-    keep: list[str] | None = None,
-) -> DataFrame:
-    """Band rows from an ``array<long>`` signature column (the
-    row-local :func:`with_minhash_signature` form) — the SAME
-    ``md5(concat_ws(',', …))`` band construction as :func:`_sig_bands`
-    over signature columns, kept in one place so the batch and
-    streaming paths cannot drift apart. ``keep`` threads extra
-    source columns through the explode."""
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(sig_col, b * rows + r + 1).cast(
-                                "string"
-                            )
-                            for r in range(rows)
-                        ],
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    extra = list(keep or [])
+def _bands(frame: DataFrame, sig: list[Column], bands: int, rows: int) -> DataFrame:
+    """Band rows: ``frame``'s columns plus ``(band, band_hash)``, one
+    row per band — the one band builder of every MinHash path (batch,
+    vs-state, streaming screen), so they cannot drift apart.
+    ``band_hash`` is ``md5`` of the band's ``rows`` signature elements
+    joined by ``','``. ``sig`` is the k signature element Columns:
+    ``F.col(f"s{j}")`` over a signature frame, or
+    ``F.element_at(arr, j + 1)`` over the row-local array form
+    (:func:`with_minhash_signature`). A pure projection, so state
+    bands never need storing."""
     return frame.select(
-        "id", sig_col, *extra, F.explode(band_structs).alias("bh")
-    ).select(
-        "id", sig_col, *extra,
-        F.col("bh.band").alias("band"),
-        F.col("bh.band_hash").alias("band_hash"),
+        "*",
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.md5(
+                            F.concat_ws(
+                                ",",
+                                *[e.cast("string")
+                                  for e in sig[b * rows:(b + 1) * rows]],
+                            )
+                        ).alias("band_hash"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ),
     )
+
+
+def _sig_cols(k: int) -> list[Column]:
+    return [F.col(f"s{j}") for j in range(k)]
 
 
 def with_minhash_signature(
@@ -412,7 +461,9 @@ def minhash_bands(
 ) -> DataFrame:
     """One row per (doc, band): (id, band, band_hash). k = bands*rows."""
     sig = minhash_signatures(df, bands * rows, n, text_col, key_col)
-    return _sig_bands(sig, bands, rows)
+    return _bands(sig, _sig_cols(bands * rows), bands, rows).select(
+        "id", "band", "band_hash"
+    )
 
 
 def lsh_candidates(
@@ -437,12 +488,8 @@ def lsh_candidates(
     # unreferenced, so repeated calls in a long-lived session (e.g.
     # curation over many corpora) don't accumulate executor storage.
     b = minhash_bands(df, bands, rows, n, text_col, key_col).persist()
-    l = b.select(F.col("id").alias("a"), "band", "band_hash")
-    r = b.select(F.col("id").alias("b"), "band", "band_hash")
     out = (
-        l.join(r, ["band", "band_hash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
+        bucket_pairs(b, ["band", "band_hash"])
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -461,7 +508,7 @@ def minhash_state(
     MinHash signature row per document — the near-dup sibling of
     :func:`fingerprint_state`. k·8 bytes per doc, independent of
     document size, and band rows are a pure projection of it
-    (:func:`_sig_bands`), so the state is the only artifact
+    (:func:`_bands`), so the state is the only artifact
     incremental near-dup ever rereads. It grows by appending each
     batch's ``new`` decisions' signatures."""
     return minhash_signatures(df, k, n, text_col, key_col)
@@ -504,63 +551,34 @@ def minhash_dedup_vs_state(
     are always ``new``.
     """
     k = bands * rows
+    names = [f"s{j}" for j in range(k)]
     bsig = minhash_signatures(cur, k, n, text_col, key_col).persist()
-    bb = _sig_bands(bsig, bands, rows)
-    stb = _sig_bands(state, bands, rows)
+    bb = _bands(bsig, _sig_cols(k), bands, rows)
     est = sum(
-        F.when(F.col(f"__a_s{j}") == F.col(f"__b_s{j}"), 1).otherwise(0)
-        for j in range(k)
+        F.when(F.col(f"{s}_a") == F.col(f"{s}_b"), 1).otherwise(0)
+        for s in names
     ) / F.lit(float(k))
 
-    def _renamed(sig: DataFrame, side: str, idc: str) -> DataFrame:
-        return sig.select(
-            F.col("id").alias(idc),
-            *[F.col(f"s{j}").alias(f"__{side}_s{j}") for j in range(k)],
+    def best(pairs: DataFrame, right: DataFrame, side: str, name: str):
+        return (
+            _join_back(pairs.distinct(), names, bsig, right)
+            .groupBy(F.col(side).alias("id"))
+            .agg(F.max(est).alias(name))
         )
 
-    # batch vs corpus state
-    cs = (
-        bb.select(F.col("id").alias("__bid"), "band", "band_hash")
-        .join(
-            stb.select(F.col("id").alias("__sid"), "band", "band_hash"),
-            ["band", "band_hash"],
-        )
-        .select("__bid", "__sid")
-        .distinct()
-    )
-    est_c = (
-        cs.join(_renamed(bsig, "a", "__bid"), "__bid")
-        .join(_renamed(state, "b", "__sid"), "__sid")
-        .groupBy("__bid")
-        .agg(F.max(est).alias("est_corpus"))
-    )
-    # batch-internal, smaller key → candidate keeper
-    bbp = (
-        bb.select(F.col("id").alias("__a"), "band", "band_hash")
-        .join(
-            bb.select(F.col("id").alias("__b"), "band", "band_hash"),
-            ["band", "band_hash"],
-        )
-        .filter(F.col("__a") < F.col("__b"))
-        .select("__a", "__b")
-        .distinct()
-    )
-    est_b = (
-        bbp.join(_renamed(bsig, "a", "__a"), "__a")
-        .join(_renamed(bsig, "b", "__b"), "__b")
-        .groupBy("__b")
-        .agg(F.max(est).alias("est_batch"))
-    )
-    ids = cur.select(F.col(key_col).alias("id"))
+    stb = _bands(state, _sig_cols(k), bands, rows)
     out = (
-        ids.join(est_c, ids.id == est_c["__bid"], "left")
-        .join(est_b, ids.id == est_b["__b"], "left")
+        _vs_state(
+            cur.select(F.col(key_col).alias("id")),
+            best(bucket_pairs(bb, ["band", "band_hash"], stb), state, "a",
+                 "est_corpus"),
+            best(bucket_pairs(bb, ["band", "band_hash"]), bsig, "b",
+                 "est_batch"),
+            lambda e: e >= threshold,
+        )
         .select(
             "id",
-            F.when(F.col("est_corpus") >= threshold, F.lit("dup_of_corpus"))
-            .when(F.col("est_batch") >= threshold, F.lit("dup_in_batch"))
-            .otherwise(F.lit("new"))
-            .alias("decision"),
+            "decision",
             F.round("est_corpus", 6).alias("est_corpus"),
             F.round("est_batch", 6).alias("est_batch"),
         )
@@ -590,18 +608,23 @@ def band_bucket_skew(
     verifications. One aggregate + TakeOrdered (never a global
     sort); deterministic (count desc, band, band_hash) order."""
     b = minhash_bands(df, bands, rows, n, text_col, key_col)
-    counts = b.groupBy("band", "band_hash").agg(
+    return _bucket_skew(b, ["band", "band_hash"], top)
+
+
+def _bucket_skew(keyed: DataFrame, keys: list[str], top: int) -> DataFrame:
+    """The ``top`` most-occupied buckets of a keyed frame with the
+    candidate pairs each alone adds to :func:`bucket_pairs`
+    (``n·(n−1)/2``): ``(*keys, n_docs, est_pairs)`` in (n_docs desc,
+    keys asc) order. One aggregate + TakeOrderedAndProject, never a
+    global sort."""
+    counts = keyed.groupBy(*keys).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
     return (
-        counts.orderBy(
-            F.col("n_docs").desc(), F.col("band").asc(),
-            F.col("band_hash").asc(),
-        )
+        counts.orderBy(F.col("n_docs").desc(), *[F.col(k).asc() for k in keys])
         .limit(top)
         .select(
-            "band",
-            "band_hash",
+            *keys,
             "n_docs",
             (F.col("n_docs") * (F.col("n_docs") - 1) / 2)
             .cast("long")
@@ -636,26 +659,43 @@ def minhash_lsh_dedup(
     # LSH banding pipeline runs once, not once per downstream use
     cand = lsh_candidates(df, bands, rows, n, text_col, key_col)
     # restrict shingle-array construction to candidate docs BEFORE
-    # computing the arrays: a broadcast semi-join prunes the corpus,
-    # so the O(m²) array_distinct runs on candidates only.
+    # computing the arrays: a semi-join prunes the corpus, so the
+    # O(m²) array_distinct runs on candidates only.
     ids = (
         cand.select(F.col("a").alias("cid"))
         .unionByName(cand.select(F.col("b").alias("cid")))
         .distinct()
     )
+    # the checkpointed candidates report an unknown size, so the
+    # planner never broadcasts them by itself, and AQE only does so
+    # after planning a sort-merge join that shuffles the corpus text.
+    # Broadcast when at most 2·|cand| ids fit under Spark's own
+    # threshold (counting the materialized candidates is one cheap job)
+    if _fits_broadcast(ids, 2 * cand.count()):
+        ids = F.broadcast(ids)
     sh = (
-        df.join(F.broadcast(ids), F.col(key_col) == F.col("cid"), "left_semi")
+        df.join(ids, F.col(key_col) == F.col("cid"), "left_semi")
         .select(F.col(key_col).alias("id"), shingle_col(F.col(text_col), n).alias("sh"))
     )
-    av = sh.select(F.col("id").alias("a"), F.col("sh").alias("sha"))
-    bv = sh.select(F.col("id").alias("b"), F.col("sh").alias("shb"))
-    joined = cand.join(av, "a").join(bv, "b")
-    common = F.size(F.array_intersect("sha", "shb"))
-    union = F.size("sha") + F.size("shb") - common
+    common = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - common
     j = common.cast("double") / union.cast("double")
-    return joined.select("a", "b", j.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
+    return _join_back(cand, ["sh"], sh).select(
+        "a", "b", j.alias("jaccard")
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def _fits_broadcast(df: DataFrame, n_rows: int) -> bool:
+    """Whether ``n_rows`` rows of the one-column ``df`` fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1 disables), sized the
+    way the planner sizes them: rows × the column type's
+    ``defaultSize``."""
+    limit = (
+        df.sparkSession._jsparkSession.sessionState()
+        .conf().autoBroadcastJoinThreshold()
     )
+    width = df._jdf.schema().apply(0).dataType().defaultSize()
+    return 0 <= n_rows * width <= limit
 
 
 # ---------------------------------------------------------------------------
@@ -674,7 +714,9 @@ def simhash(
 
     Returns (id, simhash) with the signature as a non-negative long.
     """
-    assert bits <= 32
+    if not 1 <= bits <= 32:
+        # 8 hex chars hold 32 bits: higher bits would silently read 0
+        raise ValueError(f"simhash needs 1 <= bits <= 32, got {bits}")
     toks = F.array_distinct(T.tokens(T.normalize(F.col(text_col))))
     ex = df.select(F.col(key_col).alias("id"), F.explode(toks).alias("tok"))
     h = F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
@@ -693,27 +735,24 @@ def simhash(
     return agg.select("id", sig.alias("simhash"))
 
 
-def hamming_block_pairs(
-    sig: DataFrame, max_hamming: int, bits: int
-) -> DataFrame:
-    """Pairs with Hamming distance ≤ ``max_hamming`` over a signature
-    frame (id, sig) — the shared pigeonhole-block engine behind
-    SimHash text dedup and phash image dedup.
+def _hamming_blocks(sig: DataFrame, max_hamming: int, bits: int) -> DataFrame:
+    """Pigeonhole block rows: ``sig``'s columns (``id``, ``sig``, …)
+    plus ``(blk, val)``, one row per block — the one block builder of
+    every Hamming path (pairs, vs-state, streaming screen).
 
-    Split the signature into (max_hamming+1) blocks — any pair within
-    the Hamming radius agrees exactly on ≥1 block (pigeonhole), so
-    candidate generation is an EQUI-join on (block_idx, block_value),
-    never all-pairs; the exact popcount distance then verifies each
-    candidate. Scale shape: explode ×(h+1) + one bucket join whose
-    key is a hash block (uniform unless the corpus is one giant
-    near-dup cluster; AQE skew-join splits those buckets).
-
-    When ``bits`` is not divisible by h+1 the top ``bits mod (h+1)``
-    bits are left out of every block key — recall is unaffected (an
-    uncovered differing bit never breaks a block agreement; ≤h
-    covered diffs still leave ≥1 clean block) but buckets are
-    slightly coarser. ``max_hamming`` ≥ ``bits`` would make width 0
-    and degrade the join to all-pairs, so it is rejected."""
+    The signature splits into ``max_hamming + 1`` blocks of
+    ``bits // (max_hamming + 1)`` bits. Any pair within the Hamming
+    radius agrees exactly on ≥1 block (pigeonhole), so candidates come
+    from an equi-join on ``(blk, val)`` and the popcount distance
+    verifies them. When ``bits`` is not divisible by h+1 the top
+    ``bits mod (h+1)`` bits are left out of every block key — recall is
+    unaffected (an uncovered differing bit never breaks a block
+    agreement; ≤h covered diffs still leave ≥1 clean block) but
+    buckets are slightly coarser. A NULL signature gets NULL blocks
+    and so never a candidate. ``max_hamming`` ≥ ``bits`` would make
+    width 0 and degrade the join to all-pairs, so it is rejected."""
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
     nblocks = max_hamming + 1
     width = bits // nblocks
     if width < 1:
@@ -723,31 +762,43 @@ def hamming_block_pairs(
             "one bucket (an all-pairs join); lower max_hamming or use "
             "a wider signature"
         )
-    blocks = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("blk"),
-                    F.shiftright(F.col("sig"), i * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("val"),
-                )
-                for i in range(nblocks)
-            ]
-        )
-    ).alias("b")
-    e = sig.select("id", "sig", blocks).select(
-        "id", "sig", F.col("b.blk").alias("blk"), F.col("b.val").alias("val")
+    return sig.select(
+        "*",
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("blk"),
+                        F.shiftright(F.col("sig"), i * width)
+                        .bitwiseAND(F.lit((1 << width) - 1))
+                        .alias("val"),
+                    )
+                    for i in range(nblocks)
+                ]
+            )
+        ),
     )
-    l = e.select(F.col("id").alias("a"), F.col("sig").alias("ha"), "blk", "val")
-    r = e.select(F.col("id").alias("b"), F.col("sig").alias("hb"), "blk", "val")
-    cand = (
-        l.join(r, ["blk", "val"]).filter(F.col("a") < F.col("b"))
-        .select("a", "b", "ha", "hb").distinct()
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return cand.select("a", "b", ham.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
+
+
+def _hamming() -> Column:
+    """Popcount distance of a pair's ``sig_a`` and ``sig_b``."""
+    return F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+
+
+def hamming_block_pairs(
+    sig: DataFrame, max_hamming: int, bits: int
+) -> DataFrame:
+    """Pairs with Hamming distance ≤ ``max_hamming`` over a signature
+    frame (id, sig) — the shared engine behind SimHash text dedup and
+    phash image dedup: :func:`_hamming_blocks` keys, one
+    :func:`bucket_pairs` self-join (explode ×(h+1), never all-pairs),
+    then the exact popcount distance."""
+    e = _hamming_blocks(sig, max_hamming, bits)
+    return (
+        bucket_pairs(e, ["blk", "val"], carry=["sig"])
+        .distinct()
+        .select("a", "b", _hamming().alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -785,52 +836,6 @@ def phash_neardup_pairs(
     return hamming_block_pairs(s, max_hamming, bits)
 
 
-def _hamming_blocks(
-    sig: DataFrame,
-    max_hamming: int,
-    bits: int,
-    idc: str,
-    sigc: str,
-    keep: list[str] | None = None,
-) -> DataFrame:
-    """Pigeonhole block rows (idc, sigc, blk, val [, keep…]) for one
-    side of an incremental Hamming join (same block math as
-    :func:`hamming_block_pairs`). ``keep`` threads extra source
-    columns (e.g. an event-time column for the streaming screen)
-    through the explode — the ONE block construction shared by the
-    batch and streaming paths, so they cannot drift apart."""
-    nblocks = max_hamming + 1
-    width = bits // nblocks
-    if width < 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs {nblocks} blocks over "
-            f"{bits} signature bits — width 0 would put every row in "
-            "one bucket (an all-pairs join); lower max_hamming or use "
-            "a wider signature"
-        )
-    blocks = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("blk"),
-                    F.shiftright(F.col("sig"), i * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("val"),
-                )
-                for i in range(nblocks)
-            ]
-        )
-    ).alias("b")
-    extra = list(keep or [])
-    return sig.select("id", "sig", *extra, blocks).select(
-        F.col("id").alias(idc),
-        F.col("sig").alias(sigc),
-        *extra,
-        F.col("b.blk").alias("blk"),
-        F.col("b.val").alias("val"),
-    )
-
-
 def hamming_neardup_vs_state(
     batch_sig: DataFrame,
     state_sig: DataFrame,
@@ -855,46 +860,19 @@ def hamming_neardup_vs_state(
     all-pairs; the pigeonhole guarantee (≥1 agreeing block within the
     radius) makes the minimum over candidates the TRUE minimum
     whenever it is ≤ ``max_hamming``, so decisions are exact."""
-    bb = _hamming_blocks(batch_sig, max_hamming, bits, "__bid", "__bsig")
-    sb = _hamming_blocks(state_sig, max_hamming, bits, "__sid", "__ssig")
-    ham_cs = F.bit_count(F.col("__bsig").bitwiseXOR(F.col("__ssig")))
-    best_c = (
-        bb.join(sb, ["blk", "val"])
-        .select("__bid", ham_cs.alias("__h"))
-        .groupBy("__bid")
-        .agg(F.min("__h").alias("best_corpus"))
-    )
-    l = bb.select(
-        F.col("__bid").alias("__a"), F.col("__bsig").alias("__asig"),
-        "blk", "val",
-    )
-    r = bb.select(
-        F.col("__bid").alias("__b"), F.col("__bsig").alias("__xsig"),
-        "blk", "val",
-    )
-    ham_bb = F.bit_count(F.col("__asig").bitwiseXOR(F.col("__xsig")))
-    best_b = (
-        l.join(r, ["blk", "val"])
-        .filter(F.col("__a") < F.col("__b"))
-        .select("__b", ham_bb.alias("__h"))
-        .groupBy("__b")
-        .agg(F.min("__h").alias("best_batch"))
-    )
-    ids = batch_sig.select("id")
-    return (
-        ids.join(best_c, ids.id == best_c["__bid"], "left")
-        .join(best_b, ids.id == best_b["__b"], "left")
-        .select(
-            "id",
-            F.when(
-                F.col("best_corpus") <= max_hamming, F.lit("dup_of_corpus")
-            )
-            .when(F.col("best_batch") <= max_hamming, F.lit("dup_in_batch"))
-            .otherwise(F.lit("new"))
-            .alias("decision"),
-            F.col("best_corpus").cast("long").alias("best_corpus"),
-            F.col("best_batch").cast("long").alias("best_batch"),
+    bb = _hamming_blocks(batch_sig, max_hamming, bits)
+    sb = _hamming_blocks(state_sig, max_hamming, bits)
+
+    def best(pairs: DataFrame, side: str, name: str) -> DataFrame:
+        return pairs.groupBy(F.col(side).alias("id")).agg(
+            F.min(_hamming()).cast("long").alias(name)
         )
+
+    return _vs_state(
+        batch_sig.select("id"),
+        best(bucket_pairs(bb, ["blk", "val"], sb, ["sig"]), "a", "best_corpus"),
+        best(bucket_pairs(bb, ["blk", "val"], carry=["sig"]), "b", "best_batch"),
+        lambda h: h <= max_hamming,
     )
 
 
@@ -1088,13 +1066,12 @@ def embedding_neardup(
     all-pairs — correct but quadratic; the LSH path in
     :mod:`similarity` is the 100 TB route. Norms are precomputed so
     the cross join multiplies normalized vectors only."""
-    from invalid_spark.pipeline.similarity import with_norm, dot
-
-    v = with_norm(df, vec_col, key_col)
+    v = similarity.with_norm(df, vec_col, key_col)
     a = v.select(F.col("id").alias("a"), F.col("nv").alias("va"))
     b = v.select(F.col("id").alias("b"), F.col("nv").alias("vb"))
     pairs = a.join(b, F.col("a") < F.col("b"))
-    return pairs.select("a", "b", dot(F.col("va"), F.col("vb")).alias("cosine")).filter(
+    cos = similarity.dot(F.col("va"), F.col("vb"))
+    return pairs.select("a", "b", cos.alias("cosine")).filter(
         F.col("cosine") >= threshold
     )
 
@@ -1146,43 +1123,27 @@ def embedding_neardup_lsh(
     DuckDB oracle; the sign tests and the cosine use the same strict
     left-fold dot product as :mod:`similarity`.
     """
-    from invalid_spark.pipeline.similarity import dot, with_norm
-
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
-    pls = neardup_planes(dim, planes)
-    v = with_norm(df, vec_col, key_col)
-    code = F.lit(0)
-    for p, plane in enumerate(pls):
-        pl = F.array(*[F.lit(x) for x in plane])
-        code = code + F.when(
-            dot(F.col("nv"), pl) >= 0, F.lit(1 << p)
-        ).otherwise(F.lit(0))
-    coded = v.select("id", code.alias("code"))
-    # multi-probe: one probe per bit mask of popcount ≤ probe_hamming
-    # (C(planes, 0..h) probes — 9 at h=1/8 planes, 37 at h=2)
-    import itertools
-
-    probes = [F.col("code")]
-    for h in range(1, probe_hamming + 1):
-        for bits in itertools.combinations(range(planes), h):
-            mask = sum(1 << p for p in bits)
-            probes.append(F.col("code").bitwiseXOR(F.lit(mask)))
-    a = coded.select(
-        F.col("id").alias("a"), F.explode(F.array(*probes)).alias("code")
+    v = similarity.with_norm(df, vec_col, key_col)
+    coded = v.select(
+        "id", similarity.lsh_bucket(F.col("nv"), neardup_planes(dim, planes))
+        .alias("code")
     )
-    b = coded.select(F.col("id").alias("b"), "code")
+    probed = coded.select(
+        "id",
+        F.explode(
+            similarity._probe_codes(F.col("code"), planes, probe_hamming)
+        ).alias("code"),
+    )
     cand = (
-        a.join(b, "code")
+        bucket_pairs(probed, ["code"], coded)
         .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
         .distinct()
     )
-    av = v.select(F.col("id").alias("a"), F.col("nv").alias("va"))
-    bv = v.select(F.col("id").alias("b"), F.col("nv").alias("vb"))
-    verified = cand.join(av, "a").join(bv, "b")
-    return verified.select(
-        "a", "b", dot(F.col("va"), F.col("vb")).alias("cosine")
+    cos = similarity.dot(F.col("nv_a"), F.col("nv_b"))
+    return _join_back(cand, ["nv"], v).select(
+        "a", "b", cos.alias("cosine")
     ).filter(F.col("cosine") >= threshold)
 
 
@@ -1353,8 +1314,6 @@ def _semantic_assigned(
     localCheckpoint-ed so the self-join downstream reuses the
     materialized assignment instead of running the UDF once per join
     side."""
-    from invalid_spark.pipeline import similarity
-
     spark = df.sparkSession
     nearest = similarity.nearest_lists_udf(spark, centroids, 1)
     v = similarity.with_norm(df, vec_col, key_col)
@@ -1397,28 +1356,23 @@ def semantic_dedup_pairs(
     Recall < 1 by construction: a duplicate pair split across two
     clusters is missed (the paper accepts the same miss).
     """
-    from invalid_spark.pipeline import similarity
-
     if centroids is None:
         centroids = similarity.ivf_md5_centroids(
             df, n_lists=n_lists, vec_col=vec_col, key_col=key_col
         )
-    assigned = _semantic_assigned(df, centroids, vec_col, key_col)
-    a = assigned.select(
-        F.col("id").alias("a"), F.col("nv").alias("va"), "cluster"
+    return _semantic_pairs(
+        _semantic_assigned(df, centroids, vec_col, key_col), threshold
     )
-    b = assigned.select(
-        F.col("id").alias("b"), F.col("nv").alias("vb"), "cluster"
-    )
+
+
+def _semantic_pairs(assigned: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, cluster, cosine): same-cluster pairs of an assignment
+    frame with cosine ≥ ``threshold``."""
+    cos = similarity.dot(F.col("nv_a"), F.col("nv_b"))
     return (
-        a.join(b, "cluster")
-        .filter(F.col("a") < F.col("b"))
-        .select(
-            "a",
-            "b",
-            "cluster",
-            similarity.dot(F.col("va"), F.col("vb")).alias("cosine"),
-        )
+        bucket_pairs(assigned, ["cluster"], carry=["nv", "cluster"])
+        .select("a", "b", F.col("cluster_a").alias("cluster"),
+                cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -1451,29 +1405,13 @@ def semantic_dedup(
     groups."""
     from pyspark.sql import Window
 
-    from invalid_spark.pipeline import similarity
-
     spark = df.sparkSession
     if centroids is None:
         centroids = similarity.ivf_md5_centroids(
             df, n_lists=n_lists, vec_col=vec_col, key_col=key_col
         )
     assigned = _semantic_assigned(df, centroids, vec_col, key_col)
-    a = assigned.select(
-        F.col("id").alias("a"), F.col("nv").alias("va"), "cluster"
-    )
-    b = assigned.select(
-        F.col("id").alias("b"), F.col("nv").alias("vb"), "cluster"
-    )
-    pairs = (
-        a.join(b, "cluster")
-        .filter(F.col("a") < F.col("b"))
-        .select(
-            "a", "b", similarity.dot(F.col("va"), F.col("vb")).alias("cosine")
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-    comp = dup_clusters(pairs.select("a", "b"))
+    comp = dup_clusters(_semantic_pairs(assigned, threshold).select("a", "b"))
     cent_df = local_frame(
         spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
@@ -1549,43 +1487,22 @@ def semantic_dedup_vs_state(
     corpus-quadratic. Recall bound: a duplicate assigned to a different
     cluster than its twin is missed (the SemDeDup trade, same as the
     batch variant)."""
-    from invalid_spark.pipeline.similarity import dot
-
     b = _semantic_assigned(cur, centroids, vec_col, key_col)
-    sb = state.select(
-        F.col("id").alias("__sid"), "cluster", F.col("nv").alias("__snv")
-    )
-    cor = (
-        b.join(sb, "cluster")
-        .select("id", dot(F.col("nv"), F.col("__snv")).alias("c"))
-        .filter(F.col("c") >= threshold)
-        .groupBy("id")
-        .agg(F.max("c").alias("cos_corpus"))
-    )
-    b2 = b.select(
-        F.col("id").alias("__bid"), "cluster", F.col("nv").alias("__bnv")
-    )
-    bat = (
-        b.join(b2, "cluster")
-        .filter(F.col("__bid") < F.col("id"))
-        .select("id", dot(F.col("nv"), F.col("__bnv")).alias("c"))
-        .filter(F.col("c") >= threshold)
-        .groupBy("id")
-        .agg(F.max("c").alias("cos_batch"))
-    )
-    return (
-        b.select("id")
-        .join(cor, "id", "left")
-        .join(bat, "id", "left")
-        .select(
-            "id",
-            F.when(F.col("cos_corpus").isNotNull(), F.lit("dup_of_corpus"))
-            .when(F.col("cos_batch").isNotNull(), F.lit("dup_in_batch"))
-            .otherwise(F.lit("new"))
-            .alias("decision"),
-            "cos_corpus",
-            "cos_batch",
+    cos = similarity.dot(F.col("nv_a"), F.col("nv_b"))
+
+    def best(pairs: DataFrame, side: str, name: str) -> DataFrame:
+        return (
+            pairs.select(F.col(side).alias("id"), cos.alias("c"))
+            .filter(F.col("c") >= threshold)
+            .groupBy("id")
+            .agg(F.max("c").alias(name))
         )
+
+    return _vs_state(
+        b.select("id"),
+        best(bucket_pairs(b, ["cluster"], state, ["nv"]), "a", "cos_corpus"),
+        best(bucket_pairs(b, ["cluster"], carry=["nv"]), "b", "cos_batch"),
+        lambda c: c.isNotNull(),
     )
 
 
@@ -1620,21 +1537,16 @@ def semantic_contamination(
     run per-batch against a FIXED eval set, and the codebook must be
     the one the eval probes were built with (the
     :func:`semantic_state` contract)."""
-    from invalid_spark.pipeline import similarity
-
     spark = train.sparkSession
     t = _semantic_assigned(train, centroids, vec_col, key_col)
     nearest = similarity.nearest_lists_udf(spark, centroids, nprobe)
     ev = similarity.with_norm(eval_df, vec_col, key_col)
-    ep = ev.select(
-        F.col("nv").alias("__env"),
-        F.explode(nearest(F.col("nv"))).alias("cluster"),
-    )
+    ep = ev.select("id", "nv", F.explode(nearest(F.col("nv"))).alias("cluster"))
     hits = (
-        t.join(F.broadcast(ep), "cluster")
+        bucket_pairs(t, ["cluster"], F.broadcast(ep), ["nv"])
         .select(
-            "id",
-            similarity.dot(F.col("nv"), F.col("__env")).alias("c"),
+            F.col("a").alias("id"),
+            similarity.dot(F.col("nv_a"), F.col("nv_b")).alias("c"),
         )
         .filter(F.col("c") >= threshold)
         .groupBy("id")
@@ -1674,24 +1586,9 @@ def semantic_cluster_skew(
     report says "raise ``n_lists``" (or k-means the codebook) BEFORE
     paying that. One aggregate + TakeOrderedAndProject (never a
     global sort); deterministic (n_docs desc, cluster asc) order."""
-    from invalid_spark.pipeline import similarity
-
     if centroids is None:
         centroids = similarity.ivf_md5_centroids(
             df, n_lists=n_lists, vec_col=vec_col, key_col=key_col
         )
     a = _semantic_assigned(df, centroids, vec_col, key_col)
-    counts = a.groupBy("cluster").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )
-    return (
-        counts.orderBy(F.col("n_docs").desc(), F.col("cluster").asc())
-        .limit(top)
-        .select(
-            "cluster",
-            "n_docs",
-            (F.col("n_docs") * (F.col("n_docs") - 1) / 2)
-            .cast("long")
-            .alias("est_pairs"),
-        )
-    )
+    return _bucket_skew(a, ["cluster"], top)

@@ -18,6 +18,8 @@ is reproducible.
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pandas as pd
 
@@ -49,52 +51,36 @@ def with_norm(df: DataFrame, vec_col: str, key_col: str) -> DataFrame:
     )
 
 
-def _pandas_dot_impl(a: pd.Series, b: pd.Series) -> pd.Series:
-    x = np.array(a.tolist(), dtype=np.float64)
-    y = np.array(b.tolist(), dtype=np.float64)
-    return pd.Series((x * y).sum(axis=1))
-
-
-def pandas_dot():
-    """Arrow-vectorized dot product: numpy batch math instead of the
-    per-row higher-order fold — the fast path when bit-identical
-    left-fold accumulation (oracle parity) is not required."""
-    from pyspark.sql.functions import pandas_udf
-
-    return pandas_udf(_pandas_dot_impl, "double")
-
-
 def brute_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
     vec_col: str = "embedding",
     key_col: str = "vec_id",
-    impl: str = "fold",
 ) -> DataFrame:
     """Exact top-k neighbors per query: (query_id, neighbor_id, rank,
-    cosine). Ties broken by neighbor id; self-match excluded.
-
-    ``impl="fold"`` scores with the strict left-fold (deterministic,
-    oracle-reproducible); ``impl="pandas"`` scores with an
-    Arrow-vectorized pandas UDF (numpy SIMD batch math — the faster
-    choice for wide vectors / big candidate sets; last-ulp sums may
-    differ from the fold)."""
+    cosine), scored with the strict left-fold (deterministic,
+    oracle-reproducible). Ties broken by neighbor id; self-match
+    excluded."""
     c = with_norm(corpus, vec_col, key_col)
     q = with_norm(queries, vec_col, key_col)
     pairs = c.crossJoin(
         F.broadcast(q.select(F.col("id").alias("qid"), F.col("nv").alias("qv")))
     ).filter(F.col("id") != F.col("qid"))
-    score = (
-        pandas_dot()(F.col("nv"), F.col("qv"))
-        if impl == "pandas"
-        else dot(F.col("nv"), F.col("qv"))
+    return _topk(
+        pairs.select(
+            F.col("qid").alias("query_id"),
+            F.col("id").alias("neighbor_id"),
+            dot(F.col("nv"), F.col("qv")).alias("cosine"),
+        ),
+        k,
     )
-    scored = pairs.select(
-        F.col("qid").alias("query_id"),
-        F.col("id").alias("neighbor_id"),
-        score.alias("cosine"),
-    )
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The k best ``(query_id, neighbor_id, cosine)`` rows per query,
+    ties to the smaller neighbor id: (query_id, neighbor_id, rank,
+    cosine)."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
@@ -103,6 +89,26 @@ def brute_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
+
+
+def _probe_topk(corpus: DataFrame, probes: DataFrame, key: str, k: int) -> DataFrame:
+    """Top-k over a probe join: corpus rows ``(id, nv, key)`` against
+    the BROADCAST query probe rows ``(id, nv, key)``, one
+    :func:`~invalid_spark.pipeline.dedup.bucket_pairs` equi-join on the
+    bucket ``key``, self-match excluded, exact cosine per distinct
+    (query, neighbor) — a neighbor reached by several probes counts
+    once."""
+    from invalid_spark.pipeline.dedup import bucket_pairs
+
+    cand = bucket_pairs(corpus, [key], F.broadcast(probes), ["nv"]).filter(
+        F.col("a") != F.col("b")
+    )
+    scored = cand.select(
+        F.col("b").alias("query_id"),
+        F.col("a").alias("neighbor_id"),
+        dot(F.col("nv_a"), F.col("nv_b")).alias("cosine"),
+    ).distinct()
+    return _topk(scored, k)
 
 
 def hyperplanes(dim: int, planes: int, seed: int = 7) -> list[list[float]]:
@@ -118,6 +124,17 @@ def lsh_bucket(nv: Column, planes_arr: list[list[float]]) -> Column:
         pl = F.array(*[F.lit(float(x)) for x in plane])
         bucket = bucket + F.when(dot(nv, pl) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
     return bucket
+
+
+def _probe_codes(code: Column, planes: int, hamming: int) -> Column:
+    """Multi-probe: the array of ``code`` and every bucket code within
+    Hamming distance ``hamming`` of it (C(planes, 0..h) probes — 9 at
+    h=1 over 8 planes, 37 at h=2)."""
+    probes = [code]
+    for h in range(1, hamming + 1):
+        for bits in itertools.combinations(range(planes), h):
+            probes.append(code.bitwiseXOR(F.lit(sum(1 << p for p in bits))))
+    return F.array(*probes)
 
 
 def lsh_ann(
@@ -159,34 +176,13 @@ def lsh_ann(
     q = with_norm(queries, vec_col, key_col).withColumn(
         "bucket", lsh_bucket(F.col("nv"), pl)
     )
-    # multi-probe: the query's own bucket + every bucket within
-    # Hamming distance probe_hamming (C(planes, 0..h) probes)
-    import itertools
-
-    probes = [F.col("bucket")]
-    for h in range(1, probe_hamming + 1):
-        for bits in itertools.combinations(range(planes), h):
-            mask = sum(1 << p for p in bits)
-            probes.append(F.col("bucket").bitwiseXOR(F.lit(mask)))
+    # the query's own bucket + every bucket within probe_hamming
     q = q.select(
-        F.col("id").alias("qid"),
-        F.col("nv").alias("qv"),
-        F.explode(F.array(*probes)).alias("bucket"),
+        "id", "nv",
+        F.explode(_probe_codes(F.col("bucket"), planes, probe_hamming))
+        .alias("bucket"),
     )
-    cand = c.join(F.broadcast(q), "bucket").filter(F.col("id") != F.col("qid"))
-    scored = cand.select(
-        F.col("qid").alias("query_id"),
-        F.col("id").alias("neighbor_id"),
-        dot(F.col("nv"), F.col("qv")).alias("cosine"),
-    ).distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _probe_topk(c, q, "bucket", k)
 
 
 def ivf_centroids(
@@ -345,24 +341,9 @@ def ivf_ann(
         "list_id", probe(F.col("nv")).getItem(0)
     )
     q = with_norm(queries, vec_col, key_col).select(
-        F.col("id").alias("qid"),
-        F.col("nv").alias("qv"),
-        F.explode(probe(F.col("nv"))).alias("list_id"),
+        "id", "nv", F.explode(probe(F.col("nv"))).alias("list_id")
     )
-    cand = c.join(F.broadcast(q), "list_id").filter(F.col("id") != F.col("qid"))
-    scored = cand.select(
-        F.col("qid").alias("query_id"),
-        F.col("id").alias("neighbor_id"),
-        dot(F.col("nv"), F.col("qv")).alias("cosine"),
-    ).distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _probe_topk(c, q, "list_id", k)
 
 
 def ann_recall(truth: DataFrame, approx: DataFrame, k: int) -> DataFrame:
@@ -448,31 +429,14 @@ def ivf_tuning_report(
     )
     truth = brute_topk(corpus, queries, k).localCheckpoint(eager=True)
     qn = with_norm(queries, vec_col, key_col).select(
-        F.col("id").alias("qid"),
-        F.col("nv").alias("qv"),
-        probe(F.col("nv")).alias("__probes"),
+        "id", "nv", probe(F.col("nv")).alias("__probes"),
     ).localCheckpoint(eager=True)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
     out = None
     for np_ in sorted(nprobes):
         q = qn.select(
-            "qid", "qv", F.explode(F.slice("__probes", 1, np_)).alias("list_id")
+            "id", "nv", F.explode(F.slice("__probes", 1, np_)).alias("list_id")
         )
-        cand = c.join(F.broadcast(q), "list_id").filter(
-            F.col("id") != F.col("qid")
-        )
-        approx = (
-            cand.select(
-                F.col("qid").alias("query_id"),
-                F.col("id").alias("neighbor_id"),
-                dot(F.col("nv"), F.col("qv")).alias("cosine"),
-            )
-            .distinct()
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
+        approx = _probe_topk(c, q, "list_id", k)
         rec = ann_recall(truth, approx, k).agg(
             F.round(F.avg("recall"), 6).alias("macro_recall"),
             F.count(F.lit(1)).cast("long").alias("n_queries"),

@@ -305,7 +305,7 @@ def dedup_on_arrival(
     watermark: str = "1 hour",
 ) -> DataFrame:
     """Streaming exact dedup — the validate-on-arrival sibling of
-    :func:`invalid_spark.pipeline.dedup.exact_dedup`: keep the first
+    :func:`invalid_spark.pipeline.dedup.exact_dedup_vs_state`: keep the first
     arrival per key (e.g. the shared ``text.fingerprint``), drop
     later copies.
 
@@ -500,30 +500,24 @@ def minhash_screen_stream(
     # re-evaluating the signature ~6× (measured 38 s vs 6 s at sf0.1)
     short = F.size(_text.tokens(_text.normalize(F.col(text_col)))) >= n
     d = _dedup.with_minhash_signature(df.filter(short), k, n, text_col)
-    # the band construction lives in dedup.array_sig_bands — ONE
-    # definition shared with the batch path, so they cannot drift
-    e = _dedup.array_sig_bands(
+    e = _dedup._bands(
         d.select(F.col(key_col).alias("id"), "__sig", F.col(ts_col)),
-        "__sig", bands, rows, keep=[ts_col],
+        [F.element_at("__sig", j + 1) for j in range(k)], bands, rows,
     )
-    stb = _dedup._sig_bands(state, bands, rows, keep_sig=True).select(
-        F.col("id").alias("__sid"),
-        *[F.col(f"s{j}").alias(f"__st_s{j}") for j in range(k)],
-        "band",
-        "band_hash",
-    )
+    stb = _dedup._bands(state, _dedup._sig_cols(k), bands, rows)
     est = sum(
         F.when(
-            F.element_at("__sig", j + 1) == F.col(f"__st_s{j}"), 1
+            F.element_at("__sig_a", j + 1) == F.col(f"s{j}_b"), 1
         ).otherwise(0)
         for j in range(k)
     ) / F.lit(float(k))
-    joined = e.join(stb, ["band", "band_hash"]).select(
-        "id", ts_col, est.alias("__est")
+    pairs = _dedup.bucket_pairs(
+        e, ["band", "band_hash"], stb,
+        ["__sig", ts_col, *[f"s{j}" for j in range(k)]],
     )
-    agg = joined.groupBy(
-        F.window(ts_col, window).alias("w"), F.col("id")
-    ).agg(F.max("__est").alias("est_corpus"))
+    agg = pairs.groupBy(
+        F.window(f"{ts_col}_a", window).alias("w"), F.col("a").alias("id")
+    ).agg(F.max(est).alias("est_corpus"))
     return agg.filter(F.col("est_corpus") >= threshold).select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
@@ -566,21 +560,13 @@ def phash_screen_stream(
         F.col(hash_col).cast("long").alias("sig"),
         F.col(ts_col),
     )
-    # block math lives in dedup._hamming_blocks — ONE definition
-    # shared with the batch/incremental paths (incl. the width guard)
-    e = _dedup._hamming_blocks(
-        b, max_hamming, bits, "id", "sig", keep=[ts_col]
+    pairs = _dedup.bucket_pairs(
+        _dedup._hamming_blocks(b, max_hamming, bits), ["blk", "val"],
+        _dedup._hamming_blocks(state, max_hamming, bits), ["sig", ts_col],
     )
-    stb = _dedup._hamming_blocks(
-        state, max_hamming, bits, "__sid", "__ssig"
-    )
-    ham = F.bit_count(F.col("sig").bitwiseXOR(F.col("__ssig")))
-    joined = e.join(stb, ["blk", "val"]).select(
-        "id", ts_col, ham.alias("__h")
-    )
-    agg = joined.groupBy(
-        F.window(ts_col, window).alias("w"), F.col("id")
-    ).agg(F.min("__h").alias("best_hamming"))
+    agg = pairs.groupBy(
+        F.window(f"{ts_col}_a", window).alias("w"), F.col("a").alias("id")
+    ).agg(F.min(_dedup._hamming()).alias("best_hamming"))
     return agg.filter(F.col("best_hamming") <= max_hamming).select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),

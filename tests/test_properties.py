@@ -155,6 +155,63 @@ def test_drift_folds_match_reference(spark, cur, prev, bins, int_cats):
 
 
 # ---------------------------------------------------------------------------
+# Hamming near-dup core vs brute force
+
+_sig = st.one_of(st.none(), st.sampled_from([0, 5, 255, 4097]),
+                 st.integers(min_value=0, max_value=2**16 - 1))
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(st.sampled_from([8, 13, 16]), st.integers(min_value=0, max_value=3),
+       st.lists(_sig, max_size=9), st.lists(_sig, max_size=6))
+@example(13, 3, [5, 5, None, 4, 4097], [5, None])  # repeats, NULL, 13 % 4
+@example(8, 0, [], [1])                             # empty batch
+def test_hamming_core_matches_brute_force(spark, bits, h, batch, state):
+    """hamming_block_pairs is exactly the a < b pairs within ``h`` bits;
+    hamming_neardup_vs_state's decisions follow the brute-force minimum
+    distances (a NULL signature is always new) and its bests are the
+    minimum over the rows sharing a pigeonhole block."""
+    from invalid_spark.model import local_frame
+    from invalid_spark.pipeline import dedup
+
+    mask = (1 << bits) - 1
+    rows = [(i, None if x is None else x & mask) for i, x in enumerate(batch)]
+    srows = [(100 + i, None if x is None else x & mask)
+             for i, x in enumerate(state)]
+    frame = lambda r: local_frame(spark, r, "id long, sig long")  # noqa: E731
+    dist = lambda x, y: bin(x ^ y).count("1")  # noqa: E731
+    width = bits // (h + 1)
+    blocks = lambda x: {(i, (x >> i * width) & ((1 << width) - 1))  # noqa: E731
+                        for i in range(h + 1)}
+
+    got = {tuple(r) for r in dedup.hamming_block_pairs(
+        frame(rows), h, bits).collect()}
+    assert got == {(i, j, dist(x, y)) for i, x in rows for j, y in rows
+                   if i < j and None not in (x, y) and dist(x, y) <= h}
+
+    def near(x, others):
+        return x is not None and any(
+            y is not None and dist(x, y) <= h for _, y in others)
+
+    def best(x, others):
+        ds = [dist(x, y) for _, y in others
+              if None not in (x, y) and blocks(x) & blocks(y)]
+        return min(ds) if ds else None
+
+    expect = {
+        i: ("dup_of_corpus" if near(x, srows)
+            else "dup_in_batch" if near(x, rows[:i]) else "new",
+            best(x, srows), best(x, rows[:i]))
+        for i, x in rows
+    }
+    out = dedup.hamming_neardup_vs_state(frame(rows), frame(srows), h, bits)
+    assert {r.id: (r.decision, r.best_corpus, r.best_batch)
+            for r in out.collect()} == expect
+    assert all(expect[i][0] == "new" for i, x in rows if x is None)
+
+
+# ---------------------------------------------------------------------------
 # codecs
 
 @settings(max_examples=25, deadline=None)

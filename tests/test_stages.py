@@ -1,6 +1,7 @@
 """Aggregate/join/UDF check stages against planted synth violations."""
 
 import math
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -1037,18 +1038,6 @@ def test_image_features_and_resize(spark):
     )
 
 
-def test_pandas_dot_matches_fold(spark):
-    from invalid_spark.pipeline import similarity
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter("vec_id < 8")
-    a = similarity.brute_topk(emb, q, k=5, impl="fold").collect()
-    b = similarity.brute_topk(emb, q, k=5, impl="pandas").collect()
-    ka = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in a}
-    kb = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in b}
-    assert ka == kb
-
-
 def test_pixel_violations_arrow_impl_identical(spark):
     from invalid_spark.checks import image as image_checks
     from invalid_spark import synth
@@ -1124,6 +1113,151 @@ def test_emb_neardup_lsh_no_cartesian_and_recall(spark):
     assert planted, "fixture produced no verifiable planted pairs"
     recall = len(a & planted) / len(planted)
     assert recall >= 0.6, f"planted-near-dup recall too low: {recall}"
+
+
+def test_lsh_candidate_broadcast_is_size_gated(spark):
+    """minhash_lsh_dedup broadcasts the candidate ids only when they fit
+    under spark.sql.autoBroadcastJoinThreshold: with broadcasting off
+    the pairs are unchanged and no BroadcastExchange is planned; at the
+    defaults the corpus semi-join stays a broadcast hash join."""
+    from invalid_spark.pipeline import dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+
+    def run():
+        out = dedup.minhash_lsh_dedup(docs, 0.8)
+        pairs = sorted(tuple(r) for r in out.collect())
+        return pairs, out._jdf.queryExecution().executedPlan().toString()
+
+    pairs, plan = run()
+    assert pairs
+    assert any("BroadcastHashJoin" in line and "LeftSemi" in line
+               for line in plan.splitlines()), plan
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        off_pairs, off_plan = run()
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert off_pairs == pairs
+    assert "BroadcastExchange" not in off_plan, off_plan
+
+
+def test_hamming_inputs_rejected_with_value_error(spark):
+    """Out-of-range widths raise ValueError (an assert vanishes under
+    -O): simhash reads 32 bits of md5, so bits > 32 would silently be 0,
+    and a negative max_hamming would divide by zero in the block
+    builder."""
+    from invalid_spark.pipeline import dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    sig = spark.createDataFrame([(1, 5), (2, 7)], "id long, sig long")
+    state = spark.createDataFrame([(3, 5)], "id long, sig long")
+    with pytest.raises(ValueError, match="bits"):
+        dedup.simhash(docs, bits=40)
+    with pytest.raises(ValueError, match="max_hamming"):
+        dedup.hamming_block_pairs(sig, -1, 16)
+    with pytest.raises(ValueError, match="max_hamming"):
+        dedup.hamming_neardup_vs_state(sig, state, -1, 16)
+
+
+@pytest.fixture(scope="module")
+def pair_inputs(spark):
+    from invalid_spark.pipeline import dedup, similarity
+
+    sf = "/root/testdata/sf0.001"
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet").select(
+        "vec_id", "embedding")
+    sig = dedup.simhash(docs).withColumnRenamed("simhash", "sig")
+    ts = F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts")
+    return SimpleNamespace(
+        docs=docs, odd_docs=docs.filter("doc_id % 2 = 1"),
+        mh_state=dedup.minhash_state(docs.filter("doc_id % 2 = 0")),
+        emb=emb, q=emb.filter("vec_id < 8"),
+        odd_emb=emb.filter("vec_id % 2 = 1"),
+        even_emb=emb.filter("vec_id % 2 = 0"),
+        sig=sig, odd_sig=sig.filter("id % 2 = 1"),
+        even_sig=sig.filter("id % 2 = 0"), ts=ts,
+        images=sig.select(F.col("id").alias("image_id"),
+                          F.col("sig").alias("phash"), ts),
+        cent=similarity.ivf_md5_centroids(emb, n_lists=8),
+    )
+
+
+def _candidate_cases():
+    from invalid_spark import streaming
+    from invalid_spark.pipeline import dedup, similarity
+
+    return {
+        "shingle_pairs": lambda x: dedup.shingle_pairs(x.docs, max_df=50),
+        "lsh_candidates": lambda x: dedup.lsh_candidates(x.docs),
+        "minhash_lsh_dedup": lambda x: dedup.minhash_lsh_dedup(x.docs, 0.8),
+        "hamming_block_pairs": lambda x: dedup.hamming_block_pairs(
+            x.sig, 3, 32),
+        "phash_neardup_pairs": lambda x: dedup.phash_neardup_pairs(
+            x.images, 3, 32),
+        "embedding_neardup_lsh": lambda x: dedup.embedding_neardup_lsh(
+            x.emb, 0.9, dim=64),
+        "semantic_dedup_pairs": lambda x: dedup.semantic_dedup_pairs(
+            x.emb, 0.9, centroids=x.cent),
+        "semantic_dedup": lambda x: dedup.semantic_dedup(
+            x.emb, 0.9, centroids=x.cent),
+        "minhash_dedup_vs_state": lambda x: dedup.minhash_dedup_vs_state(
+            x.odd_docs, x.mh_state),
+        "hamming_neardup_vs_state": lambda x: dedup.hamming_neardup_vs_state(
+            x.odd_sig, x.even_sig, 3, 32),
+        "semantic_dedup_vs_state": lambda x: dedup.semantic_dedup_vs_state(
+            x.odd_emb, dedup.semantic_state(x.even_emb, x.cent), x.cent, 0.9),
+        "semantic_contamination": lambda x: dedup.semantic_contamination(
+            x.odd_emb, x.even_emb, x.cent, 0.9),
+        "minhash_screen_stream": lambda x: streaming.minhash_screen_stream(
+            x.odd_docs.select("doc_id", "text", x.ts), x.mh_state),
+        "phash_screen_stream": lambda x: streaming.phash_screen_stream(
+            x.images, x.even_sig, 3, 32),
+        "lsh_ann": lambda x: similarity.lsh_ann(x.emb, x.q, dim=64),
+        "ivf_ann": lambda x: similarity.ivf_ann(x.emb, x.q, centroids=x.cent),
+        "ivf_tuning_report": lambda x: similarity.ivf_tuning_report(
+            x.emb, x.q, nprobes=(1, 2), centroids=x.cent),
+    }
+
+
+@pytest.mark.parametrize("name", list(_candidate_cases()))
+def test_candidate_joins_never_all_pairs(spark, monkeypatch, pair_inputs, name):
+    """Every candidate-producing function plans its pairs as an
+    equi-join: no CartesianProduct or BroadcastNestedLoopJoin in the
+    returned plan or in any plan it checkpoints on the way. The exact
+    all-pairs references (embedding_neardup, brute_topk) are the only
+    nested-loop plans, so brute_topk's ground truth inside
+    ivf_tuning_report is skipped."""
+    from invalid_spark.pipeline import similarity
+
+    frame_cls = type(spark.range(1))
+    plans, exact = [], set()
+    checkpoint, brute = frame_cls.localCheckpoint, similarity.brute_topk
+
+    def spy(df, *a, **kw):
+        if id(df) not in exact:
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(df, *a, **kw)
+
+    def tagged_brute(*a, **kw):
+        df = brute(*a, **kw)
+        exact.add(id(df))
+        return df
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    monkeypatch.setattr(similarity, "brute_topk", tagged_brute)
+    out = _candidate_cases()[name](pair_inputs)
+    plans.append(out._jdf.queryExecution().executedPlan().toString())
+    assert "Join" in "".join(plans), "no join planned: guard is vacuous"
+    for plan in plans:
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_dup_clusters_on_real_lsh_pairs(spark):
