@@ -2,11 +2,12 @@
 """Per-round benchmark harness.
 
 Runs the headline operators at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints two
+JSON lines: the full record with the per-query detail, then a summary
+of at most 200 bytes that a reader of the output's tail can parse::
 
-  {"metric": "validated_rows_per_sec", "value": N, "unit": "rows/sec",
-   "queries": {...per-query seconds...}, "sf": 0.1}
+  {"metric": "validated_rows_per_sec", "value": N, "sf": 0.1, "n": 3,
+   "steal_jiffies": S, "cores": C}
 
 The headline metric is constraint-eval throughput (BASELINE.md): rows
 validated per second by the compiled row-check projection over the
@@ -18,8 +19,8 @@ per driver instructions by two parallelism levels on one host)::
 
   python bench.py --scaling     # local[8] vs local[32], same input
 
-prints one JSON line with throughput at both levels and the scaling
-efficiency, and is recorded in BENCH/BASELINE.md.
+prints the same two lines with throughput at both levels and the
+scaling efficiency, and is recorded in BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -456,15 +457,28 @@ def _scaling_main(lo: int | None = None, hi: int | None = None) -> None:
         results[cores] = json.loads(out.stdout.strip().splitlines()[-1])
     ratio = hi / lo
     eff = results[hi]["rows_per_sec"] / (ratio * results[lo]["rows_per_sec"])
-    print(json.dumps({
+    _emit({
         "metric": f"scaling_efficiency_{lo}_to_{hi}_cores",
         "value": round(eff, 3),
         "unit": "ratio",
         "queries": {f"local[{c}]": results[c] for c in results},
         "sf": None,
         "n_images": SCALE_N,
-    }))
+        # each level reports its best of two runs
+        "n": 2,
+        "steal_jiffies": sum(r["steal_jiffies"] for r in results.values()),
+        "cores": hi,
+    })
 
+
+TAIL_KEYS = ("metric", "value", "sf", "n", "steal_jiffies", "cores")
+
+
+def _emit(record: dict) -> None:
+    """Print ``record`` in full, then the summary line of
+    :data:`TAIL_KEYS` that ends the output."""
+    print(json.dumps(record))
+    print(json.dumps({k: record.get(k) for k in TAIL_KEYS}))
 
 
 def main() -> None:
@@ -492,7 +506,7 @@ def main() -> None:
     validated, total, timings, steals, headline, _ = run_once(CPUS, SF_DIR)
     steal_delta = _steal_jiffies() - steal0
     load_after = os.getloadavg()
-    print(json.dumps({
+    _emit({
         "metric": "validated_rows_per_sec",
         "value": round(validated / total, 1),
         "unit": "rows/sec",
@@ -515,7 +529,7 @@ def main() -> None:
         "loadavg_after": [round(x, 2) for x in load_after],
         "steal_jiffies": steal_delta,
         "cores": CPUS,
-    }))
+    })
 
 
 if __name__ == "__main__":

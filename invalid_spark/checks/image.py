@@ -1,7 +1,7 @@
 """Vectorized image-invariant checks (north-rule ``input_hint``).
 
 The only Python-in-the-loop stage, and it is Arrow-batched
-``mapInPandas`` — never per-row Python UDFs. The scan for this stage
+``mapInArrow`` — never per-row Python UDFs. The scan for this stage
 prunes to exactly (row key, bytes, fmt, w, h, phash); Arrow batch
 size is capped (session.py) because ``bytes`` rows are large.
 
@@ -22,13 +22,12 @@ Caption byte-equality vs a reference table is pure DataFrame algebra
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from invalid_spark import codecs
 from invalid_spark.model import ErrorType
@@ -50,46 +49,48 @@ def pixel_violations(
     psnr_min: float = 40.0,
     run_id: str = "",
     parallelism: int | None = None,
-    impl: str = "pandas",
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Decode/PSNR/dims/phash checks over Arrow batches.
+    """Decode/PSNR/dims/phash checks over Arrow record batches
+    (``mapInArrow``: no pandas conversion on either side).
 
     ``parallelism``: repartition the pruned input to this many tasks
-    before the Python stage. The decode work is ~ms/row CPU while a
-    scan partition is sized for JVM throughput (128 MB ≈ thousands of
-    rows), so without an explicit repartition a binary-heavy table
-    bin-packs into a handful of tasks and the UDF stage serializes.
-    Granularity is worth the shuffle: set to ~2-4x total cores.
+    before the Python stage. Each Python task pays a fixed start-up
+    cost (~0.3 CPU-s on CPython 3.11) before its first row, so more
+    tasks than cores buys nothing. Leave it unset unless the scan has
+    fewer partitions than there are cores; then set it to the core
+    count.
 
-    ``impl``: ``"pandas"`` (mapInPandas, default) or ``"arrow"``
-    (mapInArrow) — identical checks and output (equivalence is
-    tested). The arrow path skips the Arrow↔pandas conversion on
-    both sides of the batch; measured even with this row shape
-    (per-row decode dominates, conversion is `.tolist()` either
-    way), it matters when the payload column is large relative to
-    the Python work."""
+    ``keep_cols``: source columns carried through onto every emitted
+    violation row, after the violation columns (the runner carries
+    the work unit this way)."""
+    keep = list(keep_cols or [])
     cols = [row_key, bytes_col, fmt_col, w_col, h_col]
     if phash_col:
         cols.append(phash_col)
-    pruned = df.select(*cols, F.spark_partition_id().alias("pid"))
+    pruned = df.select(*cols, F.spark_partition_id().alias("pid"), *keep)
     if parallelism:
         pruned = pruned.repartition(parallelism)
+    base = StructType.fromDDL(_OUT_SCHEMA)
+    schema = StructType(base.fields + [pruned.schema[c] for c in keep])
+    out_cols = base.fieldNames()
 
-    out_cols = [
-        "row_key", "column", "rule_id", "error_type",
-        "message", "observed", "partition_id", "run_id",
-    ]
-
-    def check_rows(rks, raws, fmts, sws, shs, pids, phs) -> list[tuple]:
-        # hot loop shared by both impls: zipped column lists, tuple
-        # appends — no per-row namedtuple/getattr machinery
+    def check_rows(rks, raws, fmts, sws, shs, pids, phs):
+        # hot loop: zipped column lists, tuple appends — no per-row
+        # namedtuple/getattr machinery. Returns the violation tuples
+        # and, per tuple, its source row index
         decode, encode = codecs.decode_image, codecs.encode_image
         lossless, psnr_fn, phash_fn = codecs.is_lossless, codecs.psnr, codecs.phash64
         out: list[tuple] = []
-        emit = out.append
-        for rk, raw, fmt, sw, sh, pid, stored in zip(
+        src: list[int] = []
+
+        def emit(t):
+            out.append(t)
+            src.append(i)
+
+        for i, (rk, raw, fmt, sw, sh, pid, stored) in enumerate(zip(
             rks, raws, fmts, sws, shs, pids, phs
-        ):
+        )):
             rk = str(rk)
             try:
                 px = decode(bytes(raw))
@@ -130,54 +131,31 @@ def pixel_violations(
                     emit((rk, phash_col, phash_col, ErrorType.PIXEL_MISMATCH,
                           f"stored phash != recomputed ({ph})",
                           str(stored), pid, run_id))
-        return out
+        return out, src
 
-    if impl == "arrow":
-        import pyarrow as pa
+    types = [pa.string()] * 6 + [pa.int32(), pa.string()]
 
-        def check_arrow(batches):
-            for b in batches:
-                n = b.num_rows
-                rows = check_rows(
-                    b.column(row_key).to_pylist(),
-                    b.column(bytes_col).to_pylist(),
-                    b.column(fmt_col).to_pylist(),
-                    b.column(w_col).to_pylist(),
-                    b.column(h_col).to_pylist(),
-                    b.column("pid").to_pylist(),
-                    b.column(phash_col).to_pylist() if phash_col else [None] * n,
-                )
-                cols_t = list(zip(*rows)) if rows else [[] for _ in out_cols]
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(cols_t[0], pa.string()),
-                        pa.array(cols_t[1], pa.string()),
-                        pa.array(cols_t[2], pa.string()),
-                        pa.array(cols_t[3], pa.string()),
-                        pa.array(cols_t[4], pa.string()),
-                        pa.array(cols_t[5], pa.string()),
-                        pa.array(cols_t[6], pa.int32()),
-                        pa.array(cols_t[7], pa.string()),
-                    ],
-                    names=out_cols,
-                )
-
-        return pruned.mapInArrow(check_arrow, schema=_OUT_SCHEMA)
-
-    def check_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = check_rows(
-                pdf[row_key].tolist(),
-                pdf[bytes_col].tolist(),
-                pdf[fmt_col].tolist(),
-                pdf[w_col].tolist(),
-                pdf[h_col].tolist(),
-                pdf["pid"].tolist(),
-                pdf[phash_col].tolist() if phash_col else [None] * len(pdf),
+    def check_batches(batches):
+        for b in batches:
+            n = b.num_rows
+            rows, src = check_rows(
+                b.column(row_key).to_pylist(),
+                b.column(bytes_col).to_pylist(),
+                b.column(fmt_col).to_pylist(),
+                b.column(w_col).to_pylist(),
+                b.column(h_col).to_pylist(),
+                b.column("pid").to_pylist(),
+                b.column(phash_col).to_pylist() if phash_col else [None] * n,
             )
-            yield pd.DataFrame(rows, columns=out_cols)
+            cols_t = list(zip(*rows)) if rows else [[] for _ in out_cols]
+            idx = pa.array(src, pa.int64())
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, t) for c, t in zip(cols_t, types)]
+                + [b.column(c).take(idx) for c in keep],
+                names=out_cols + keep,
+            )
 
-    return pruned.mapInPandas(check_batches, schema=_OUT_SCHEMA)
+    return pruned.mapInArrow(check_batches, schema=schema)
 
 
 def caption_violations(

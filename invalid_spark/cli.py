@@ -65,7 +65,11 @@ def main(argv: list[str] | None = None) -> int:
     pv.add_argument("--prev-table", default=None,
                     help="prior snapshot for $drift checks")
     pv.add_argument("--run-id", default=None)
-    pv.add_argument("--udf-parallelism", type=int, default=None)
+    pv.add_argument("--udf-parallelism", type=int, default=None,
+                    help="repartition the pixel-check input to this many "
+                    "Python tasks; each task pays a fixed start-up cost, "
+                    "so leave it unset unless the scan has fewer "
+                    "partitions than cores (then set it to the core count)")
     pv.add_argument("--quarantine", action="store_true",
                     help="also write clean/ and quarantine/ row splits "
                     "(only once every unit is validated)")

@@ -196,7 +196,23 @@ def ivf_centroids(
 ) -> np.ndarray:
     """IVF coarse quantizer: k-means centroids trained driver-side on
     a seeded sample (classic IVF builds its codebook on a sample —
-    the corpus-scale work is only the assignment pass)."""
+    the corpus-scale work is only the assignment pass).
+
+    The sample is collected to the driver, so ``sample`` × the vector
+    width × 8 bytes must fit under ``spark.driver.maxResultSize`` (0
+    means no limit); a larger sample raises ``ValueError`` before the
+    collect. A one-row probe reads the vector width."""
+    row = corpus.select(vec_col).first()
+    dim = len(row[0]) if row and row[0] is not None else 0
+    limit = corpus.sparkSession.sparkContext._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g"
+    )
+    if 0 < limit < sample * dim * 8:
+        raise ValueError(
+            f"ivf_centroids: sample={sample} vectors of width {dim} "
+            f"({sample * dim * 8} bytes) exceed spark.driver.maxResultSize "
+            f"({limit} bytes); lower sample"
+        )
     rows = (
         with_norm(corpus, vec_col, key_col)
         .orderBy("id")

@@ -21,7 +21,13 @@ Lifecycle (the Spark re-expression of the reference's
    ``$dupspan``, ``$reconcile``). One loop runs every entry through
    the same lifecycle: skip if its units are done → bound by
    ``max_batches`` → build → attribute rows to units → append to the
-   violations sink → mark;
+   violations sink → mark. The ``$pixel`` UDF is the exception to
+   per-batch building: it runs ONCE per call (:func:`pixel_stage`)
+   over every unit of the batches the call will run, is
+   localCheckpointed before the loop, and each batch takes the rows of
+   its own units (the unit travels on each row). The cost: a kill
+   before the first batch write loses the whole call's pixel pass,
+   not one batch's share; ``max_batches`` still bounds that loss;
 4. each unit is marked in the :class:`~invalid_spark.io.Manifest`
    AFTER its outputs are written — a kill mid-run loses at most the
    in-flight entry, and the re-run recomputes exactly that;
@@ -50,6 +56,7 @@ import os
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -174,6 +181,33 @@ def _dim(dims: dict[str, DataFrame], directive: str, spec: dict) -> DataFrame:
     return dims[name]
 
 
+def pixel_stage(
+    df: DataFrame,
+    plan: rowchecks.RowCheckPlan,
+    row_key: str,
+    run_id: str,
+    udf_parallelism: int | None = None,
+    keep_cols: list[str] | None = None,
+) -> DataFrame | None:
+    """The ``$pixel`` violations of ``df``: one
+    :func:`~invalid_spark.checks.image.pixel_violations` per ``$pixel``
+    column, unioned; None when the plan has no ``$pixel`` rule.
+    ``keep_cols`` ride onto every row (the runner's work unit)."""
+    parts = [
+        image_checks.pixel_violations(
+            df,
+            row_key=row_key,
+            bytes_col=col,
+            psnr_min=float(spec.get("psnr_min", 40.0)),
+            run_id=run_id,
+            parallelism=udf_parallelism,
+            keep_cols=keep_cols,
+        )
+        for col, spec in plan.pixel_specs
+    ]
+    return reduce(DataFrame.unionByName, parts) if parts else None
+
+
 def stage_violations(
     df: DataFrame,
     rules: RuleSet,
@@ -181,16 +215,18 @@ def stage_violations(
     plan: rowchecks.RowCheckPlan,
     dims: dict[str, DataFrame],
     run_id: str,
-    psnr_min: float = 40.0,
-    udf_parallelism: int | None = None,
     blooms: dict[tuple, DataFrame] | None = None,
     keep_cols: list[str] | None = None,
+    pixel: DataFrame | None = None,
 ) -> DataFrame:
     """Union of every per-row check stage's violations for one input
     slice, batch or streaming. ``blooms`` defaults to materializing
     the plan's Bloom screens now (:func:`_prep_blooms`). ``keep_cols``
     threads source columns through the row-check projection onto each
-    row-check violation; rows from the other stages carry NULL there."""
+    row-check violation; rows from the other stages carry NULL there.
+    ``pixel`` is the slice's ``$pixel`` violations, built by the caller
+    with :func:`pixel_stage` (the batch runner builds them once per
+    call and splits them by unit); extra columns on it are dropped."""
     v = rowchecks.run_row_checks(
         df, rules, row_key, run_id, plan=plan, keep_cols=keep_cols
     )
@@ -220,15 +256,8 @@ def stage_violations(
             parts.append(refint.ref_violations(
                 df, col, dim, dim_key, row_key, run_id
             ))
-    for col, spec in plan.pixel_specs:
-        parts.append(image_checks.pixel_violations(
-            df,
-            row_key=row_key,
-            bytes_col=col,
-            psnr_min=float(spec.get("psnr_min", psnr_min)),
-            run_id=run_id,
-            parallelism=udf_parallelism,
-        ))
+    if pixel is not None:
+        parts.append(pixel)
     # $vector / $align are stateless row-local projections (HOF folds,
     # zero joins, zero state): streaming-legal as-is
     for col, spec in plan.vector_specs:
@@ -420,6 +449,27 @@ def validate(
     result.units_skipped = [u for u in vals if u in done]
     pending = [u for u in vals if u not in done]
     blooms = _prep_blooms(plan, dims) if pending else {}
+    # ONE pixel pass over the units of the batches this call runs
+    # (batch entries lead the stage table, so max_batches bounds them
+    # first). The unit rides on each row: a row key that recurs in
+    # another batch must not be written there too.
+    run_units = (
+        pending if max_batches is None
+        else pending[: max(max_batches, 0) * unit_batch]
+    )
+    pixel = None
+    if plan.pixel_specs and run_units:
+        unit_of = (
+            F.lit("__all__") if partition_col is None
+            else _unit_expr(partition_col)
+        )
+        src = df.select("*", unit_of.alias("__pixel_unit"))
+        if partition_col is not None:
+            src = src.filter(F.col("__pixel_unit").isin(run_units))
+        pixel = pixel_stage(
+            src, plan, row_key, run_id, udf_parallelism,
+            keep_cols=["__pixel_unit"],
+        ).localCheckpoint(eager=True)
     stages: list[
         tuple[list[str], Callable[[], DataFrame], DataFrame | str]
     ] = []
@@ -431,9 +481,11 @@ def validate(
         )
         stages.append((
             batch,
-            lambda slice_df=slice_df: stage_violations(
+            lambda slice_df=slice_df, batch=batch: stage_violations(
                 slice_df, rules, row_key, plan, dims, run_id,
-                udf_parallelism=udf_parallelism, blooms=blooms,
+                blooms=blooms,
+                pixel=None if pixel is None
+                else pixel.filter(F.col("__pixel_unit").isin(batch)),
             ),
             whole if partition_col is None else unit_map(slice_df),
         ))

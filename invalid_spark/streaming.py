@@ -73,11 +73,13 @@ def validate_stream(
             "required column missing from stream schema: "
             + "; ".join(sv["message"] for sv in plan.schema_violations)
         )
-    if not with_pixel_checks:
-        plan.pixel_specs = []
+    pixel = (
+        runner.pixel_stage(stream_df, plan, row_key, run_id, udf_parallelism)
+        if with_pixel_checks else None
+    )
     return runner.stage_violations(
         stream_df, rules, row_key, plan, dims or {}, run_id,
-        udf_parallelism=udf_parallelism, keep_cols=keep_cols,
+        keep_cols=keep_cols, pixel=pixel,
     )
 
 

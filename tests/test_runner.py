@@ -5,8 +5,10 @@ resumability requirements)."""
 from __future__ import annotations
 
 import os
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from invalid_spark import synth
@@ -173,6 +175,106 @@ def test_whole_table_unit_resume(spark, img_table, tmp_path):
     assert r1.units_done == ["__all__", "__unique__image_id"]
     r2 = runner.validate(spark, df, RULES, "image_id", out, dims=dims)
     assert set(r2.units_skipped) == {"__all__", "__unique__image_id"} and not r2.units_done
+
+
+PIXEL_RULES = load_rules(
+    """
+image_id: {$type: $str, $unique: true}
+bytes: {$type: $bin, $pixel: {psnr_min: 40.0}}
+bytes2: {$type: $bin, $pixel: {psnr_min: 40.0}}
+"""
+)
+PIXEL_TYPES = ["pixelMismatch", "decodeError", "typeMismatch"]
+
+
+@pytest.fixture(scope="module")
+def mod4_table(tmp_path_factory):
+    """synth rows with ``shard = row index mod 4``: every planted
+    duplicate id sits in another shard than its twin. The duplicate
+    rows also get truncated bytes, so only one of the two rows that
+    share a key has a decodeError. ``bytes2`` copies ``bytes`` (a
+    second ``$pixel`` column)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = []
+    for i in range(N):
+        r = synth.make_row(i)
+        if i in synth.violation_indices(N, "dup_id"):
+            r["bytes"] = r["bytes"][:8]
+        r["bytes2"] = r["bytes"]
+        r["shard"] = f"m{i % 4}"
+        rows.append(r)
+    p = str(tmp_path_factory.mktemp("mod4") / "tbl.parquet")
+    pq.write_table(pa.Table.from_pylist(rows), p)
+    return p
+
+
+def test_pixel_pass_once_per_call_split_by_unit(
+    spark, mod4_table, tmp_path, monkeypatch
+):
+    """One pixel_violations call per $pixel column per validate call,
+    and its rows reach exactly the unit whose slice they came from:
+    a planted duplicate id's decodeError belongs to one shard, not to
+    the twin's shard too."""
+    from invalid_spark.checks import image as image_checks
+
+    df = spark.read.parquet(mod4_table)
+    units = [f"m{i}" for i in range(4)]
+    cols = ["row_key", "column", "rule_id", "error_type", "message",
+            "observed", "partition_id"]
+    key = lambda t: tuple("" if x is None else str(x) for x in t)
+
+    def rows_of(frame, *extra):
+        return sorted(map(tuple, frame.select(*cols, *extra).collect()), key=key)
+
+    expected = {
+        u: rows_of(reduce(DataFrame.unionByName, [
+            image_checks.pixel_violations(
+                df.filter(F.col("shard") == u), bytes_col=c)
+            for c in ("bytes", "bytes2")
+        ]))
+        for u in units
+    }
+    dup_keys = {f"img-{i - 1:012d}" for i in synth.violation_indices(N, "dup_id")}
+    decode_units = {
+        (r[0], u) for u in units for r in expected[u] if r[3] == "decodeError"
+    }
+    # the setup the split must survive: each duplicate key fails to
+    # decode in exactly one shard (its twin row lives in another)
+    assert dup_keys and all(
+        sum(k == rk for rk, _ in decode_units) == 1 for k in dup_keys
+    )
+
+    calls = []
+    orig = image_checks.pixel_violations
+
+    def counting(*args, **kwargs):
+        calls.append(kwargs.get("bytes_col"))
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(image_checks, "pixel_violations", counting)
+
+    def run(out, **kw):
+        n0 = len(calls)
+        res = runner.validate(spark, df, PIXEL_RULES, "image_id", out,
+                              partition_col="shard", unit_batch=1, **kw)
+        assert sorted(calls[n0:]) == ["bytes", "bytes2"]
+        return res
+
+    full = run(str(tmp_path / "full"))
+    assert full.complete
+    v = full.violations(spark).filter(F.col("error_type").isin(PIXEL_TYPES))
+    for u in units:
+        assert rows_of(v.filter(F.col("unit") == u)) == expected[u], u
+
+    out = str(tmp_path / "resumed")
+    r1 = run(out, max_batches=1)
+    assert r1.units_done == ["m0"]
+    r2 = run(out)
+    assert r2.complete and r2.units_skipped == ["m0"]
+    assert rows_of(r2.violations(spark), "unit") == rows_of(
+        full.violations(spark), "unit")
 
 
 def test_profile(spark, img_table):

@@ -721,6 +721,22 @@ def test_ivf_ann_recall(spark):
     assert all(v == 5 for v in per_q.values())
 
 
+def test_ivf_sample_collect_is_size_gated(spark):
+    """A k-means sample that cannot fit under spark.driver.maxResultSize
+    raises before anything is collected to the driver."""
+    from invalid_spark.pipeline import similarity
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    dim = len(emb.select("embedding").first()[0])
+    limit = spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g")
+    too_many = limit // (dim * 8) + 1
+    with pytest.raises(ValueError, match=f"sample={too_many}.*width {dim}"):
+        similarity.ivf_centroids(emb, sample=too_many)
+    # a sample that fits still trains the codebook
+    assert similarity.ivf_centroids(emb, n_lists=4, sample=64).shape == (4, dim)
+
+
 def test_ann_recall_operator_semantics(spark):
     from invalid_spark.pipeline import similarity
 
@@ -1036,18 +1052,6 @@ def test_image_features_and_resize(spark):
     assert small.count() == 150 - len(
         [i for i in synth.violation_indices(150, "corrupt")]
     )
-
-
-def test_pixel_violations_arrow_impl_identical(spark):
-    from invalid_spark.checks import image as image_checks
-    from invalid_spark import synth
-
-    img = synth.images_df(spark, 250, partitions=4)
-    cols = ["row_key", "column", "rule_id", "error_type", "message", "observed"]
-    key = lambda t: tuple("" if x is None else str(x) for x in t)
-    a = sorted(map(tuple, image_checks.pixel_violations(img).select(*cols).collect()), key=key)
-    b = sorted(map(tuple, image_checks.pixel_violations(img, impl="arrow").select(*cols).collect()), key=key)
-    assert a == b and len(a) > 0
 
 
 def test_dup_clusters_connected_components(spark):
