@@ -1307,16 +1307,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "emb_drift_embeddings": q_emb_drift_embeddings,
         "rowcheck_when_documents": q_rowcheck_when_documents,
         "drift_partitioned_events": q_drift_partitioned_events,
+        "null_rates_by_group_events": q_null_rates_by_group_events,
+        "freshness_by_group_events": q_freshness_by_group_events,
+        "cms_heavy_hitters_events": q_cms_heavy_hitters_events,
+        "weighted_sample_documents": q_weighted_sample_documents,
         "drift_chi2_partitioned_events": q_drift_chi2_partitioned_events,
         "outliers_lineitem": q_outliers_lineitem,
         "benford_lineitem": q_benford_lineitem,
         "histogram_lineitem": q_histogram_lineitem,
         "vector_norm_embeddings": q_vector_norm_embeddings,
-        "null_rates_by_group_events": q_null_rates_by_group_events,
         "unique_composite_lineitem": q_unique_composite_lineitem,
         "rowcheck_format_documents": q_rowcheck_format_documents,
         "freshness_events": q_freshness_events,
-        "freshness_by_group_events": q_freshness_by_group_events,
         "snapshot_diff_documents": q_snapshot_diff_documents,
         "mix_report_documents": q_mix_report_documents,
         "mix_sample_documents": q_mix_sample_documents,
@@ -1330,7 +1332,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stats_corr_lineitem": q_stats_corr_lineitem,
         "stats_mi_events": q_stats_mi_events,
         "hot_keys_events": q_hot_keys_events,
-        "cms_heavy_hitters_events": q_cms_heavy_hitters_events,
         "streaming_watch_counts_events": q_streaming_watch_counts_events,
         "suggest_rules_documents": q_suggest_rules_documents,
         "suggest_vector_embeddings": q_suggest_vector_embeddings,
@@ -1357,7 +1358,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "alignment_embeddings": q_alignment_embeddings,
         "top_fraction_documents": q_top_fraction_documents,
         "top_fraction_by_lang_documents": q_top_fraction_by_lang_documents,
-        "weighted_sample_documents": q_weighted_sample_documents,
         "weighted_sample_by_lang_documents": q_weighted_sample_by_lang_documents,
         "emb_neardup_lsh": q_emb_neardup_lsh,
         "ann_brute_topk_embeddings": q_ann_brute_topk_embeddings,

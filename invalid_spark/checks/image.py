@@ -164,16 +164,20 @@ def caption_violations(
     key: str = "image_id",
     col: str = "caption",
     run_id: str = "",
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Byte equality of ``col`` vs the reference table's value —
     compares UTF-8 binaries, so Unicode-normalization variants differ
-    (FIXTURES.md caption_mismatch case). Join + compare, JVM-side."""
+    (FIXTURES.md caption_mismatch case). Join + compare, JVM-side.
+    ``keep_cols``: source columns carried onto every violation row."""
+    keep = list(keep_cols or [])
     r = ref.select(F.col(key).alias("__k"), F.col(col).alias("__ref"))
     j = df.select(
         F.col(key).cast("string").alias("row_key"),
         F.col(key).alias("__k"),
         F.col(col).alias("__cur"),
         F.spark_partition_id().alias("partition_id"),
+        *keep,
     ).join(r, "__k", "inner")
     bad = j.filter(
         ~(
@@ -189,6 +193,7 @@ def caption_violations(
         F.col("__cur").alias("observed"),
         "partition_id",
         F.lit(run_id).alias("run_id"),
+        *keep,
     )
 
 

@@ -40,15 +40,21 @@ def ref_violations(
     row_key: str,
     run_id: str = "",
     broadcast: bool = True,
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Rows of ``df`` whose ``col`` is absent from ``dim.dim_key``."""
-    keys = dim.select(F.col(dim_key).alias("__refk")).distinct()
-    if broadcast:
-        keys = F.broadcast(keys)
+    """Rows of ``df`` whose ``col`` is absent from ``dim.dim_key``.
+    A left-anti join's result does not depend on duplicate build-side
+    keys, so only the shuffle path de-duplicates them (it shrinks the
+    shuffled side); the broadcast path ships the keys as they are.
+    ``keep_cols``: source columns carried onto every violation row."""
+    keep = list(keep_cols or [])
+    keys = dim.select(F.col(dim_key).alias("__refk"))
+    keys = F.broadcast(keys) if broadcast else keys.distinct()
     missing = df.select(
         F.col(row_key).cast("string").alias("row_key"),
         F.col(col).alias("__fk"),
         F.spark_partition_id().alias("partition_id"),
+        *keep,
     ).join(keys, F.col("__fk") == F.col("__refk"), "left_anti")
     return missing.select(
         "row_key",
@@ -63,6 +69,7 @@ def ref_violations(
         F.col("__fk").cast("string").alias("observed"),
         "partition_id",
         F.lit(run_id).alias("run_id"),
+        *keep,
     )
 
 
@@ -123,6 +130,7 @@ def bloom_ref_violations(
     k: int = 3,
     salt: str = BLOOM_SALT,
     run_id: str = "",
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Rows of ``df`` whose ``col`` fails the Bloom screen.
 
@@ -133,13 +141,15 @@ def bloom_ref_violations(
     set all their bits); a violation is *missed* only at the Bloom
     false-positive rate. NULL foreign keys hash to NULL, match no
     word, and are flagged — identical to the LEFT ANTI path's NULL
-    semantics in :func:`ref_violations`.
+    semantics in :func:`ref_violations`. ``keep_cols`` as there.
     """
+    keep = list(keep_cols or [])
     key_s = F.col(col).cast("string")
     fact = df.select(
         F.col(row_key).cast("string").alias("row_key"),
         F.col(col).alias("__fk"),
         F.spark_partition_id().alias("partition_id"),
+        *keep,
         *[
             _bloom_pos(key_s, i, m_bits, salt).alias(f"__p{i}")
             for i in range(k)
@@ -174,4 +184,5 @@ def bloom_ref_violations(
         F.col("__fk").cast("string").alias("observed"),
         "partition_id",
         F.lit(run_id).alias("run_id"),
+        *keep,
     )

@@ -75,16 +75,20 @@ def fd_violations(
     dep: str,
     row_key: str,
     run_id: str = "",
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Violation rows (``VIOLATION_SCHEMA``) for every row whose
     determinant value breaks ``det → dep``.  Null-safe join so NULL
-    determinants are not silently dropped."""
+    determinants are not silently dropped. ``keep_cols``: source
+    columns carried onto every violation row."""
+    keep = list(keep_cols or [])
     bad = fd_violating_determinants(df, det, dep)
     joined = df.select(
         F.col(row_key).cast("string").alias("row_key"),
         F.col(det).cast("string").alias("__det"),
         F.col(dep).cast("string").alias("__depv"),
         F.spark_partition_id().alias("partition_id"),
+        *keep,
     ).join(bad, F.col("__det").eqNullSafe(F.col("value")), "inner")
     return joined.select(
         "row_key",
@@ -100,6 +104,7 @@ def fd_violations(
         F.col("__depv").alias("observed"),
         "partition_id",
         F.lit(run_id).alias("run_id"),
+        *keep,
     )
 
 
@@ -138,8 +143,10 @@ def sequence_violations(
     row_key: str,
     strict: bool = False,
     run_id: str = "",
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """``VIOLATION_SCHEMA`` rows for every monotonicity break."""
+    """``VIOLATION_SCHEMA`` rows for every monotonicity break;
+    ``keep_cols`` ride onto every row."""
     word = "increase" if strict else "never decrease"
     breaks = sequence_breaks(df, key, order_by, col, strict)
     return breaks.select(
@@ -158,6 +165,7 @@ def sequence_violations(
         ).alias("observed"),
         F.spark_partition_id().alias("partition_id"),
         F.lit(run_id).alias("run_id"),
+        *(keep_cols or []),
     )
 
 

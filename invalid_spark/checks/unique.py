@@ -44,14 +44,18 @@ def uniqueness_violations(
     row_key: str,
     run_id: str = "",
     salt_buckets: int = 64,
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Violation rows (schema ``VIOLATION_SCHEMA``) for every row whose
-    ``col`` value is duplicated."""
+    ``col`` value is duplicated. ``keep_cols``: source columns carried
+    onto every violation row (the runner's work unit)."""
+    keep = list(keep_cols or [])
     dups = duplicate_keys(df, col, salt_buckets)
     joined = df.select(
         F.col(row_key).cast("string").alias("row_key"),
         F.col(col).alias("k"),
         F.spark_partition_id().alias("partition_id"),
+        *keep,
     ).join(dups, "k", "inner")
     return joined.select(
         "row_key",
@@ -66,6 +70,7 @@ def uniqueness_violations(
         F.col("k").cast("string").alias("observed"),
         "partition_id",
         F.lit(run_id).alias("run_id"),
+        *keep,
     )
 
 
@@ -101,12 +106,15 @@ def composite_uniqueness_violations(
     row_key: str,
     run_id: str = "",
     salt_buckets: int = 64,
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Violation rows for every row whose COMPOSITE key (natural keys
     like (orderkey, linenumber) or (image_id, phash)) is duplicated.
     The dup-set join back uses null-safe equality on every part so
     the rows found match exactly the groups counted (struct equality
-    would drop NULL-part groups)."""
+    would drop NULL-part groups). ``keep_cols`` as in
+    :func:`uniqueness_violations`."""
+    keep = list(keep_cols or [])
     dups = composite_duplicate_keys(df, cols, salt_buckets)
     d = dups.select(
         *[F.col(c).alias(f"__dup_{c}") for c in cols], "cnt"
@@ -120,6 +128,7 @@ def composite_uniqueness_violations(
         F.col(row_key).cast("string").alias("row_key"),
         *cols,
         F.spark_partition_id().alias("partition_id"),
+        *keep,
     ).join(d, cond, "inner")
     return joined.select(
         "row_key",
@@ -137,4 +146,5 @@ def composite_uniqueness_violations(
         ).alias("observed"),
         "partition_id",
         F.lit(run_id).alias("run_id"),
+        *keep,
     )

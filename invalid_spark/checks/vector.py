@@ -29,6 +29,7 @@ def vector_violations(
     norm_min: float | None = None,
     norm_max: float | None = None,
     run_id: str = "",
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Violation rows for every vector invariant breach.
 
@@ -39,7 +40,9 @@ def vector_violations(
     pass as the other invariants; a vector containing NaN/±Inf folds
     to a NaN/Inf norm, which fails BOTH bounds (comparisons with NaN
     are false → flagged here only via the finiteness check, which is
-    why ``no_nan`` also refuses ±Inf)."""
+    why ``no_nan`` also refuses ±Inf). ``keep_cols``: source columns
+    carried onto every violation row."""
+    keep = list(keep_cols or [])
     c = F.col(col)
     checks = []
     if dim is not None:
@@ -116,6 +119,7 @@ def vector_violations(
             F.col(row_key).cast("string").alias("row_key"),
             F.spark_partition_id().alias("partition_id"),
             F.explode(F.array(*checks)).alias("v"),
+            *keep,
         )
         .filter(F.col("v").isNotNull())
     )
@@ -128,6 +132,7 @@ def vector_violations(
         F.col("v.observed").alias("observed"),
         "partition_id",
         F.lit(run_id).alias("run_id"),
+        *keep,
     )
 
 
@@ -165,6 +170,7 @@ def alignment_violations(
     row_key: str,
     min_cos: float,
     run_id: str = "",
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Paired-embedding alignment gate — the CLIP-score-style filter a
     multimodal (image, caption) pipeline runs before training (LAION's
@@ -186,7 +192,9 @@ def alignment_violations(
     ``list_reduce`` replay, so the gate's decisions are
     engine-reproducible. Scale shape: a pure row-local projection over
     the pruned (key, a, b) scan; zero shuffles, zero joins.
+    ``keep_cols`` as in :func:`vector_violations`.
     """
+    keep = list(keep_cols or [])
     unscorable, cos = alignment_score(col_a, col_b)
     checks = [
         F.when(
@@ -215,6 +223,7 @@ def alignment_violations(
         F.col(row_key).cast("string").alias("row_key"),
         F.spark_partition_id().alias("partition_id"),
         F.explode(F.array(*checks)).alias("v"),
+        *keep,
     ).filter(F.col("v").isNotNull())
     return out.select(
         "row_key",
@@ -225,4 +234,5 @@ def alignment_violations(
         F.col("v.observed").alias("observed"),
         "partition_id",
         F.lit(run_id).alias("run_id"),
+        *keep,
     )

@@ -284,9 +284,8 @@ def main(argv: list[str] | None = None) -> int:
         from invalid_spark.pipeline import dedup as dedup_mod
         from invalid_spark.pipeline import similarity as sim_mod
 
-        cents = sim_mod.ivf_md5_centroids(
-            df, n_lists=args.n_lists,
-            vec_col=args.vec_col, key_col=args.row_key,
+        cents = sim_mod.semantic_codebook(
+            df, None, args.n_lists, args.vec_col, args.row_key
         )
         dec = dedup_mod.semantic_dedup(
             df, threshold=args.threshold, centroids=cents,
@@ -330,9 +329,8 @@ def main(argv: list[str] | None = None) -> int:
         from invalid_spark.pipeline import similarity as sim_mod
 
         ev = spark.read.parquet(args.eval_table)
-        cents = sim_mod.ivf_md5_centroids(
-            ev, n_lists=args.n_lists,
-            vec_col=args.vec_col, key_col=args.row_key,
+        cents = sim_mod.semantic_codebook(
+            ev, None, args.n_lists, args.vec_col, args.row_key
         )
         flags = dedup_mod.semantic_contamination(
             df, ev, cents, threshold=args.threshold, nprobe=args.nprobe,

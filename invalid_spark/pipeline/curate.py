@@ -766,10 +766,9 @@ def semantic_diversity(
     from invalid_spark.pipeline import similarity
     from invalid_spark.pipeline.dedup import _semantic_assigned
 
-    if centroids is None:
-        centroids = similarity.ivf_md5_centroids(
-            df, n_lists=n_lists, vec_col=vec_col, key_col=key_col
-        )
+    centroids = similarity.semantic_codebook(
+        df, centroids, n_lists, vec_col, key_col
+    )
     n_cap = len(centroids)
     a = _semantic_assigned(df, centroids, vec_col, key_col)
     counts = a.groupBy("cluster").agg(

@@ -1259,14 +1259,17 @@ def dup_span_violations(
     n: int = 3,
     max_coverage: float = 0.5,
     min_df: int = 2,
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """``$dupspan`` rule evaluation: VIOLATION_SCHEMA rows for every
     document whose duplicated-span coverage (:func:`dup_span_stats`)
     reaches ``max_coverage``. Whole-table semantics like ``$unique``
     — a span duplicated across two work units is invisible per-batch
-    — so the runner gives it its own resumable global unit."""
+    — so the runner gives it its own resumable global unit.
+    ``keep_cols``: source columns carried onto every violation row."""
     from invalid_spark.model import ErrorType
 
+    keep = list(keep_cols or [])
     flagged = dup_span_stats(
         df, n=n, text_col=col, key_col=row_key,
         min_df=min_df, coverage_threshold=max_coverage,
@@ -1274,6 +1277,7 @@ def dup_span_violations(
     base = df.select(
         F.col(row_key).cast("string").alias("row_key"),
         F.spark_partition_id().alias("partition_id"),
+        *keep,
     )
     return (
         flagged.select(
@@ -1293,6 +1297,7 @@ def dup_span_violations(
             F.col("coverage_frac").cast("string").alias("observed"),
             "partition_id",
             F.lit(run_id).alias("run_id"),
+            *keep,
         )
     )
 
@@ -1356,10 +1361,9 @@ def semantic_dedup_pairs(
     Recall < 1 by construction: a duplicate pair split across two
     clusters is missed (the paper accepts the same miss).
     """
-    if centroids is None:
-        centroids = similarity.ivf_md5_centroids(
-            df, n_lists=n_lists, vec_col=vec_col, key_col=key_col
-        )
+    centroids = similarity.semantic_codebook(
+        df, centroids, n_lists, vec_col, key_col
+    )
     return _semantic_pairs(
         _semantic_assigned(df, centroids, vec_col, key_col), threshold
     )
@@ -1406,10 +1410,9 @@ def semantic_dedup(
     from pyspark.sql import Window
 
     spark = df.sparkSession
-    if centroids is None:
-        centroids = similarity.ivf_md5_centroids(
-            df, n_lists=n_lists, vec_col=vec_col, key_col=key_col
-        )
+    centroids = similarity.semantic_codebook(
+        df, centroids, n_lists, vec_col, key_col
+    )
     assigned = _semantic_assigned(df, centroids, vec_col, key_col)
     comp = dup_clusters(_semantic_pairs(assigned, threshold).select("a", "b"))
     cent_df = local_frame(
@@ -1586,9 +1589,8 @@ def semantic_cluster_skew(
     report says "raise ``n_lists``" (or k-means the codebook) BEFORE
     paying that. One aggregate + TakeOrderedAndProject (never a
     global sort); deterministic (n_docs desc, cluster asc) order."""
-    if centroids is None:
-        centroids = similarity.ivf_md5_centroids(
-            df, n_lists=n_lists, vec_col=vec_col, key_col=key_col
-        )
+    centroids = similarity.semantic_codebook(
+        df, centroids, n_lists, vec_col, key_col
+    )
     a = _semantic_assigned(df, centroids, vec_col, key_col)
     return _bucket_skew(a, ["cluster"], top)

@@ -261,6 +261,22 @@ def ivf_md5_centroids(
     return np.array([r["nv"] for r in rows])
 
 
+def semantic_codebook(
+    corpus: DataFrame,
+    centroids: "np.ndarray | None" = None,
+    n_lists: int = 16,
+    vec_col: str = "embedding",
+    key_col: str = "vec_id",
+) -> np.ndarray:
+    """The SemDeDup codebook: ``centroids`` when the caller passes one,
+    else the md5 default (:func:`ivf_md5_centroids`) of ``corpus``."""
+    if centroids is not None:
+        return centroids
+    return ivf_md5_centroids(
+        corpus, n_lists=n_lists, vec_col=vec_col, key_col=key_col
+    )
+
+
 def _nearest_lists_expr(nv: Column, cent: "np.ndarray", nprobe: int) -> Column:
     """Array of the nprobe centroid ids closest to the vector, as a
     pure Catalyst expression (one strict-left-fold dot per centroid

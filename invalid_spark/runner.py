@@ -20,12 +20,22 @@ Lifecycle (the Spark re-expression of the reference's
    order (``$unique``, composite ``$unique``, ``$fd``, ``$monotonic``,
    ``$dupspan``, ``$reconcile``). One loop runs every entry through
    the same lifecycle: skip if its units are done → bound by
-   ``max_batches`` → build → attribute rows to units → append to the
-   violations sink → mark. The ``$pixel`` UDF is the exception to
-   per-batch building: it runs ONCE per call (:func:`pixel_stage`)
-   over every unit of the batches the call will run, is
-   localCheckpointed before the loop, and each batch takes the rows of
-   its own units (the unit travels on each row). The cost: a kill
+   ``max_batches`` → build → append to the violations sink → mark.
+   The work unit rides every row: the input gains a ``__unit`` column
+   once, every violation builder keeps it (``keep_cols``), and the
+   write renames it to ``unit`` — no entry re-derives a row's unit by
+   joining on its key (which would misplace a key that repeats across
+   units or is NULL). ``$reconcile`` rows are key-level, not table
+   rows, and take the stage's own unit name. Each entry writes with
+   at most ``defaultParallelism`` tasks (a ``coalesce``, no shuffle):
+   a batch's union of branches would otherwise open one parquet
+   writer per branch partition for a few dozen rows. The trade-off:
+   a failed write task recomputes 1/``defaultParallelism`` of its
+   entry, not one branch partition. The ``$pixel`` UDF is the
+   exception to per-batch building: it runs ONCE per call
+   (:func:`pixel_stage`) over every unit of the batches the call will
+   run, is localCheckpointed before the loop, and each batch takes
+   the rows of its own units by the unit they carry. The cost: a kill
    before the first batch write loses the whole call's pixel pass,
    not one batch's share; ``max_batches`` still bounds that loss;
 4. each unit is marked in the :class:`~invalid_spark.io.Manifest`
@@ -34,7 +44,9 @@ Lifecycle (the Spark re-expression of the reference's
 5. the stage table's unit names are the completeness set:
    :attr:`RunResult.complete` is true once every one is marked, and it
    gates the quarantine publish and ``validate_appended``'s commit.
-   Verdicts + metrics aggregate from the written violations.
+   Metrics aggregate from the written violations (read with their
+   known schema); verdicts are the per-unit row counts the unit-list
+   query collected, left-joined to the written violations per unit.
 
 **Work units**: the values of ``partition_col`` (a data column — at
 production scale the Iceberg partition key, e.g. a date bucket or
@@ -60,6 +72,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from invalid_spark import report
 from invalid_spark.checks import drift as drift_checks
@@ -86,6 +99,27 @@ def _unit_expr(col: str) -> Column:
     return F.coalesce(F.col(col).cast("string"), F.lit(NULL_UNIT))
 
 
+# The violations sink's columns as a parquet read infers them (every
+# field nullable): the violation columns, then the unit and lineage.
+VIOLATIONS_SINK_SCHEMA = T.StructType(
+    [
+        T.StructField(f.name, f.dataType, True)
+        for f in VIOLATION_SCHEMA.fields
+        if f.name != "run_id"
+    ]
+    + [
+        T.StructField(c, T.StringType(), True)
+        for c in ("unit", "run_id", "snapshot_id")
+    ]
+)
+
+
+def read_violations(spark: SparkSession, path: str) -> DataFrame:
+    """The violations sink at ``path``, read with its known schema:
+    no footer-reading job to infer it."""
+    return spark.read.schema(VIOLATIONS_SINK_SCHEMA).parquet(path)
+
+
 @dataclass
 class RunResult:
     run_id: str
@@ -108,7 +142,7 @@ class RunResult:
     mode: str = ""
 
     def violations(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.out_dir, "violations"))
+        return read_violations(spark, os.path.join(self.out_dir, "violations"))
 
     def verdicts(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(os.path.join(self.out_dir, "verdicts"))
@@ -222,11 +256,11 @@ def stage_violations(
     """Union of every per-row check stage's violations for one input
     slice, batch or streaming. ``blooms`` defaults to materializing
     the plan's Bloom screens now (:func:`_prep_blooms`). ``keep_cols``
-    threads source columns through the row-check projection onto each
-    row-check violation; rows from the other stages carry NULL there.
+    threads source columns onto every violation row of every stage
+    (the batch runner's work unit, a stream's event time).
     ``pixel`` is the slice's ``$pixel`` violations, built by the caller
-    with :func:`pixel_stage` (the batch runner builds them once per
-    call and splits them by unit); extra columns on it are dropped."""
+    with :func:`pixel_stage` and the same ``keep_cols`` (the batch
+    runner builds them once per call and splits them by unit)."""
     v = rowchecks.run_row_checks(
         df, rules, row_key, run_id, plan=plan, keep_cols=keep_cols
     )
@@ -250,11 +284,11 @@ def stage_violations(
             key = _bloom_key(col, spec)
             parts.append(refint.bloom_ref_violations(
                 df, col, blooms[key], dim_key, row_key,
-                m_bits=key[2], k=key[3], run_id=run_id,
+                m_bits=key[2], k=key[3], run_id=run_id, keep_cols=keep_cols,
             ))
         else:
             parts.append(refint.ref_violations(
-                df, col, dim, dim_key, row_key, run_id
+                df, col, dim, dim_key, row_key, run_id, keep_cols=keep_cols
             ))
     if pixel is not None:
         parts.append(pixel)
@@ -270,22 +304,22 @@ def stage_violations(
             norm_min=norm.get("min"),
             norm_max=norm.get("max"),
             run_id=run_id,
+            keep_cols=keep_cols,
         ))
     for col, spec in plan.align_specs:
         parts.append(vector_checks.alignment_violations(
             df, col, spec["with"], row_key,
             min_cos=float(spec["min_cos"]),
             run_id=run_id,
+            keep_cols=keep_cols,
         ))
     for col, spec in plan.caption_specs:
         parts.append(image_checks.caption_violations(
             df, _dim(dims, "$caption-eq", spec),
             key=spec.get("key", row_key), col=col, run_id=run_id,
+            keep_cols=keep_cols,
         ))
-    cols = [c for c in v.columns if c not in (keep_cols or [])]
-    for p in parts:
-        v = v.unionByName(p.select(*cols), allowMissingColumns=True)
-    return v
+    return reduce(DataFrame.unionByName, parts, v)
 
 
 def validate(
@@ -417,81 +451,61 @@ def validate(
     plan.schema_violations = []  # batches emit row-level checks only
 
     # ---- the stage table -----------------------------------------------
-    # One entry (units it marks, build, unit attribution) per pending
-    # partition batch, then one per whole-table stage. Attribution is
-    # either a unit name for every row or a (row_key, unit) map joined
-    # onto the violations. Whole-table stages exist because their
-    # invariant spans units: a key duplicated across two units, a
-    # dependency broken across them or a span shared between them is
-    # invisible per batch. Their violations are real df rows and map
-    # back to their work units like batch rows do.
+    # One entry (units it marks, build, fixed unit name or None) per
+    # pending partition batch, then one per whole-table stage. The work unit
+    # rides every row: ``__unit`` is added to the input once and every
+    # violation builder keeps it, so a row lands in the unit it came
+    # from even when its row key repeats across units or is NULL.
+    # Whole-table stages exist because their invariant spans units: a
+    # key duplicated across two units, a dependency broken across them
+    # or a span shared between them is invisible per batch.
+    src = df.select(
+        "*",
+        (
+            F.lit("__all__") if partition_col is None
+            else _unit_expr(partition_col)
+        ).alias("__unit"),
+    )
+    keep = ["__unit"]
+    n_rows: dict[str, int] = {}
     if partition_col is None:
         vals = ["__all__"]
-        whole: DataFrame | str = "__all__"
     else:
-        vals = [
-            r[0]
-            for r in df.select(_unit_expr(partition_col).alias("u"))
-            .distinct()
-            .orderBy("u")
-            .collect()
-        ]
-
-        def unit_map(frame: DataFrame) -> DataFrame:
-            # one row per key: duplicate row keys (the thing the
-            # uniqueness check flags!) must not fan out the join
-            return frame.select(
-                F.col(row_key).cast("string").alias("row_key"),
-                _unit_expr(partition_col).alias("unit"),
-            ).dropDuplicates(["row_key"])
-
-        whole = unit_map(df)
+        # rows per unit: the unit list here, n_rows in the verdicts.
+        # Python's str order (code points) is Spark's (UTF-8 bytes)
+        n_rows = {r[0]: r[1] for r in src.groupBy("__unit").count().collect()}
+        vals = sorted(n_rows)
     result.units_skipped = [u for u in vals if u in done]
     pending = [u for u in vals if u not in done]
     blooms = _prep_blooms(plan, dims) if pending else {}
     # ONE pixel pass over the units of the batches this call runs
     # (batch entries lead the stage table, so max_batches bounds them
-    # first). The unit rides on each row: a row key that recurs in
-    # another batch must not be written there too.
+    # first); each batch takes its rows by the unit they carry
     run_units = (
         pending if max_batches is None
         else pending[: max(max_batches, 0) * unit_batch]
     )
     pixel = None
     if plan.pixel_specs and run_units:
-        unit_of = (
-            F.lit("__all__") if partition_col is None
-            else _unit_expr(partition_col)
-        )
-        src = df.select("*", unit_of.alias("__pixel_unit"))
-        if partition_col is not None:
-            src = src.filter(F.col("__pixel_unit").isin(run_units))
         pixel = pixel_stage(
-            src, plan, row_key, run_id, udf_parallelism,
-            keep_cols=["__pixel_unit"],
+            src.filter(F.col("__unit").isin(run_units)), plan, row_key,
+            run_id, udf_parallelism, keep_cols=keep,
         ).localCheckpoint(eager=True)
-    stages: list[
-        tuple[list[str], Callable[[], DataFrame], DataFrame | str]
-    ] = []
+    stages: list[tuple[list[str], Callable[[], DataFrame], str | None]] = []
     for i in range(0, len(pending), unit_batch):
-        batch = pending[i : i + unit_batch]
-        slice_df = (
-            df if partition_col is None
-            else df.filter(_unit_expr(partition_col).isin(batch))
-        )
+        in_batch = F.col("__unit").isin(pending[i : i + unit_batch])
         stages.append((
-            batch,
-            lambda slice_df=slice_df, batch=batch: stage_violations(
-                slice_df, rules, row_key, plan, dims, run_id,
-                blooms=blooms,
-                pixel=None if pixel is None
-                else pixel.filter(F.col("__pixel_unit").isin(batch)),
+            pending[i : i + unit_batch],
+            lambda in_batch=in_batch: stage_violations(
+                src.filter(in_batch), rules, row_key, plan, dims, run_id,
+                blooms=blooms, keep_cols=keep,
+                pixel=None if pixel is None else pixel.filter(in_batch),
             ),
-            whole if partition_col is None else unit_map(slice_df),
+            None,
         ))
 
     def add(
-        name: str, build: Callable[[], DataFrame], unit: DataFrame | str = whole
+        name: str, build: Callable[[], DataFrame], unit: str | None = None
     ) -> None:
         stages.append(([name], build, unit))
 
@@ -499,33 +513,37 @@ def validate(
     # (key, count) pairs, never rows
     for c in plan.unique_cols:
         add(f"__unique__{c}", lambda c=c: unique.uniqueness_violations(
-            df, c, row_key, run_id
+            src, c, row_key, run_id, keep_cols=keep
         ))
     for c, extra in plan.unique_composite:
         cols = [c, *extra]
         add(
             "__unique__" + "~".join(cols),
             lambda cols=cols: unique.composite_uniqueness_violations(
-                df, cols, row_key, run_id
+                src, cols, row_key, run_id, keep_cols=keep
             ),
         )
     for c, s in plan.fd_specs:
         add(f"__fd__{c}->{s.get('dep')}", lambda c=c, s=s: (
-            relations.fd_violations(df, c, s["dep"], row_key, run_id)
+            relations.fd_violations(
+                src, c, s["dep"], row_key, run_id, keep_cols=keep
+            )
         ))
     for c, s in plan.monotonic_specs:
         add(f"__monotonic__{c}", lambda c=c, s=s: (
             relations.sequence_violations(
-                df, s["per"], s["order"], c, row_key,
+                src, s["per"], s["order"], c, row_key,
                 strict=bool(s.get("strict", False)), run_id=run_id,
+                keep_cols=keep,
             )
         ))
     for c, s in plan.dupspan_specs:
         add(f"__dupspan__{c}", lambda c=c, s=s: dedup.dup_span_violations(
-            df, c, row_key, run_id,
+            src, c, row_key, run_id,
             n=int(s.get("n", 3)),
             max_coverage=float(s.get("max_coverage", 0.5)),
             min_df=int(s.get("min_df", 2)),
+            keep_cols=keep,
         ))
     for c, s in plan.reconcile_specs:
         # key-level failures: row_key is the reconciliation key, not a
@@ -538,10 +556,12 @@ def validate(
             tol=float(s.get("tol", 0.01)), run_id=run_id,
         ), unit=name)
 
-    # ---- one lifecycle: skip → bound → build → attribute → write → mark
+    # ---- one lifecycle: skip → bound → build → write → mark -----------
     # Each unit is marked AFTER its violations are written, so a kill
-    # loses at most the in-flight entry.
+    # loses at most the in-flight entry. An entry writes with at most
+    # defaultParallelism tasks (a coalesce: no shuffle).
     n_run = 0
+    write_tasks = spark.sparkContext.defaultParallelism
     for units, build, unit in stages:
         if set(units) <= done:
             result.units_skipped.extend(units)
@@ -550,13 +570,11 @@ def validate(
             continue
         n_run += 1
         v = build()
-        if isinstance(unit, str):
-            v = v.select("*", F.lit(unit).alias("unit"))
-        else:
-            v = v.join(unit, "row_key", "left").withColumn(
-                "unit", F.coalesce("unit", F.lit("__schema__"))
-            )
-        v = v.drop("run_id").select("*", *lineage)
+        v = (
+            v.withColumnRenamed("__unit", "unit") if unit is None
+            else v.select("*", F.lit(unit).alias("unit"))
+        )
+        v = v.drop("run_id").select("*", *lineage).coalesce(write_tasks)
         v.write.mode("append").parquet(v_dir)
         for u in units:
             manifest.mark_done(u, unit_meta)
@@ -577,20 +595,32 @@ def validate(
     # A resume of the same snapshot shares its snapshot_id, so the
     # filter keeps resumability intact. (Violation history across
     # snapshots remains queryable from the sink itself.)
-    all_v = spark.read.parquet(v_dir) if os.path.exists(v_dir) else None
+    all_v = read_violations(spark, v_dir) if os.path.exists(v_dir) else None
     if all_v is not None:
         all_v = all_v.filter(F.col("snapshot_id") == F.lit(snapshot))
         if partition_col is None:
             verd = report.partition_verdicts(df, all_v, run_id)
         else:
-            # group verdicts by the SAME unit naming the manifest and
-            # violation rows use (NULL → __null__), so the three
-            # outputs join by unit value
-            df_done = df.withColumn(
-                partition_col, _unit_expr(partition_col)
-            ).filter(F.col(partition_col).isin(sorted(done)))
-            verd = report.group_verdicts(
-                df_done, all_v, partition_col, row_key, run_id
+            # the row counts collected above, left-joined to the
+            # violations per carried unit; the __schema__ and
+            # $reconcile units match no data unit
+            per_unit = all_v.groupBy("unit").agg(
+                F.count(F.lit(1)).alias("n_violations")
+            )
+            verd = (
+                local_frame(
+                    spark,
+                    [(u, n_rows[u]) for u in vals if u in done],
+                    "unit string, n_rows long",
+                )
+                .join(per_unit, "unit", "left")
+                .select(
+                    F.col("unit").alias(partition_col),
+                    "n_rows",
+                    F.coalesce("n_violations", F.lit(0)).alias("n_violations"),
+                )
+                .withColumn("passed", F.col("n_violations") == 0)
+                .withColumn("run_id", F.lit(run_id))
             )
         verd.write.mode("overwrite").parquet(os.path.join(out_dir, "verdicts"))
         met = report.rule_metrics(all_v, run_id)

@@ -61,11 +61,11 @@ def validate_stream(
     rules stream-static inner joins.
 
     ``keep_cols`` threads source columns (typically the event-time
-    column for :func:`windowed_metrics`) through the row-check
-    projection onto each violation row — the streaming-safe
+    column for :func:`windowed_metrics`) onto every violation row of
+    every stage — row checks, ``$ref``, ``$caption-eq``, ``$vector``,
+    ``$align`` and pixel rows alike. It is the streaming-safe
     alternative to re-joining violations back to the source (a
-    stream-stream join Spark rejects without watermarks). Violations
-    from the other stages carry NULL for the kept columns.
+    stream-stream join Spark rejects without watermarks).
     """
     plan = rowchecks.compile_row_checks(stream_df, rules)
     if plan.fail_fast:
@@ -74,7 +74,10 @@ def validate_stream(
             + "; ".join(sv["message"] for sv in plan.schema_violations)
         )
     pixel = (
-        runner.pixel_stage(stream_df, plan, row_key, run_id, udf_parallelism)
+        runner.pixel_stage(
+            stream_df, plan, row_key, run_id, udf_parallelism,
+            keep_cols=keep_cols,
+        )
         if with_pixel_checks else None
     )
     return runner.stage_violations(

@@ -366,6 +366,100 @@ def test_null_partition_units_are_validated(spark, tmp_path):
     assert runner.NULL_UNIT in units
 
 
+def test_unit_rides_every_violation_row(spark, tmp_path):
+    """Each violation row keeps the unit of the row it came from: a key
+    that repeats across units is flagged in both, a NULL key stays in
+    its own unit, and the verdicts count exactly those rows."""
+    df = spark.createDataFrame(
+        [("a", "s1"), ("a", "s2"), ("b", "s2"), (None, "s3"), ("c", "s3")],
+        "k string, shard string",
+    )
+    rules = load_rules("k: {$type: $str, $unique: true}\n")
+    res = runner.validate(spark, df, rules, "k", str(tmp_path / "attr"),
+                          partition_col="shard", unit_batch=1)
+    assert res.complete
+    v = res.violations(spark)
+    got = sorted(
+        (r["error_type"], r["row_key"] or "", r["unit"])
+        for r in v.select("error_type", "row_key", "unit").collect()
+    )
+    assert got == [
+        ("keyMissing", "", "s3"),
+        ("uniqueMismatch", "a", "s1"),
+        ("uniqueMismatch", "a", "s2"),
+    ]
+    verd = {r["shard"]: r for r in res.verdicts(spark).collect()}
+    assert sorted(verd) == ["s1", "s2", "s3"]
+    for u, r in verd.items():
+        assert (r["n_rows"], r["n_violations"], r["passed"]) == (
+            1 + (u != "s1"), 1, False
+        ), u
+
+
+def test_violations_sink_schema_matches_inferred(spark, img_table, tmp_path):
+    """The runner reads its violations sink with a declared schema
+    (no inference job); on a fresh sink that schema is exactly what
+    inference yields."""
+    df = spark.read.parquet(img_table)
+    res = runner.validate(
+        spark, df, RULES, "image_id", str(tmp_path / "schema"),
+        dims={"licenses": synth.licenses_df(spark)}, partition_col="shard",
+    )
+    inferred = spark.read.parquet(os.path.join(res.out_dir, "violations"))
+    assert inferred.schema == runner.VIOLATIONS_SINK_SCHEMA
+    assert res.violations(spark).schema == inferred.schema
+
+
+# Spark jobs of one warm validate call on the 4-shard table: 16 when
+# each violation row carries its unit; re-deriving the unit by key
+# joins (attribution per entry, verdicts over the whole input) took 30
+JOB_BUDGET = 16
+
+
+def test_validate_job_budget_and_no_row_key_join(
+    spark, img_table, tmp_path, monkeypatch
+):
+    """One validate call on a fixed 4-unit table runs at most
+    JOB_BUDGET Spark jobs, and no stage entry's write plan joins on
+    the violation row key (the unit is carried, never re-derived)."""
+    from pyspark.sql import DataFrameWriter
+
+    df = spark.read.parquet(img_table)
+    dims = {"licenses": synth.licenses_df(spark)}
+
+    def run(out):
+        return runner.validate(
+            spark, df, RULES, "image_id", str(tmp_path / out), dims=dims,
+            partition_col="shard", unit_batch=2,
+        )
+
+    run("warm")  # Python workers and codegen warm, as in a served call
+    plans = []
+    orig = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        if os.path.basename(path) == "violations":
+            plans.append(
+                self._df._jdf.queryExecution().optimizedPlan().toString()
+            )
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    sc = spark.sparkContext
+    sc.setJobGroup("job_budget", "one validate call")
+    try:
+        res = run("timed")
+        jobs = sc.statusTracker().getJobIdsForGroup("job_budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.complete
+    assert len(plans) == 3  # two unit batches + the global unique
+    for plan in plans:
+        joins = [ln for ln in plan.splitlines() if "Join" in ln]
+        assert not [ln for ln in joins if "row_key#" in ln], plan
+    assert len(jobs) <= JOB_BUDGET, len(jobs)
+
+
 def test_resume_refuses_snapshot_mismatch(spark, tmp_path):
     df = synth.images_df(spark, 40, partitions=2)
     out = str(tmp_path / "snapmix")

@@ -243,6 +243,35 @@ def test_keep_cols_threads_event_time(spark, tmp_path):
         streaming.with_event_time(v, sdf, "event_id", "ts")
 
 
+def test_keep_cols_ride_ref_violations(spark, tmp_path):
+    """A kept column rides every stage, not just the row checks: the
+    $ref violation of a stream carries its event time, not NULL."""
+    src = spark.createDataFrame(
+        [(1, "x", "2024-01-01 00:00:30"), (2, "zz", "2024-01-01 00:01:30")],
+        "event_id long, code string, ts_s string",
+    ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
+    d = str(tmp_path / "ev")
+    src.coalesce(1).write.mode("overwrite").parquet(d)
+    rules = load_rules(
+        "code: {$type: $str, $ref: {table: codes, key: code}}\n"
+    )
+    codes = spark.createDataFrame([("x",)], "code string")
+    sdf = spark.readStream.schema(src.schema).parquet(d)
+    v = streaming.validate_stream(
+        sdf, rules, "event_id", dims={"codes": codes}, keep_cols=["ts"]
+    )
+    out = str(tmp_path / "v_out")
+    q = v.writeStream.format("parquet").option(
+        "checkpointLocation", str(tmp_path / "ck")
+    ).option("path", out).trigger(availableNow=True).start()
+    q.awaitTermination(120)
+    rows = spark.read.parquet(out).collect()
+    assert [(r["row_key"], r["error_type"]) for r in rows] == [
+        ("2", "refMismatch")
+    ]
+    assert str(rows[0]["ts"]) == "2024-01-01 00:01:30"
+
+
 def test_windowed_chi2_drift_batch_and_stream(spark, tmp_path):
     """Windowed goodness-of-fit drift: a window matching the
     reference mix passes, a skewed window and an unknown category
