@@ -81,18 +81,24 @@ def column_profile(
 ASSERT_STATS = ("null_rate", "min", "max", "mean", "ndv")
 
 
-def stat_assertions(
+ASSERTION_SCHEMA = (
+    "col_name string, stat string, value double, bound_min double, "
+    "bound_max double, passed boolean, run_id string"
+)
+
+
+def stat_assertion_rows(
     df: DataFrame,
     specs: list[dict],
     run_id: str = "",
-) -> DataFrame:
+) -> list[tuple]:
     """Deequ-style table-level constraint verification: each spec is
     ``{"col": c, "stat": s, "min": lo?, "max": hi?}`` with ``stat`` in
-    {null_rate, min, max, mean, ndv}; the output has one row per
-    assertion — (col_name, stat, value, bound_min, bound_max, passed)
-    — so a suite can gate a snapshot on corpus-level properties
-    ("null rate under 1%", "mean in range") the way per-row rules
-    gate individual records.
+    {null_rate, min, max, mean, ndv}; one driver-side row per
+    assertion, in :data:`ASSERTION_SCHEMA` order — (col_name, stat,
+    value, bound_min, bound_max, passed, run_id) — so a suite can gate
+    a snapshot on corpus-level properties ("null rate under 1%", "mean
+    in range") the way per-row rules gate individual records.
 
     ALL assertions evaluate in ONE partial+final aggregation over a
     single column-pruned scan (the multi-column pattern shared with
@@ -123,7 +129,6 @@ def stat_assertions(
             e = F.count_distinct(c).cast("double")
         aggs.append(e.alias(f"v_{i}"))
     row = df.agg(*aggs).collect()[0]
-    spark = df.sparkSession
     out = []
     for i, spec in enumerate(specs):
         v = row[f"v_{i}"]
@@ -141,10 +146,19 @@ def stat_assertions(
             float(hi) if hi is not None else None,
             bool(passed), run_id,
         ))
+    return out
+
+
+def stat_assertions(
+    df: DataFrame,
+    specs: list[dict],
+    run_id: str = "",
+) -> DataFrame:
+    """:func:`stat_assertion_rows` as a frame over
+    :data:`ASSERTION_SCHEMA`."""
     return local_frame(
-        spark, out,
-        "col_name string, stat string, value double, bound_min double, "
-        "bound_max double, passed boolean, run_id string",
+        df.sparkSession, stat_assertion_rows(df, specs, run_id),
+        ASSERTION_SCHEMA,
     )
 
 

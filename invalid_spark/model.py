@@ -14,15 +14,21 @@ constructors), including its quirks where tests depend on them:
 New engine-only error types extend the enum for the table-scale
 checks (SURVEY.md §2.3/§2.4).
 
-Every frame built from driver-side rows (sink rows, stat results,
-small dimension tables) goes through :func:`local_frame`.
+Every frame built from driver-side rows (stat results, small
+dimension tables, stored state) goes through :func:`local_frame`; a
+sink written from driver-side rows is written by the driver, through
+:func:`write_rows`.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from collections.abc import Iterable
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -166,6 +172,27 @@ def format_msg(key: str, fmt: str) -> str:
     return f"value of [{key}] must be a valid {fmt}"
 
 
+def _arrow_table(
+    rows: Iterable[tuple | dict], schema: T.StructType | str
+) -> tuple[pa.Table, T.StructType]:
+    """``rows`` (tuples in field order or dicts by field name) as one
+    Arrow table with exactly ``schema``, and the schema as a
+    ``StructType``. Arrow coerces each value to its field's type (an
+    int into a ``double`` column); a NULL in a non-nullable field
+    raises ``ValueError``."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    for f in schema.fields:
+        if not f.nullable and table.column(f.name).null_count:
+            raise ValueError(f"field {f.name}: not nullable, but got None")
+    return table, schema
+
+
 def local_frame(
     spark: SparkSession,
     rows: Iterable[tuple | dict],
@@ -183,14 +210,48 @@ def local_frame(
     each value to its field's type (an int into a ``double`` column);
     a NULL in a non-nullable field raises, as ``createDataFrame``'s
     schema check does."""
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    names = schema.names
-    table = pa.Table.from_pylist(
-        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
-        schema=to_arrow_schema(schema),
-    )
-    for f in schema.fields:
-        if not f.nullable and table.column(f.name).null_count:
-            raise ValueError(f"field {f.name}: not nullable, but got None")
+    table, schema = _arrow_table(rows, schema)
     return spark.createDataFrame(table, schema)
+
+
+def write_rows(
+    path: str,
+    rows: Iterable[tuple | dict],
+    schema: T.StructType | str,
+    mode: str = "overwrite",
+) -> None:
+    """Write driver-side ``rows`` to the parquet sink at the local
+    path ``path`` from the driver, with no Spark job: the Arrow table
+    :func:`local_frame` would build goes straight to one parquet file.
+
+    ``mode="overwrite"`` writes a hidden sibling directory and swaps
+    it into place (the old sink is set aside, then removed);
+    ``mode="append"`` adds one part file with a unique name, renamed
+    into the sink once complete. Readers never see a partial file.
+    Every column is written nullable, as a Spark parquet write writes
+    it, so ``spark.read.parquet`` reads the declared types back; an
+    empty ``rows`` still writes a file carrying the schema."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be overwrite or append, got {mode!r}")
+    table, _ = _arrow_table(rows, schema)
+    table = table.cast(
+        pa.schema([f.with_nullable(True) for f in table.schema])
+    )
+    path = path.rstrip(os.sep)
+    tag = uuid.uuid4().hex
+    part = f"part-{tag}.parquet"
+    if mode == "append":
+        os.makedirs(path, exist_ok=True)
+        tmp = os.path.join(path, f".{part}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(path, part))
+        return
+    parent, name = os.path.split(path)
+    tmp_dir = os.path.join(parent, f".{name}.tmp-{tag}")
+    old_dir = os.path.join(parent, f".{name}.old-{tag}")
+    os.makedirs(tmp_dir)
+    pq.write_table(table, os.path.join(tmp_dir, part))
+    if os.path.exists(path):
+        os.replace(path, old_dir)
+    os.replace(tmp_dir, path)
+    shutil.rmtree(old_dir, ignore_errors=True)

@@ -46,7 +46,15 @@ Lifecycle (the Spark re-expression of the reference's
    gates the quarantine publish and ``validate_appended``'s commit.
    Metrics aggregate from the written violations (read with their
    known schema); verdicts are the per-unit row counts the unit-list
-   query collected, left-joined to the written violations per unit.
+   query collected, left-joined to the written violations per unit;
+6. the table-level stages follow (schema changes, ``$assert``,
+   ``$dist``, ``$anomaly``, ``$drift``). Their sinks hold a few rows
+   the driver already has, so the driver writes them
+   (:func:`~invalid_spark.model.write_rows`: no Spark job), and it
+   reads the driver-sized state they carry between snapshots
+   (``metrics_history``, ``drift_state``) with ``pyarrow``. Spark
+   writes only what it computes at table scale: violations,
+   verdicts, metrics, distribution verdicts and the drift state.
 
 **Work units**: the values of ``partition_col`` (a data column — at
 production scale the Iceberg partition key, e.g. a date bucket or
@@ -70,6 +78,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from functools import reduce
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,7 +91,7 @@ from invalid_spark.checks import rows as rowchecks
 from invalid_spark.checks import vector as vector_checks
 from invalid_spark.dsl import RuleSet
 from invalid_spark.io import Manifest, snapshot_id
-from invalid_spark.model import VIOLATION_SCHEMA, local_frame
+from invalid_spark.model import VIOLATION_SCHEMA, local_frame, write_rows
 from invalid_spark.pipeline import dedup
 
 # Work-unit name for rows whose partition_col is NULL. A bare
@@ -429,16 +438,16 @@ def validate(
     # ---- schema-level violations: once per run, their own unit ---------
     # (per-batch emission would duplicate them across resumes)
     if plan.schema_violations and "__schema__" not in done:
-        local_frame(
-            spark,
+        write_rows(
+            v_dir,
             [
-                {**sv, "partition_id": None, "run_id": run_id}
+                {**sv, "unit": "__schema__", "run_id": run_id,
+                 "snapshot_id": snapshot}
                 for sv in plan.schema_violations
             ],
-            VIOLATION_SCHEMA,
-        ).select("*", F.lit("__schema__").alias("unit")).drop(
-            "run_id"
-        ).select("*", *lineage).write.mode("append").parquet(v_dir)
+            VIOLATIONS_SINK_SCHEMA,
+            mode="append",
+        )
         manifest.mark_done("__schema__", unit_meta)
         done.add("__schema__")
         result.units_done.append("__schema__")
@@ -665,13 +674,11 @@ def validate(
     )
     if stored_schema is not None and schema_stale:
         changes = schema_checks.schema_changes(fp, stored_schema["schema"])
-        local_frame(
-            spark,
+        write_rows(
+            os.path.join(out_dir, "schema_changes"),
             [(c, ch, b, a, run_id, snapshot) for c, ch, b, a in changes],
             "col_name string, change string, before string, after string, "
             "run_id string, snapshot_id string",
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "schema_changes")
         )
     if schema_stale:
         # tmp + atomic replace, local-POSIX like the manifest
@@ -687,9 +694,14 @@ def validate(
              **{k: spec[k] for k in ("min", "max") if k in spec}}
             for col, spec in plan.assert_specs
         ]
-        stats.stat_assertions(df, a_specs, run_id=run_id).withColumn(
-            "snapshot_id", F.lit(snapshot)
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, "assertions"))
+        write_rows(
+            os.path.join(out_dir, "assertions"),
+            [
+                (*r, snapshot)
+                for r in stats.stat_assertion_rows(df, a_specs, run_id=run_id)
+            ],
+            stats.ASSERTION_SCHEMA + ", snapshot_id string",
+        )
 
     # ---- declared-distribution gates ($dist) ----------------------------
     # One corpus aggregate per $dist rule (rare rules; a multi-column
@@ -715,13 +727,14 @@ def validate(
     # history (absolute bounds + relative change vs the last-k mean).
     # Like drift state and the schema fingerprint this requires ONE
     # out_dir across snapshots; evaluation is driver-side over the
-    # collected tiny history, the only cluster work one aggregation.
+    # tiny history, read and appended by the driver, so the only
+    # cluster work is one aggregation.
     if plan.anomaly_specs:
         from invalid_spark.checks import anomaly as anomaly_checks
 
         hist_dir = os.path.join(out_dir, "metrics_history")
         hist_rows = (
-            spark.read.parquet(hist_dir).collect()
+            pq.read_table(hist_dir).to_pylist()
             if os.path.exists(hist_dir)
             else []
         )
@@ -736,23 +749,25 @@ def validate(
         results = anomaly_checks.evaluate(
             plan.anomaly_specs, cur_vals, prior
         )
-        local_frame(
-            spark,
+        write_rows(
+            os.path.join(out_dir, "anomalies"),
             [
                 (r.col, r.metric, r.value, r.baseline, r.rel_change,
                  r.z, r.n_history, r.passed, run_id, snapshot)
                 for r in results
             ],
             anomaly_checks.ANOMALY_SCHEMA,
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, "anomalies"))
+        )
         if not seen_snap:
-            new_rows = [
-                (col, m, v, max_seq + 1, run_id, snapshot)
-                for (col, m), v in sorted(cur_vals.items())
-            ]
-            local_frame(
-                spark, new_rows, anomaly_checks.HISTORY_SCHEMA
-            ).write.mode("append").parquet(hist_dir)
+            write_rows(
+                hist_dir,
+                [
+                    (col, m, v, max_seq + 1, run_id, snapshot)
+                    for (col, m), v in sorted(cur_vals.items())
+                ],
+                anomaly_checks.HISTORY_SCHEMA,
+                mode="append",
+            )
 
     # ---- drift stage (snapshot-vs-snapshot, outside unit loop) ---------
     # Comparison source, in priority order: an explicit prev_df
@@ -785,21 +800,22 @@ def validate(
         d_specs, d_df, d_prev = _expand_vector_drift(
             df, plan.drift_specs, prev_df
         )
-        stored = (
-            spark.read.parquet(state_dir)
-            if prev_df is None and os.path.exists(state_dir)
-            else None
-        )
-        # The stored state is tagged with the snapshot it was built
-        # from: a resume/re-run of the SAME snapshot must not compare
-        # the table against its own state (statistic 0 would overwrite
-        # the real drift verdict) nor re-write identical state.
-        stored_snap = None
-        if stored is not None:
-            head = stored.select("snapshot_id").limit(1).collect()
-            stored_snap = head[0]["snapshot_id"] if head else None
-            if stored_snap == snapshot:
-                stored = None  # same table state: nothing new to test
+        # The stored state is O(bins) rows: the driver reads it and
+        # hands it over as a LocalRelation. It is tagged with the
+        # snapshot it was built from: a resume/re-run of the SAME
+        # snapshot must not compare the table against its own state
+        # (statistic 0 would overwrite the real drift verdict) nor
+        # re-write identical state.
+        stored = stored_snap = None
+        if prev_df is None and os.path.exists(state_dir):
+            state_rows = pq.read_table(state_dir).to_pylist()
+            stored_snap = (
+                state_rows[0]["snapshot_id"] if state_rows else None
+            )
+            if stored_snap != snapshot:
+                stored = local_frame(
+                    spark, state_rows, drift_checks.STATE_SCHEMA
+                )
         cur_grids = None
         if prev_df is not None:
             # one grid aggregation serves both the comparison and the
@@ -823,12 +839,12 @@ def validate(
             for _, r in sorted(results.items())
         ]
         if rows:
-            local_frame(
-                spark,
+            write_rows(
+                os.path.join(out_dir, "drift"),
                 rows,
                 "column string, test string, statistic double, p_value double, "
                 "drifted boolean, run_id string, snapshot_id string",
-            ).write.mode("overwrite").parquet(os.path.join(out_dir, "drift"))
+            )
         # persist this run's state unless it is already current: one
         # grid pass + one tagged histogram pass for ALL columns
         if not (prev_df is None and stored is None and stored_snap == snapshot):

@@ -5,6 +5,17 @@ executor: AQE on (runtime re-plan + skew-join), Arrow enabled with a
 small batch cap because image ``bytes`` rows are large, shuffle
 partitions ~= cores (overridable for the 100 TB profile where this
 should be ~2-3x total cores).
+
+The generated-code cache holds 1000 classes instead of Spark's 100
+(``spark.sql.codegen.cache.maxEntries``). A call is short: its row
+work is a few CPU-seconds, so compiling its plans is a large share of
+it. A warm ``runner.validate_appended`` call on a lineitem-shaped
+ruleset (ranges, enums, composite ``$unique``, exact and Bloom
+``$ref``, ``$drift``, ``$assert``, ``$anomaly``) needs about 120
+generated classes. With 100 slots the cache evicts each class before
+the next call reuses it, so every warm call recompiled 102-120 classes
+(1.3-1.5 s of Janino time plus the JIT of the new classes); with 1000
+it compiles about 6. Pass ``extra_conf`` to choose another size.
 """
 
 from __future__ import annotations
@@ -19,6 +30,11 @@ from pyspark.sql import SparkSession
 # should scale this down to keep batches ≲100 MB per Python worker
 # (SPARK_GRAFT_ARROW_BATCH env).
 ARROW_BATCH_ROWS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"))
+
+# Generated classes Spark keeps across queries: room for about eight
+# warm calls' worth (one lineitem-shaped validate_appended call needs
+# about 120; see the module docstring).
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def driver_memory() -> str:
@@ -63,6 +79,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():

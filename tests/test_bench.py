@@ -39,3 +39,24 @@ def test_output_ends_in_short_summary_line(monkeypatch, capsys):
     assert tail["cores"] == bench.CPUS
     detail = json.loads(lines[-2])
     assert detail["queries"] == timings and detail["value"] == tail["value"]
+
+
+def test_timed_plans_read_their_columns(spark, monkeypatch):
+    """Every query ``bench.py`` times runs through the noop sink, and
+    none of the timed plans reads an empty schema: a ``.count()`` lets
+    Catalyst prune every computed column and the scan with it, which
+    shows as ``ReadSchema: struct<>``. Plans are recorded, not run."""
+    from test_entry_oracle import SF_DIR
+
+    bench = _bench()
+    plans = []
+    monkeypatch.setattr(bench, "noop_write", lambda df: plans.append(
+        df._jdf.queryExecution().executedPlan().toString()))
+    monkeypatch.setattr(bench, "CPUS", 4)
+    monkeypatch.setattr(bench, "N_IMAGES", 64)
+    monkeypatch.setattr(bench, "TRIALS", 1)
+    _, timings, _, headline = bench._validated_rows(spark, SF_DIR)
+    assert len(timings) > 50 and set(headline) <= set(timings)
+    assert len(plans) == len(timings)
+    empty = [p for p in plans if "ReadSchema: struct<>" in p]
+    assert empty == [], empty[0]

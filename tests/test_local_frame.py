@@ -176,3 +176,89 @@ def test_sink_schemas_unchanged(spark, tmp_path):
         None, "tag", "typeMismatch"
     )
     assert sv["snapshot_id"] == r2.snapshot and sv["partition_id"] is None
+
+
+def _parquet_files(path):
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+
+def test_write_rows_overwrite_and_append(spark, tmp_path):
+    """Overwrite swaps in a new sink and leaves no temp directory
+    beside it; append adds exactly one part file."""
+    out = tmp_path / "audit"
+    sink = str(out / "sink")
+    ddl = "k string, n long"
+    model.write_rows(sink, [("a", 1), ("b", 2)], ddl)
+    model.write_rows(sink, [("c", 3)], ddl)
+    assert os.listdir(out) == ["sink"]
+    assert len(_parquet_files(sink)) == 1
+    assert [tuple(r) for r in spark.read.parquet(sink).collect()] == [("c", 3)]
+
+    before = _parquet_files(sink)
+    model.write_rows(sink, [{"k": "d", "n": 4}], ddl, mode="append")
+    after = _parquet_files(sink)
+    assert len(after) == 2 and set(before) < set(after)
+    assert sorted(r["k"] for r in spark.read.parquet(sink).collect()) == [
+        "c", "d"
+    ]
+    assert os.listdir(out) == ["sink"]
+    assert [f for f in os.listdir(sink) if f.startswith(".")] == []
+    with pytest.raises(ValueError, match="mode"):
+        model.write_rows(sink, [], ddl, mode="ignore")
+
+
+def test_write_rows_empty_and_null_nan(spark, tmp_path):
+    """An empty row list still writes a sink with the declared schema;
+    NaN and NULL come back as written; a NULL in a non-nullable field
+    raises before anything is written."""
+    ddl = "k string, x double, n long, ok boolean, i int"
+    empty = str(tmp_path / "empty")
+    model.write_rows(empty, [], ddl)
+    got = spark.read.parquet(empty)
+    assert got.schema.simpleString() == (
+        "struct<k:string,x:double,n:bigint,ok:boolean,i:int>"
+    )
+    assert got.count() == 0
+
+    vals = str(tmp_path / "vals")
+    model.write_rows(
+        vals, [("nan", math.nan, 1, True, 2), ("null", None, None, None, None)],
+        ddl,
+    )
+    rows = {r["k"]: r for r in spark.read.parquet(vals).collect()}
+    assert math.isnan(rows["nan"]["x"]) and rows["nan"]["i"] == 2
+    assert all(rows["null"][c] is None for c in ("x", "n", "ok", "i"))
+
+    bad = str(tmp_path / "bad")
+    with pytest.raises(ValueError, match="error_type"):
+        model.write_rows(bad, [{"column": "c"}], model.VIOLATION_SCHEMA)
+    assert not os.path.exists(bad)
+
+
+def test_runner_writes_no_local_frame():
+    """A sink of driver-side rows is written by the driver
+    (``model.write_rows``): no ``local_frame(...)`` chain in
+    ``runner.py`` ends in ``.write``, which would spend a Spark job
+    moving rows the driver already holds."""
+    path = os.path.join(PKG, "runner.py")
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), path)
+
+    def chain_calls(node):
+        # the calls along a method chain: a(...).b(...).write -> a, b
+        while isinstance(node, (ast.Attribute, ast.Call, ast.Subscript)):
+            if isinstance(node, ast.Call):
+                f = node.func
+                yield f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None)
+                node = f
+            else:
+                node = node.value
+
+    writes = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "write"
+    ]
+    assert writes, "the scan found no .write at all"
+    stray = [n.lineno for n in writes if "local_frame" in chain_calls(n.value)]
+    assert stray == []

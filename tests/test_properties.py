@@ -212,6 +212,52 @@ def test_hamming_core_matches_brute_force(spark, bits, h, batch, state):
 
 
 # ---------------------------------------------------------------------------
+# Count-Min sketch: merge and point estimates
+
+_cms_key = st.one_of(st.none(), st.sampled_from(["a", "b", "c"]),
+                     st.integers(min_value=0, max_value=40).map(str))
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(st.lists(st.lists(_cms_key, max_size=12), min_size=1, max_size=4),
+       st.sampled_from([1, 3]), st.sampled_from([4, 16]))
+@example([[], ["a"]], 3, 4)                          # an empty batch
+@example([["a"] * 5, ["a", None, "b"]], 1, 4)         # repeats, a NULL key
+def test_cms_merge_is_whole_sketch_and_never_undershoots(
+    spark, batches, depth, width
+):
+    """``cms_merge`` over the batches' sketches is the sketch of the
+    whole corpus, and ``cms_estimate`` never reports fewer than a
+    key's exact count (narrow widths force bucket collisions)."""
+    from collections import Counter
+
+    from invalid_spark.checks import stats
+    from invalid_spark.model import local_frame
+
+    frame = lambda keys: local_frame(  # noqa: E731
+        spark, [(k,) for k in keys], "k string")
+    sketch = lambda df: stats.cms_sketch(  # noqa: E731
+        df, "k", depth=depth, width=width)
+    counters = lambda s: {  # noqa: E731
+        (r["i"], r["bucket"]): r["cnt"] for r in s.collect() if r["cnt"]}
+    whole = [k for b in batches for k in b]
+    merged = stats.cms_merge(*[sketch(frame(b)) for b in batches])
+    assert counters(merged) == counters(sketch(frame(whole)))
+
+    exact = Counter(k for k in whole if k is not None)
+    est = {
+        r["value"]: r["est_cnt"]
+        for r in stats.cms_estimate(
+            merged, frame([*exact, "never-seen"]), "k",
+            depth=depth, width=width,
+        ).collect()
+    }
+    assert all(est[k] >= n for k, n in exact.items())
+    assert est["never-seen"] >= 0
+
+
+# ---------------------------------------------------------------------------
 # codecs
 
 @settings(max_examples=25, deadline=None)

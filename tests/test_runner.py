@@ -1554,3 +1554,75 @@ def test_align_rule_through_runner(spark, tmp_path):
         crc(df, load_rules(
             "img_emb: {$type: $arr, $constraint: $float, "
             "$align: {with: cap_emb}}"))
+
+
+APPEND_RULES = load_rules(
+    """
+l_rowid: {$type: $int}
+l_orderkey: {$type: $int, $unique: {with: [l_linenumber]}, $ref: {table: orders, key: o_orderkey}}
+l_partkey: {$type: $int, $ref: {table: part, key: p_partkey, mode: bloom, bits: 65536, hashes: 3}}
+l_linenumber: {$type: $int, $range: {$min: 1, $max: 7}}
+l_quantity: {$type: $float, $range: {$min: 1, $max: 50}, $assert: {stat: mean, min: 20, max: 30}, $drift: {test: ks}}
+l_discount: {$type: $float, $range: {$min: 0, $max: 0.1}, $anomaly: {metric: violation_rate, max_rel_change: 0.5}}
+l_returnflag: {$type: $str, $of: [A, N, R], $drift: {test: chi2}}
+"""
+)
+
+
+def test_warm_append_call_compiles_few_classes(spark, tmp_path):
+    """A warm lineitem-shaped ``validate_appended`` call (ranges and
+    enums, composite ``$unique``, exact and Bloom ``$ref``, ks and chi2
+    ``$drift``, ``$assert``, ``$anomaly``, a ``partition_col``) reuses
+    the generated classes of the calls before it and keeps its job
+    count: with a codegen cache smaller than one call's classes, every
+    call recompiles about a hundred of them."""
+    import shutil
+
+    from invalid_spark.io import TableLog
+
+    stage = tmp_path / "stage"
+    dims = {}
+    for name, key, n in (("orders", "o_orderkey", 90), ("part", "p_partkey", 50)):
+        spark.range(1, n + 1).select(F.col("id").alias(key)).write.parquet(
+            str(stage / name))
+        dims[name] = spark.read.parquet(str(stage / name))
+    for i in range(3):
+        spark.range(200).select(
+            (F.col("id") + 1000 * i).alias("l_rowid"),
+            (F.col("id") % 97 + 1).alias("l_orderkey"),
+            (F.col("id") * 7 % 60 + 1).alias("l_partkey"),
+            (F.col("id") % 8).alias("l_linenumber"),
+            (F.col("id") % 50 + 1 + i).cast("double").alias("l_quantity"),
+            ((F.col("id") % 11) / 100.0).alias("l_discount"),
+            F.element_at(F.array(*map(F.lit, "ANRX")), (F.col("id") % 4 + 1).cast(
+                "int")).alias("l_returnflag"),
+        ).coalesce(1).write.parquet(str(stage / f"f{i}"))
+    table = tmp_path / "lineitem"
+    table.mkdir()
+    log = TableLog(str(tmp_path / "log"))
+
+    def append_and_validate(i):
+        shutil.move(str(stage / f"f{i}"), str(table / f"f{i}"))
+        return runner.validate_appended(
+            spark, str(table), log, APPEND_RULES, "l_rowid",
+            str(tmp_path / "out"), dims=dims, partition_col="l_returnflag",
+        )
+
+    for i in range(2):  # the base file, then one append: both warm-ups
+        assert append_and_validate(i).complete
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    sc = spark.sparkContext
+    sc.setJobGroup("warm_append", "one warm validate_appended call")
+    try:
+        res = append_and_validate(2)
+        jobs = sc.statusTracker().getJobIdsForGroup("warm_append")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_compiled = compiles.METRIC_COMPILATION_TIME().getCount() - before
+    assert res.complete
+    drift = spark.read.parquet(str(tmp_path / "out" / "drift"))
+    assert {r["column"] for r in drift.collect()} == {
+        "l_quantity", "l_returnflag"}
+    assert n_compiled <= 10, n_compiled
+    assert len(jobs) <= 34, len(jobs)
