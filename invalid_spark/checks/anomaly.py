@@ -19,11 +19,11 @@ evaluate the CURRENT run's value against that history:
   a zero-spread window (constant history) fails on ANY departure.
 
 Like the drift stage, evaluation is driver-side math over a few
-dozen collected numbers; the only cluster work is ONE aggregation
-over the (already pruned) input for null_rate / mean / row_count,
-and one fold of the already-computed violations frame for
-violation_rate. :func:`rel_change_over_history` is the same fold as
-a window over the history DataFrame — usable at scale for thousands
+dozen collected numbers; the only cluster work is the input metrics'
+aggregate columns (:func:`metric_layer`, part of the runner's one
+table-level aggregation) and one fold of the already-computed
+violations frame for violation_rate. :func:`rel_change_over_history`
+is the same fold as a window over the history DataFrame — usable at scale for thousands
 of tracked metrics, and replayable by any SQL engine (AVG OVER ROWS
 BETWEEN k PRECEDING AND 1 PRECEDING), which is what the driver's
 oracle checks.
@@ -33,15 +33,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
+
+from invalid_spark.checks import stats
 
 ANOMALY_METRICS = (
     "violation_rate", "null_rate", "mean", "row_count",
     "stddev", "min", "max", "distinct",
 )
-# metrics that aggregate the column's numeric values (vs counts)
-NUMERIC_METRICS = ("mean", "stddev", "min", "max")
 
 HISTORY_SCHEMA = (
     "col_name string, metric string, value double, seq long, "
@@ -67,74 +67,57 @@ class AnomalyResult:
     passed: bool
 
 
+def metric_layer(
+    violations: DataFrame | None, specs: list[tuple[str, dict]]
+) -> stats.Layer:
+    """The ``$anomaly`` input layer: a ``metric_expr`` column per spec
+    (``distinct`` is ``ndv``; ``violation_rate`` reads the row count),
+    and a finish that folds ``violations`` per column and returns
+    :func:`current_metric_values`."""
+    metrics = [spec.get("metric", "violation_rate") for _, spec in specs]
+    for (col, _), m in zip(specs, metrics):
+        if m not in ANOMALY_METRICS:
+            raise ValueError(
+                f"unknown anomaly metric [{m}] on column [{col}] "
+                f"(choose from {ANOMALY_METRICS})"
+            )
+    aggs = [stats.metric_expr("*", "row_count").alias("m_n")] + [
+        stats.metric_expr(col, "ndv" if m == "distinct" else m).alias(f"m_{i}")
+        for i, ((col, _), m) in enumerate(zip(specs, metrics))
+        if m != "violation_rate"
+    ]
+
+    def finish(row: Row) -> dict[tuple[str, str], float | None]:
+        n = row["m_n"]
+        vcounts: dict[str, int] = {}
+        if violations is not None and "violation_rate" in metrics:
+            vcounts = {
+                r["column"]: r["cnt"]
+                for r in violations.groupBy("column")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .collect()
+            }
+        out = {}
+        for i, ((col, _), m) in enumerate(zip(specs, metrics)):
+            if m != "violation_rate":
+                out[(col, m)] = row[f"m_{i}"]
+            else:
+                out[(col, m)] = float(vcounts.get(col, 0)) / n if n else None
+        return out
+
+    return aggs, finish
+
+
 def current_metric_values(
     df: DataFrame,
     violations: DataFrame | None,
     specs: list[tuple[str, dict]],
 ) -> dict[tuple[str, str], float | None]:
     """This run's value for every ``$anomaly`` spec, in ONE
-    aggregation over the input (row count + per-column null counts /
-    means share the pass) plus one fold of the violations frame
-    (which is already computed and small relative to the input)."""
-    for col, spec in specs:
-        m = spec.get("metric", "violation_rate")
-        if m not in ANOMALY_METRICS:
-            raise ValueError(
-                f"unknown anomaly metric [{m}] on column [{col}] "
-                f"(choose from {ANOMALY_METRICS})"
-            )
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, (col, spec) in enumerate(specs):
-        m = spec.get("metric", "violation_rate")
-        c = F.col(col)
-        if m == "null_rate":
-            aggs.append(
-                F.sum(F.when(c.isNull(), 1).otherwise(0)).alias(f"v_{i}")
-            )
-        elif m == "mean":
-            aggs.append(
-                (F.sum(c.cast("double")) / F.count(c).cast("double"))
-                .alias(f"v_{i}")
-            )
-        elif m == "stddev":
-            aggs.append(F.stddev_samp(c.cast("double")).alias(f"v_{i}"))
-        elif m == "min":
-            aggs.append(F.min(c.cast("double")).alias(f"v_{i}"))
-        elif m == "max":
-            aggs.append(F.max(c.cast("double")).alias(f"v_{i}"))
-        elif m == "distinct":
-            # exact (countDistinct partial-combines on the grouping
-            # hash): the history series must be reproducible run-over-
-            # run — an approximate sketch would jitter the baseline
-            aggs.append(
-                F.count_distinct(c).cast("double").alias(f"v_{i}")
-            )
-    row = df.agg(*aggs).collect()[0]
-    n = row["__n"]
-    vcounts: dict[str, int] = {}
-    if violations is not None and any(
-        spec.get("metric", "violation_rate") == "violation_rate"
-        for _, spec in specs
-    ):
-        vcounts = {
-            r["column"]: r["cnt"]
-            for r in violations.groupBy("column")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-    out: dict[tuple[str, str], float | None] = {}
-    for i, (col, spec) in enumerate(specs):
-        m = spec.get("metric", "violation_rate")
-        if m == "row_count":
-            out[(col, m)] = float(n)
-        elif m == "violation_rate":
-            out[(col, m)] = float(vcounts.get(col, 0)) / n if n else None
-        elif m == "null_rate":
-            out[(col, m)] = float(row[f"v_{i}"]) / n if n else None
-        else:  # mean / stddev / min / max / distinct
-            v = row[f"v_{i}"]
-            out[(col, m)] = float(v) if v is not None else None
-    return out
+    aggregation over the input (:func:`metric_layer` through
+    :func:`~invalid_spark.checks.stats.one_pass`) plus one fold of the
+    violations frame."""
+    return stats.one_pass(df, [metric_layer(violations, specs)])[0]
 
 
 def evaluate(
@@ -166,11 +149,7 @@ def evaluate(
         )
         rel = None
         z = None
-        passed = v is not None
-        if passed and "min" in spec:
-            passed = v >= float(spec["min"])
-        if passed and "max" in spec:
-            passed = v <= float(spec["max"])
+        passed = stats.within(v, spec.get("min"), spec.get("max"))
         if v is not None and baseline is not None:
             rel = (
                 (v - baseline) / baseline if baseline != 0

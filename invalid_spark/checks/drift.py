@@ -27,10 +27,11 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 from invalid_spark import mathutil
+from invalid_spark.checks.stats import Layer, one_pass
 from invalid_spark.model import local_frame
 
 
@@ -83,7 +84,9 @@ def _bucket_expr(c: Column, lo, hi, bins: int) -> Column:
 
 
 def _grid_aggs(specs: list[tuple[str, dict]]) -> list[Column]:
-    """``lo_i``/``hi_i`` aggregate expressions for numeric ``specs``."""
+    """``lo_i``/``hi_i`` aggregate expressions for numeric ``specs``.
+    Their min/max exclude NaN (``$assert max`` does not), so they are
+    not :func:`~invalid_spark.checks.stats.metric_expr`'s."""
     aggs = []
     for i, (col, spec) in enumerate(specs):
         v = _num(F.col(col))
@@ -99,13 +102,27 @@ def _grid_aggs(specs: list[tuple[str, dict]]) -> list[Column]:
     return aggs
 
 
+def grid_layer(specs: list[tuple[str, dict]], bins_default: int = 256) -> Layer:
+    """The grid aggregation of :func:`multi_grid` as a layer (see
+    :func:`~invalid_spark.checks.stats.one_pass`)."""
+    num = [(c, s) for c, s in specs if s.get("test", "ks") not in _CATEGORICAL]
+
+    def finish(row: Row) -> dict[str, tuple[float | None, float | None, int]]:
+        return {
+            col: (row[f"lo_{i}"], row[f"hi_{i}"], int(spec.get("bins", bins_default)))
+            for i, (col, spec) in enumerate(num)
+        }
+
+    return _grid_aggs(num), finish
+
+
 def multi_grid(
     df: DataFrame,
     specs: list[tuple[str, dict]],
     bins_default: int = 256,
 ) -> dict[str, tuple[float | None, float | None, int]]:
     """Histogram grids for EVERY numeric ``$drift`` column in ONE
-    aggregation pass: ``{col: (lo, hi, bins)}``.
+    aggregation pass (:func:`grid_layer`): ``{col: (lo, hi, bins)}``.
 
     Per-spec ``clip: [qlo, qhi]`` switches that column's range from
     min/max to approximate quantiles: outliers (exactly what a
@@ -114,14 +131,7 @@ def multi_grid(
     buckets still catch the clipped tails. Clipped and unclipped
     columns share the single scan because ``percentile_approx`` and
     ``min``/``max`` are both plain aggregate expressions."""
-    num = [(c, s) for c, s in specs if s.get("test", "ks") not in _CATEGORICAL]
-    if not num:
-        return {}
-    row = df.agg(*_grid_aggs(num)).collect()[0]
-    return {
-        col: (row[f"lo_{i}"], row[f"hi_{i}"], int(spec.get("bins", bins_default)))
-        for i, (col, spec) in enumerate(num)
-    }
+    return one_pass(df, [grid_layer(specs, bins_default)])[0]
 
 
 def merge_grids(

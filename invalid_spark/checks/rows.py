@@ -51,6 +51,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from invalid_spark import model, yamlmeta
+from invalid_spark.checks.anomaly import ANOMALY_METRICS
+from invalid_spark.checks.stats import NUMERIC_METRICS
 from invalid_spark.dsl import Rule, RuleSet
 from invalid_spark.model import ErrorType
 
@@ -88,6 +90,18 @@ def _static_type_ok(rule_type: str, dt: T.DataType) -> bool:
     if rule_type in ("$null", "$any"):
         return True
     return isinstance(dt, _STATIC_OK.get(rule_type, ()))
+
+
+def _require_numeric(what: str, metric: str, path: str, dt: T.DataType) -> None:
+    """A metric that reads a column's values as numbers, on a
+    string/date/timestamp column, yields NULL or a string order: a RULE
+    error, so it surfaces at compile time (reference NewRule parity),
+    not as a fake data failure."""
+    if metric in NUMERIC_METRICS and not isinstance(dt, T.NumericType):
+        raise ValueError(
+            f"{what} [{metric}] on column [{path}] requires a numeric "
+            f"column, got {dt.simpleString()}"
+        )
 
 
 def _null_struct() -> Column:
@@ -683,21 +697,10 @@ class _Compiler:
                 # — required-absent already fail-fasts the run);
                 # collecting it would crash the runner's assertion
                 # aggregation with an unresolved column
-                a_stat = child.assert_.get("stat", "null_rate")
-                if a_stat in ("min", "max", "mean") and not isinstance(
-                    dt, T.NumericType
-                ):
-                    # stat_assertions casts these to double — on a
-                    # string/date/timestamp column that yields NULL
-                    # and a spurious passed=False: a RULE error, so
-                    # it surfaces here at compile time (reference
-                    # NewRule parity), not as a fake data failure
-                    raise ValueError(
-                        f"$assert stat [{a_stat}] on column [{path}] "
-                        f"requires a numeric column, got "
-                        f"{dt.simpleString()}; use null_rate or ndv "
-                        "for non-numeric columns"
-                    )
+                _require_numeric(
+                    "$assert stat", child.assert_.get("stat", "null_rate"),
+                    path, dt,
+                )
                 self.plan.assert_specs.append((path, child.assert_))
             if child.dist is not None and dt is not None:
                 # $dist on an absent column: skipped like $assert (the
@@ -751,23 +754,14 @@ class _Compiler:
                     )
                 self.plan.dupspan_specs.append((path, child.dupspan))
             if child.anomaly is not None and dt is not None:
-                from invalid_spark.checks import anomaly as _anomaly
-
                 a_metric = child.anomaly.get("metric", "violation_rate")
-                if a_metric not in _anomaly.ANOMALY_METRICS:
+                if a_metric not in ANOMALY_METRICS:
                     raise ValueError(
                         f"unknown $anomaly metric [{a_metric}] on "
                         f"column [{path}] (choose from "
-                        f"{_anomaly.ANOMALY_METRICS})"
+                        f"{ANOMALY_METRICS})"
                     )
-                if a_metric in _anomaly.NUMERIC_METRICS and not isinstance(
-                    dt, T.NumericType
-                ):
-                    raise ValueError(
-                        f"$anomaly metric [{a_metric}] on column "
-                        f"[{path}] requires a numeric column, got "
-                        f"{dt.simpleString()}"
-                    )
+                _require_numeric("$anomaly metric", a_metric, path, dt)
                 zm = child.anomaly.get("z_max")
                 if zm is not None and (
                     not isinstance(zm, (int, float))

@@ -1,28 +1,78 @@
 """Per-column statistics stage (SURVEY.md §2.3).
 
-All requested stats for all columns are computed in ONE partial+final
-hash aggregation over a single column-pruned scan — at 100 TB this is
-one shuffle of a handful of bytes per partition (partial aggregates),
-never a per-column pass.
-
-- null_rate / min / max: plain aggregates;
-- ndv: ``approx_count_distinct`` (HyperLogLog++, built-in) with an
-  exact option for oracle parity at small scale;
-- quantiles: ``percentile_approx`` (built-in sketch) with an exact
-  option.
+Every column metric is written once, as the aggregate expression
+:func:`metric_expr` returns. A table-level check is a *layer*: its
+aggregate columns plus a driver-side finish over the collected row,
+so the runner's ``$assert``, ``$anomaly`` and ``$drift`` grid layers
+share ONE partial+final aggregation over one column-pruned scan
+(:func:`one_pass`), never a pass per column or per layer.
+:func:`column_profile` adds the sketches: ``approx_count_distinct``
+(HyperLogLog++) and ``percentile_approx``, each with an exact option
+for oracle parity at small scale.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 from typing import Iterable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from invalid_spark.model import local_frame
+
+# a layer: aggregate columns, and the finish that reads their row
+Layer = tuple[list[Column], Callable[[Row], object]]
+
+METRICS = ("row_count", "null_rate", "min", "max", "mean", "stddev", "ndv")
+# metrics over the column's values as numbers: the rule compiler
+# rejects them on a non-numeric column
+NUMERIC_METRICS = frozenset({"min", "max", "mean", "stddev"})
+
+
+def metric_expr(col: str, metric: str) -> Column:
+    """The aggregate expression of one column metric, as double.
+
+    NULL is absent; NaN is a value, and Spark orders it above every
+    number. So ``null_rate`` counts NaN as present, ``ndv`` counts
+    every NaN as one value, ``max`` and ``mean`` are NaN when a NaN is
+    present, ``min`` skips NaN unless every value is NaN, and
+    ``stddev`` (sample) is NaN when a NaN is among two or more values.
+    On no rows, or only NULLs, every metric but ``row_count`` and
+    ``ndv`` is NULL (``null_rate`` is 1.0 on all-NULL rows)."""
+    if metric == "row_count":
+        return F.count(F.lit(1)).cast("double")
+    c = F.col(col)
+    if metric == "null_rate":
+        return (
+            F.sum(F.when(c.isNull(), 1).otherwise(0)).cast("double")
+            / F.count(F.lit(1)).cast("double")
+        )
+    if metric == "min":
+        return F.min(c).cast("double")
+    if metric == "max":
+        return F.max(c).cast("double")
+    if metric == "mean":
+        return F.sum(c.cast("double")) / F.count(c).cast("double")
+    if metric == "stddev":
+        return F.stddev_samp(c.cast("double"))
+    if metric == "ndv":
+        # exact: any SQL engine replays it, and a metric history of it
+        # does not jitter run over run as a sketch would
+        return F.count_distinct(c).cast("double")
+    raise ValueError(f"unknown metric [{metric}] (choose from {METRICS})")
+
+
+def one_pass(df: DataFrame, layers: list[Layer]) -> list:
+    """Every layer's aggregate columns in ONE ``agg().collect()`` over
+    ``df``; returns each layer's finish of the collected row, in
+    order. Layers with no columns add no job."""
+    aggs = [a for cols, _ in layers for a in cols]
+    row = df.agg(*aggs).collect()[0] if aggs else None
+    return [finish(row) for _, finish in layers]
 
 
 def column_profile(
@@ -32,28 +82,20 @@ def column_profile(
     exact: bool = False,
     run_id: str = "",
 ) -> DataFrame:
-    """One row per (column): requested stats as a map<string,double>.
+    """One row per (column, stat): ``(column, stat, value, n_rows,
+    run_id)``.
 
     ``specs`` is [(column, [stat, ...])] with stats drawn from
     {null_rate, min, max, ndv, quantiles}. Single-pass, single agg.
     """
-    aggs = [F.count(F.lit(1)).alias("__n")]
+    keys, aggs = [], [metric_expr("*", "row_count").alias("__n")]
     for col, stats in specs:
         c = F.col(col)
-        safe = col.replace(".", "__")
-        if "null_rate" in stats:
-            aggs.append(
-                F.avg(c.isNull().cast("double")).alias(f"{safe}!null_rate")
-            )
-        if "min" in stats:
-            aggs.append(F.min(c).cast("double").alias(f"{safe}!min"))
-        if "max" in stats:
-            aggs.append(F.max(c).cast("double").alias(f"{safe}!max"))
+        exprs = [(s, metric_expr(col, s)) for s in ("null_rate", "min", "max")
+                 if s in stats]
         if "ndv" in stats:
-            expr = (
-                F.countDistinct(c) if exact else F.approx_count_distinct(c, 0.02)
-            )
-            aggs.append(expr.cast("double").alias(f"{safe}!ndv"))
+            exprs.append(("ndv", metric_expr(col, "ndv") if exact
+                          else F.approx_count_distinct(c, 0.02).cast("double")))
         if "quantiles" in stats:
             for q in quantiles:
                 expr = (
@@ -61,30 +103,62 @@ def column_profile(
                     if exact
                     else F.percentile_approx(c, F.lit(q), F.lit(10000))
                 )
-                aggs.append(expr.cast("double").alias(f"{safe}!q{q}"))
-    row = df.agg(*aggs).collect()[0].asDict()
-    n = row.pop("__n")
-    spark = df.sparkSession
-    out_rows = []
-    for key, val in row.items():
-        colname, stat = key.split("!", 1)
-        out_rows.append(
-            (colname.replace("__", "."), stat, float(val) if val is not None else None,
-             int(n), run_id)
-        )
+                exprs.append((f"q{q}", expr.cast("double")))
+        for stat, expr in exprs:
+            aggs.append(expr.alias(f"p_{len(keys)}"))
+            keys.append((col, stat))
+    row = df.agg(*aggs).collect()[0]
     return local_frame(
-        spark, out_rows,
+        df.sparkSession,
+        [(c, s, row[f"p_{i}"], int(row["__n"]), run_id)
+         for i, (c, s) in enumerate(keys)],
         "column string, stat string, value double, n_rows long, run_id string",
     )
 
 
 ASSERT_STATS = ("null_rate", "min", "max", "mean", "ndv")
 
-
 ASSERTION_SCHEMA = (
     "col_name string, stat string, value double, bound_min double, "
     "bound_max double, passed boolean, run_id string"
 )
+
+
+def within(v: float | None, lo, hi) -> bool:
+    """The ``$assert`` and ``$anomaly`` bound verdict: ``v`` is not
+    NULL and inside the bounds ``lo``/``hi`` (each optional)."""
+    return v is not None and (lo is None or v >= float(lo)) and (
+        hi is None or v <= float(hi)
+    )
+
+
+def assertion_layer(specs: list[dict], run_id: str = "") -> Layer:
+    """The ``$assert`` layer: one :func:`metric_expr` column per spec,
+    and a finish giving :func:`stat_assertion_rows`' rows."""
+    for spec in specs:
+        if spec["stat"] not in ASSERT_STATS:
+            raise ValueError(
+                f"unknown assertion stat [{spec['stat']}] (choose from "
+                f"{ASSERT_STATS})"
+            )
+    aggs = [
+        metric_expr(spec["col"], spec["stat"]).alias(f"a_{i}")
+        for i, spec in enumerate(specs)
+    ]
+
+    def finish(row: Row) -> list[tuple]:
+        out = []
+        for i, spec in enumerate(specs):
+            v, lo, hi = row[f"a_{i}"], spec.get("min"), spec.get("max")
+            out.append((
+                spec["col"], spec["stat"], v,
+                float(lo) if lo is not None else None,
+                float(hi) if hi is not None else None,
+                within(v, lo, hi), run_id,
+            ))
+        return out
+
+    return aggs, finish
 
 
 def stat_assertion_rows(
@@ -101,52 +175,10 @@ def stat_assertion_rows(
     in range") the way per-row rules gate individual records.
 
     ALL assertions evaluate in ONE partial+final aggregation over a
-    single column-pruned scan (the multi-column pattern shared with
-    drift.multi_grid); ndv is exact (count distinct) so any SQL
+    single column-pruned scan (:func:`assertion_layer` through
+    :func:`one_pass`); ndv is exact (count distinct) so any SQL
     engine reproduces the values bit-for-bit."""
-    aggs = []
-    n = F.count(F.lit(1))
-    for i, spec in enumerate(specs):
-        col, stat = spec["col"], spec["stat"]
-        if stat not in ASSERT_STATS:
-            raise ValueError(
-                f"unknown assertion stat [{stat}] (choose from "
-                f"{ASSERT_STATS})"
-            )
-        c = F.col(col)
-        if stat == "null_rate":
-            e = (
-                F.sum(F.when(c.isNull(), 1).otherwise(0)).cast("double")
-                / n.cast("double")
-            )
-        elif stat == "min":
-            e = F.min(c).cast("double")
-        elif stat == "max":
-            e = F.max(c).cast("double")
-        elif stat == "mean":
-            e = F.sum(c.cast("double")) / F.count(c).cast("double")
-        else:  # ndv
-            e = F.count_distinct(c).cast("double")
-        aggs.append(e.alias(f"v_{i}"))
-    row = df.agg(*aggs).collect()[0]
-    out = []
-    for i, spec in enumerate(specs):
-        v = row[f"v_{i}"]
-        lo = spec.get("min")
-        hi = spec.get("max")
-        passed = v is not None
-        if passed and lo is not None:
-            passed = v >= float(lo)
-        if passed and hi is not None:
-            passed = v <= float(hi)
-        out.append((
-            spec["col"], spec["stat"],
-            float(v) if v is not None else None,
-            float(lo) if lo is not None else None,
-            float(hi) if hi is not None else None,
-            bool(passed), run_id,
-        ))
-    return out
+    return one_pass(df, [assertion_layer(specs, run_id)])[0]
 
 
 def stat_assertions(

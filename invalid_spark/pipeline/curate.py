@@ -629,19 +629,20 @@ def weighted_sample_by_group(
     group are a superset property of the global draw restricted to
     it).
 
-    Grouped top-k has no TakeOrderedAndProject, so the naive
-    rank-window shuffles the whole corpus. Instead the map side
-    prunes EXACTLY first: one ``mapInPandas`` pass keeps each
-    (partition, group)'s local top-``k`` by rank key — top-k is a
-    monotone selector, so every global per-group winner survives its
-    own partition's cut — and only the candidate frame (at most
-    partitions x groups x k rows of a 4-column projection) reaches
-    the rank window. Same shape as
-    :func:`invalid_spark.checks.stats.heavy_hitters_cms` candidates;
-    the result is EXACT and partitioning-independent (the oracle
-    replays it as a plain per-group rank over the full table).
-    Returns ``(key, group, weight, wkey, rank)``, rank 1..k per
-    group; NULL group is its own group."""
+    Grouped top-k has no TakeOrderedAndProject, but Spark plans the
+    ``row_number() <= k`` filter as a ``WindowGroupLimit``: a
+    ``Partial`` one below the exchange keeps each (partition, group)'s
+    local top-``k`` by rank key — top-k is a monotone selector, so
+    every global per-group winner survives its own partition's cut —
+    and only those candidates (at most partitions x groups x k rows
+    of a 4-column projection) are shuffled to the rank window, with
+    no Python worker (for ``k`` up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold``, 1000 by
+    default; above it every row is ranked). The result is EXACT and
+    partitioning-independent (the oracle replays it as a plain
+    per-group rank over the full table). Returns ``(key, group,
+    weight, wkey, rank)``, rank 1..k per group; NULL group is its own
+    group."""
     if k <= 0:
         raise ValueError(f"need k > 0, got {k}")
     w, wkey = _aes_wkey(key_col, weight_col, salt)
@@ -654,25 +655,11 @@ def weighted_sample_by_group(
             wkey.alias("wkey"),
         )
     )
-
-    def _local_top(batches):
-        import pandas as pd
-
-        acc = [pdf for pdf in batches]
-        if not acc:
-            return
-        allp = pd.concat(acc, ignore_index=True)
-        allp = allp.sort_values(
-            ["wkey", key_col], ascending=[False, True]
-        )
-        yield allp.groupby(group_col, dropna=False).head(k)
-
-    cand = proj.mapInPandas(_local_top, proj.schema)
     rank_w = Window.partitionBy(group_col).orderBy(
         F.col("wkey").desc(), F.col(key_col).asc()
     )
     return (
-        cand.withColumn("rank", F.row_number().over(rank_w))
+        proj.withColumn("rank", F.row_number().over(rank_w))
         .filter(F.col("rank") <= k)
     )
 

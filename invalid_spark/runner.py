@@ -48,7 +48,11 @@ Lifecycle (the Spark re-expression of the reference's
    known schema); verdicts are the per-unit row counts the unit-list
    query collected, left-joined to the written violations per unit;
 6. the table-level stages follow (schema changes, ``$assert``,
-   ``$dist``, ``$anomaly``, ``$drift``). Their sinks hold a few rows
+   ``$dist``, ``$anomaly``, ``$drift``). ``$assert``, the ``$anomaly``
+   input metrics and the ``$drift`` grid share ONE aggregation over
+   the input (:func:`~invalid_spark.checks.stats.one_pass`; the grid
+   only when this run writes drift state), so the table is scanned
+   once for all three. Their sinks hold a few rows
    the driver already has, so the driver writes them
    (:func:`~invalid_spark.model.write_rows`: no Spark job), and it
    reads the driver-sized state they carry between snapshots
@@ -84,6 +88,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from invalid_spark import report
+from invalid_spark.checks import anomaly as anomaly_checks
 from invalid_spark.checks import drift as drift_checks
 from invalid_spark.checks import image as image_checks
 from invalid_spark.checks import refint, relations, stats, unique
@@ -687,19 +692,54 @@ def validate(
             json.dump({"snapshot": snapshot, "schema": fp}, f)
         os.replace(tmp, schema_path)
 
-    # ---- table-level stat assertions ($assert), one aggregation --------
+    # ---- one table-level pass: $assert, $anomaly inputs, $drift grid --
+    # Each layer is aggregate columns plus a driver-side finish; ONE
+    # aggregation over the input (plus any vector-drift projections)
+    # feeds them all. A $drift rule on an ARRAY column expands into
+    # per-plane scalar specs over md5-hyperplane projections (columns
+    # named "<col>#p<i>" — stable across runs because the planes are
+    # md5-derived, never RNG); everything downstream — grids, tagged
+    # histogram state, verdict rows, stored-state comparison — then
+    # treats an embedding like `planes` ordinary numeric columns.
+    d_specs, d_df, d_prev = _expand_vector_drift(df, plan.drift_specs, prev_df)
+    state_dir = os.path.join(out_dir, "drift_state")
+    old_dir = state_dir + ".old"
+    if os.path.exists(old_dir) and not os.path.exists(state_dir):
+        # a crash between swap steps left only the set-aside copy:
+        # recover it so the stored-state comparison still happens
+        os.replace(old_dir, state_dir)
+    # The stored drift state is O(bins) rows: the driver reads it and
+    # hands it over as a LocalRelation. It is tagged with the snapshot
+    # it was built from: a resume/re-run of the SAME snapshot must not
+    # compare the table against its own state (statistic 0 would
+    # overwrite the real drift verdict) nor re-write identical state,
+    # so it needs no grid either.
+    stored = stored_snap = None
+    if plan.drift_specs and prev_df is None and os.path.exists(state_dir):
+        state_rows = pq.read_table(state_dir).to_pylist()
+        stored_snap = state_rows[0]["snapshot_id"] if state_rows else None
+        if stored_snap != snapshot:
+            stored = local_frame(spark, state_rows, drift_checks.STATE_SCHEMA)
+    write_state = bool(plan.drift_specs) and stored_snap != snapshot
+    layers = {}
     if plan.assert_specs:
-        a_specs = [
-            {"col": col, "stat": spec.get("stat", "null_rate"),
-             **{k: spec[k] for k in ("min", "max") if k in spec}}
-            for col, spec in plan.assert_specs
-        ]
+        layers["assert"] = stats.assertion_layer(
+            [{"col": c, "stat": "null_rate", **s} for c, s in plan.assert_specs],
+            run_id,
+        )
+    if plan.anomaly_specs:
+        layers["anomaly"] = anomaly_checks.metric_layer(
+            all_v, plan.anomaly_specs
+        )
+    if write_state:
+        layers["grid"] = drift_checks.grid_layer(d_specs)
+    table = dict(zip(layers, stats.one_pass(d_df, list(layers.values()))))
+
+    # ---- table-level stat assertions ($assert) --------------------------
+    if plan.assert_specs:
         write_rows(
             os.path.join(out_dir, "assertions"),
-            [
-                (*r, snapshot)
-                for r in stats.stat_assertion_rows(df, a_specs, run_id=run_id)
-            ],
+            [(*r, snapshot) for r in table["assert"]],
             stats.ASSERTION_SCHEMA + ", snapshot_id string",
         )
 
@@ -727,11 +767,9 @@ def validate(
     # history (absolute bounds + relative change vs the last-k mean).
     # Like drift state and the schema fingerprint this requires ONE
     # out_dir across snapshots; evaluation is driver-side over the
-    # tiny history, read and appended by the driver, so the only
-    # cluster work is one aggregation.
+    # tiny history, read and appended by the driver; the current values
+    # come from the table-level pass above.
     if plan.anomaly_specs:
-        from invalid_spark.checks import anomaly as anomaly_checks
-
         hist_dir = os.path.join(out_dir, "metrics_history")
         hist_rows = (
             pq.read_table(hist_dir).to_pylist()
@@ -743,9 +781,7 @@ def validate(
         # an idempotent re-run of the SAME snapshot must not compare
         # the run against its own appended metrics
         prior = [r for r in hist_rows if r["snapshot_id"] != snapshot]
-        cur_vals = anomaly_checks.current_metric_values(
-            df, all_v, plan.anomaly_specs
-        )
+        cur_vals = table["anomaly"]
         results = anomaly_checks.evaluate(
             plan.anomaly_specs, cur_vals, prior
         )
@@ -772,57 +808,20 @@ def validate(
     # ---- drift stage (snapshot-vs-snapshot, outside unit loop) ---------
     # Comparison source, in priority order: an explicit prev_df
     # (rescan path), else the PREVIOUS run's persisted O(bins) drift
-    # state under out_dir/drift_state — continuous validation never
-    # re-reads the prior snapshot. Either way this run's state is
-    # written for the next run.
+    # state under out_dir/drift_state (read before the table-level
+    # pass) — continuous validation never re-reads the prior snapshot.
+    # Either way this run's state is written for the next run.
     #
-    # Scan budget is CONSTANT in the number of $drift rules: one grid
-    # aggregation (all numeric min/max or clip quantiles together) +
-    # one tagged histogram pass covering every column
-    # (drift.state_frame), instead of 2 scans per column. A per-spec
-    # `clip: [qlo, qhi]` bounds that column's grid by quantiles on
-    # both the comparison and the persisted state, so the stored
-    # histogram is outlier-proof too.
-    state_dir = os.path.join(out_dir, "drift_state")
-    old_dir = state_dir + ".old"
-    if os.path.exists(old_dir) and not os.path.exists(state_dir):
-        # a crash between swap steps left only the set-aside copy:
-        # recover it so the stored-state comparison still happens
-        os.replace(old_dir, state_dir)
+    # Scan budget is CONSTANT in the number of $drift rules: the grid
+    # (all numeric min/max or clip quantiles together) rides the one
+    # table-level pass, and one tagged histogram pass covers every
+    # column (drift.state_frame). A per-spec `clip: [qlo, qhi]` bounds
+    # that column's grid by quantiles on both the comparison and the
+    # persisted state, so the stored histogram is outlier-proof too.
     if plan.drift_specs:
-        # a $drift rule on an ARRAY column expands into per-plane
-        # scalar specs over md5-hyperplane projections (columns named
-        # "<col>#p<i>" — stable across runs because the planes are
-        # md5-derived, never RNG); everything downstream — grids,
-        # tagged histogram state, verdict rows, stored-state
-        # comparison — then treats an embedding like `planes`
-        # ordinary numeric columns
-        d_specs, d_df, d_prev = _expand_vector_drift(
-            df, plan.drift_specs, prev_df
-        )
-        # The stored state is O(bins) rows: the driver reads it and
-        # hands it over as a LocalRelation. It is tagged with the
-        # snapshot it was built from: a resume/re-run of the SAME
-        # snapshot must not compare the table against its own state
-        # (statistic 0 would overwrite the real drift verdict) nor
-        # re-write identical state.
-        stored = stored_snap = None
-        if prev_df is None and os.path.exists(state_dir):
-            state_rows = pq.read_table(state_dir).to_pylist()
-            stored_snap = (
-                state_rows[0]["snapshot_id"] if state_rows else None
-            )
-            if stored_snap != snapshot:
-                stored = local_frame(
-                    spark, state_rows, drift_checks.STATE_SCHEMA
-                )
-        cur_grids = None
         if prev_df is not None:
-            # one grid aggregation serves both the comparison and the
-            # state persistence below (no second scan for the grid)
-            cur_grids = drift_checks.multi_grid(d_df, d_specs)
             results = drift_checks.multi_drift(
-                d_df, d_prev, d_specs, cur_grids=cur_grids
+                d_df, d_prev, d_specs, cur_grids=table["grid"]
             )
         elif stored is not None:
             # columns with no stored state rows (a $drift rule added
@@ -845,31 +844,27 @@ def validate(
                 "column string, test string, statistic double, p_value double, "
                 "drifted boolean, run_id string, snapshot_id string",
             )
-        # persist this run's state unless it is already current: one
-        # grid pass + one tagged histogram pass for ALL columns
-        if not (prev_df is None and stored is None and stored_snap == snapshot):
-            grids = (
-                cur_grids if cur_grids is not None
-                else drift_checks.multi_grid(d_df, d_specs)
-            )
-            states = drift_checks.state_frame(
-                d_df, d_specs, grids
-            ).withColumn("snapshot_id", F.lit(snapshot))
-            tmp_dir = state_dir + ".tmp"
-            states.write.mode("overwrite").parquet(tmp_dir)
-            import shutil
+    # persist this run's state unless it is already current: one tagged
+    # histogram pass for ALL columns on the pass's grids
+    if write_state:
+        states = drift_checks.state_frame(
+            d_df, d_specs, table["grid"]
+        ).withColumn("snapshot_id", F.lit(snapshot))
+        tmp_dir = state_dir + ".tmp"
+        states.write.mode("overwrite").parquet(tmp_dir)
+        import shutil
 
-            # three-step swap so a crash at ANY point leaves a
-            # recoverable state directory (either state_dir itself or
-            # the .old set-aside, recovered above): set the previous
-            # state aside, promote the new one, then drop the old
-            if os.path.exists(old_dir):
-                shutil.rmtree(old_dir)
-            if os.path.exists(state_dir):
-                os.replace(state_dir, old_dir)
-            os.replace(tmp_dir, state_dir)
-            if os.path.exists(old_dir):
-                shutil.rmtree(old_dir)
+        # three-step swap so a crash at ANY point leaves a recoverable
+        # state directory (either state_dir itself or the .old
+        # set-aside, recovered above): set the previous state aside,
+        # promote the new one, then drop the old
+        if os.path.exists(old_dir):
+            shutil.rmtree(old_dir)
+        if os.path.exists(state_dir):
+            os.replace(state_dir, old_dir)
+        os.replace(tmp_dir, state_dir)
+        if os.path.exists(old_dir):
+            shutil.rmtree(old_dir)
 
     return result
 

@@ -258,6 +258,69 @@ def test_cms_merge_is_whole_sketch_and_never_undershoots(
 
 
 # ---------------------------------------------------------------------------
+# column metrics (stats.metric_expr) vs plain Python
+
+_NAN = float("nan")
+_metric_value = st.one_of(
+    st.none(), st.just(_NAN), st.integers(min_value=-50, max_value=50).map(float)
+)
+
+
+def _metric_ref(xs):
+    """Every column metric of ``xs`` in plain Python, with Spark's NaN
+    rules: NaN is a present value that orders above every number."""
+    present = [x for x in xs if x is not None]
+    nums = [x for x in present if not math.isnan(x)]
+    has_nan = len(nums) < len(present)
+    some = present != []
+    return {
+        "row_count": float(len(xs)),
+        "null_rate": (len(xs) - len(present)) / len(xs) if xs else None,
+        "ndv": float(len(set(nums)) + has_nan),
+        "min": (min(nums) if nums else _NAN) if some else None,
+        "max": (_NAN if has_nan else max(nums)) if some else None,
+        "mean": (_NAN if has_nan else sum(nums) / len(nums)) if some else None,
+        "stddev": (
+            None if len(present) < 2
+            else _NAN if has_nan
+            else float(np.std(nums, ddof=1))
+        ),
+    }
+
+
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(st.lists(_metric_value, max_size=10))
+@example([])                        # empty column
+@example([None, None])              # all NULL
+@example([_NAN, _NAN])              # all NaN: min is NaN too
+@example([3.0, _NAN, None, -2.0])   # NaN next to numbers and a NULL
+@example([4.0])                     # one value: stddev NULL
+def test_metric_expr_matches_reference(spark, xs):
+    """Each column metric of :func:`stats.metric_expr` equals a
+    plain-Python reference, NaN and NULL included: ``max``, ``mean``
+    and ``stddev`` are NaN when a NaN is present, ``min`` skips NaN
+    unless every value is NaN, ``null_rate`` counts NaN as present and
+    ``ndv`` counts NaN as one value. The frame is spread over three
+    partitions, so the partial aggregates merge."""
+    from invalid_spark.checks import stats
+    from invalid_spark.model import local_frame
+
+    df = local_frame(spark, [(x,) for x in xs], "x double").repartition(3)
+    got = df.agg(
+        *[stats.metric_expr("x", m).alias(m) for m in stats.METRICS]
+    ).collect()[0]
+    for m, want in _metric_ref(xs).items():
+        v = got[m]
+        if want is None or math.isnan(want):
+            assert repr(v) == repr(want), (m, v, want)
+        elif m == "stddev":
+            assert math.isclose(v, want, rel_tol=1e-12), (m, v, want)
+        else:
+            assert v == want, (m, v, want)
+
+
+# ---------------------------------------------------------------------------
 # codecs
 
 @settings(max_examples=25, deadline=None)

@@ -1625,4 +1625,78 @@ def test_warm_append_call_compiles_few_classes(spark, tmp_path):
     assert {r["column"] for r in drift.collect()} == {
         "l_quantity", "l_returnflag"}
     assert n_compiled <= 10, n_compiled
-    assert len(jobs) <= 34, len(jobs)
+    assert len(jobs) <= 27, len(jobs)
+
+
+def test_table_level_pass_matches_standalone_functions(spark, tmp_path, monkeypatch):
+    """``$assert``, the ``$anomaly`` input metrics and the ``$drift``
+    grid share one aggregation (exact distinct counts next to the
+    clipped grid's ``percentile_approx``), and their sinks equal what
+    the standalone public functions give on the same input. A
+    same-snapshot re-run writes no drift state, so its pass holds no
+    grid."""
+    import pyarrow.parquet as pq
+
+    from invalid_spark.checks import anomaly, drift, stats
+
+    rules = load_rules(
+        "id: {$type: $int, $anomaly: {metric: row_count}}\n"
+        "cat: {$type: $str, $assert: {stat: ndv, min: 2}, "
+        "$anomaly: {metric: distinct}}\n"
+        "v: {$type: $float, $assert: {stat: null_rate, max: 0.5}, "
+        "$anomaly: {metric: stddev}, $drift: {test: ks, clip: [0.05, 0.95]}}\n"
+        "w: {$type: $float, $anomaly: {metric: null_rate}}\n"
+        "emb: {$type: $arr, $constraint: $float, "
+        "$drift: {test: ks, planes: 2, dim: 4}}\n"
+    )
+    df = spark.range(60).select(
+        F.col("id"),
+        F.when(F.col("id") % 9 != 0, (F.col("id") % 4).cast("string")).alias("cat"),
+        F.when(F.col("id") == 7, F.lit(float("nan")))
+        .when(F.col("id") % 5 != 0, F.col("id") * 1.5).alias("v"),
+        F.when(F.col("id") % 3 != 0, F.col("id") / 7.0).alias("w"),
+        F.array(*[(F.col("id") * (j + 1) % 11).cast("float") for j in range(4)])
+        .alias("emb"),
+    )
+    calls = []
+    one_pass = stats.one_pass
+
+    def counting(frame, layers):
+        calls.append(len(layers))
+        return one_pass(frame, layers)
+
+    monkeypatch.setattr(stats, "one_pass", counting)
+    out = str(tmp_path / "pass")
+    res = runner.validate(spark, df, rules, "id", out, snapshot="s1", run_id="r1")
+    assert calls == [3]
+    monkeypatch.setattr(stats, "one_pass", one_pass)
+
+    def sink(name):
+        return pq.read_table(os.path.join(out, name)).to_pylist()
+
+    from invalid_spark.checks import rows as rowchecks
+
+    plan = rowchecks.compile_row_checks(df, rules)
+    a_specs = [{"col": c, "stat": s["stat"], **{k: s[k] for k in ("min", "max") if k in s}}
+               for c, s in plan.assert_specs]
+    assert sorted(tuple(r.values()) for r in sink("assertions")) == sorted(
+        (*r, "s1") for r in stats.stat_assertion_rows(df, a_specs, "r1"))
+    assert len(a_specs) == 2
+    viol = res.violations(spark).filter(F.col("snapshot_id") == "s1")
+    cur = anomaly.current_metric_values(df, viol, plan.anomaly_specs)
+    for name in ("anomalies", "metrics_history"):  # repr: v's stddev is NaN
+        assert repr(sorted((r["col_name"], r["metric"], r["value"])
+                           for r in sink(name))) == repr(
+            sorted((c, m, v) for (c, m), v in cur.items()))
+    d_specs, d_df, _ = runner._expand_vector_drift(df, plan.drift_specs, None)
+    want = drift.state_frame(d_df, d_specs, drift.multi_grid(d_df, d_specs))
+    got = spark.read.parquet(os.path.join(out, "drift_state"))
+    assert {r["column_name"] for r in got.collect()} == {"v", "emb#p0", "emb#p1"}
+    assert sorted(map(tuple, got.drop("snapshot_id").collect()), key=repr) == sorted(
+        map(tuple, want.collect()), key=repr)
+    # a same-snapshot re-run keeps its state and adds no grid
+    monkeypatch.setattr(stats, "one_pass", counting)
+    runner.validate(spark, df, rules, "id", out, snapshot="s1", run_id="r2")
+    assert calls == [3, 2]
+    with pytest.raises(ValueError, match="anomaly metric"):
+        anomaly.current_metric_values(None, None, [("v", {"metric": "median"})])

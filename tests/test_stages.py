@@ -3070,6 +3070,29 @@ def test_weighted_sample_by_group_prune_is_exact(spark):
     ) == got
 
 
+def test_weighted_sample_by_group_prunes_in_the_jvm(spark):
+    """The per-group sampler's map-side prune is Spark's own grouped
+    top-k: a ``Partial`` ``WindowGroupLimit`` below the shuffle, and no
+    Python stage."""
+    import contextlib
+    import io
+
+    from invalid_spark.pipeline import curate
+
+    df = spark.range(200).selectExpr(
+        "id AS doc_id", "CAST(id % 3 AS STRING) AS g", "1.0 + id % 7 AS w"
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        curate.weighted_sample_by_group(
+            df, "w", 5, group_col="g", key_col="doc_id"
+        ).explain()
+    plan = buf.getvalue()
+    assert "MapInPandas" not in plan and "PythonUDF" not in plan
+    below = plan[plan.index("Exchange"):]
+    assert "WindowGroupLimit" in below and "Partial" in below, plan
+
+
 def test_freshness_by_group_names_the_stale_group(spark):
     """Per-group freshness: the group whose newest row is beyond the
     budget flags alone; NULL group is its own group; ages are exact
