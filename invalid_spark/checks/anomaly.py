@@ -21,8 +21,8 @@ evaluate the CURRENT run's value against that history:
 Like the drift stage, evaluation is driver-side math over a few
 dozen collected numbers; the only cluster work is the input metrics'
 aggregate columns (:func:`metric_layer`, part of the runner's one
-table-level aggregation) and one fold of the already-computed
-violations frame for violation_rate. :func:`rel_change_over_history`
+table-level aggregation); violation_rate reads the per-column counts
+of the runner's violations tally. :func:`rel_change_over_history`
 is the same fold as a window over the history DataFrame — usable at scale for thousands
 of tracked metrics, and replayable by any SQL engine (AVG OVER ROWS
 BETWEEN k PRECEDING AND 1 PRECEDING), which is what the driver's
@@ -68,12 +68,13 @@ class AnomalyResult:
 
 
 def metric_layer(
-    violations: DataFrame | None, specs: list[tuple[str, dict]]
+    violations: dict[str, int], specs: list[tuple[str, dict]]
 ) -> stats.Layer:
     """The ``$anomaly`` input layer: a ``metric_expr`` column per spec
     (``distinct`` is ``ndv``; ``violation_rate`` reads the row count),
-    and a finish that folds ``violations`` per column and returns
-    :func:`current_metric_values`."""
+    and a finish returning :func:`current_metric_values`.
+    ``violations`` is the violation count per column; a column it
+    lacks has none."""
     metrics = [spec.get("metric", "violation_rate") for _, spec in specs]
     for (col, _), m in zip(specs, metrics):
         if m not in ANOMALY_METRICS:
@@ -89,20 +90,12 @@ def metric_layer(
 
     def finish(row: Row) -> dict[tuple[str, str], float | None]:
         n = row["m_n"]
-        vcounts: dict[str, int] = {}
-        if violations is not None and "violation_rate" in metrics:
-            vcounts = {
-                r["column"]: r["cnt"]
-                for r in violations.groupBy("column")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
         out = {}
         for i, ((col, _), m) in enumerate(zip(specs, metrics)):
             if m != "violation_rate":
                 out[(col, m)] = row[f"m_{i}"]
             else:
-                out[(col, m)] = float(vcounts.get(col, 0)) / n if n else None
+                out[(col, m)] = float(violations.get(col, 0)) / n if n else None
         return out
 
     return aggs, finish
@@ -115,9 +108,18 @@ def current_metric_values(
 ) -> dict[tuple[str, str], float | None]:
     """This run's value for every ``$anomaly`` spec, in ONE
     aggregation over the input (:func:`metric_layer` through
-    :func:`~invalid_spark.checks.stats.one_pass`) plus one fold of the
-    violations frame."""
-    return stats.one_pass(df, [metric_layer(violations, specs)])[0]
+    :func:`~invalid_spark.checks.stats.one_pass`) plus, for
+    ``violation_rate``, one count per column of the violations
+    frame."""
+    counts: dict[str, int] = {}
+    if violations is not None and any(
+        s.get("metric", "violation_rate") == "violation_rate" for _, s in specs
+    ):
+        counts = {
+            r["column"]: r["count"]
+            for r in violations.groupBy("column").count().collect()
+        }
+    return stats.one_pass(df, [metric_layer(counts, specs)])[0]
 
 
 def evaluate(

@@ -7,10 +7,11 @@ Every two-sample test runs on one core:
 - :func:`_bucket_expr` — the one bucketing expression, a clamped floor
   on the grid (NULL and NaN values get no bucket, so they stay out of
   the grid, the histogram and ``n``);
-- :func:`state_frame` — the one histogram builder: a single explode
-  pass counts every ``$drift`` column of a table (numeric buckets,
-  categorical values as strings), and its rows are the persistable
-  drift state (:data:`STATE_SCHEMA`);
+- :func:`_hist` — the one histogram builder: a single explode pass
+  counts every ``$drift`` column of a table (numeric buckets,
+  categorical values as strings); :func:`drift_pass` collects it once
+  per runner call, for both the persistable drift state
+  (:data:`STATE_SCHEMA`) and the comparison with the stored state;
 - :func:`_fold` — KS, W1, χ² and PSI, each written once as a Column
   aggregation over a ``(key, bucket|cat, c_cur, c_prev)`` frame; every
   statistic is an exact-rational or canonical-order fold that any SQL
@@ -173,41 +174,57 @@ def _tagged(
     return out
 
 
+def _entry(col: str, test: str, bucket: Column | None, cat: Column | None,
+           grid: str | None = None) -> Column:
+    """One tagged histogram entry of a row (see :func:`_hist`)."""
+    return F.struct(
+        F.lit(grid).cast("string").alias("grid"),
+        F.lit(col).alias("column_name"),
+        F.lit(test).alias("test"),
+        (F.lit(None).cast("long") if bucket is None else bucket).alias("bucket"),
+        (F.lit(None).cast("string") if cat is None else cat).alias("cat"),
+    )
+
+
 def _hist(
     df: DataFrame,
     specs: list[tuple[str, dict]],
     grids: dict[str, tuple],
     by: tuple[str, ...] = (),
+    stored: dict[str, tuple] | None = None,
 ) -> DataFrame:
-    """``(*by, column_name, test, bucket, cat, c_cur, c_prev)`` of a
-    :func:`_tagged` frame for ALL ``$drift`` columns in ONE scan: a
-    single projection emits one tagged struct per drift column per
-    row, explodes, and one hash aggregation counts — so the
-    scan/shuffle count is independent of how many ``$drift`` rules
-    the suite declares. Partial combine applies: the shuffle carries
-    (column, bucket) group counts, never rows. Numeric NULL/NaN values
-    are excluded; a NULL *category* is a real category and stays.
+    """``(*by, grid, column_name, test, bucket, cat, c_cur, c_prev)`` of
+    a :func:`_tagged` frame for ALL ``$drift`` columns in ONE scan: a
+    single projection emits tagged structs per drift column per row,
+    explodes, and one hash aggregation counts — so the scan/shuffle
+    count is independent of how many ``$drift`` rules the suite
+    declares. Partial combine applies: the shuffle carries (column,
+    bucket) group counts, never rows. Numeric NULL/NaN values are
+    excluded; a NULL *category* is a real category and stays.
     Categories compare as their STRING spellings, so numeric category
-    columns fold in one canonical order everywhere."""
+    columns fold in one canonical order everywhere.
+
+    A numeric column is bucketed on its grid in ``grids`` (``grid``
+    NULL) and, when ``stored`` holds it, once more on that grid
+    (``grid`` "stored"); a numeric column in neither is not counted. A
+    categorical column is counted once (``grid`` NULL): its value
+    counts serve either grid."""
     structs = []
     for col, spec in specs:
         test = spec.get("test", "ks")
-        cat = test in _CATEGORICAL
-        structs.append(
-            F.struct(
-                F.lit(col).alias("column_name"),
-                F.lit(test if cat else "ks").alias("test"),
-                (F.lit(None).cast("long") if cat
-                 else _bucket_expr(F.col(col), *grids[col])).alias("bucket"),
-                (F.col(col).cast("string") if cat
-                 else F.lit(None).cast("string")).alias("cat"),
-            )
-        )
+        if test in _CATEGORICAL:
+            structs.append(_entry(col, test, None, F.col(col).cast("string")))
+            continue
+        for grid, g in ((None, grids), ("stored", stored or {})):
+            if col in g:
+                structs.append(
+                    _entry(col, "ks", _bucket_expr(F.col(col), *g[col]), None, grid)
+                )
     return (
         df.select(*by, _SIDE, F.explode(F.array(*structs)).alias("t"))
         .select(*by, _SIDE, "t.*")
         .filter(~((F.col("test") == "ks") & F.col("bucket").isNull()))
-        .groupBy(*by, *_KEYS)
+        .groupBy(*by, "grid", *_KEYS)
         .agg(F.sum(_SIDE).alias("c_cur"), F.sum(1 - F.col(_SIDE)).alias("c_prev"))
     )
 
@@ -220,32 +237,96 @@ def _by_column(values: dict[str, object], default: object = None) -> Column:
     return out
 
 
+def _stored_grids(stored: list) -> dict[str, tuple]:
+    """Each numeric column's (lo, hi, bins) grid from stored state rows.
+    A stored bucket outside its grid (hand-edited or legacy state)
+    raises ``ValueError``."""
+    grids: dict[str, tuple] = {}
+    for r in stored:
+        if r["test"] != "ks":
+            continue
+        col = r["column_name"]
+        bins = grids.setdefault(col, (r["lo"], r["hi"], r["bins"] or 256))[2]
+        if not 0 <= r["bucket"] < bins:
+            raise ValueError(
+                f"stored drift state for column [{col}] has bucket "
+                f"{r['bucket']} outside bins={bins}; the state directory "
+                "is corrupt — delete it to rebuild"
+            )
+    return grids
+
+
+def drift_pass(
+    df: DataFrame,
+    specs: list[tuple[str, dict]],
+    grids: dict[str, tuple[float | None, float | None, int]],
+    stored: list | None = None,
+) -> tuple[dict[str, DriftResult], list[tuple]]:
+    """Every ``$drift`` column of ``df`` in ONE collected histogram pass
+    (:func:`_hist`): ``(results vs the stored state, new state rows)``.
+
+    The new state (:data:`STATE_SCHEMA` tuples) buckets each numeric
+    column on its fresh grid in ``grids`` (from :func:`grid_layer`),
+    decorated with the grid and the column's total ``n``. With
+    ``stored`` (state rows of an earlier run, as dicts or Rows) the
+    same pass buckets each numeric column on its stored grid too, and
+    :func:`_fold` compares those counts, merged with the stored ones on
+    the driver, as a local frame. Columns absent from the stored state
+    (a ``$drift`` rule added since) are omitted from the results. The
+    collected pass holds O(2·bins·columns) rows regardless of table
+    size."""
+    stored_grids = _stored_grids(stored or [])
+    counted = [
+        (c, s) for c, s in specs
+        if s.get("test", "ks") in _CATEGORICAL or c in grids or c in stored_grids
+    ]
+    if not counted:
+        return {}, []
+    rows = _hist(_tagged(counted, df), counted, grids, stored=stored_grids).collect()
+    fresh = [r for r in rows if r["grid"] is None]
+    n: dict[str, int] = {}
+    for r in fresh:
+        n[r["column_name"]] = n.get(r["column_name"], 0) + r["c_cur"]
+    state = [
+        (*(r[k] for k in _KEYS), r["c_cur"],
+         *grids.get(r["column_name"], (None,) * 3), n[r["column_name"]])
+        for r in fresh
+    ]
+    covered = [
+        (c, s) for c, s in counted
+        if stored is not None
+        and (s.get("test", "ks") in _CATEGORICAL or c in stored_grids)
+    ]
+    if not covered:
+        return {}, state
+    names = {c for c, _ in covered}
+    pairs: dict[tuple, list[int]] = {}
+    for side, cnt, part in ((0, "c_cur", rows), (1, "cnt", stored)):
+        for r in part:
+            # the current side's comparison counts: a stored-grid bucket
+            # or a category
+            if r["column_name"] in names and (side or r["grid"] or r["test"] != "ks"):
+                pairs.setdefault(tuple(r[k] for k in _KEYS), [0, 0])[side] += r[cnt]
+    frame = local_frame(
+        df.sparkSession,
+        [(*k, c, p) for k, (c, p) in pairs.items()],
+        "column_name string, test string, bucket long, cat string, "
+        "c_cur long, c_prev long",
+    )
+    return _results(covered, stored_grids, frame), state
+
+
 def state_frame(
     df: DataFrame,
     specs: list[tuple[str, dict]],
     grids: dict[str, tuple[float | None, float | None, int]],
 ) -> DataFrame:
     """Drift state (:data:`STATE_SCHEMA`) for ALL ``$drift`` columns
-    in ONE scan (see :func:`_hist`), decorated with each numeric
-    column's grid and total ``n``. O(bins·columns) rows regardless of
-    table size — continuous validation stores this per run instead of
-    re-scanning the prior snapshot.
-
-    ``grids`` supplies (lo, hi, bins) per numeric column — from
-    :func:`multi_grid` (fresh grid) or from a stored state frame
-    (comparison against the previous run's grid)."""
-    num = [c for c, s in specs if s.get("test", "ks") not in _CATEGORICAL]
-    per_col = Window.partitionBy("column_name").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    return _hist(_tagged(specs, df), specs, grids).select(
-        *_KEYS,
-        F.col("c_cur").alias("cnt"),
-        _by_column({c: grids[c][0] for c in num}).cast("double").alias("lo"),
-        _by_column({c: grids[c][1] for c in num}).cast("double").alias("hi"),
-        _by_column({c: grids[c][2] for c in num}).cast("int").alias("bins"),
-        F.sum("c_cur").over(per_col).cast("long").alias("n"),
-    )
+    of ``df`` on ``grids`` (a :func:`multi_grid`), from one
+    :func:`drift_pass`, as a local frame. O(bins·columns) rows
+    regardless of table size — continuous validation stores this per
+    run instead of re-scanning the prior snapshot."""
+    return local_frame(df.sparkSession, drift_pass(df, specs, grids)[1], STATE_SCHEMA)
 
 
 def _left_fold(term: Column) -> Column:
@@ -423,44 +504,12 @@ def multi_drift_vs_state(
 ) -> dict[str, DriftResult]:
     """Every ``$drift`` column against the STORED state frame in ONE
     scan of the current table: the current side is bucketed on each
-    column's stored grid (taken from the state rows), and one job
-    builds the histogram and folds it against the stored counts.
-    Columns absent from the stored state (a ``$drift`` rule added
-    since) are omitted — their fresh state is still written by the
-    caller. A stored bucket outside its grid (hand-edited or legacy
+    column's stored grid (taken from the state rows), and
+    :func:`drift_pass` folds it against the stored counts. Columns
+    absent from the stored state (a ``$drift`` rule added since) are
+    omitted. A stored bucket outside its grid (hand-edited or legacy
     state) raises ``ValueError``."""
-    grids: dict[str, tuple] = {}
-    for r in stored.collect():
-        if r["test"] != "ks":
-            continue
-        col = r["column_name"]
-        bins = grids.setdefault(col, (r["lo"], r["hi"], r["bins"] or 256))[2]
-        if not 0 <= r["bucket"] < bins:
-            raise ValueError(
-                f"stored drift state for column [{col}] has bucket "
-                f"{r['bucket']} outside bins={bins}; the state directory "
-                "is corrupt — delete it to rebuild"
-            )
-    covered = [
-        (c, s) for c, s in specs
-        if s.get("test", "ks") in _CATEGORICAL or c in grids
-    ]
-    if not covered:
-        return {}
-    prev = stored.filter(F.col("column_name").isin([c for c, _ in covered])).select(
-        *_KEYS, F.lit(0).cast("long").alias("c_cur"), F.col("cnt").alias("c_prev")
-    )
-    # merged AFTER the histogram aggregation (a union below it would cut
-    # the per-row explode out of whole-stage codegen); partitioning the
-    # merge by the fold's keys lets one exchange serve the merge and
-    # the fold's window
-    pairs = (
-        _hist(_tagged(covered, df), covered, grids).unionByName(prev)
-        .repartition("column_name", "test")
-        .groupBy(*_KEYS)
-        .agg(F.sum("c_cur").alias("c_cur"), F.sum("c_prev").alias("c_prev"))
-    )
-    return _results(covered, grids, pairs)
+    return drift_pass(df, specs, {}, stored.collect())[0]
 
 
 def _column_fold(

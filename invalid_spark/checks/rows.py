@@ -52,7 +52,7 @@ from pyspark.sql import types as T
 
 from invalid_spark import model, yamlmeta
 from invalid_spark.checks.anomaly import ANOMALY_METRICS
-from invalid_spark.checks.stats import NUMERIC_METRICS
+from invalid_spark.checks.stats import ASSERT_STATS, NUMERIC_METRICS
 from invalid_spark.dsl import Rule, RuleSet
 from invalid_spark.model import ErrorType
 
@@ -697,10 +697,13 @@ class _Compiler:
                 # — required-absent already fail-fasts the run);
                 # collecting it would crash the runner's assertion
                 # aggregation with an unresolved column
-                _require_numeric(
-                    "$assert stat", child.assert_.get("stat", "null_rate"),
-                    path, dt,
-                )
+                a_stat = child.assert_.get("stat", "null_rate")
+                if a_stat not in ASSERT_STATS:
+                    raise ValueError(
+                        f"unknown $assert stat [{a_stat}] on column "
+                        f"[{path}] (choose from {ASSERT_STATS})"
+                    )
+                _require_numeric("$assert stat", a_stat, path, dt)
                 self.plan.assert_specs.append((path, child.assert_))
             if child.dist is not None and dt is not None:
                 # $dist on an absent column: skipped like $assert (the

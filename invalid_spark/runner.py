@@ -44,21 +44,35 @@ Lifecycle (the Spark re-expression of the reference's
 5. the stage table's unit names are the completeness set:
    :attr:`RunResult.complete` is true once every one is marked, and it
    gates the quarantine publish and ``validate_appended``'s commit.
-   Metrics aggregate from the written violations (read with their
-   known schema); verdicts are the per-unit row counts the unit-list
-   query collected, left-joined to the written violations per unit;
+   ONE grouping-sets count over this snapshot's written violations
+   (read with their known schema) is collected: the violations tally,
+   per unit, per (rule_id, error_type) and per column. Verdicts are
+   the per-unit row counts the unit-list query collected, joined to
+   the tally's unit counts (without a ``partition_col``, the one unit
+   ``__all__`` keeps :func:`~invalid_spark.report.partition_verdicts`);
+   metrics are its rule counts, and ``$anomaly``'s violation_rate
+   reads its column counts. Its size is gated against
+   ``spark.driver.maxResultSize`` before the stage loop writes
+   anything;
 6. the table-level stages follow (schema changes, ``$assert``,
    ``$dist``, ``$anomaly``, ``$drift``). ``$assert``, the ``$anomaly``
    input metrics and the ``$drift`` grid share ONE aggregation over
    the input (:func:`~invalid_spark.checks.stats.one_pass`; the grid
    only when this run writes drift state), so the table is scanned
-   once for all three. Their sinks hold a few rows
-   the driver already has, so the driver writes them
-   (:func:`~invalid_spark.model.write_rows`: no Spark job), and it
-   reads the driver-sized state they carry between snapshots
-   (``metrics_history``, ``drift_state``) with ``pyarrow``. Spark
-   writes only what it computes at table scale: violations,
-   verdicts, metrics, distribution verdicts and the drift state.
+   once for all three. ONE collected histogram pass
+   (:func:`~invalid_spark.checks.drift.drift_pass`) then buckets each
+   ``$drift`` column on the fresh grid (the new drift state) and on
+   the stored grid (the comparison with the stored state, folded as a
+   local frame). These sinks hold a few rows the driver already has,
+   so the driver writes them (:func:`~invalid_spark.model.write_rows`:
+   no Spark job), and it reads the driver-sized state they carry
+   between snapshots (``metrics_history``, ``drift_state``) with
+   ``pyarrow``. Spark writes only what it computes at table scale:
+   violations, the ``__all__`` verdicts, distribution verdicts and
+   the quarantine split.
+
+Bloom ``$ref`` screens are kept across calls while their dimension
+files are unchanged (:func:`_prep_blooms`).
 
 **Work units**: the values of ``partition_col`` (a data column — at
 production scale the Iceberg partition key, e.g. a date bucket or
@@ -77,6 +91,7 @@ from __future__ import annotations
 
 import json
 import os
+import urllib.parse
 import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -96,7 +111,12 @@ from invalid_spark.checks import rows as rowchecks
 from invalid_spark.checks import vector as vector_checks
 from invalid_spark.dsl import RuleSet
 from invalid_spark.io import Manifest, snapshot_id
-from invalid_spark.model import VIOLATION_SCHEMA, local_frame, write_rows
+from invalid_spark.model import (
+    METRIC_SCHEMA,
+    VIOLATION_SCHEMA,
+    ErrorType,
+    write_rows,
+)
 from invalid_spark.pipeline import dedup
 
 # Work-unit name for rows whose partition_col is NULL. A bare
@@ -201,25 +221,143 @@ def _bloom_key(col: str, spec: dict) -> tuple:
     )
 
 
+# The Bloom screens of the latest call that prepared any, kept across
+# calls: (session, dimension frame, fingerprint, (key, bits, hashes),
+# screen) per screen. Each call replaces the whole list, so it never
+# holds more than one call's screens.
+_BLOOM_CACHE: list[tuple] = []
+
+
+def _dim_fingerprint(dim: DataFrame) -> tuple | None:
+    """The sorted ``(path, size, mtime_ns)`` of ``dim``'s input files,
+    stat-ed now (the file listing is the frame's own, so no job). None
+    when the frame reads no file (a local or checkpointed frame) or a
+    file not on the local filesystem: its contents cannot be
+    fingerprinted, so its screen is never kept."""
+    files = dim.inputFiles()
+    if not files:
+        return None
+    out = []
+    for f in files:
+        u = urllib.parse.urlparse(f)
+        if u.scheme not in ("", "file"):
+            return None
+        path = urllib.parse.unquote(u.path)
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        out.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
 def _prep_blooms(
     plan: rowchecks.RowCheckPlan, dims: dict[str, DataFrame]
 ) -> dict[tuple, DataFrame]:
     """Materialize each distinct Bloom screen ONCE per run (eager
     localCheckpoint): without this, every unit batch AND each of the
     k broadcast joins would re-execute the dimension fold (on a
-    stream, on every micro-batch). The
-    checkpoint blocks are ≤ m/32 rows and reclaimed by the
-    ContextCleaner when the run's frames go out of scope."""
+    stream, on every micro-batch). The checkpoint blocks are ≤ m/32
+    rows.
+
+    Screens are kept across calls: a continuous loop passes the same
+    unchanged dimension call after call. A kept screen is reused when
+    the dimension frame is of the same SparkSession, has the same
+    fingerprint (:func:`_dim_fingerprint`: its input files' paths,
+    sizes and mtimes, stat-ed at this call), ``sameSemantics`` with
+    the kept frame, and the screen has the same key column, bits and
+    hashes. The cache is bounded by construction: it holds only the
+    screens of the latest call, so the blocks of a screen no call uses
+    any more are reclaimed by the ContextCleaner. A frame that reads
+    no local file is never kept."""
     blooms: dict[tuple, DataFrame] = {}
+    kept: list[tuple] = []
     for col, spec in plan.ref_specs:
         if spec.get("mode") != "bloom" or spec.get("table") not in dims:
             continue
         key = _bloom_key(col, spec)
-        if key not in blooms:
-            blooms[key] = refint.bloom_build(
-                dims[key[0]], key[1], m_bits=key[2], k=key[3]
+        if key in blooms:
+            continue
+        dim = dims[key[0]]
+        fp = _dim_fingerprint(dim)
+        screen = next(
+            (
+                kept_screen
+                for session, frame, kept_fp, kept_key, kept_screen in _BLOOM_CACHE
+                if fp is not None and session is dim.sparkSession
+                and kept_fp == fp and kept_key == key[1:]
+                and dim.sameSemantics(frame)
+            ),
+            None,
+        )
+        if screen is None:
+            screen = refint.bloom_build(
+                dim, key[1], m_bits=key[2], k=key[3]
             ).localCheckpoint(eager=True)
+        blooms[key] = screen
+        if fp is not None:
+            kept.append((dim.sparkSession, dim, fp, key[1:], screen))
+    _BLOOM_CACHE[:] = kept
     return blooms
+
+
+def _max_result_bytes(spark: SparkSession) -> int:
+    """``spark.driver.maxResultSize`` in bytes (0: no limit)."""
+    return spark.sparkContext._jsc.sc().conf().getSizeAsBytes(
+        "spark.driver.maxResultSize", "1g"
+    )
+
+
+def _gate_tally(
+    spark: SparkSession, rules: RuleSet, units: list[str]
+) -> None:
+    """Raise ``ValueError`` when the violations tally (see
+    :func:`_violation_tally`) could exceed ``spark.driver.maxResultSize``.
+
+    Its rows are at most the units, plus (rule_id × error_type) pairs,
+    plus columns. Every rule_id and column label a check writes is
+    spelled from a rule path (``path``, ``path~other``,
+    ``det->dep`` ...), at most 4 per path, and every label pairs with at
+    most every error type. A row holds 4 strings of at most the longest
+    unit or path (4 bytes a character) and a few counters."""
+    paths = [p for p, _ in rules.root.path_iter()]
+    labels = 4 * len(paths)
+    n_types = sum(1 for k in vars(ErrorType) if not k.startswith("_"))
+    rows = len(units) + labels * n_types + labels
+    width = max(map(len, [*units, *paths]), default=0)
+    size = rows * (64 + 16 * width)
+    limit = _max_result_bytes(spark)
+    if 0 < limit < size:
+        raise ValueError(
+            f"the violations tally of {len(units)} units and {len(paths)} "
+            f"rules may reach {size} bytes, over spark.driver.maxResultSize "
+            f"({limit} bytes); raise the limit or choose a partition_col "
+            "with fewer values"
+        )
+
+
+def _violation_tally(
+    v: DataFrame,
+) -> tuple[dict[str, int], dict[tuple[str, str], int], dict[str, int]]:
+    """Violation counts of ``v`` per unit, per (rule_id, error_type) and
+    per column, from ONE grouping-sets count, collected.
+    ``grouping_id()`` tells the sets apart (rule_id and column can be
+    NULL): its bits mark the columns a set does not group by, in the
+    order unit, rule_id, error_type, column."""
+    rows = (
+        v.groupingSets(
+            [["unit"], ["rule_id", "error_type"], ["column"]],
+            "unit", "rule_id", "error_type", "column",
+        )
+        .agg(F.grouping_id().alias("g"), F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    per_unit = {r["unit"]: r["n"] for r in rows if r["g"] == 0b0111}
+    per_rule = {
+        (r["rule_id"], r["error_type"]): r["n"] for r in rows if r["g"] == 0b1001
+    }
+    per_col = {r["column"]: r["n"] for r in rows if r["g"] == 0b1110}
+    return per_unit, per_rule, per_col
 
 
 def _dim(dims: dict[str, DataFrame], directive: str, spec: dict) -> DataFrame:
@@ -489,6 +627,12 @@ def validate(
         # Python's str order (code points) is Spark's (UTF-8 bytes)
         n_rows = {r[0]: r[1] for r in src.groupBy("__unit").count().collect()}
         vals = sorted(n_rows)
+    # the tally after the stage loop is collected: gate its size before
+    # anything is written
+    _gate_tally(spark, rules, [
+        *vals, "__schema__",
+        *(f"__reconcile__{c}~{s['value']}" for c, s in plan.reconcile_specs),
+    ])
     result.units_skipped = [u for u in vals if u in done]
     pending = [u for u in vals if u not in done]
     blooms = _prep_blooms(plan, dims) if pending else {}
@@ -598,7 +742,7 @@ def validate(
     # quarantine publish and validate_appended's TableLog commit
     result.complete = all(set(units) <= done for units, _, _ in stages)
 
-    # ---- verdicts + metrics from the written violations ----------------
+    # ---- one violations tally: verdicts, metrics, $anomaly counts ----
     # verdicts cover COMPLETED units only: a pending unit has no
     # violation rows yet and must not read as a pass.
     # The violations sink is APPEND-mode across snapshots (the
@@ -609,36 +753,44 @@ def validate(
     # A resume of the same snapshot shares its snapshot_id, so the
     # filter keeps resumability intact. (Violation history across
     # snapshots remains queryable from the sink itself.)
+    # ONE grouping-sets count over them, collected, feeds the verdicts
+    # (per unit), the metrics (per rule and error type) and $anomaly's
+    # violation_rate (per column); its sinks are driver-sized, so the
+    # driver writes them.
     all_v = read_violations(spark, v_dir) if os.path.exists(v_dir) else None
+    col_counts: dict[str, int] = {}
     if all_v is not None:
         all_v = all_v.filter(F.col("snapshot_id") == F.lit(snapshot))
+        per_unit, per_rule, col_counts = _violation_tally(all_v)
+        verd_dir = os.path.join(out_dir, "verdicts")
         if partition_col is None:
-            verd = report.partition_verdicts(df, all_v, run_id)
+            report.partition_verdicts(df, all_v, run_id).write.mode(
+                "overwrite"
+            ).parquet(verd_dir)
         else:
-            # the row counts collected above, left-joined to the
-            # violations per carried unit; the __schema__ and
-            # $reconcile units match no data unit
-            per_unit = all_v.groupBy("unit").agg(
-                F.count(F.lit(1)).alias("n_violations")
+            # the row counts collected above, joined to the tally's
+            # per-unit counts; the __schema__ and $reconcile units
+            # match no data unit
+            write_rows(
+                verd_dir,
+                [
+                    (u, n_rows[u], per_unit.get(u, 0),
+                     per_unit.get(u, 0) == 0, run_id)
+                    for u in vals if u in done
+                ],
+                T.StructType([
+                    T.StructField(partition_col, T.StringType()),
+                    T.StructField("n_rows", T.LongType()),
+                    T.StructField("n_violations", T.LongType()),
+                    T.StructField("passed", T.BooleanType()),
+                    T.StructField("run_id", T.StringType()),
+                ]),
             )
-            verd = (
-                local_frame(
-                    spark,
-                    [(u, n_rows[u]) for u in vals if u in done],
-                    "unit string, n_rows long",
-                )
-                .join(per_unit, "unit", "left")
-                .select(
-                    F.col("unit").alias(partition_col),
-                    "n_rows",
-                    F.coalesce("n_violations", F.lit(0)).alias("n_violations"),
-                )
-                .withColumn("passed", F.col("n_violations") == 0)
-                .withColumn("run_id", F.lit(run_id))
-            )
-        verd.write.mode("overwrite").parquet(os.path.join(out_dir, "verdicts"))
-        met = report.rule_metrics(all_v, run_id)
-        met.write.mode("overwrite").parquet(os.path.join(out_dir, "metrics"))
+        write_rows(
+            os.path.join(out_dir, "metrics"),
+            [(r, e, n, run_id) for (r, e), n in per_rule.items()],
+            METRIC_SCHEMA,
+        )
 
     # ---- quarantine split (opt-in), only under FULL coverage -----------
     if quarantine and all_v is not None:
@@ -719,7 +871,7 @@ def validate(
         state_rows = pq.read_table(state_dir).to_pylist()
         stored_snap = state_rows[0]["snapshot_id"] if state_rows else None
         if stored_snap != snapshot:
-            stored = local_frame(spark, state_rows, drift_checks.STATE_SCHEMA)
+            stored = state_rows
     write_state = bool(plan.drift_specs) and stored_snap != snapshot
     layers = {}
     if plan.assert_specs:
@@ -729,7 +881,7 @@ def validate(
         )
     if plan.anomaly_specs:
         layers["anomaly"] = anomaly_checks.metric_layer(
-            all_v, plan.anomaly_specs
+            col_counts, plan.anomaly_specs
         )
     if write_state:
         layers["grid"] = drift_checks.grid_layer(d_specs)
@@ -814,24 +966,25 @@ def validate(
     #
     # Scan budget is CONSTANT in the number of $drift rules: the grid
     # (all numeric min/max or clip quantiles together) rides the one
-    # table-level pass, and one tagged histogram pass covers every
-    # column (drift.state_frame). A per-spec `clip: [qlo, qhi]` bounds
-    # that column's grid by quantiles on both the comparison and the
-    # persisted state, so the stored histogram is outlier-proof too.
-    if plan.drift_specs:
+    # table-level pass, and ONE collected histogram pass
+    # (drift.drift_pass) buckets every numeric column on that fresh
+    # grid (the new state) and on its stored grid (the comparison,
+    # folded on the driver's counts); a categorical column is counted
+    # once for both. A per-spec `clip: [qlo, qhi]` bounds that column's
+    # grid by quantiles on both the comparison and the persisted
+    # state, so the stored histogram is outlier-proof too. A same-
+    # snapshot re-run writes no state and compares nothing.
+    if write_state:
+        results, state = drift_checks.drift_pass(
+            d_df, d_specs, table["grid"], stored
+        )
         if prev_df is not None:
             results = drift_checks.multi_drift(
                 d_df, d_prev, d_specs, cur_grids=table["grid"]
             )
-        elif stored is not None:
-            # columns with no stored state rows (a $drift rule added
-            # since the stored run) are omitted — nothing to compare
-            # yet; their fresh state is written below
-            results = drift_checks.multi_drift_vs_state(
-                d_df, d_specs, stored
-            )
-        else:
-            results = {}  # first run: nothing to compare against yet
+        # columns with no stored state rows (a $drift rule added since
+        # the stored run) are omitted — nothing to compare yet; a first
+        # run compares nothing
         rows = [
             (r.column, r.test, float(r.statistic), float(r.p_value),
              bool(r.drifted), run_id, snapshot)
@@ -844,14 +997,12 @@ def validate(
                 "column string, test string, statistic double, p_value double, "
                 "drifted boolean, run_id string, snapshot_id string",
             )
-    # persist this run's state unless it is already current: one tagged
-    # histogram pass for ALL columns on the pass's grids
-    if write_state:
-        states = drift_checks.state_frame(
-            d_df, d_specs, table["grid"]
-        ).withColumn("snapshot_id", F.lit(snapshot))
         tmp_dir = state_dir + ".tmp"
-        states.write.mode("overwrite").parquet(tmp_dir)
+        write_rows(
+            tmp_dir,
+            [(*r, snapshot) for r in state],
+            drift_checks.STATE_SCHEMA + ", snapshot_id string",
+        )
         import shutil
 
         # three-step swap so a crash at ANY point leaves a recoverable

@@ -374,3 +374,121 @@ def test_greedy_pack_matches_naive_loop(tokens, cap):
         assert seq[i] == s, (tokens, cap, i)
         assert off[i] == fill, (tokens, cap, i)
         fill += t
+
+
+# ---------------------------------------------------------------------------
+# weighted and per-group samplers
+
+_weight = st.one_of(
+    st.none(), st.just(_NAN), st.just(0.0),
+    st.floats(min_value=-5.0, max_value=-1e-3),
+    st.floats(min_value=1e-3, max_value=1e3),
+)
+_sample_rows = st.lists(
+    st.tuples(st.one_of(st.none(), st.integers(0, 2)), _weight), max_size=14
+)
+
+
+def _aes_key(key: int, w: float, salt: str = "wrs-v1") -> float:
+    """The A-ES rank key ``ln(u) / w`` with ``u`` from the md5 of the
+    salted key."""
+    import hashlib
+
+    h = hashlib.md5(f"{salt}-{key}".encode()).hexdigest()
+    return math.log((int(h[:8], 16) + 1.0) / 4294967296.0) / w
+
+
+def _ranked(rows):
+    """(key, weight, rank key) of the rows a weighted sampler may draw,
+    best first: weight not NULL, not NaN and > 0; ties by key."""
+    live = [(i, w) for i, (_, w) in enumerate(rows)
+            if w is not None and not math.isnan(w) and w > 0]
+    return sorted(((i, w, _aes_key(i, w)) for i, w in live),
+                  key=lambda t: (-t[2], t[0]))
+
+
+def _sampler_frame(spark, rows):
+    from invalid_spark.model import local_frame
+
+    return local_frame(
+        spark, [(i, g, w) for i, (g, w) in enumerate(rows)],
+        "doc_id long, g long, w double",
+    ).repartition(3)
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_sample_rows, st.integers(min_value=1, max_value=5))
+@example([], 2)
+@example([(0, None), (1, _NAN), (None, 0.0), (2, -1.0)], 3)   # nothing drawable
+@example([(0, 1.0), (0, _NAN), (None, 2.0), (None, 2.0), (1, 0.5)], 1)
+def test_weighted_samplers_match_reference(spark, rows, k):
+    """``weighted_sample`` and ``weighted_sample_by_group`` draw what a
+    plain-Python A-ES draw does: rows with a NULL, NaN, zero or negative
+    weight are never drawn, the top ``k`` rank keys win (globally, and
+    per group with NULL its own group), ranks are 1..k in order."""
+    from invalid_spark.pipeline import curate
+
+    df = _sampler_frame(spark, rows)
+    ranked = _ranked(rows)
+    got = curate.weighted_sample(df, "w", k).collect()
+    assert [r["doc_id"] for r in got] == [i for i, _, _ in ranked[:k]]
+    for r, (_, w, key) in zip(got, ranked):
+        assert r["weight"] == w and math.isclose(r["wkey"], key, rel_tol=1e-12)
+
+    want = {}
+    for i, w, key in ranked:
+        g = rows[i][0]
+        rank = sum(1 for (gg, _) in want if gg == g) + 1
+        if rank <= k:
+            want[(g, rank)] = i
+    got_g = curate.weighted_sample_by_group(df, "w", k, "g").collect()
+    assert {(r["g"], r["rank"]): r["doc_id"] for r in got_g} == want
+    assert len(got_g) == len(want)
+
+
+def _percentile(xs: list[float], q: float) -> float | None:
+    """Spark's exact ``percentile``: linear interpolation between the
+    order statistics around ``(n - 1) * q``, in Spark's own spelling."""
+    if not xs:
+        return None
+    xs = sorted(xs)
+    pos = (len(xs) - 1) * q
+    lo, hi = math.floor(pos), math.ceil(pos)
+    if lo == hi or xs[lo] == xs[hi]:
+        return xs[lo]
+    return (hi - pos) * xs[lo] + (pos - lo) * xs[hi]
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_sample_rows, st.sampled_from([0.1, 0.25, 0.5, 0.7, 1.0]))
+@example([], 0.5)
+@example([(0, _NAN), (0, _NAN), (1, None)], 0.5)    # no score sets a threshold
+@example([(0, 1.0), (0, _NAN), (0, 1.0), (None, -2.0), (None, 0.0)], 0.5)
+def test_top_fraction_by_group_matches_reference(spark, rows, frac):
+    """``top_fraction_by_group`` keeps a row when its score reaches its
+    group's exact ``1 - frac`` percentile of the non-NaN scores (ties
+    kept, NULL group its own group). A NaN score is never kept; a NULL
+    score, or a group with no threshold, keeps NULL."""
+    from invalid_spark.pipeline import curate
+
+    df = _sampler_frame(spark, rows)
+    thr = {}
+    for g in {g for g, _ in rows}:
+        thr[g] = _percentile(
+            [w for gg, w in rows if gg == g and w is not None and not math.isnan(w)],
+            1.0 - frac,
+        )
+
+    def keep(g, w):
+        if w is not None and math.isnan(w):
+            return False
+        if w is None or thr[g] is None:
+            return None
+        return w >= thr[g]
+
+    got = curate.top_fraction_by_group(df, "w", frac, "g").collect()
+    assert {r["doc_id"]: r["keep"] for r in got} == {
+        i: keep(g, w) for i, (g, w) in enumerate(rows)
+    }

@@ -1540,10 +1540,17 @@ def _per_column_counts(df, col, spec, grid):
 def test_multi_state_scan_count_independent_of_rules(spark, tmp_path, monkeypatch):
     """The tagged histogram pass reads the table ONCE however many
     $drift rules there are (the per-column path costs 2 scans each),
-    and neither it nor the stored-state comparison job starts a
-    Python worker: no MapInPandas / Python UDF node at any width."""
+    and neither it nor the stored-state comparison starts a Python
+    worker: no MapInPandas / Python UDF node at any width. The
+    comparison's fold reads no table at all: it runs over the counts
+    the pass collected."""
     import os as _os
 
+    passes = []
+    hist = drift._hist
+    monkeypatch.setattr(
+        drift, "_hist", lambda *a, **kw: passes.append(hist(*a, **kw)) or passes[-1]
+    )
     sf = _os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
     df = spark.read.parquet(_os.path.join(sf, "lineitem.parquet"))
     one = [("l_quantity", {})]
@@ -1553,10 +1560,14 @@ def test_multi_state_scan_count_independent_of_rules(spark, tmp_path, monkeypatc
         ("l_discount", {}),
         ("l_returnflag", {"test": "chi2"}),
     ]
-    s1 = drift.state_frame(df, one, drift.multi_grid(df, one))
+    def scans(frame):
+        # the plan before adaptive execution: the pass has run
+        return frame._jdf.queryExecution().sparkPlan().toString().count("FileScan")
+
+    drift.state_frame(df, one, drift.multi_grid(df, one))
     grids4 = drift.multi_grid(df, four)
     s4 = drift.state_frame(df, four, grids4)
-    assert _scan_count(s1) == _scan_count(s4) == 1
+    assert [scans(p) for p in passes] == [1, 1]
     # and per-column counts agree with the one-pass state
     rows4 = {
         (r["column_name"], r["test"], r["bucket"], r["cat"]): r["cnt"]
@@ -1578,11 +1589,11 @@ def test_multi_state_scan_count_independent_of_rules(spark, tmp_path, monkeypatc
     )
     assert len(specs) == 16
     state = drift.state_frame(wide, specs, drift.multi_grid(wide, specs))
-    plan = state._jdf.queryExecution().executedPlan().toString()
+    plan = passes[-1]._jdf.queryExecution().executedPlan().toString()
     assert not [n for n in _PYTHON_NODES if n in plan], plan
-    assert _scan_count(state) == 1
-    # the stored-state comparison: one fold job over the current
-    # table (read once) and the stored rows
+    assert scans(passes[-1]) == 1
+    # the stored-state comparison: one pass over the current table
+    # (read once) and one fold job over the collected counts
     stored_dir = str(tmp_path / "state")
     state.write.parquet(stored_dir)
     folds = []
@@ -1592,11 +1603,14 @@ def test_multi_state_scan_count_independent_of_rules(spark, tmp_path, monkeypatc
     )
     res = drift.multi_drift_vs_state(wide, specs, spark.read.parquet(stored_dir))
     assert len(res) == 16 and not any(r.drifted for r in res.values())
-    assert len(folds) == 1
-    # the physical plan before adaptive execution re-plans it
-    plan = folds[0]._jdf.queryExecution().sparkPlan().toString()
+    assert len(folds) == 1 and len(passes) == 4
+    # the physical plans before adaptive execution re-plans them
+    plan = passes[-1]._jdf.queryExecution().sparkPlan().toString()
     assert not [n for n in _PYTHON_NODES if n in plan], plan
     assert plan.count("lineitem.parquet") == 1, plan
+    plan = folds[0]._jdf.queryExecution().sparkPlan().toString()
+    assert not [n for n in _PYTHON_NODES if n in plan], plan
+    assert "FileScan" not in plan, plan
 
 
 def test_multi_grid_clip_bounds_outliers(spark):
