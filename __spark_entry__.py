@@ -1158,9 +1158,10 @@ def q_caption_eq_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_unique_phash_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted uniqueness under a planted hot key (~10% of rows share
-    one derived phash): the two-stage aggregate spreads the hot key
-    across salt buckets so no single reducer sees it whole. The
+    """Uniqueness under a planted hot key (~10% of rows share one
+    derived phash): the one aggregate's map-side partial combine
+    collapses the hot key to one (key, count) pair per map task
+    before the single exchange, so no reducer sees its rows. The
     skewed key derives from the events table (event_id % 10 == 0 →
     one shared value), so the DuckDB oracle replays the full value
     check; the synthetic-image skew variant stays pytest-covered."""
@@ -1171,7 +1172,7 @@ def q_unique_phash_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("phash")
     )
-    d = unique.duplicate_keys(df, "phash", salt_buckets=64)
+    d = unique.duplicate_keys(df, "phash")
     return d.select(F.col("k").alias("phash"), "cnt").orderBy("phash")
 
 
@@ -2611,7 +2612,7 @@ def q_unique_composite_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique.composite_uniqueness_violations): (l_orderkey,
     l_linenumber) is unique until we plant duplicates on a ~1/5003
     orderkey stride; both copies of each duplicated key flag. Same
-    two-stage salted aggregate as single-column uniqueness; the
+    one partial-combine aggregate as single-column uniqueness; the
     join back is null-safe on every key part."""
     df = _t(spark, sf_dir, "lineitem")
     spiked = df.unionAll(df.filter(F.col("l_orderkey") % 5003 == 0))

@@ -248,7 +248,8 @@ def _validated_rows(spark, sf_dir: str) -> tuple[int, dict[str, float]]:
         in_headline=False,
     )
 
-    # skew handling: salted uniqueness with a hot key on 10% of rows
+    # skew handling: uniqueness (partial-combine aggregate) with a hot
+    # key on 10% of rows
     skew_n = 50_000
     skew_df = synth.images_df(spark, skew_n, partitions=CPUS * 2, skew=True)
     timed(

@@ -2,10 +2,13 @@
 
 ``$ref: {table, key}`` on a column becomes a LEFT ANTI join against
 the dimension table: rows whose foreign key has no match are
-violations. Small dimensions are broadcast explicitly (``broadcast=
-True``, the default — license/taxonomy tables are KB-sized); large
-dimensions fall back to a shuffle join where AQE picks the physical
-strategy and splits skewed partitions.
+violations. The join carries no hint: Catalyst broadcasts the
+dimension's keys only when their estimated size is under
+``spark.sql.autoBroadcastJoinThreshold`` (license/taxonomy tables are
+KB-sized, the TPC-H dimensions a few MB), and a larger dimension gets
+a shuffle join where AQE picks the physical strategy at run time and
+splits skewed partitions. A forced broadcast would ship a dimension
+of any size to every executor.
 
 For the middle regime — a dimension too big to broadcast as rows but
 whose FACT side is far too big to shuffle — :func:`bloom_build` /
@@ -39,17 +42,13 @@ def ref_violations(
     dim_key: str,
     row_key: str,
     run_id: str = "",
-    broadcast: bool = True,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Rows of ``df`` whose ``col`` is absent from ``dim.dim_key``.
-    A left-anti join's result does not depend on duplicate build-side
-    keys, so only the shuffle path de-duplicates them (it shrinks the
-    shuffled side); the broadcast path ships the keys as they are.
+    """Rows of ``df`` whose ``col`` is absent from ``dim.dim_key``: a
+    plain LEFT ANTI join, physical strategy left to Catalyst and AQE.
     ``keep_cols``: source columns carried onto every violation row."""
     keep = list(keep_cols or [])
     keys = dim.select(F.col(dim_key).alias("__refk"))
-    keys = F.broadcast(keys) if broadcast else keys.distinct()
     missing = df.select(
         F.col(row_key).cast("string").alias("row_key"),
         F.col(col).alias("__fk"),

@@ -358,9 +358,10 @@ def mutual_information(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
 def hot_keys(df: DataFrame, col: str, k: int = 20) -> DataFrame:
     """Heavy-hitter profile of a key column: the top-``k`` values by
     frequency with their corpus share — the diagnostic that tells a
-    pipeline WHICH keys need salting before a join/aggregate on
-    ``col`` skews (the uniqueness and dedup stages salt blindly; this
-    makes the skew visible and auditable). The top-k itself is
+    pipeline WHICH keys need salting before a join on ``col`` skews
+    (a count aggregate's map-side partial combine already absorbs a
+    hot key, a join does not; this makes the skew visible and
+    auditable). The top-k itself is
     ``orderBy(...).limit(k)`` — Spark compiles that to
     TakeOrderedAndProject, a distributed partial top-k per partition
     of the aggregated counts, never a global sort and never a

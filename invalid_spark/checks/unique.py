@@ -1,40 +1,97 @@
-"""Uniqueness checks with explicit skew handling (SURVEY.md §2.3).
+"""Uniqueness checks (SURVEY.md §2.3).
 
-``$unique`` on a column (image_id, phash) becomes a two-stage salted
-aggregation so one hot key (the synthetic skew fixture plants a phash
-shared by ~10% of rows) cannot pin a single reducer at 100 TB:
-
-  stage 1: groupBy(key, salt)  — salt = crc32-ish mod S, spreads a hot
-           key over S reducers; partial (map-side) combine applies
-  stage 2: groupBy(key) sum of stage-1 counts — at most S rows per key
+``$unique`` on a column (image_id, phash) or on a composite natural
+key is one aggregate: ``groupBy(key).count()`` filtered to counts
+above one. Spark plans it as a map-side partial aggregate, one
+exchange and a final aggregate, so the shuffle carries at most one
+(key, count) pair per key per map task, never rows. A hot key (the
+synthetic skew fixture plants a phash shared by ~10% of rows)
+collapses map-side before anything moves: partial combine IS the salt
+here, as for ``$fd`` (``relations.py``). A salted two-stage aggregate
+only added a second exchange (50k-row hot-phash table: 2 → 1
+exchanges, 3 → 2 jobs, same rows).
 
 Emitting per-row violations then requires locating the duplicated
-rows: a semi-join of the (small) duplicate-key set back against the
-table. AQE's skew-join handles residual imbalance; for genuinely tiny
-dup sets Catalyst broadcasts automatically.
+rows: a join of the (small) duplicate-key set back against the table.
+AQE's skew-join handles residual imbalance; for tiny dup sets
+Catalyst broadcasts automatically.
+
+Key parts are renamed by position before the aggregate, so no column
+name of the table (``salt``, ``cnt``, ...) can collide with the count
+or with another name in the plan.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invalid_spark import model
 from invalid_spark.model import ErrorType
 
 
-def duplicate_keys(df: DataFrame, col: str, salt_buckets: int = 64) -> DataFrame:
-    """Keys appearing more than once → (key, cnt). Two-stage salted."""
-    stage1 = (
-        df.select(F.col(col).alias("k"))
-        .withColumn("salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)))
-        .groupBy("k", "salt")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+def composite_duplicate_keys(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Multi-column keys appearing more than once → ``(k0, …, cnt)``,
+    key part ``i`` as ``k{i}``. NULL key parts group together (SQL
+    GROUP BY semantics — a composite key with a NULL part duplicates
+    another identical one)."""
     return (
-        stage1.groupBy("k")
-        .agg(F.sum("c").alias("cnt"))
+        df.groupBy(*[F.col(c).alias(f"k{i}") for i, c in enumerate(cols)])
+        .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.col("cnt") > 1)
+    )
+
+
+def duplicate_keys(df: DataFrame, col: str) -> DataFrame:
+    """Keys appearing more than once → ``(k, cnt)``."""
+    return composite_duplicate_keys(df, [col]).withColumnRenamed("k0", "k")
+
+
+def _violations(
+    df: DataFrame,
+    cols: list[str],
+    row_key: str,
+    run_id: str,
+    keep_cols: list[str] | None,
+    null_safe: bool,
+) -> DataFrame:
+    """Violation rows for every row of ``df`` whose key over ``cols``
+    is in the duplicate set, joined back on every key part."""
+    keep = list(keep_cols or [])
+    n = len(cols)
+    dups = composite_duplicate_keys(df, cols).toDF(
+        *[f"__d{i}" for i in range(n)], "__cnt"
+    )
+    eqs = [
+        F.col(f"__k{i}").eqNullSafe(F.col(f"__d{i}")) if null_safe
+        else F.col(f"__k{i}") == F.col(f"__d{i}")
+        for i in range(n)
+    ]
+    key_str = "~".join(cols)
+    joined = df.select(
+        F.col(row_key).cast("string").alias("row_key"),
+        *[F.col(c).alias(f"__k{i}") for i, c in enumerate(cols)],
+        F.spark_partition_id().alias("partition_id"),
+        *keep,
+    ).join(dups, reduce(lambda a, b: a & b, eqs), "inner")
+    return joined.select(
+        "row_key",
+        F.lit(cols[0]).alias("column"),
+        F.lit(key_str).alias("rule_id"),
+        F.lit(ErrorType.UNIQUE_MISMATCH).alias("error_type"),
+        F.concat(
+            F.lit(f"value of [{key_str}] must be unique, seen "),
+            F.col("__cnt").cast("string"),
+            F.lit(" times"),
+        ).alias("message"),
+        F.concat_ws(
+            "~", *[F.coalesce(F.col(f"__k{i}").cast("string"), F.lit("∅"))
+                   for i in range(n)]
+        ).alias("observed"),
+        "partition_id",
+        F.lit(run_id).alias("run_id"),
+        *keep,
     )
 
 
@@ -43,61 +100,13 @@ def uniqueness_violations(
     col: str,
     row_key: str,
     run_id: str = "",
-    salt_buckets: int = 64,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Violation rows (schema ``VIOLATION_SCHEMA``) for every row whose
-    ``col`` value is duplicated. ``keep_cols``: source columns carried
-    onto every violation row (the runner's work unit)."""
-    keep = list(keep_cols or [])
-    dups = duplicate_keys(df, col, salt_buckets)
-    joined = df.select(
-        F.col(row_key).cast("string").alias("row_key"),
-        F.col(col).alias("k"),
-        F.spark_partition_id().alias("partition_id"),
-        *keep,
-    ).join(dups, "k", "inner")
-    return joined.select(
-        "row_key",
-        F.lit(col).alias("column"),
-        F.lit(col).alias("rule_id"),
-        F.lit(ErrorType.UNIQUE_MISMATCH).alias("error_type"),
-        F.concat(
-            F.lit(f"value of [{col}] must be unique, seen "),
-            F.col("cnt").cast("string"),
-            F.lit(" times"),
-        ).alias("message"),
-        F.col("k").cast("string").alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
-        *keep,
-    )
-
-
-def composite_duplicate_keys(
-    df: DataFrame, cols: list[str], salt_buckets: int = 64
-) -> DataFrame:
-    """Multi-column keys appearing more than once → (*cols, cnt).
-    Same two-stage salted shape as :func:`duplicate_keys`; NULL key
-    parts group together (SQL GROUP BY semantics — a composite key
-    with a NULL part duplicates another identical one)."""
-    stage1 = (
-        df.select(*cols)
-        .withColumn(
-            "salt",
-            F.pmod(
-                F.xxhash64(F.monotonically_increasing_id()),
-                F.lit(salt_buckets),
-            ),
-        )
-        .groupBy(*cols, "salt")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        stage1.groupBy(*cols)
-        .agg(F.sum("c").alias("cnt"))
-        .filter(F.col("cnt") > 1)
-    )
+    ``col`` value is duplicated; NULL values are never flagged (plain
+    equality join back). ``keep_cols``: source columns carried onto
+    every violation row (the runner's work unit)."""
+    return _violations(df, [col], row_key, run_id, keep_cols, null_safe=False)
 
 
 def composite_uniqueness_violations(
@@ -105,7 +114,6 @@ def composite_uniqueness_violations(
     cols: list[str],
     row_key: str,
     run_id: str = "",
-    salt_buckets: int = 64,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Violation rows for every row whose COMPOSITE key (natural keys
@@ -114,37 +122,4 @@ def composite_uniqueness_violations(
     the rows found match exactly the groups counted (struct equality
     would drop NULL-part groups). ``keep_cols`` as in
     :func:`uniqueness_violations`."""
-    keep = list(keep_cols or [])
-    dups = composite_duplicate_keys(df, cols, salt_buckets)
-    d = dups.select(
-        *[F.col(c).alias(f"__dup_{c}") for c in cols], "cnt"
-    )
-    cond = None
-    for c in cols:
-        eq = F.col(c).eqNullSafe(F.col(f"__dup_{c}"))
-        cond = eq if cond is None else (cond & eq)
-    key_str = "~".join(cols)
-    joined = df.select(
-        F.col(row_key).cast("string").alias("row_key"),
-        *cols,
-        F.spark_partition_id().alias("partition_id"),
-        *keep,
-    ).join(d, cond, "inner")
-    return joined.select(
-        "row_key",
-        F.lit(cols[0]).alias("column"),
-        F.lit(key_str).alias("rule_id"),
-        F.lit(ErrorType.UNIQUE_MISMATCH).alias("error_type"),
-        F.concat(
-            F.lit(f"value of [{key_str}] must be unique, seen "),
-            F.col("cnt").cast("string"),
-            F.lit(" times"),
-        ).alias("message"),
-        F.concat_ws(
-            "~", *[F.coalesce(F.col(c).cast("string"), F.lit("∅"))
-                   for c in cols]
-        ).alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
-        *keep,
-    )
+    return _violations(df, cols, row_key, run_id, keep_cols, null_safe=True)

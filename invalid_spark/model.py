@@ -148,16 +148,6 @@ CHECK_STRUCT = T.StructType(
     ]
 )
 
-VERDICT_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_violations", T.LongType(), False),
-        T.StructField("passed", T.BooleanType(), False),
-        T.StructField("run_id", T.StringType(), True),
-    ]
-)
-
 METRIC_SCHEMA = T.StructType(
     [
         T.StructField("rule_id", T.StringType(), True),

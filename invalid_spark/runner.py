@@ -667,7 +667,7 @@ def validate(
     ) -> None:
         stages.append(([name], build, unit))
 
-    # uniqueness is a two-stage salted aggregate: the shuffle carries
+    # uniqueness is one partial-combine aggregate: the shuffle carries
     # (key, count) pairs, never rows
     for c in plan.unique_cols:
         add(f"__unique__{c}", lambda c=c: unique.uniqueness_violations(

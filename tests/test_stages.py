@@ -38,6 +38,41 @@ def test_uniqueness_skewed_hot_key(spark):
     assert len(hot) == 1 and hot[0].cnt == 30
 
 
+def test_duplicate_keys_plan_one_exchange(spark):
+    """Single and composite duplicate-key sets are one aggregate: a
+    map-side partial count, ONE exchange, the final count, and no
+    nondeterministic expression (a salted two-stage aggregate plans
+    two exchanges over a random salt)."""
+    df = synth.images_df(spark, 300, skew=True)
+    for d in (unique.duplicate_keys(df, "phash"),
+              unique.composite_duplicate_keys(df, ["phash", "fmt"])):
+        qe = d._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert qe.optimizedPlan().deterministic(), plan
+
+
+@pytest.mark.parametrize("extra", [
+    "salt bigint", "salt string", "cnt bigint", "k0 string",
+])
+def test_composite_unique_any_user_column_name(spark, extra):
+    """A composite key part may carry any name, including the names
+    the aggregate uses internally: every planted duplicate is flagged."""
+    name, typ = extra.split()
+    v = "7" if typ == "bigint" else "'x'"
+    df = spark.sql(
+        f"SELECT concat('r', id) AS rid, if(id = 6, 99, id % 3) AS a, "
+        f"CAST({v} AS {typ}) AS `{name}` FROM range(7)"
+    )
+    rows = unique.composite_uniqueness_violations(
+        df, ["a", name], "rid"
+    ).collect()
+    assert sorted(r.row_key for r in rows) == [f"r{i}" for i in range(6)]
+    assert {r.message for r in rows} == {
+        f"value of [a~{name}] must be unique, seen 2 times"
+    }
+
+
 def test_ref_violations(spark, images):
     dim = synth.licenses_df(spark)
     v = refint.ref_violations(images, "license_id", dim, "license_id", "image_id")
@@ -45,6 +80,46 @@ def test_ref_violations(spark, images):
     assert len(rows) == len(synth.violation_indices(N, "ref_license"))
     assert all(r.observed == "unknown-license" for r in rows)
     assert all(r.error_type == "refMismatch" for r in rows)
+
+
+def test_ref_violations_broadcast_is_size_gated(spark, images):
+    """The anti-join carries no broadcast hint: at the default
+    threshold the KB-sized licenses and MB-sized orders dimensions
+    plan a broadcast LeftAnti join; with the threshold below the
+    orders keys' size no BroadcastExchange is planned and the rows
+    are unchanged."""
+    sf = "/root/testdata/sf0.01"
+    li = spark.read.parquet(f"{sf}/lineitem.parquet").filter(
+        F.col("l_linenumber") == 1
+    ).withColumn("l_orderkey", F.col("l_orderkey") + 7)
+    orders = spark.read.parquet(f"{sf}/orders.parquet")
+    lic = synth.licenses_df(spark)
+
+    def run(df, col, dim, key, row_key):
+        v = refint.ref_violations(df, col, dim, key, row_key)
+        rows = sorted(r.row_key for r in v.collect())
+        return rows, v._jdf.queryExecution().executedPlan().toString()
+
+    def bhj_anti(plan):
+        return any("BroadcastHashJoin" in ln and "LeftAnti" in ln
+                   for ln in plan.splitlines())
+
+    lic_rows, lic_plan = run(images, "license_id", lic, "license_id",
+                             "image_id")
+    assert lic_rows and bhj_anti(lic_plan), lic_plan
+    rows, plan = run(li, "l_orderkey", orders, "o_orderkey", "l_orderkey")
+    assert rows and bhj_anti(plan), plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "1k")
+        off_rows, off_plan = run(
+            li, "l_orderkey", orders, "o_orderkey", "l_orderkey"
+        )
+    finally:
+        spark.conf.unset(key) if saved is None else spark.conf.set(key, saved)
+    assert off_rows == rows
+    assert "BroadcastExchange" not in off_plan, off_plan
 
 
 def test_bloom_ref_exact_at_generous_sizing(spark):
