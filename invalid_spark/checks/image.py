@@ -27,14 +27,16 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructField, StructType
 
 from invalid_spark import codecs
-from invalid_spark.model import ErrorType
+from invalid_spark.model import VIOLATION_SCHEMA, ErrorType, as_violations
 
-_OUT_SCHEMA = (
-    "row_key string, column string, rule_id string, error_type string, "
-    "message string, observed string, partition_id int, run_id string"
+# the pixel UDF's output columns: the violation schema with every
+# field nullable, as the Arrow batches the UDF builds are
+_OUT_SCHEMA = StructType(
+    [StructField(f.name, f.dataType, True) for f in VIOLATION_SCHEMA.fields]
 )
 
 
@@ -71,9 +73,8 @@ def pixel_violations(
     pruned = df.select(*cols, F.spark_partition_id().alias("pid"), *keep)
     if parallelism:
         pruned = pruned.repartition(parallelism)
-    base = StructType.fromDDL(_OUT_SCHEMA)
-    schema = StructType(base.fields + [pruned.schema[c] for c in keep])
-    out_cols = base.fieldNames()
+    schema = StructType(_OUT_SCHEMA.fields + [pruned.schema[c] for c in keep])
+    out_cols = _OUT_SCHEMA.fieldNames()
 
     def check_rows(rks, raws, fmts, sws, shs, pids, phs):
         # hot loop: zipped column lists, tuple appends — no per-row
@@ -133,7 +134,7 @@ def pixel_violations(
                           str(stored), pid, run_id))
         return out, src
 
-    types = [pa.string()] * 6 + [pa.int32(), pa.string()]
+    types = [f.type for f in to_arrow_schema(_OUT_SCHEMA)]
 
     def check_batches(batches):
         for b in batches:
@@ -184,16 +185,10 @@ def caption_violations(
             F.col("__cur").cast("binary").eqNullSafe(F.col("__ref").cast("binary"))
         )
     )
-    return bad.select(
-        "row_key",
-        F.lit(col).alias("column"),
-        F.lit(col).alias("rule_id"),
-        F.lit(ErrorType.CAPTION_MISMATCH).alias("error_type"),
-        F.lit(f"value of [{col}] must byte-equal the reference").alias("message"),
-        F.col("__cur").alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
-        *keep,
+    return as_violations(
+        bad, "row_key", col, col, ErrorType.CAPTION_MISMATCH,
+        f"value of [{col}] must byte-equal the reference",
+        F.col("__cur"), run_id, keep,
     )
 
 
@@ -304,46 +299,34 @@ def header_violations(
         *([F.col(h_col).cast("long").alias("__h")] if h_col else []),
         F.spark_partition_id().alias("partition_id"),
     )
-    magic_bad = sel.filter(
-        ~_accepts(F.col("__det"), F.col("__fmt"))
-    ).select(
-        "row_key",
-        F.lit(bytes_col).alias("column"),
-        F.lit(f"{bytes_col}~{fmt_col}").alias("rule_id"),
-        F.lit(ErrorType.MAGIC_MISMATCH).alias("error_type"),
-        F.lit(
-            f"container magic of [{bytes_col}] must match declared "
-            f"[{fmt_col}]"
-        ).alias("message"),
+    magic_bad = as_violations(
+        sel.filter(~_accepts(F.col("__det"), F.col("__fmt"))),
+        "row_key", bytes_col, f"{bytes_col}~{fmt_col}",
+        ErrorType.MAGIC_MISMATCH,
+        f"container magic of [{bytes_col}] must match declared [{fmt_col}]",
         F.concat_ws(
             " vs ", F.coalesce(F.col("__det"), F.lit("unknown")), F.col("__fmt")
-        ).alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
+        ),
+        run_id,
     )
     if w_col and h_col:
-        dims_bad = sel.filter(
-            F.col("__hw").isNotNull()
-            & (
-                (F.col("__hw") != F.col("__w"))
-                | (F.col("__hh") != F.col("__h"))
-            )
-        ).select(
-            "row_key",
-            F.lit(bytes_col).alias("column"),
-            F.lit(f"{bytes_col}~dims").alias("rule_id"),
-            F.lit(ErrorType.HEADER_MISMATCH).alias("error_type"),
-            F.lit(
-                f"header dimensions of [{bytes_col}] must match "
-                f"declared [{w_col}]x[{h_col}]"
-            ).alias("message"),
+        dims_bad = as_violations(
+            sel.filter(
+                F.col("__hw").isNotNull()
+                & (
+                    (F.col("__hw") != F.col("__w"))
+                    | (F.col("__hh") != F.col("__h"))
+                )
+            ),
+            "row_key", bytes_col, f"{bytes_col}~dims", ErrorType.HEADER_MISMATCH,
+            f"header dimensions of [{bytes_col}] must match "
+            f"declared [{w_col}]x[{h_col}]",
             F.concat_ws(
                 " vs ",
                 F.concat_ws("x", "__hw", "__hh"),
                 F.concat_ws("x", "__w", "__h"),
-            ).alias("observed"),
-            "partition_id",
-            F.lit(run_id).alias("run_id"),
+            ),
+            run_id,
         )
         return magic_bad.unionByName(dims_bad)
     return magic_bad

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from invalid_spark.model import ErrorType
+from invalid_spark.model import ErrorType, as_violations
 
 BLOOM_SALT = "bloom-v1"
 
@@ -55,20 +55,14 @@ def ref_violations(
         F.spark_partition_id().alias("partition_id"),
         *keep,
     ).join(keys, F.col("__fk") == F.col("__refk"), "left_anti")
-    return missing.select(
-        "row_key",
-        F.lit(col).alias("column"),
-        F.lit(col).alias("rule_id"),
-        F.lit(ErrorType.REF_MISMATCH).alias("error_type"),
+    return as_violations(
+        missing, "row_key", col, col, ErrorType.REF_MISMATCH,
         F.concat(
             F.lit(f"value of [{col}] has no match in reference ["),
             F.lit(dim_key),
             F.lit("]"),
-        ).alias("message"),
-        F.col("__fk").cast("string").alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
-        *keep,
+        ),
+        F.col("__fk"), run_id, keep,
     )
 
 
@@ -170,18 +164,12 @@ def bloom_ref_violations(
         mask = F.expr(f"shiftleft(1L, cast(pmod(__p{i}, 32) as int))")
         hit = hit & (F.col(f"__bb{i}").bitwiseAND(mask) != 0)
     missing = cur.filter(~F.coalesce(hit, F.lit(False)))
-    return missing.select(
-        "row_key",
-        F.lit(col).alias("column"),
-        F.lit(col).alias("rule_id"),
-        F.lit(ErrorType.REF_MISMATCH).alias("error_type"),
+    return as_violations(
+        missing, "row_key", col, col, ErrorType.REF_MISMATCH,
         F.concat(
             F.lit(f"value of [{col}] fails bloom screen of reference ["),
             F.lit(dim_key),
             F.lit("]"),
-        ).alias("message"),
-        F.col("__fk").cast("string").alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
-        *keep,
+        ),
+        F.col("__fk"), run_id, keep,
     )

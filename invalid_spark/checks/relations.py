@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from invalid_spark.model import ErrorType
+from invalid_spark.model import ErrorType, as_violations
 
 
 # ---------------------------------------------------------------------------
@@ -90,21 +90,15 @@ def fd_violations(
         F.spark_partition_id().alias("partition_id"),
         *keep,
     ).join(bad, F.col("__det").eqNullSafe(F.col("value")), "inner")
-    return joined.select(
-        "row_key",
-        F.lit(dep).alias("column"),
-        F.lit(f"{det}->{dep}").alias("rule_id"),
-        F.lit(ErrorType.FD_MISMATCH).alias("error_type"),
+    return as_violations(
+        joined, "row_key", dep, f"{det}->{dep}", ErrorType.FD_MISMATCH,
         F.concat(
             F.lit(f"value of [{dep}] must be determined by [{det}]; "),
             F.lit("determinant maps to "),
             F.col("ndv").cast("string"),
             F.lit(" distinct values"),
-        ).alias("message"),
-        F.col("__depv").alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
-        *keep,
+        ),
+        F.col("__depv"), run_id, keep,
     )
 
 
@@ -149,23 +143,16 @@ def sequence_violations(
     ``keep_cols`` ride onto every row."""
     word = "increase" if strict else "never decrease"
     breaks = sequence_breaks(df, key, order_by, col, strict)
-    return breaks.select(
-        F.col(row_key).cast("string").alias("row_key"),
-        F.lit(col).alias("column"),
-        F.lit(f"{col}@{key}/{order_by}").alias("rule_id"),
-        F.lit(ErrorType.SEQ_MISMATCH).alias("error_type"),
-        F.lit(
-            f"value of [{col}] must {word} per [{key}] "
-            f"in [{order_by}] order"
-        ).alias("message"),
+    return as_violations(
+        breaks, F.col(row_key), col, f"{col}@{key}/{order_by}",
+        ErrorType.SEQ_MISMATCH,
+        f"value of [{col}] must {word} per [{key}] in [{order_by}] order",
         F.concat(
             F.col(col).cast("string"),
             F.lit(" after "),
             F.col("__prev").cast("string"),
-        ).alias("observed"),
-        F.spark_partition_id().alias("partition_id"),
-        F.lit(run_id).alias("run_id"),
-        *(keep_cols or []),
+        ),
+        run_id, keep_cols, partition_id=F.spark_partition_id(),
     )
 
 
@@ -256,21 +243,18 @@ def reconcile_violations(
         fact, dim, fact_key, dim_key, term, order, dim_value, tol,
         exact_fold=exact_fold,
     ).filter(F.col("status") != "ok")
-    return rec.select(
-        F.col("key").cast("string").alias("row_key"),
-        F.lit(dim_value).alias("column"),
-        F.lit(f"{fact_key}~{dim_value}").alias("rule_id"),
-        F.lit(ErrorType.RECONCILE_MISMATCH).alias("error_type"),
+    return as_violations(
+        rec, "key", dim_value, f"{fact_key}~{dim_value}",
+        ErrorType.RECONCILE_MISMATCH,
         F.concat(
             F.lit(f"aggregate of fact terms must reconcile with "
                   f"[{dim_value}] within {tol}: "),
             F.col("status"),
-        ).alias("message"),
+        ),
         F.concat(
             F.coalesce(F.round("fact_value", 6).cast("string"), F.lit("null")),
             F.lit(" vs "),
             F.coalesce(F.round("dim_value", 6).cast("string"), F.lit("null")),
-        ).alias("observed"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(run_id).alias("run_id"),
+        ),
+        run_id, partition_id=None,
     )

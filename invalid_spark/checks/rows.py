@@ -1072,25 +1072,17 @@ def run_row_checks(
     spark = df.sparkSession
     arr = plan.raw_violations_array()
     keep = list(keep_cols or [])
-    out = (
+    out = model.as_violations(
         df.select(
             F.col(row_key).cast("string").alias("row_key"),
             F.spark_partition_id().alias("partition_id"),
             F.explode(arr).alias("v"),
             *[F.col(c) for c in keep],
-        )
-        .filter(F.col("v").isNotNull())
-        .select(
-            "row_key",
-            F.col("v.column").alias("column"),
-            F.col("v.rule_id").alias("rule_id"),
-            F.col("v.error_type").alias("error_type"),
-            F.col("v.message").alias("message"),
-            F.col("v.observed").alias("observed"),
-            "partition_id",
-            F.lit(run_id).alias("run_id"),
-            *keep,
-        )
+        ).filter(F.col("v").isNotNull()),
+        "row_key",
+        *[F.col(f"v.{f}") for f in model.CHECK_STRUCT.names],
+        run_id=run_id,
+        keep_cols=keep,
     )
     if plan.schema_violations:
         rows = [

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
-from invalid_spark.model import local_frame
+from invalid_spark.model import as_violations, local_frame
 
 # a layer: aggregate columns, and the finish that reads their row
 Layer = tuple[list[Column], Callable[[Row], object]]
@@ -438,17 +438,11 @@ def outlier_violations(
     are not outliers (completeness is ``$required``'s job)."""
     lo, hi = outlier_bounds(df, col, method, k)
     c = F.col(col).cast("double")
-    return df.filter(c.isNotNull() & ((c < F.lit(lo)) | (c > F.lit(hi)))).select(
-        F.col(row_key).cast("string").alias("row_key"),
-        F.lit(col).alias("column"),
-        F.lit(col).alias("rule_id"),
-        F.lit("outlier").alias("error_type"),
-        F.lit(
-            f"value of {col} outside {method} fences "
-            f"[{lo!r}, {hi!r}] (k={k})"
-        ).alias("message"),
-        c.cast("string").alias("observed"),
-        F.lit(run_id).alias("run_id"),
+    return as_violations(
+        df.filter(c.isNotNull() & ((c < F.lit(lo)) | (c > F.lit(hi)))),
+        F.col(row_key), col, col, "outlier",
+        f"value of {col} outside {method} fences [{lo!r}, {hi!r}] (k={k})",
+        c, run_id, partition_id=F.spark_partition_id(),
     )
 
 

@@ -28,7 +28,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invalid_spark.model import ErrorType
+from invalid_spark.model import ErrorType, as_violations
 
 
 def composite_duplicate_keys(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -75,23 +75,18 @@ def _violations(
         F.spark_partition_id().alias("partition_id"),
         *keep,
     ).join(dups, reduce(lambda a, b: a & b, eqs), "inner")
-    return joined.select(
-        "row_key",
-        F.lit(cols[0]).alias("column"),
-        F.lit(key_str).alias("rule_id"),
-        F.lit(ErrorType.UNIQUE_MISMATCH).alias("error_type"),
+    return as_violations(
+        joined, "row_key", cols[0], key_str, ErrorType.UNIQUE_MISMATCH,
         F.concat(
             F.lit(f"value of [{key_str}] must be unique, seen "),
             F.col("__cnt").cast("string"),
             F.lit(" times"),
-        ).alias("message"),
+        ),
         F.concat_ws(
             "~", *[F.coalesce(F.col(f"__k{i}").cast("string"), F.lit("∅"))
                    for i in range(n)]
-        ).alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
-        *keep,
+        ),
+        run_id, keep,
     )
 
 

@@ -16,7 +16,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invalid_spark.model import ErrorType
+from invalid_spark.model import ErrorType, as_violations
+
+
+def _checks_violations(
+    df: DataFrame,
+    row_key: str,
+    checks: list,
+    column: str,
+    rule_id: str,
+    run_id: str,
+    keep: list[str],
+) -> DataFrame:
+    """One violation row per non-NULL ``(error_type, message,
+    observed)`` struct of ``checks`` on each row of ``df``."""
+    out = df.select(
+        F.col(row_key).cast("string").alias("row_key"),
+        F.spark_partition_id().alias("partition_id"),
+        F.explode(F.array(*checks)).alias("v"),
+        *keep,
+    ).filter(F.col("v").isNotNull())
+    return as_violations(
+        out, "row_key", column, rule_id, F.col("v.error_type"),
+        F.col("v.message"), F.col("v.observed"), run_id, keep,
+    )
 
 
 def vector_violations(
@@ -114,26 +137,7 @@ def vector_violations(
                 ),
             )
         )
-    out = (
-        df.select(
-            F.col(row_key).cast("string").alias("row_key"),
-            F.spark_partition_id().alias("partition_id"),
-            F.explode(F.array(*checks)).alias("v"),
-            *keep,
-        )
-        .filter(F.col("v").isNotNull())
-    )
-    return out.select(
-        "row_key",
-        F.lit(col).alias("column"),
-        F.lit(col).alias("rule_id"),
-        F.col("v.error_type").alias("error_type"),
-        F.col("v.message").alias("message"),
-        F.col("v.observed").alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
-        *keep,
-    )
+    return _checks_violations(df, row_key, checks, col, col, run_id, keep)
 
 
 def alignment_score(col_a: str, col_b: str):
@@ -219,20 +223,6 @@ def alignment_violations(
             ),
         ),
     ]
-    out = df.select(
-        F.col(row_key).cast("string").alias("row_key"),
-        F.spark_partition_id().alias("partition_id"),
-        F.explode(F.array(*checks)).alias("v"),
-        *keep,
-    ).filter(F.col("v").isNotNull())
-    return out.select(
-        "row_key",
-        F.lit(col_a).alias("column"),
-        F.lit(f"{col_a}~{col_b}").alias("rule_id"),
-        F.col("v.error_type").alias("error_type"),
-        F.col("v.message").alias("message"),
-        F.col("v.observed").alias("observed"),
-        "partition_id",
-        F.lit(run_id).alias("run_id"),
-        *keep,
+    return _checks_violations(
+        df, row_key, checks, col_a, f"{col_a}~{col_b}", run_id, keep
     )

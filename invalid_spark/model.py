@@ -29,7 +29,8 @@ from collections.abc import Iterable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -136,6 +137,54 @@ VIOLATION_SCHEMA = T.StructType(
         T.StructField("run_id", T.StringType(), True),
     ]
 )
+
+
+def as_violations(
+    df: DataFrame,
+    row_key: str | Column,
+    column: str | Column,
+    rule_id: str | Column,
+    error_type: str | Column,
+    message: str | Column,
+    observed: str | Column | None,
+    run_id: str = "",
+    keep_cols: list[str] | None = None,
+    partition_id: str | Column | None = "partition_id",
+) -> DataFrame:
+    """``df`` projected onto the :data:`VIOLATION_SCHEMA` columns, in
+    order, then ``keep_cols`` (source columns a caller carries onto
+    every row, e.g. the runner's work unit).
+
+    ``row_key`` and ``partition_id`` name a column of ``df`` or are
+    Columns; ``partition_id=None`` writes NULL (a row that belongs to
+    no input partition). A name equal to the field's own (``"row_key"``,
+    ``"partition_id"``) is a column the builder made, already of the
+    field's type, and is selected as it is; any other name or Column
+    is cast to the field's type (pass ``F.col(name)`` for a source
+    column that could carry the field's name). ``column``,
+    ``rule_id``, ``error_type``, ``message`` and ``observed`` are
+    string literals or Columns (cast to string), or None for NULL. So
+    a builder that casts its key or evaluates ``spark_partition_id()``
+    before a join keeps its plan."""
+
+    def value(f: T.StructField, v: str | Column | None) -> str | Column:
+        if isinstance(v, str) and f.name in ("row_key", "partition_id"):
+            if v == f.name:
+                return v
+            v = F.col(v)
+        if isinstance(v, str):
+            return F.lit(v).alias(f.name)
+        return (F.lit(None) if v is None else v).cast(f.dataType).alias(f.name)
+
+    values = (
+        row_key, column, rule_id, error_type, message, observed,
+        partition_id, run_id,
+    )
+    return df.select(
+        *[value(f, v) for f, v in zip(VIOLATION_SCHEMA.fields, values)],
+        *(keep_cols or []),
+    )
+
 
 # the per-check struct built inside the single row-check projection
 CHECK_STRUCT = T.StructType(

@@ -1158,6 +1158,7 @@ def dup_span_stats(
     key_col: str = "doc_id",
     min_df: int = 2,
     coverage_threshold: float = 0.5,
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Span-level (substring) duplication profile per document — the
     gram-granular approximation of suffix-array substring dedup
@@ -1170,8 +1171,9 @@ def dup_span_stats(
     NOT count (that is :func:`~invalid_spark.pipeline.text.
     repetition_features`); doc frequency is over distinct documents.
 
-    Returns one row per input document: (id, n_tokens, n_positions,
-    n_dup_positions, covered_tokens, coverage_frac, flagged).
+    Returns one row per input row: (id, n_tokens, n_positions,
+    n_dup_positions, covered_tokens, coverage_frac, flagged), then
+    ``keep_cols`` (source columns carried onto each row).
 
     Scale shape: one positional explode (linear in corpus tokens), a
     distinct + hash-aggregate keyed by gram for doc frequency (the
@@ -1185,7 +1187,8 @@ def dup_span_stats(
     from pyspark.sql import Window
 
     toks = T.tokens(T.normalize(F.col(text_col)))
-    base = df.select(F.col(key_col).alias("id"), toks.alias("t"))
+    keep = list(keep_cols or [])
+    base = df.select(F.col(key_col).alias("id"), toks.alias("t"), *keep)
     pos = (
         base.filter(F.size("t") >= n)
         .select("id", F.posexplode(_grams(F.col("t"), n)).alias("i", "g"))
@@ -1224,6 +1227,7 @@ def dup_span_stats(
         F.greatest(F.lit(0), F.size("t") - n + 1)
         .cast("long")
         .alias("n_positions"),
+        *keep,
     )
     frac = F.when(
         F.col("n_tokens") > 0,
@@ -1247,6 +1251,7 @@ def dup_span_stats(
             "covered_tokens",
             F.round(frac, 6).alias("coverage_frac"),
             (frac >= coverage_threshold).alias("flagged"),
+            *keep,
         )
     )
 
@@ -1267,38 +1272,21 @@ def dup_span_violations(
     — a span duplicated across two work units is invisible per-batch
     — so the runner gives it its own resumable global unit.
     ``keep_cols``: source columns carried onto every violation row."""
-    from invalid_spark.model import ErrorType
+    from invalid_spark.model import ErrorType, as_violations
 
     keep = list(keep_cols or [])
     flagged = dup_span_stats(
-        df, n=n, text_col=col, key_col=row_key,
-        min_df=min_df, coverage_threshold=max_coverage,
+        df.select(
+            row_key, col, F.spark_partition_id().alias("partition_id"), *keep
+        ),
+        n=n, text_col=col, key_col=row_key, min_df=min_df,
+        coverage_threshold=max_coverage, keep_cols=["partition_id", *keep],
     ).filter(F.col("flagged"))
-    base = df.select(
-        F.col(row_key).cast("string").alias("row_key"),
-        F.spark_partition_id().alias("partition_id"),
-        *keep,
-    )
-    return (
-        flagged.select(
-            F.col("id").cast("string").alias("row_key"),
-            F.col("coverage_frac"),
-        )
-        .join(base, "row_key")
-        .select(
-            "row_key",
-            F.lit(col).alias("column"),
-            F.lit(col).alias("rule_id"),
-            F.lit(ErrorType.DUPSPAN_MISMATCH).alias("error_type"),
-            F.lit(
-                f"duplicated {n}-gram spans in [{col}] must cover "
-                f"< {max_coverage} of tokens"
-            ).alias("message"),
-            F.col("coverage_frac").cast("string").alias("observed"),
-            "partition_id",
-            F.lit(run_id).alias("run_id"),
-            *keep,
-        )
+    return as_violations(
+        flagged, "id", col, col, ErrorType.DUPSPAN_MISMATCH,
+        f"duplicated {n}-gram spans in [{col}] must cover "
+        f"< {max_coverage} of tokens",
+        F.col("coverage_frac"), run_id, keep,
     )
 
 

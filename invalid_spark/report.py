@@ -5,6 +5,12 @@ Generalizes the reference's per-document pass/fail (``len(results)
 (SURVEY.md §2.3): a partition passes iff it contributed zero
 violation rows. Schema-level violations (``partition_id`` NULL)
 fail every partition.
+
+These are library forms over any violations frame. The runner's
+verdicts are per work unit (with or without a ``partition_col``) and
+come from its own violations tally
+(:func:`invalid_spark.runner.validate`), not from
+:func:`partition_verdicts`.
 """
 
 from __future__ import annotations

@@ -48,9 +48,8 @@ Lifecycle (the Spark re-expression of the reference's
    (read with their known schema) is collected: the violations tally,
    per unit, per (rule_id, error_type) and per column. Verdicts are
    the per-unit row counts the unit-list query collected, joined to
-   the tally's unit counts (without a ``partition_col``, the one unit
-   ``__all__`` keeps :func:`~invalid_spark.report.partition_verdicts`);
-   metrics are its rule counts, and ``$anomaly``'s violation_rate
+   the tally's unit counts, one row per completed unit (``__all__``
+   too); metrics are its rule counts, and ``$anomaly``'s violation_rate
    reads its column counts. Its size is gated against
    ``spark.driver.maxResultSize`` before the stage loop writes
    anything;
@@ -68,8 +67,7 @@ Lifecycle (the Spark re-expression of the reference's
    no Spark job), and it reads the driver-sized state they carry
    between snapshots (``metrics_history``, ``drift_state``) with
    ``pyarrow``. Spark writes only what it computes at table scale:
-   violations, the ``__all__`` verdicts, distribution verdicts and
-   the quarantine split.
+   violations, distribution verdicts and the quarantine split.
 
 Bloom ``$ref`` screens are kept across calls while their dimension
 files are unchanged (:func:`_prep_blooms`).
@@ -80,7 +78,8 @@ shard id), processed in batches of ``unit_batch`` values per Spark
 job. Batching keeps cluster parallelism high (one job covers many
 units — each unit is NOT a separate tiny job) while bounding how much
 work a crash can lose. With no ``partition_col`` the whole table is
-one unit (still resumable at the run level).
+one unit, ``__all__``, even when it is empty (still resumable at the
+run level); the verdicts sink then names its unit column ``unit``.
 
 Every output row carries lineage: ``run_id``, ``snapshot_id`` of the
 input (Iceberg snapshot in production; a content fingerprint here),
@@ -129,8 +128,15 @@ from invalid_spark.pipeline import dedup
 NULL_UNIT = "__null__"
 
 
-def _unit_expr(col: str) -> Column:
-    return F.coalesce(F.col(col).cast("string"), F.lit(NULL_UNIT))
+def _unit_expr(col: str | None) -> tuple[Column, list[str]]:
+    """The work unit of a row, and the units a run has even when the
+    table is empty. A row's unit is its ``col`` value as a string
+    (``NULL_UNIT`` for NULL), and an empty table has no unit; without
+    a ``col`` every row is in ``__all__``, which an empty table has
+    too."""
+    if col is None:
+        return F.lit("__all__"), ["__all__"]
+    return F.coalesce(F.col(col).cast("string"), F.lit(NULL_UNIT)), []
 
 
 # The violations sink's columns as a parquet read infers them (every
@@ -611,22 +617,14 @@ def validate(
     # Whole-table stages exist because their invariant spans units: a
     # key duplicated across two units, a dependency broken across them
     # or a span shared between them is invisible per batch.
-    src = df.select(
-        "*",
-        (
-            F.lit("__all__") if partition_col is None
-            else _unit_expr(partition_col)
-        ).alias("__unit"),
-    )
+    unit, always = _unit_expr(partition_col)
+    src = df.select("*", unit.alias("__unit"))
     keep = ["__unit"]
-    n_rows: dict[str, int] = {}
-    if partition_col is None:
-        vals = ["__all__"]
-    else:
-        # rows per unit: the unit list here, n_rows in the verdicts.
-        # Python's str order (code points) is Spark's (UTF-8 bytes)
-        n_rows = {r[0]: r[1] for r in src.groupBy("__unit").count().collect()}
-        vals = sorted(n_rows)
+    # rows per unit: the unit list here, n_rows in the verdicts.
+    # Python's str order (code points) is Spark's (UTF-8 bytes)
+    n_rows = dict.fromkeys(always, 0)
+    n_rows.update(src.groupBy("__unit").count().collect())
+    vals = sorted(n_rows)
     # the tally after the stage loop is collected: gate its size before
     # anything is written
     _gate_tally(spark, rules, [
@@ -762,30 +760,24 @@ def validate(
     if all_v is not None:
         all_v = all_v.filter(F.col("snapshot_id") == F.lit(snapshot))
         per_unit, per_rule, col_counts = _violation_tally(all_v)
-        verd_dir = os.path.join(out_dir, "verdicts")
-        if partition_col is None:
-            report.partition_verdicts(df, all_v, run_id).write.mode(
-                "overwrite"
-            ).parquet(verd_dir)
-        else:
-            # the row counts collected above, joined to the tally's
-            # per-unit counts; the __schema__ and $reconcile units
-            # match no data unit
-            write_rows(
-                verd_dir,
-                [
-                    (u, n_rows[u], per_unit.get(u, 0),
-                     per_unit.get(u, 0) == 0, run_id)
-                    for u in vals if u in done
-                ],
-                T.StructType([
-                    T.StructField(partition_col, T.StringType()),
-                    T.StructField("n_rows", T.LongType()),
-                    T.StructField("n_violations", T.LongType()),
-                    T.StructField("passed", T.BooleanType()),
-                    T.StructField("run_id", T.StringType()),
-                ]),
-            )
+        # the row counts collected above, joined to the tally's
+        # per-unit counts; the __schema__ and $reconcile units match
+        # no data unit
+        write_rows(
+            os.path.join(out_dir, "verdicts"),
+            [
+                (u, n_rows[u], per_unit.get(u, 0),
+                 per_unit.get(u, 0) == 0, run_id)
+                for u in vals if u in done
+            ],
+            T.StructType([
+                T.StructField(partition_col or "unit", T.StringType()),
+                T.StructField("n_rows", T.LongType()),
+                T.StructField("n_violations", T.LongType()),
+                T.StructField("passed", T.BooleanType()),
+                T.StructField("run_id", T.StringType()),
+            ]),
+        )
         write_rows(
             os.path.join(out_dir, "metrics"),
             [(r, e, n, run_id) for (r, e), n in per_rule.items()],
@@ -795,14 +787,12 @@ def validate(
     # ---- quarantine split (opt-in), only under FULL coverage -----------
     if quarantine and all_v is not None:
         if result.complete:
-            from invalid_spark.model import ErrorType as _ET
-
             # $reconcile violations are KEY-level (row_key is the
             # reconciliation key, not a table row key): a numeric
             # collision with a real row key would silently quarantine
             # an innocent row, so they never feed the split
             row_level = all_v.filter(
-                F.col("error_type") != _ET.RECONCILE_MISMATCH
+                F.col("error_type") != ErrorType.RECONCILE_MISMATCH
             )
             clean, quarantined = report.split_valid(df, row_level, row_key)
             clean.write.mode("overwrite").parquet(

@@ -419,12 +419,23 @@ def test_violations_sink_schema_matches_inferred(spark, img_table, tmp_path):
 JOB_BUDGET = 12
 
 
+# The same call without a partition_col: 10 when the one unit __all__
+# takes its verdict from the same tally as any unit; 14 when Spark
+# grouped the input by task partition for it
+ALL_UNIT_JOB_BUDGET = 10
+
+
+@pytest.mark.parametrize("partition_col,n_writes,budget", [
+    ("shard", 3, JOB_BUDGET),  # two unit batches + the global unique
+    (None, 2, ALL_UNIT_JOB_BUDGET),  # __all__ + the global unique
+], ids=["shard", "None"])
 def test_validate_job_budget_and_no_row_key_join(
-    spark, img_table, tmp_path, monkeypatch
+    spark, img_table, tmp_path, monkeypatch, partition_col, n_writes, budget
 ):
-    """One validate call on a fixed 4-unit table runs at most
-    JOB_BUDGET Spark jobs, and no stage entry's write plan joins on
-    the violation row key (the unit is carried, never re-derived)."""
+    """One validate call on a fixed 4-unit table (or, without a
+    ``partition_col``, one unit) runs at most ``budget`` Spark jobs,
+    and no stage entry's write plan joins on the violation row key
+    (the unit is carried, never re-derived)."""
     from pyspark.sql import DataFrameWriter
 
     df = spark.read.parquet(img_table)
@@ -433,7 +444,7 @@ def test_validate_job_budget_and_no_row_key_join(
     def run(out):
         return runner.validate(
             spark, df, RULES, "image_id", str(tmp_path / out), dims=dims,
-            partition_col="shard", unit_batch=2,
+            partition_col=partition_col, unit_batch=2,
         )
 
     run("warm")  # Python workers and codegen warm, as in a served call
@@ -449,18 +460,20 @@ def test_validate_job_budget_and_no_row_key_join(
 
     monkeypatch.setattr(DataFrameWriter, "parquet", recording)
     sc = spark.sparkContext
-    sc.setJobGroup("job_budget", "one validate call")
+    # one group name per case: the tracker keeps a group's earlier jobs
+    group = f"job_budget_{partition_col}"
+    sc.setJobGroup(group, "one validate call")
     try:
         res = run("timed")
-        jobs = sc.statusTracker().getJobIdsForGroup("job_budget")
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert res.complete
-    assert len(plans) == 3  # two unit batches + the global unique
+    assert len(plans) == n_writes
     for plan in plans:
         joins = [ln for ln in plan.splitlines() if "Join" in ln]
         assert not [ln for ln in joins if "row_key#" in ln], plan
-    assert len(jobs) <= JOB_BUDGET, len(jobs)
+    assert len(jobs) <= budget, len(jobs)
 
 
 def test_resume_refuses_snapshot_mismatch(spark, tmp_path):
@@ -954,12 +967,17 @@ def test_drift_state_swap_crash_recovery(spark, tmp_path):
     assert not os.path.exists(state_dir + ".old")
 
 
-def test_partition_verdicts_and_metrics_equal_groupby(spark, tmp_path):
-    """With a ``partition_col``, the verdicts and metrics sinks equal a
-    Spark ``groupBy`` over this snapshot's rows of the violations sink:
-    same schema, same rows. The data holds a NULL unit, a schema-level
-    violation (its own ``__schema__`` unit, no verdict row) and a
-    whole-table ``$unique`` stage."""
+@pytest.mark.parametrize("partition_col", ["g", None])
+def test_partition_verdicts_and_metrics_equal_groupby(
+    spark, tmp_path, partition_col
+):
+    """The verdicts and metrics sinks equal a Spark ``groupBy`` over
+    this snapshot's rows of the violations sink: same schema, same
+    rows. The data holds a NULL unit (with a ``partition_col``), a
+    schema-level violation (its own ``__schema__`` unit, no verdict
+    row) and a whole-table ``$unique`` stage. Without a
+    ``partition_col`` the one unit is ``__all__`` and the verdicts'
+    unit column is ``unit``."""
     rules = load_rules(
         "k: {$type: $int, $unique: true}\n"
         "v: {$type: $float, $range: {$min: 0, $max: 10}}\n"
@@ -973,20 +991,25 @@ def test_partition_verdicts_and_metrics_equal_groupby(spark, tmp_path):
     )
     out = str(tmp_path / "verd")
     runner.validate(spark, df, rules, "k", out, snapshot="s0",
-                    manifest_dir=os.path.join(out, "m0"), partition_col="g")
+                    manifest_dir=os.path.join(out, "m0"),
+                    partition_col=partition_col)
     res = runner.validate(spark, df.filter("k < 40"), rules, "k", out,
                           snapshot="s1", run_id="r1",
                           manifest_dir=os.path.join(out, "m1"),
-                          partition_col="g", unit_batch=2)
+                          partition_col=partition_col, unit_batch=2)
     viol = res.violations(spark).filter(F.col("snapshot_id") == "s1")
-    units = df.filter("k < 40").groupBy(
-        F.coalesce("g", F.lit(runner.NULL_UNIT)).alias("g")
-    ).agg(F.count(F.lit(1)).alias("n_rows"))
-    per_unit = viol.groupBy(F.col("unit").alias("g")).agg(
+    unit_col = partition_col or "unit"
+    unit = (
+        F.coalesce("g", F.lit(runner.NULL_UNIT)) if partition_col
+        else F.lit("__all__")
+    )
+    units = df.filter("k < 40").groupBy(unit.alias(unit_col)).agg(
+        F.count(F.lit(1)).alias("n_rows"))
+    per_unit = viol.groupBy(F.col("unit").alias(unit_col)).agg(
         F.count(F.lit(1)).alias("n_violations"))
     want_verd = (
-        units.join(per_unit, "g", "left")
-        .select("g", "n_rows",
+        units.join(per_unit, unit_col, "left")
+        .select(unit_col, "n_rows",
                 F.coalesce("n_violations", F.lit(0)).alias("n_violations"))
         .withColumn("passed", F.col("n_violations") == 0)
         .withColumn("run_id", F.lit("r1"))
@@ -995,18 +1018,40 @@ def test_partition_verdicts_and_metrics_equal_groupby(spark, tmp_path):
         F.count(F.lit(1)).alias("n_violations")
     ).withColumn("run_id", F.lit("r1"))
     assert viol.filter(F.col("unit") == "__schema__").count() == 1
-    assert viol.filter(F.col("unit") == runner.NULL_UNIT).count() > 0
+    n_null = viol.filter(F.col("unit") == runner.NULL_UNIT).count()
+    assert (n_null > 0) == (partition_col is not None)
     for got, want in ((res.verdicts(spark), want_verd),
                       (res.metrics(spark), want_met)):
         assert got.schema.simpleString() == want.schema.simpleString()
         assert sorted(map(tuple, got.collect()), key=repr) == sorted(
             map(tuple, want.collect()), key=repr)
     assert res.verdicts(spark).schema.simpleString() == (
-        "struct<g:string,n_rows:bigint,n_violations:bigint,passed:boolean,"
-        "run_id:string>")
+        f"struct<{unit_col}:string,n_rows:bigint,n_violations:bigint,"
+        "passed:boolean,run_id:string>")
     assert res.metrics(spark).schema.simpleString() == (
         "struct<rule_id:string,error_type:string,n_violations:bigint,"
         "run_id:string>")
+
+
+def test_pending_all_unit_writes_no_pass(spark, tmp_path):
+    """A ``max_batches=0`` call on a continuous ``out_dir`` runs no
+    entry: ``__all__`` stays pending, so the verdicts sink holds no
+    row for it, least of all a pass. An empty table is still the one
+    unit ``__all__``, with 0 rows."""
+    rules = load_rules("v: {$type: $int, $range: {$min: 0, $max: 10}}\n")
+    df = spark.range(20).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    out = str(tmp_path / "pend")
+    runner.validate(spark, df, rules, "k", out, snapshot="s0",
+                    manifest_dir=os.path.join(out, "m0"))
+    res = runner.validate(spark, df, rules, "k", out, snapshot="s1",
+                          manifest_dir=os.path.join(out, "m1"), max_batches=0)
+    assert not res.complete and res.units_done == []
+    assert res.verdicts(spark).count() == 0
+    res = runner.validate(spark, df.limit(0), rules, "k", out, snapshot="s2",
+                          run_id="r2", manifest_dir=os.path.join(out, "m2"))
+    assert res.complete and res.units_done == ["__all__"]
+    assert [tuple(r) for r in res.verdicts(spark).collect()] == [
+        ("__all__", 0, 0, True, "r2")]
 
 
 def test_continuous_drift_sinks_equal_standalone_functions(spark, tmp_path):
@@ -1711,6 +1756,41 @@ def test_dupspan_rule_through_runner(spark, tmp_path):
     plan = crc(df, load_rules(
         "nope: {$type: $str, $optional: true, $dupspan: {n: 3}}"))
     assert plan.dupspan_specs == []
+
+
+def test_dupspan_key_repeated_across_units(spark, tmp_path, monkeypatch):
+    """A ``$dupspan`` row key that repeats across units yields one
+    violation row per row, each in its own unit: the unit rides
+    through the span statistics, and the write plan joins nothing on
+    the row key (a join back on it fanned ``k`` rows out to ``k²``)."""
+    from pyspark.sql import DataFrameWriter
+
+    dup = "the quick brown fox jumps over the lazy dog tonight"
+    df = spark.createDataFrame(
+        [("d1", dup, "a"), ("d1", dup, "b"), ("d3", dup, "b"),
+         ("d2", "completely different words appear in this sentence", "a")],
+        "doc_id string, text string, shard string",
+    )
+    rules = load_rules("text: {$type: $str, $dupspan: {n: 3}}\n")
+    plans = []
+    orig = DataFrameWriter.parquet
+
+    def recording(self, path, *args, **kwargs):
+        if os.path.basename(path) == "violations":
+            plans.append(
+                self._df._jdf.queryExecution().optimizedPlan().toString()
+            )
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    res = runner.validate(spark, df, rules, "doc_id", str(tmp_path / "ds"),
+                          partition_col="shard")
+    v = res.violations(spark).filter("error_type = 'dupSpanMismatch'")
+    assert sorted((r["row_key"], r["unit"]) for r in v.collect()) == [
+        ("d1", "a"), ("d1", "b"), ("d3", "b")]
+    (plan,) = [p for p in plans if "dupSpanMismatch" in p]
+    joins = [ln for ln in plan.splitlines() if "Join" in ln]
+    assert not [ln for ln in joins if "row_key#" in ln], plan
 
 
 def test_align_rule_through_runner(spark, tmp_path):

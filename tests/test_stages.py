@@ -7,7 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from invalid_spark import synth
-from invalid_spark.checks import drift, image, refint, stats, unique
+from invalid_spark.checks import (
+    drift, image, refint, relations, stats, unique, vector,
+)
+from invalid_spark.checks.rows import run_row_checks
+from invalid_spark.dsl import load_rules
+from invalid_spark.model import VIOLATION_SCHEMA
+from invalid_spark.pipeline import dedup
 
 N = 400
 
@@ -29,6 +35,70 @@ def test_uniqueness_violations(spark, images):
     assert all(r.error_type == "uniqueMismatch" for r in rows)
     dup_ids = {f"img-{i-1:012d}" for i in planted}
     assert {r.observed for r in rows} == dup_ids
+
+
+# every violation builder over the images fixture plus a unit column
+# ``u`` and two float embeddings; ``keep`` goes to the builders that
+# carry source columns
+BUILDERS = {
+    "rows": lambda d, keep: run_row_checks(
+        d, load_rules("w: {$type: $int, $range: {$min: 1, $max: 100000}}\n"),
+        "image_id", "r", keep_cols=keep),
+    "unique": lambda d, keep: unique.uniqueness_violations(
+        d, "phash", "image_id", "r", keep_cols=keep),
+    "unique_composite": lambda d, keep: unique.composite_uniqueness_violations(
+        d, ["fmt", "w"], "image_id", "r", keep_cols=keep),
+    "ref": lambda d, keep: refint.ref_violations(
+        d, "license_id", synth.licenses_df(d.sparkSession), "license_id",
+        "image_id", "r", keep_cols=keep),
+    "bloom_ref": lambda d, keep: refint.bloom_ref_violations(
+        d, "license_id",
+        refint.bloom_build(synth.licenses_df(d.sparkSession), "license_id"),
+        "license_id", "image_id", run_id="r", keep_cols=keep),
+    "fd": lambda d, keep: relations.fd_violations(
+        d, "fmt", "w", "image_id", "r", keep_cols=keep),
+    "sequence": lambda d, keep: relations.sequence_violations(
+        d, "fmt", "image_id", "w", "image_id", run_id="r", keep_cols=keep),
+    "reconcile": lambda d, keep: relations.reconcile_violations(
+        d, d, "fmt", "fmt", F.col("w"), "image_id", "h", run_id="r"),
+    "vector": lambda d, keep: vector.vector_violations(
+        d, "emb", "image_id", dim=4, run_id="r", keep_cols=keep),
+    "alignment": lambda d, keep: vector.alignment_violations(
+        d, "emb", "emb2", "image_id", 0.5, run_id="r", keep_cols=keep),
+    "caption": lambda d, keep: image.caption_violations(
+        d, d.select("image_id", "caption"), run_id="r", keep_cols=keep),
+    "header": lambda d, keep: image.header_violations(d, run_id="r"),
+    "header_magic_only": lambda d, keep: image.header_violations(
+        d, w_col=None, h_col=None, run_id="r"),
+    "pixel": lambda d, keep: image.pixel_violations(
+        d, run_id="r", keep_cols=keep),
+    "dup_span": lambda d, keep: dedup.dup_span_violations(
+        d, "caption", "image_id", "r", keep_cols=keep),
+    "outlier": lambda d, keep: stats.outlier_violations(
+        d, "w", "image_id", run_id="r"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(BUILDERS))
+def test_violation_builders_share_one_schema(spark, images, name):
+    """Every violation builder returns exactly the
+    ``VIOLATION_SCHEMA`` column names and types, then its
+    ``keep_cols``, so any two builders' rows union by name."""
+    d = images.select(
+        "*",
+        F.col("fmt").alias("u"),
+        F.array(*[(F.col("w") % (j + 3)).cast("float") for j in range(4)])
+        .alias("emb"),
+        F.array(*[(F.col("h") % (j + 2)).cast("float") for j in range(4)])
+        .alias("emb2"),
+    )
+    takes_keep = name not in ("reconcile", "header", "header_magic_only",
+                              "outlier")
+    out = BUILDERS[name](d, ["u"])
+    want = [(f.name, f.dataType) for f in VIOLATION_SCHEMA.fields]
+    if takes_keep:
+        want.append(("u", d.schema["u"].dataType))
+    assert [(f.name, f.dataType) for f in out.schema.fields] == want
 
 
 def test_uniqueness_skewed_hot_key(spark):
