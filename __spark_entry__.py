@@ -4094,45 +4094,46 @@ LEFT JOIN agg ON agg.doc_id = d.doc_id
 def _sql_dup_spans(n: int = 3, min_df: int = 2, thr: float = 0.5) -> str:
     # positional grams via unnest(range(...)) + 1-based inclusive
     # slicing; doc frequency over DISTINCT (doc, gram); interval
-    # union via the same running-max window Spark uses
+    # union via the same running-max window Spark uses; a document is
+    # (doc_id, text), so rows sharing a key but not a text stay apart
     frac = (
         "CASE WHEN n_tokens > 0 THEN "
         "CAST(coalesce(covered_tokens, 0) AS DOUBLE) / n_tokens "
         "ELSE 0.0 END"
     )
     return f"""
-WITH tok AS (SELECT doc_id, {_NTOKS} AS t FROM documents),
+WITH tok AS (SELECT doc_id, text, {_NTOKS} AS t FROM documents),
 posx AS (
-  SELECT doc_id, t, unnest(range(len(t) - {n} + 1)) AS i
+  SELECT doc_id, text, t, unnest(range(len(t) - {n} + 1)) AS i
   FROM tok WHERE len(t) >= {n}
 ),
 pos AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS i,
+  SELECT doc_id, text, CAST(i AS BIGINT) AS i,
          array_to_string(t[i+1:i+{n}], ' ') AS g
   FROM posx
 ),
 dupg AS (
-  SELECT g FROM (SELECT DISTINCT doc_id, g FROM pos)
+  SELECT g FROM (SELECT DISTINCT doc_id, text, g FROM pos)
   GROUP BY g HAVING count(*) >= {min_df}
 ),
-dp AS (SELECT pos.doc_id, pos.i FROM pos JOIN dupg USING (g)),
+dp AS (SELECT pos.doc_id, pos.text, pos.i FROM pos JOIN dupg USING (g)),
 merged AS (
-  SELECT doc_id, i,
+  SELECT doc_id, text, i,
          max(i + {n}) OVER (
-           PARTITION BY doc_id ORDER BY i
+           PARTITION BY doc_id, text ORDER BY i
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
          ) AS prev_end
   FROM dp
 ),
 agg AS (
-  SELECT doc_id,
+  SELECT doc_id, text,
          CAST(count(*) AS BIGINT) AS n_dup_positions,
          CAST(sum(greatest(0, i + {n} - greatest(i, coalesce(prev_end, i))))
               AS BIGINT) AS covered_tokens
-  FROM merged GROUP BY doc_id
+  FROM merged GROUP BY doc_id, text
 ),
 tot AS (
-  SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens,
+  SELECT doc_id, text, CAST(len(t) AS BIGINT) AS n_tokens,
          CAST(greatest(0, len(t) - {n} + 1) AS BIGINT) AS n_positions
   FROM tok
 )
@@ -4141,7 +4142,7 @@ SELECT tot.doc_id, n_tokens, n_positions,
        CAST(coalesce(covered_tokens, 0) AS BIGINT) AS covered_tokens,
        round({frac}, 6) AS coverage_frac,
        ({frac}) >= {thr} AS flagged
-FROM tot LEFT JOIN agg USING (doc_id)
+FROM tot LEFT JOIN agg USING (doc_id, text)
 """
 
 

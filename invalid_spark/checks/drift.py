@@ -307,12 +307,15 @@ def drift_pass(
             # or a category
             if r["column_name"] in names and (side or r["grid"] or r["test"] != "ks"):
                 pairs.setdefault(tuple(r[k] for k in _KEYS), [0, 0])[side] += r[cnt]
+    # one partition: SinglePartition meets the fold's window and
+    # aggregate clustering, so the fold of these driver-held counts
+    # plans no exchange and runs as one job
     frame = local_frame(
         df.sparkSession,
         [(*k, c, p) for k, (c, p) in pairs.items()],
         "column_name string, test string, bucket long, cat string, "
         "c_cur long, c_prev long",
-    )
+    ).coalesce(1)
     return _results(covered, stored_grids, frame), state
 
 

@@ -44,7 +44,7 @@ Two typing modes per column:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, fields, replace
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -997,48 +997,71 @@ class _Compiler:
             self._scalar_checks(col, child, path, key, gate, dynamic)
 
 
+# The latest plan compiled, keyed by (session, rules fingerprint,
+# schema, strict). One entry, replaced on a miss: a continuous loop
+# validates the same rules against the same schema call after call.
+_PLAN_CACHE: dict[tuple, RowCheckPlan] = {}
+
+
+def _copy_plan(plan: RowCheckPlan) -> RowCheckPlan:
+    """A copy whose list fields are fresh lists: a caller may rebind or
+    extend any of them without touching the cached plan."""
+    return replace(plan, **{
+        f.name: list(getattr(plan, f.name))
+        for f in fields(plan) if isinstance(getattr(plan, f.name), list)
+    })
+
+
 def compile_row_checks(
     df: DataFrame, rules: RuleSet, strict: bool = False
 ) -> RowCheckPlan:
     """``strict=True`` additionally flags top-level data columns no
     rule covers (schema-level ``extraKey`` violations). The reference
     is permissive by design — its walk iterates rules, not data
-    (rule.go:152-157) — so strict mode is off by default."""
-    c = _Compiler(df.schema)
+    (rule.go:152-157) — so strict mode is off by default.
+
+    The latest plan is kept and a copy of it returned while the
+    SparkSession, the rules fingerprint, the schema (names, types,
+    nullability) and ``strict`` are unchanged: the plan's Columns are
+    unresolved expressions, valid against any frame of that schema,
+    and every compile-time check below depends only on the schema."""
+    schema = df.schema
+    key = (df.sparkSession, rules.fingerprint(), schema, strict)
+    plan = _PLAN_CACHE.get(key)
+    if plan is None:
+        plan = _compile(df, schema, rules, strict)
+        _PLAN_CACHE.clear()
+        _PLAN_CACHE[key] = plan
+    return _copy_plan(plan)
+
+
+def _compile(
+    df: DataFrame, schema: T.StructType, rules: RuleSet, strict: bool
+) -> RowCheckPlan:
+    c = _Compiler(schema)
     c.walk(rules.root)
-    # $expr predicates must resolve to BOOLEAN against this table —
-    # schema-only analysis (no job), reference NewRule-style compile
-    # errors instead of an executor-side analysis exception
-    for pth, sql in c.plan.expr_specs:
-        try:
-            pdt = df.select(F.expr(sql).alias("p")).schema[0].dataType
-        except Exception as e:
-            raise ValueError(
-                f"$expr on [{pth}] does not compile against the table "
-                f"schema: {e}"
-            ) from e
-        if not isinstance(pdt, T.BooleanType):
-            raise ValueError(
-                f"$expr on [{pth}] must be a BOOLEAN expression, got "
-                f"{pdt.simpleString()}"
-            )
-    # $when predicates share the same compile-time contract
-    for pth, sql in c.plan.when_specs:
-        try:
-            pdt = df.select(F.expr(sql).alias("p")).schema[0].dataType
-        except Exception as e:
-            raise ValueError(
-                f"$when on [{pth}] does not compile against the table "
-                f"schema: {e}"
-            ) from e
-        if not isinstance(pdt, T.BooleanType):
-            raise ValueError(
-                f"$when on [{pth}] must be a BOOLEAN expression, got "
-                f"{pdt.simpleString()}"
-            )
+    # $expr and $when predicates must resolve to BOOLEAN against this
+    # table — schema-only analysis (no job), reference NewRule-style
+    # compile errors instead of an executor-side analysis exception
+    for directive, specs in (
+        ("$expr", c.plan.expr_specs), ("$when", c.plan.when_specs)
+    ):
+        for pth, sql in specs:
+            try:
+                pdt = df.select(F.expr(sql).alias("p")).schema[0].dataType
+            except Exception as e:
+                raise ValueError(
+                    f"{directive} on [{pth}] does not compile against the "
+                    f"table schema: {e}"
+                ) from e
+            if not isinstance(pdt, T.BooleanType):
+                raise ValueError(
+                    f"{directive} on [{pth}] must be a BOOLEAN expression, "
+                    f"got {pdt.simpleString()}"
+                )
     if strict:
         ruled = {r.key for r in rules.root.children}
-        for f in df.schema.fields:
+        for f in schema.fields:
             if f.name not in ruled:
                 c._emit_schema(
                     f.name, f.name, ErrorType.EXTRA_KEY,

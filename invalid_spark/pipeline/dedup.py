@@ -1183,27 +1183,38 @@ def dup_span_stats(
     window over positions (sorted within a doc, no self-join). No
     all-pairs stage anywhere; the window partitions by doc id, so
     skew is bounded by the longest single document.
+
+    A document is the pair (``key_col``, text): rows that share a key
+    but not their text stay separate documents, so no row's covered
+    span exceeds its own tokens. Frames carry the md5 of the text
+    (``h``) in its place.
     """
     from pyspark.sql import Window
 
     toks = T.tokens(T.normalize(F.col(text_col)))
     keep = list(keep_cols or [])
-    base = df.select(F.col(key_col).alias("id"), toks.alias("t"), *keep)
+    doc = ["id", "h"]
+    base = df.select(
+        F.col(key_col).alias("id"),
+        F.md5(F.col(text_col).cast("string")).alias("h"),
+        toks.alias("t"),
+        *keep,
+    )
     pos = (
         base.filter(F.size("t") >= n)
-        .select("id", F.posexplode(_grams(F.col("t"), n)).alias("i", "g"))
+        .select(*doc, F.posexplode(_grams(F.col("t"), n)).alias("i", "g"))
     )
     dupg = (
-        pos.select("id", "g")
+        pos.select(*doc, "g")
         .distinct()
         .groupBy("g")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") >= min_df)
         .select("g")
     )
-    dp = pos.join(dupg, "g").select("id", "i")
+    dp = pos.join(dupg, "g").select(*doc, "i")
     w = (
-        Window.partitionBy("id")
+        Window.partitionBy(*doc)
         .orderBy("i")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -1214,15 +1225,15 @@ def dup_span_stats(
         - F.greatest(F.col("i"), F.coalesce(prev_end, F.col("i"))),
     )
     agg = (
-        dp.select("id", contrib.alias("c"))
-        .groupBy("id")
+        dp.select(*doc, contrib.alias("c"))
+        .groupBy(*doc)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_dup_positions"),
             F.sum("c").cast("long").alias("covered_tokens"),
         )
     )
     tot = base.select(
-        "id",
+        *doc,
         F.size("t").cast("long").alias("n_tokens"),
         F.greatest(F.lit(0), F.size("t") - n + 1)
         .cast("long")
@@ -1234,7 +1245,7 @@ def dup_span_stats(
         F.col("covered_tokens").cast("double") / F.col("n_tokens"),
     ).otherwise(F.lit(0.0))
     return (
-        tot.join(agg, "id", "left")
+        tot.join(agg, doc, "left")
         .withColumn(
             "n_dup_positions",
             F.coalesce("n_dup_positions", F.lit(0)).cast("long"),

@@ -606,7 +606,9 @@ def validate(
         # done, so a rerun against a fixed schema starts clean
         result.fail_fast = True
         return result
-    plan.schema_violations = []  # batches emit row-level checks only
+    # batches emit row-level checks only (the plan is this call's copy:
+    # compile_row_checks keeps its cached plan intact)
+    plan.schema_violations = []
 
     # ---- the stage table -----------------------------------------------
     # One entry (units it marks, build, fixed unit name or None) per

@@ -492,3 +492,52 @@ def test_top_fraction_by_group_matches_reference(spark, rows, frac):
     assert {r["doc_id"]: r["keep"] for r in got} == {
         i: keep(g, w) for i, (g, w) in enumerate(rows)
     }
+
+
+_dup_span_rows = st.lists(
+    st.tuples(
+        st.sampled_from(["k1", "k2", "k3"]),
+        st.lists(st.sampled_from("abc"), max_size=7).map(" ".join),
+    ),
+    min_size=1, max_size=6,
+)
+
+
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_dup_span_rows)
+@example([("d1", "a b"), ("d1", "a b c a b c"), ("d3", "a b c a b c")])
+@example([("k1", "a b c"), ("k1", "a b c"), ("k2", "c a b c")])  # a repeated row
+def test_dup_span_coverage_matches_reference(spark, rows):
+    """``dup_span_stats`` covers what a plain-Python interval union
+    covers, with a document being (key, text): a 3-gram position is
+    duplicated when at least two documents hold the gram, and a row's
+    covered tokens never exceed its own tokens."""
+    from invalid_spark.model import local_frame
+    from invalid_spark.pipeline import dedup
+
+    n = 3
+    grams = {
+        doc: [tuple(doc[1].split()[i:i + n])
+              for i in range(len(doc[1].split()) - n + 1)]
+        for doc in set(rows)
+    }
+    holders: dict[tuple, set] = {}
+    for doc, gs in grams.items():
+        for g in gs:
+            holders.setdefault(g, set()).add(doc)
+
+    def covered(doc):
+        cells = {i + j for i, g in enumerate(grams[doc])
+                 if len(holders[g]) >= 2 for j in range(n)}
+        return len(cells)
+
+    df = local_frame(spark, [(i, k, t) for i, (k, t) in enumerate(rows)],
+                     "row long, doc_id string, text string")
+    got = dedup.dup_span_stats(df, n=n, keep_cols=["row"]).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        doc = rows[r["row"]]
+        assert r["n_tokens"] == len(doc[1].split())
+        assert r["covered_tokens"] <= r["n_tokens"]
+        assert r["covered_tokens"] == covered(doc)

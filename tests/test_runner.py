@@ -1850,8 +1850,12 @@ def test_warm_append_call_compiles_few_classes(spark, tmp_path):
     ``$drift``, ``$assert``, ``$anomaly``, a ``partition_col``) reuses
     the generated classes of the calls before it and keeps its job
     count: with a codegen cache smaller than one call's classes, every
-    call recompiles about a hundred of them."""
+    call recompiles about a hundred of them. It also keeps its py4j
+    round trips: PySpark's per-call call-site capture costs about 10
+    round trips for every DataFrame, Column and functions call, and a
+    recompiled row-check plan costs hundreds more."""
     import shutil
+    import threading
 
     from invalid_spark.io import TableLog
 
@@ -1888,11 +1892,25 @@ def test_warm_append_call_compiles_few_classes(spark, tmp_path):
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     before = compiles.METRIC_COMPILATION_TIME().getCount()
     sc = spark.sparkContext
+    # round trips of this thread only: py4j's finalizer thread sends the
+    # object deletes whenever Python's garbage collector runs
+    client = sc._gateway._gateway_client
+    caller = threading.get_ident()
+    send = client.send_command
+    trips = []
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == caller:
+            trips.append(1)
+        return send(*args, **kwargs)
+
     sc.setJobGroup("warm_append", "one warm validate_appended call")
+    client.send_command = counted
     try:
         res = append_and_validate(2)
-        jobs = sc.statusTracker().getJobIdsForGroup("warm_append")
     finally:
+        del client.send_command
+        jobs = sc.statusTracker().getJobIdsForGroup("warm_append")
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_compiled = compiles.METRIC_COMPILATION_TIME().getCount() - before
     assert res.complete
@@ -1900,11 +1918,86 @@ def test_warm_append_call_compiles_few_classes(spark, tmp_path):
     assert {r["column"] for r in drift.collect()} == {
         "l_quantity", "l_returnflag"}
     assert n_compiled <= 10, n_compiled
-    # 17: one violations tally, one drift pass, a kept Bloom screen and
-    # a one-exchange composite `$unique` (18 with a salted two-stage
-    # `$unique`; 27 when Spark wrote the verdicts, metrics and drift
-    # state and rebuilt the screen on every call)
-    assert len(jobs) <= 17, len(jobs)
+    # 16: one violations tally, one drift pass and its fold in one job
+    # (a fold over a multi-partition local frame plans an exchange: 17),
+    # a kept Bloom screen and a one-exchange composite `$unique` (18
+    # with a salted two-stage `$unique`; 27 when Spark wrote the
+    # verdicts, metrics and drift state and rebuilt the screen on every
+    # call)
+    assert len(jobs) <= 16, len(jobs)
+    # 1,820 measured: 4,570 with the call-site capture on, 2,350 with
+    # the row-check plan recompiled, 6,470 with both
+    assert len(trips) <= 2200, len(trips)
+
+
+def test_row_check_plan_is_reused_per_rules_and_schema(spark, monkeypatch):
+    """``compile_row_checks`` keeps the latest plan: the same rules
+    against the same schema walk the rules once, and each call gets its
+    own copy. A changed column type, an added column or other rules
+    recompile, and a ``$expr`` that is BOOLEAN against the first schema
+    still raises against a schema where it is not."""
+    from invalid_spark.checks import rows
+    from invalid_spark.checks.rows import compile_row_checks
+
+    calls = []  # one per rule-tree walk: the top-level call has no prefix
+    walk = rows._Compiler.walk
+
+    def counted(self, rule, prefix=""):
+        if not prefix:
+            calls.append(1)
+        return walk(self, rule, prefix)
+
+    monkeypatch.setattr(rows._Compiler, "walk", counted)
+    rules = load_rules(
+        "w: {$type: $int, $range: {$min: 0, $max: 9}, $expr: {sql: 'flag'}}\n"
+        "tag: {$type: $str, $of: [a, b]}\n"
+    )
+    df = spark.range(3).select(
+        F.col("id").alias("w"), (F.col("id") > 0).alias("flag"),
+        F.lit("a").alias("tag"),
+    )
+    first = compile_row_checks(df, rules)
+    n_walks = len(calls)
+    assert n_walks >= 1
+    again = compile_row_checks(df.filter("w > 0"), rules)  # same schema
+    assert len(calls) == n_walks
+    assert again is not first and again.checks is not first.checks
+    assert len(again.checks) == len(first.checks)
+    again.checks.clear()
+    assert len(compile_row_checks(df, rules).checks) == len(first.checks)
+    # another type of the same column
+    compile_row_checks(df.withColumn("tag", F.lit(1)), rules)
+    assert len(calls) == n_walks + 1
+    # an added column
+    compile_row_checks(df.withColumn("extra", F.lit(0)), rules)
+    assert len(calls) == n_walks + 2
+    # other rules, same schema
+    other = load_rules("w: {$type: $int}\n")
+    assert len(compile_row_checks(df, other).checks) < len(first.checks)
+    assert len(calls) == n_walks + 3
+    # `flag` is BOOLEAN above and BIGINT here: the type check reruns
+    compile_row_checks(df, rules)
+    with pytest.raises(ValueError, match="must be a BOOLEAN expression"):
+        compile_row_checks(df.withColumn("flag", F.col("w")), rules)
+
+
+def test_cached_plan_keeps_schema_violations_across_calls(spark, tmp_path):
+    """``runner.validate`` empties its plan's schema-level violations
+    after writing them: two calls on the same rules and schema, each
+    into a fresh ``out_dir``, both write their ``__schema__`` row (a
+    shared cached plan would leave the second call none)."""
+    rules = load_rules(
+        "k: {$type: $int}\n"
+        "tag: {$type: $int}\n"            # a string column: schema-level
+        "gone: {$type: $str, $optional: true}\n"
+    )
+    df = spark.range(5).select(
+        F.col("id").alias("k"), F.col("id").cast("string").alias("tag"))
+    for i in range(2):
+        res = runner.validate(spark, df, rules, "k", str(tmp_path / f"o{i}"))
+        (row,) = res.violations(spark).filter(
+            F.col("unit") == "__schema__").collect()
+        assert (row["column"], row["row_key"]) == ("tag", None)
 
 
 def test_table_level_pass_matches_standalone_functions(spark, tmp_path, monkeypatch):

@@ -1758,6 +1758,47 @@ def test_multi_state_scan_count_independent_of_rules(spark, tmp_path, monkeypatc
     assert "FileScan" not in plan, plan
 
 
+def test_drift_pass_folds_stored_state_in_one_job(spark, monkeypatch):
+    """``drift_pass`` folds its driver-held pair frame (ks and chi2
+    columns against stored state) in ONE Spark job: the frame is one
+    partition, so the fold's window and aggregate need no exchange. The
+    fold's rows equal the same fold over the frame as several
+    partitions."""
+    from invalid_spark.model import local_frame
+
+    df = spark.range(600).select(
+        F.col("id"),
+        (F.col("id") % 97 * 1.5).alias("x"),
+        (F.col("id") % 7).cast("string").alias("c"),
+    )
+    specs = [("x", {"test": "ks"}), ("c", {"test": "chi2"})]
+    prev, cur = df.filter("id % 2 = 0"), df.filter("id % 2 = 1")
+    stored = drift.state_frame(prev, specs, drift.multi_grid(prev, specs)).collect()
+    frames = []
+    results = drift._results
+    monkeypatch.setattr(
+        drift, "_results", lambda sp, g, pairs: frames.append(pairs) or results(sp, g, pairs)
+    )
+    want = drift.drift_pass(cur, specs, {}, stored)[0]
+    (pairs,) = frames
+    assert set(want) == {"x", "c"}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("drift_fold", "the stored-state fold")
+    try:
+        got = results(specs, drift._stored_grids(stored), pairs)
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup("drift_fold")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) == 1, jobs
+    assert got == want
+
+    spread = local_frame(spark, pairs.collect(), pairs.schema).repartition(3)
+    keys, tests = ["column_name", "test"], {"ks", "chi2"}
+    assert sorted(drift._fold(pairs, keys, tests).collect()) == sorted(
+        drift._fold(spread, keys, tests).collect())
+
+
 def test_multi_grid_clip_bounds_outliers(spark):
     """clip in the spec switches that column's grid to quantile
     bounds; unclipped columns in the same single-pass agg keep
@@ -2670,6 +2711,30 @@ def test_dup_span_stats_planted(spark):
     assert out[5]["n_positions"] == 0 and out[5]["coverage_frac"] == 0.0
     # unique doc
     assert out[7]["covered_tokens"] == 0 and not out[7]["flagged"]
+
+
+def test_dup_span_documents_are_key_and_text(spark):
+    """Rows that share a key but not their text are separate documents:
+    a short unique row whose key a duplicated row also carries is not
+    flagged, and no row covers more tokens than it has."""
+    from invalid_spark.pipeline import dedup as D
+
+    long = "the quick brown fox jumps over the lazy dog every day"
+    df = spark.createDataFrame(
+        [("d1", "short unique words", "a"), ("d1", long, "b"), ("d3", long, "b")],
+        "doc_id string, text string, u string",
+    )
+    out = {
+        (r["id"], r["u"]): r
+        for r in D.dup_span_stats(df, n=3, keep_cols=["u"]).collect()
+    }
+    assert len(out) == 3
+    short = out[("d1", "a")]
+    assert (short["n_tokens"], short["covered_tokens"]) == (3, 0)
+    assert short["coverage_frac"] == 0.0 and not short["flagged"]
+    for k in (("d1", "b"), ("d3", "b")):
+        assert out[k]["n_tokens"] == out[k]["covered_tokens"] == 11
+        assert out[k]["coverage_frac"] == 1.0 and out[k]["flagged"]
 
 
 def test_unigram_logprob_planted(spark):
