@@ -4127,7 +4127,7 @@ merged AS (
 ),
 agg AS (
   SELECT doc_id, text,
-         CAST(count(*) AS BIGINT) AS n_dup_positions,
+         CAST(count(DISTINCT i) AS BIGINT) AS n_dup_positions,
          CAST(sum(greatest(0, i + {n} - greatest(i, coalesce(prev_end, i))))
               AS BIGINT) AS covered_tokens
   FROM merged GROUP BY doc_id, text

@@ -654,7 +654,6 @@ def chi2_vs_expected(
     col: str,
     expected: dict[str, float],
     alpha: float = 0.05,
-    materialize: bool = True,
 ) -> DataFrame:
     """Chi-square goodness-of-fit against a DECLARED expected
     distribution — the class-balance gate ("labels should be 50/25/25")
@@ -671,11 +670,10 @@ def chi2_vs_expected(
     Fully distributed and collect-free: one hash-aggregate of the
     corpus to category counts (map-side partial combine), then
     arithmetic on the categories-sized frame. The counts frame is
-    eagerly localCheckpoint-ed (``materialize=True``) so the total and
-    the statistic — which both consume it — read the materialized
-    categories instead of re-scanning the corpus (same single-scan
-    device as ``curate.curation_decisions``; pass ``materialize=False``
-    to stay lazy in a plan-inspection context). The verdict compares the
+    eagerly localCheckpoint-ed so the total and the statistic — which
+    both consume it — read the materialized categories instead of
+    re-scanning the corpus (same single-scan device as
+    ``curate.curation_decisions``). The verdict compares the
     statistic to a chi-square critical value computed AT COMPILE TIME
     from (k-1, alpha) via the shared :func:`mathutil.chi2_critical`
     bisection, so the returned single row needs no driver round-trip
@@ -699,9 +697,8 @@ def chi2_vs_expected(
     counts = (
         df.groupBy(F.col(col).cast("string").alias("cat"))
         .agg(F.count(F.lit(1)).alias("obs"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
     j = counts.join(tgt, "cat", "full_outer").select(
         F.coalesce(F.col("obs"), F.lit(0)).cast("long").alias("obs"),
         F.col("p"),

@@ -50,18 +50,10 @@ def pixel_violations(
     phash_col: str | None = "phash",
     psnr_min: float = 40.0,
     run_id: str = "",
-    parallelism: int | None = None,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Decode/PSNR/dims/phash checks over Arrow record batches
     (``mapInArrow``: no pandas conversion on either side).
-
-    ``parallelism``: repartition the pruned input to this many tasks
-    before the Python stage. Each Python task pays a fixed start-up
-    cost (~0.3 CPU-s on CPython 3.11) before its first row, so more
-    tasks than cores buys nothing. Leave it unset unless the scan has
-    fewer partitions than there are cores; then set it to the core
-    count.
 
     ``keep_cols``: source columns carried through onto every emitted
     violation row, after the violation columns (the runner carries
@@ -71,8 +63,6 @@ def pixel_violations(
     if phash_col:
         cols.append(phash_col)
     pruned = df.select(*cols, F.spark_partition_id().alias("pid"), *keep)
-    if parallelism:
-        pruned = pruned.repartition(parallelism)
     schema = StructType(_OUT_SCHEMA.fields + [pruned.schema[c] for c in keep])
     out_cols = _OUT_SCHEMA.fieldNames()
 

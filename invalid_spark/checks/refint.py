@@ -66,14 +66,14 @@ def ref_violations(
     )
 
 
-def _bloom_pos(key_s: Column, i: int, m_bits: int, salt: str) -> Column:
+def _bloom_pos(key_s: Column, i: int, m_bits: int) -> Column:
     """Bit position ``i`` for one key: 60 bits of md5 mod ``m_bits``.
 
     15 hex chars = 60 bits fits a signed BIGINT, and DuckDB replays
     it as ``CAST('0x' || substr(md5(...), 1, 15) AS BIGINT)`` — the
     same construction every md5-bucket operator in this repo uses.
     """
-    h = F.md5(F.concat(F.lit(f"{salt}-{i}-"), key_s))
+    h = F.md5(F.concat(F.lit(f"{BLOOM_SALT}-{i}-"), key_s))
     return F.pmod(
         F.conv(F.substring(h, 1, 15), 16, 10).cast("bigint"),
         F.lit(m_bits),
@@ -85,7 +85,6 @@ def bloom_build(
     dim_key: str,
     m_bits: int = 1 << 20,
     k: int = 3,
-    salt: str = BLOOM_SALT,
 ) -> DataFrame:
     """Fold a dimension's key column into a Bloom bit array.
 
@@ -100,7 +99,7 @@ def bloom_build(
     key_s = F.col(dim_key).cast("string")
     pos = dim.select(
         F.explode(
-            F.array(*[_bloom_pos(key_s, i, m_bits, salt) for i in range(k)])
+            F.array(*[_bloom_pos(key_s, i, m_bits) for i in range(k)])
         ).alias("pos")
     )
     return (
@@ -121,7 +120,6 @@ def bloom_ref_violations(
     row_key: str,
     m_bits: int = 1 << 20,
     k: int = 3,
-    salt: str = BLOOM_SALT,
     run_id: str = "",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -144,7 +142,7 @@ def bloom_ref_violations(
         F.spark_partition_id().alias("partition_id"),
         *keep,
         *[
-            _bloom_pos(key_s, i, m_bits, salt).alias(f"__p{i}")
+            _bloom_pos(key_s, i, m_bits).alias(f"__p{i}")
             for i in range(k)
         ],
     )

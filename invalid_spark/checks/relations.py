@@ -169,36 +169,30 @@ def reconcile_aggregates(
     order: str,
     dim_value: str,
     tol: float = 0.01,
-    exact_fold: bool = True,
 ) -> DataFrame:
     """Per-key comparison of a fact-side aggregate against a value
     stored on the dimension → ``(key, fact_value, dim_value, status)``
     with status ok / mismatch / missing_fact / missing_dim.
 
-    ``exact_fold=True`` (default) folds each key's terms in canonical
-    ``order``-sorted sequence (``sort_array`` + ``F.aggregate`` strict
-    left fold), so the float sum is deterministic and bit-replayable
-    by a SQL oracle.  Requires ``order`` unique within a key and group
-    sizes bounded (lineitems-per-order ~7; the collected list lives in
-    one aggregation buffer).  For unbounded groups pass
-    ``exact_fold=False`` for a plain ``sum`` (order-dependent last-ulp,
-    still one shuffle, no buffer growth)."""
+    Each key's terms fold in canonical ``order``-sorted sequence
+    (``sort_array`` + ``F.aggregate`` strict left fold), so the float
+    sum is deterministic and bit-replayable by a SQL oracle. Requires
+    ``order`` unique within a key and group sizes bounded
+    (lineitems-per-order ~7; the collected list lives in one
+    aggregation buffer)."""
     terms = fact.select(
         F.col(fact_key).alias("key"),
         F.col(order).alias("__ord"),
         term.cast("double").alias("__term"),
     )
-    if exact_fold:
-        folded = F.aggregate(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("__ord", "__term"))),
-                lambda x: x["__term"],
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        )
-    else:
-        folded = F.sum("__term")
+    folded = F.aggregate(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("__ord", "__term"))),
+            lambda x: x["__term"],
+        ),
+        F.lit(0.0),
+        lambda a, b: a + b,
+    )
     agg = terms.groupBy("key").agg(folded.alias("fact_value"))
     d = dim.select(
         F.col(dim_key).alias("__dkey"),
@@ -235,13 +229,11 @@ def reconcile_violations(
     dim_value: str,
     tol: float = 0.01,
     run_id: str = "",
-    exact_fold: bool = True,
 ) -> DataFrame:
     """``VIOLATION_SCHEMA`` rows for every non-ok key (row_key = the
     reconciliation key — these are key-level, not row-level, failures)."""
     rec = reconcile_aggregates(
         fact, dim, fact_key, dim_key, term, order, dim_value, tol,
-        exact_fold=exact_fold,
     ).filter(F.col("status") != "ok")
     return as_violations(
         rec, "key", dim_value, f"{fact_key}~{dim_value}",

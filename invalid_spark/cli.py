@@ -65,11 +65,6 @@ def main(argv: list[str] | None = None) -> int:
     pv.add_argument("--prev-table", default=None,
                     help="prior snapshot for $drift checks")
     pv.add_argument("--run-id", default=None)
-    pv.add_argument("--udf-parallelism", type=int, default=None,
-                    help="repartition the pixel-check input to this many "
-                    "Python tasks; each task pays a fixed start-up cost, "
-                    "so leave it unset unless the scan has fewer "
-                    "partitions than cores (then set it to the core count)")
     pv.add_argument("--quarantine", action="store_true",
                     help="also write clean/ and quarantine/ row splits "
                     "(only once every unit is validated)")
@@ -205,7 +200,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from invalid_spark import runner
     from invalid_spark.dsl import load_rules_file
-    from invalid_spark.io import snapshot_id
+    from invalid_spark.io import snapshot_id, write_text
 
     if args.cmd == "report":
         import os
@@ -217,10 +212,7 @@ def main(argv: list[str] | None = None) -> int:
             spark, args.out, snapshot=snap, max_samples=args.max_samples
         )
         if args.write:
-            path = os.path.join(args.out, "report.md")
-            with open(path + ".tmp", "w") as f:
-                f.write(text)
-            os.replace(path + ".tmp", path)
+            write_text(os.path.join(args.out, "report.md"), text)
         sys.stdout.write(text)
         return 0
 
@@ -459,7 +451,6 @@ def main(argv: list[str] | None = None) -> int:
             partition_col=args.partition_col,
             unit_batch=args.unit_batch,
             prev_df=prev_df,
-            udf_parallelism=args.udf_parallelism,
             quarantine=args.quarantine,
         )
     else:
@@ -471,7 +462,6 @@ def main(argv: list[str] | None = None) -> int:
             partition_col=args.partition_col,
             unit_batch=args.unit_batch,
             prev_df=prev_df,
-            udf_parallelism=args.udf_parallelism,
             quarantine=args.quarantine,
         )
     if args.report:

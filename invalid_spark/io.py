@@ -1,19 +1,43 @@
-"""Table + snapshot abstraction.
+"""Table + snapshot abstraction, and the driver-side state around it.
 
 Production target is Iceberg (`spark.read.format("iceberg")`,
 snapshot-pinned reads, `writeTo(...).append()`); this sandbox has no
 Iceberg jars, so the same contract is provided over parquet
-directories plus a JSON manifest:
+directories plus JSON files — the Iceberg-metadata stand-in:
 
-- :func:`snapshot_id` — deterministic fingerprint of a parquet dir
-  (file names + sizes), standing in for an Iceberg snapshot id: a
-  resumed run can verify it is reading the same table state it
-  checkpointed against.
+- :func:`snapshot_id` — deterministic fingerprint of a parquet path,
+  standing in for an Iceberg snapshot id: a resumed run can verify it
+  is reading the same table state it checkpointed against.
 - :class:`Manifest` — a directory of one JSON file per completed
   work unit. One-file-per-unit makes completion marks atomic at the
   filesystem level (rename semantics), which is exactly what Iceberg
   commit metadata gives us in production; a kill between units never
   corrupts the manifest.
+- :class:`TableLog` — the snapshot log: which files a table added
+  since the last validated state.
+
+All driver-side state — these three, and the runner's
+``schema_state.json``, ``mode.json``, ``drift_state`` and
+``metrics_history`` — is identified, published and read back one way:
+
+- **Fingerprint**: a file set is its :func:`file_entries` listing,
+  ``{relative path: [size, mtime_ns]}``, and :func:`entries_id` hashes
+  it: :func:`snapshot_id`, the :class:`TableLog` ids and the runner's
+  Bloom-screen key. The mtime counts because a size cannot see a
+  same-size in-place rewrite (one changed value in a fixed-width
+  column), and a resume pinned to an id that misses it would skip the
+  rewritten data and keep stale verdicts; a content hash would see it
+  too, but costs the full data read append detection must not pay.
+- **Publish**: :func:`publish` makes the new file or directory at the
+  hidden sibling ``.<name>.tmp`` (never listed by a Spark or Arrow
+  reader of the parent), then renames it into place: a file in one
+  ``os.replace``; a directory by setting the old one aside at
+  ``<path>.old``, promoting the new one and removing the old. Stale
+  copies a crash left are cleared first; no reader sees a partial file.
+- **Recovery**: a crash mid-swap leaves only ``<path>.old``; every
+  state read (:func:`read_json`, :func:`invalid_spark.model.read_rows`)
+  runs :func:`recover` first, so a read returns the last completed
+  publish, and absent state reads as none.
 """
 
 from __future__ import annotations
@@ -21,28 +45,102 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from typing import Iterable
+import shutil
+from collections.abc import Callable, Iterable
+from pathlib import Path
+
+
+def file_entries(
+    root: str, files: Iterable[str] | None = None
+) -> dict[str, list[int]]:
+    """``{path relative to root: [size, mtime_ns]}`` of ``files``, or,
+    when None, of the data files at ``root``: every file under a
+    directory, or ``root`` itself when it is a file (keyed by its base
+    name). Names starting ``_`` or ``.`` are table metadata
+    (``_SUCCESS``, ``_spark_metadata/``, ``_delta_log/``, ``.crc``
+    files), never data; a directory so named is pruned whole, as its
+    files often are not so named themselves."""
+    if files is None:
+        files = []
+        if os.path.isdir(root):
+            for d, dirs, names in os.walk(root):
+                dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+                files += [
+                    os.path.join(d, f) for f in sorted(names)
+                    if not f.startswith(("_", "."))
+                ]
+        elif os.path.exists(root):
+            files = [root]
+            root = os.path.dirname(os.path.abspath(root))
+    out = {}
+    for p in files:
+        st = os.stat(p)
+        out[os.path.relpath(p, root)] = [st.st_size, st.st_mtime_ns]
+    return out
+
+
+def entries_id(entries: dict[str, list[int]]) -> str:
+    """The 16-hex-digit id of a :func:`file_entries` listing."""
+    lines = sorted(
+        f"{p}:{size}:{mtime}" for p, (size, mtime) in entries.items()
+    )
+    return hashlib.md5("\n".join(lines).encode()).hexdigest()[:16]
 
 
 def snapshot_id(path: str) -> str:
     """Deterministic fingerprint of a parquet directory or file."""
-    entries = []
+    return entries_id(file_entries(path))
+
+
+def _remove(path: str) -> None:
     if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            # prune hidden/metadata DIRECTORIES too (_spark_metadata/,
-            # _delta_log/, .crc dirs): their leaf files are often not
-            # '_'-prefixed themselves (e.g. _delta_log/000…json) and are
-            # never table data
-            _dirs[:] = [d for d in _dirs if not d.startswith(("_", "."))]
-            for f in sorted(files):
-                if f.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, f)
-                entries.append(f"{os.path.relpath(p, path)}:{os.path.getsize(p)}")
-    elif os.path.exists(path):
-        entries.append(f"{os.path.basename(path)}:{os.path.getsize(path)}")
-    h = hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()
-    return h[:16]
+        shutil.rmtree(path)
+    elif os.path.lexists(path):
+        os.remove(path)
+
+
+def publish(path: str, write: Callable[[str], object]) -> None:
+    """Publish new content at ``path`` atomically: ``write(tmp)`` makes
+    it, as a file or a directory, at the hidden sibling ``tmp``, then
+    it is renamed into place (a directory by the set-aside swap the
+    module docstring describes)."""
+    path = path.rstrip(os.sep)
+    parent, name = os.path.split(path)
+    tmp = os.path.join(parent, f".{name}.tmp")
+    old = path + ".old"
+    _remove(tmp)
+    write(tmp)
+    if not os.path.isdir(tmp):
+        os.replace(tmp, path)
+        return
+    _remove(old)
+    if os.path.exists(path):
+        os.replace(path, old)
+    os.replace(tmp, path)
+    _remove(old)
+
+
+def write_text(path: str, text: str) -> None:
+    """Publish ``text`` as the file at ``path`` (:func:`publish`)."""
+    publish(path, lambda tmp: Path(tmp).write_text(text, encoding="utf-8"))
+
+
+def recover(path: str) -> bool:
+    """Promote ``<path>.old`` to ``path`` when a crash mid-swap left
+    only the set-aside copy; True when ``path`` exists afterwards."""
+    old = path.rstrip(os.sep) + ".old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.replace(old, path)
+    return os.path.exists(path)
+
+
+def read_json(path: str):
+    """The JSON document at ``path`` (recovered first), or None when
+    there is none."""
+    if not recover(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
 
 
 class Manifest:
@@ -57,29 +155,22 @@ class Manifest:
         return os.path.join(self.root, f"unit-{safe}.json")
 
     def mark_done(self, unit: str, meta: dict | None = None) -> None:
-        tmp = self._path(unit) + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({"unit": str(unit), **(meta or {})}, f)
-        os.replace(tmp, self._path(unit))  # atomic on POSIX
+        write_text(
+            self._path(unit), json.dumps({"unit": str(unit), **(meta or {})})
+        )
 
     def is_done(self, unit: str) -> bool:
         return os.path.exists(self._path(unit))
 
     def done_units(self) -> set[str]:
-        out = set()
-        for f in os.listdir(self.root):
-            if f.startswith("unit-") and f.endswith(".json"):
-                with open(os.path.join(self.root, f), encoding="utf-8") as fh:
-                    out.add(json.load(fh)["unit"])
-        return out
+        return {m["unit"] for m in self.read_meta()}
 
     def read_meta(self) -> list[dict]:
-        out = []
-        for f in sorted(os.listdir(self.root)):
-            if f.startswith("unit-") and f.endswith(".json"):
-                with open(os.path.join(self.root, f), encoding="utf-8") as fh:
-                    out.append(json.load(fh))
-        return out
+        return [
+            read_json(os.path.join(self.root, f))
+            for f in sorted(os.listdir(self.root))
+            if f.startswith("unit-") and f.endswith(".json")
+        ]
 
 
 class TableLog:
@@ -90,8 +181,8 @@ class TableLog:
     manifest lists without touching data; ``TableLog`` provides the
     same contract from a JSON log:
 
-    - :meth:`commit` records the table's current file list (relative
-      path + size) as a new snapshot in ONE directory walk — the
+    - :meth:`commit` records the table's current file list
+      (:func:`file_entries`) as a new snapshot in ONE directory walk — the
       snapshot id is content-addressed FROM that same list, so the
       recorded files and the id can never disagree (a second
       independent walk could race a concurrent ingest). Committing an
@@ -114,29 +205,8 @@ class TableLog:
         self.root = log_dir
         os.makedirs(log_dir, exist_ok=True)
 
-    def _entries(self, table_path: str) -> dict[str, list]:
-        """{relative path: [size, mtime_ns]}. Size alone cannot detect a
-        size-preserving in-place rewrite (same byte count, different
-        rows) — exactly the unsound state the preview guard exists to
-        refuse — so the mtime rides along as the cheap content witness
-        (a content hash would be exact but costs a full data read,
-        defeating the zero-scan contract). Logs written by earlier
-        versions store a bare int size; :meth:`_sig` normalizes."""
-        out: dict[str, list] = {}
-        for root, _dirs, files in os.walk(table_path):
-            # prune hidden/metadata directories (see snapshot_id): files
-            # under _spark_metadata/ or _delta_log/ are not table data
-            # and must never be handed to spark.read.parquet as such
-            _dirs[:] = [d for d in _dirs if not d.startswith(("_", "."))]
-            for f in sorted(files):
-                if f.startswith(("_", ".")):
-                    continue
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                out[os.path.relpath(p, table_path)] = [
-                    st.st_size, st.st_mtime_ns
-                ]
-        return out
+    # logs written by earlier versions store a bare int size (_sig)
+    _entries = staticmethod(file_entries)
 
     @staticmethod
     def _sig(v) -> tuple[int, int | None]:
@@ -165,14 +235,6 @@ class TableLog:
             cls._differs(entries[p], prev_files[p]) for p in entries
         )
 
-    @classmethod
-    def _content_id(cls, entries: dict) -> str:
-        lines = sorted(
-            f"{p}:{cls._sig(v)[0]}:{cls._sig(v)[1]}"
-            for p, v in entries.items()
-        )
-        return hashlib.md5("\n".join(lines).encode()).hexdigest()[:16]
-
     def _snap_files(self) -> list[str]:
         return sorted(
             f for f in os.listdir(self.root)
@@ -180,11 +242,9 @@ class TableLog:
         )
 
     def _records(self) -> list[dict]:
-        out = []
-        for f in self._snap_files():
-            with open(os.path.join(self.root, f), encoding="utf-8") as fh:
-                out.append(json.load(fh))
-        return out
+        return [
+            read_json(os.path.join(self.root, f)) for f in self._snap_files()
+        ]
 
     def snapshots(self) -> list[str]:
         """Snapshot ids in commit order."""
@@ -204,7 +264,7 @@ class TableLog:
         recorded, or it would become the next run's baseline and the
         refusal would fire exactly once. Pass ``entries`` back to
         :meth:`commit` so the guard and the commit see the same walk."""
-        entries = self._entries(table_path)
+        entries = file_entries(table_path)
         records = self._records()
         latest = records[-1] if records else None
         if latest is None:
@@ -236,7 +296,10 @@ class TableLog:
         latest = records[-1] if records else None
         if latest is not None and self._same_state(latest["files"], entries):
             return latest["id"]
-        cid = self._content_id(entries)
+        # a revert to an EARLIER state re-uses its content hash but
+        # must be a distinct snapshot (unique id, correct parent) —
+        # disambiguate with the sequence number
+        cid = entries_id(entries)
         seq = len(records)
         return cid if cid not in {r["id"] for r in records} else f"{cid}@{seq}"
 
@@ -247,28 +310,25 @@ class TableLog:
         prior :meth:`preview` (the guard and the commit must not race
         a concurrent ingest between two walks)."""
         if entries is None:
-            entries = self._entries(table_path)
-        records = self._records()
-        latest = records[-1] if records else None
-        if latest is not None and self._same_state(latest["files"], entries):
-            return latest["id"]
-        cid = self._content_id(entries)
-        seq = len(records)
-        # a revert to an EARLIER state re-uses its content hash but
-        # must be a distinct snapshot (unique id, correct parent) —
-        # disambiguate with the sequence number
-        sid = cid if cid not in {r["id"] for r in records} else f"{cid}@{seq}"
-        name = os.path.join(self.root, f"snap-{seq:06d}-{cid}.json")
-        tmp = name + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(
-                {"id": sid, "seq": seq,
-                 "parent": latest["id"] if latest else None,
-                 "table": os.path.abspath(table_path),
-                 "files": entries},
-                f,
-            )
-        os.replace(tmp, name)
+            entries = file_entries(table_path)
+        sid = self.pending_id(entries)
+        snaps = self._snap_files()
+        latest = (
+            read_json(os.path.join(self.root, snaps[-1])) if snaps else None
+        )
+        if latest is not None and sid == latest["id"]:
+            return sid
+        seq = len(snaps)
+        name = f"snap-{seq:06d}-{entries_id(entries)}.json"
+        write_text(
+            os.path.join(self.root, name),
+            json.dumps({
+                "id": sid, "seq": seq,
+                "parent": latest["id"] if latest else None,
+                "table": os.path.abspath(table_path),
+                "files": entries,
+            }),
+        )
         return sid
 
     def files(self, snap: str) -> dict:

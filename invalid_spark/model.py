@@ -17,13 +17,14 @@ checks (SURVEY.md §2.3/§2.4).
 Every frame built from driver-side rows (stat results, small
 dimension tables, stored state) goes through :func:`local_frame`; a
 sink written from driver-side rows is written by the driver, through
-:func:`write_rows`.
+:func:`write_rows`, and a parquet state the driver carries between
+runs is read back through :func:`read_rows` (both publish and recover
+as :mod:`invalid_spark.io` describes).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 from collections.abc import Iterable
 
@@ -33,6 +34,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+
+from invalid_spark.io import publish, recover
 
 
 class ErrorType:
@@ -263,10 +266,11 @@ def write_rows(
     path ``path`` from the driver, with no Spark job: the Arrow table
     :func:`local_frame` would build goes straight to one parquet file.
 
-    ``mode="overwrite"`` writes a hidden sibling directory and swaps
-    it into place (the old sink is set aside, then removed);
-    ``mode="append"`` adds one part file with a unique name, renamed
-    into the sink once complete. Readers never see a partial file.
+    ``mode="overwrite"`` replaces the sink with a new directory;
+    ``mode="append"`` adds one part file with a unique name. Both
+    publish through :func:`invalid_spark.io.publish`: readers never
+    see a partial file, and a crash mid-swap leaves a state
+    :func:`read_rows` recovers.
     Every column is written nullable, as a Spark parquet write writes
     it, so ``spark.read.parquet`` reads the declared types back; an
     empty ``rows`` still writes a file carrying the schema."""
@@ -276,21 +280,23 @@ def write_rows(
     table = table.cast(
         pa.schema([f.with_nullable(True) for f in table.schema])
     )
-    path = path.rstrip(os.sep)
-    tag = uuid.uuid4().hex
-    part = f"part-{tag}.parquet"
+    part = f"part-{uuid.uuid4().hex}.parquet"
     if mode == "append":
         os.makedirs(path, exist_ok=True)
-        tmp = os.path.join(path, f".{part}.tmp")
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(path, part))
+        publish(
+            os.path.join(path, part), lambda tmp: pq.write_table(table, tmp)
+        )
         return
-    parent, name = os.path.split(path)
-    tmp_dir = os.path.join(parent, f".{name}.tmp-{tag}")
-    old_dir = os.path.join(parent, f".{name}.old-{tag}")
-    os.makedirs(tmp_dir)
-    pq.write_table(table, os.path.join(tmp_dir, part))
-    if os.path.exists(path):
-        os.replace(path, old_dir)
-    os.replace(tmp_dir, path)
-    shutil.rmtree(old_dir, ignore_errors=True)
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        pq.write_table(table, os.path.join(tmp, part))
+
+    publish(path, write)
+
+
+def read_rows(path: str) -> list[dict]:
+    """The rows of the parquet state :func:`write_rows` published at
+    ``path``, as dicts; ``[]`` when there is none. A crash mid-swap
+    is recovered first (:func:`invalid_spark.io.recover`)."""
+    return pq.read_table(path).to_pylist() if recover(path) else []

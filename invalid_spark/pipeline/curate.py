@@ -241,7 +241,6 @@ def mix_report(
     df: DataFrame,
     domain_col: str,
     target: dict[str, float],
-    materialize: bool = True,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Domain-mix report for downsample-only data mixing: given target
@@ -261,11 +260,11 @@ def mix_report(
 
     One hash-aggregate over the corpus (domains-sized output), then
     arithmetic on the tiny frame — the corpus itself is scanned once
-    and never shuffled beyond the count. ``materialize=True`` (default)
-    eagerly localCheckpoints the domains-sized counts so the feasible-
-    size cap and the outer report — which both consume it — don't each
-    re-aggregate the corpus (the ``curation_decisions`` single-scan
-    device; pass ``materialize=False`` to stay lazy). Every expression is plain
+    and never shuffled beyond the count. The domains-sized counts are
+    eagerly localCheckpointed so the feasible-size cap and the outer
+    report — which both consume them — don't each re-aggregate the
+    corpus (the ``curation_decisions`` single-scan device). Every
+    expression is plain
     IEEE double arithmetic, so an external SQL engine fed the same
     normalized shares reproduces rates bit-for-bit.
 
@@ -291,9 +290,8 @@ def mix_report(
     counts = (
         df.groupBy(F.col(domain_col).cast("string").alias("domain"))
         .agg(measure.alias("n"))
+        .localCheckpoint(eager=True)
     )
-    if materialize:
-        counts = counts.localCheckpoint(eager=True)
     n_type = "double" if weight_col else "long"
     j = counts.join(F.broadcast(tgt), "domain", "full_outer").select(
         "domain",

@@ -1225,10 +1225,10 @@ def dup_span_stats(
         - F.greatest(F.col("i"), F.coalesce(prev_end, F.col("i"))),
     )
     agg = (
-        dp.select(*doc, contrib.alias("c"))
+        dp.select(*doc, "i", contrib.alias("c"))
         .groupBy(*doc)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_dup_positions"),
+            F.countDistinct("i").cast("long").alias("n_dup_positions"),
             F.sum("c").cast("long").alias("covered_tokens"),
         )
     )

@@ -264,6 +264,8 @@ def write_markdown(spark, run, **kwargs) -> str:
     ``out_dir/report.md`` and return the path."""
     import os
 
+    from invalid_spark.io import write_text
+
     text = render_markdown(
         spark,
         run.out_dir,
@@ -274,10 +276,7 @@ def write_markdown(spark, run, **kwargs) -> str:
         **kwargs,
     )
     path = os.path.join(run.out_dir, "report.md")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(text)
-    os.replace(tmp, path)
+    write_text(path, text)
     return path
 
 

@@ -64,10 +64,15 @@ Lifecycle (the Spark re-expression of the reference's
    the stored grid (the comparison with the stored state, folded as a
    local frame). These sinks hold a few rows the driver already has,
    so the driver writes them (:func:`~invalid_spark.model.write_rows`:
-   no Spark job), and it reads the driver-sized state they carry
-   between snapshots (``metrics_history``, ``drift_state``) with
-   ``pyarrow``. Spark writes only what it computes at table scale:
-   violations, distribution verdicts and the quarantine split.
+   no Spark job). The state carried between snapshots is read back
+   by one recovering read each: ``drift_state`` and
+   ``metrics_history`` by :func:`~invalid_spark.model.read_rows`,
+   ``schema_state.json`` by :func:`~invalid_spark.io.read_json`
+   (absent state reads as none; a crash mid-swap is recovered first),
+   and every state file or directory is published atomically
+   (:func:`~invalid_spark.io.publish`). Spark writes only what it
+   computes at table scale: violations, distribution verdicts and the
+   quarantine split.
 
 Bloom ``$ref`` screens are kept across calls while their dimension
 files are unchanged (:func:`_prep_blooms`).
@@ -96,7 +101,6 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from functools import reduce
 
-import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -109,11 +113,19 @@ from invalid_spark.checks import refint, relations, stats, unique
 from invalid_spark.checks import rows as rowchecks
 from invalid_spark.checks import vector as vector_checks
 from invalid_spark.dsl import RuleSet
-from invalid_spark.io import Manifest, snapshot_id
+from invalid_spark.io import (
+    Manifest,
+    entries_id,
+    file_entries,
+    read_json,
+    snapshot_id,
+    write_text,
+)
 from invalid_spark.model import (
     METRIC_SCHEMA,
     VIOLATION_SCHEMA,
     ErrorType,
+    read_rows,
     write_rows,
 )
 from invalid_spark.pipeline import dedup
@@ -234,27 +246,21 @@ def _bloom_key(col: str, spec: dict) -> tuple:
 _BLOOM_CACHE: list[tuple] = []
 
 
-def _dim_fingerprint(dim: DataFrame) -> tuple | None:
-    """The sorted ``(path, size, mtime_ns)`` of ``dim``'s input files,
-    stat-ed now (the file listing is the frame's own, so no job). None
-    when the frame reads no file (a local or checkpointed frame) or a
-    file not on the local filesystem: its contents cannot be
-    fingerprinted, so its screen is never kept."""
-    files = dim.inputFiles()
-    if not files:
+def _dim_fingerprint(dim: DataFrame) -> str | None:
+    """The :func:`~invalid_spark.io.entries_id` of ``dim``'s input
+    files, stat-ed now (the file listing is the frame's own, so no
+    job). None when the frame reads no file (a local or checkpointed
+    frame) or a file not on the local filesystem: its contents cannot
+    be fingerprinted, so its screen is never kept."""
+    urls = [urllib.parse.urlparse(f) for f in dim.inputFiles()]
+    if not urls or any(u.scheme not in ("", "file") for u in urls):
         return None
-    out = []
-    for f in files:
-        u = urllib.parse.urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        path = urllib.parse.unquote(u.path)
-        try:
-            st = os.stat(path)
-        except OSError:
-            return None
-        out.append((path, st.st_size, st.st_mtime_ns))
-    return tuple(sorted(out))
+    try:
+        return entries_id(file_entries(
+            os.sep, [urllib.parse.unquote(u.path) for u in urls]
+        ))
+    except OSError:
+        return None
 
 
 def _prep_blooms(
@@ -378,7 +384,6 @@ def pixel_stage(
     plan: rowchecks.RowCheckPlan,
     row_key: str,
     run_id: str,
-    udf_parallelism: int | None = None,
     keep_cols: list[str] | None = None,
 ) -> DataFrame | None:
     """The ``$pixel`` violations of ``df``: one
@@ -392,7 +397,6 @@ def pixel_stage(
             bytes_col=col,
             psnr_min=float(spec.get("psnr_min", 40.0)),
             run_id=run_id,
-            parallelism=udf_parallelism,
             keep_cols=keep_cols,
         )
         for col, spec in plan.pixel_specs
@@ -492,7 +496,6 @@ def validate(
     partition_col: str | None = None,
     unit_batch: int = 16,
     prev_df: DataFrame | None = None,
-    udf_parallelism: int | None = None,
     max_batches: int | None = None,
     manifest_dir: str | None = None,
     quarantine: bool = False,
@@ -647,7 +650,7 @@ def validate(
     if plan.pixel_specs and run_units:
         pixel = pixel_stage(
             src.filter(F.col("__unit").isin(run_units)), plan, row_key,
-            run_id, udf_parallelism, keep_cols=keep,
+            run_id, keep_cols=keep,
         ).localCheckpoint(eager=True)
     stages: list[tuple[list[str], Callable[[], DataFrame], str | None]] = []
     for i in range(0, len(pending), unit_batch):
@@ -814,10 +817,7 @@ def validate(
 
     schema_path = os.path.join(out_dir, "schema_state.json")
     fp = schema_checks.schema_fingerprint(df)
-    stored_schema = None
-    if os.path.exists(schema_path):
-        with open(schema_path, encoding="utf-8") as f:
-            stored_schema = json.load(f)
+    stored_schema = read_json(schema_path)
     schema_stale = (
         stored_schema is None or stored_schema.get("snapshot") != snapshot
     )
@@ -830,11 +830,9 @@ def validate(
             "run_id string, snapshot_id string",
         )
     if schema_stale:
-        # tmp + atomic replace, local-POSIX like the manifest
-        tmp = schema_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({"snapshot": snapshot, "schema": fp}, f)
-        os.replace(tmp, schema_path)
+        write_text(
+            schema_path, json.dumps({"snapshot": snapshot, "schema": fp})
+        )
 
     # ---- one table-level pass: $assert, $anomaly inputs, $drift grid --
     # Each layer is aggregate columns plus a driver-side finish; ONE
@@ -847,20 +845,16 @@ def validate(
     # treats an embedding like `planes` ordinary numeric columns.
     d_specs, d_df, d_prev = _expand_vector_drift(df, plan.drift_specs, prev_df)
     state_dir = os.path.join(out_dir, "drift_state")
-    old_dir = state_dir + ".old"
-    if os.path.exists(old_dir) and not os.path.exists(state_dir):
-        # a crash between swap steps left only the set-aside copy:
-        # recover it so the stored-state comparison still happens
-        os.replace(old_dir, state_dir)
     # The stored drift state is O(bins) rows: the driver reads it and
     # hands it over as a LocalRelation. It is tagged with the snapshot
     # it was built from: a resume/re-run of the SAME snapshot must not
     # compare the table against its own state (statistic 0 would
     # overwrite the real drift verdict) nor re-write identical state,
-    # so it needs no grid either.
+    # so it needs no grid either. The read recovers a crash mid-swap
+    # of the last write, so the stored-state comparison still happens.
     stored = stored_snap = None
-    if plan.drift_specs and prev_df is None and os.path.exists(state_dir):
-        state_rows = pq.read_table(state_dir).to_pylist()
+    if plan.drift_specs and prev_df is None:
+        state_rows = read_rows(state_dir)
         stored_snap = state_rows[0]["snapshot_id"] if state_rows else None
         if stored_snap != snapshot:
             stored = state_rows
@@ -915,11 +909,7 @@ def validate(
     # come from the table-level pass above.
     if plan.anomaly_specs:
         hist_dir = os.path.join(out_dir, "metrics_history")
-        hist_rows = (
-            pq.read_table(hist_dir).to_pylist()
-            if os.path.exists(hist_dir)
-            else []
-        )
+        hist_rows = read_rows(hist_dir)
         max_seq = max((r["seq"] for r in hist_rows), default=0)
         seen_snap = any(r["snapshot_id"] == snapshot for r in hist_rows)
         # an idempotent re-run of the SAME snapshot must not compare
@@ -989,25 +979,11 @@ def validate(
                 "column string, test string, statistic double, p_value double, "
                 "drifted boolean, run_id string, snapshot_id string",
             )
-        tmp_dir = state_dir + ".tmp"
         write_rows(
-            tmp_dir,
+            state_dir,
             [(*r, snapshot) for r in state],
             drift_checks.STATE_SCHEMA + ", snapshot_id string",
         )
-        import shutil
-
-        # three-step swap so a crash at ANY point leaves a recoverable
-        # state directory (either state_dir itself or the .old
-        # set-aside, recovered above): set the previous state aside,
-        # promote the new one, then drop the old
-        if os.path.exists(old_dir):
-            shutil.rmtree(old_dir)
-        if os.path.exists(state_dir):
-            os.replace(state_dir, old_dir)
-        os.replace(tmp_dir, state_dir)
-        if os.path.exists(old_dir):
-            shutil.rmtree(old_dir)
 
     return result
 
@@ -1294,11 +1270,10 @@ def _record_mode(manifest_dir: str, mode: str, run_id: str, snap: str) -> None:
     so the audit trail shows WHICH contract validated this snapshot
     (file-level runs write nothing — normal mode is the default)."""
     os.makedirs(manifest_dir, exist_ok=True)
-    path = os.path.join(manifest_dir, "mode.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"mode": mode, "run_id": run_id, "snapshot_id": snap}, f)
-    os.replace(tmp, path)
+    write_text(
+        os.path.join(manifest_dir, "mode.json"),
+        json.dumps({"mode": mode, "run_id": run_id, "snapshot_id": snap}),
+    )
 
 
 def validate_suite(

@@ -9,7 +9,7 @@ streaming-specific wiring:
   by the batch runner's per-slice builder
   (:func:`invalid_spark.runner.stage_violations`): row checks,
   stream-static ``$ref`` and ``$caption-eq`` joins, ``$vector`` /
-  ``$align`` projections and optional pixel checks. Stream-static
+  ``$align`` projections and ``$pixel`` checks, as in a batch. Stream-static
   joins are Spark-native: the dimension is a batch DataFrame re-read
   per micro-batch.
 - :func:`windowed_metrics` — violations per (event-time window,
@@ -44,8 +44,6 @@ def validate_stream(
     row_key: str,
     dims: dict[str, DataFrame] | None = None,
     run_id: str = "",
-    with_pixel_checks: bool = False,
-    udf_parallelism: int | None = None,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """Violations stream for a streaming input DataFrame.
@@ -73,16 +71,12 @@ def validate_stream(
             "required column missing from stream schema: "
             + "; ".join(sv["message"] for sv in plan.schema_violations)
         )
-    pixel = (
-        runner.pixel_stage(
-            stream_df, plan, row_key, run_id, udf_parallelism,
-            keep_cols=keep_cols,
-        )
-        if with_pixel_checks else None
-    )
     return runner.stage_violations(
         stream_df, rules, row_key, plan, dims or {}, run_id,
-        keep_cols=keep_cols, pixel=pixel,
+        keep_cols=keep_cols,
+        pixel=runner.pixel_stage(
+            stream_df, plan, row_key, run_id, keep_cols=keep_cols
+        ),
     )
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import ast
 import math
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,6 +49,51 @@ def test_create_dataframe_only_inside_local_frame():
         (p, line) for p, line, fns in calls
         if not (p == "model.py" and "local_frame" in fns)
     ]
+    assert stray == []
+
+
+def test_state_publish_and_recovery_only_in_shared_helpers():
+    """Outside ``io.publish`` and ``io.recover`` no module in the
+    package calls ``os.replace`` or builds a ``.tmp`` / ``.old`` path:
+    every state file or directory is published and recovered one
+    way."""
+    helpers = {("io.py", "publish"), ("io.py", "recover")}
+    found, stray = [], []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, PKG)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), path)
+            owner = {}
+            for fn in ast.walk(tree):
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    for n in ast.walk(fn):
+                        owner.setdefault(n, []).append(fn.name)
+            docs = {
+                n.value for n in ast.walk(tree)
+                if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+            }
+            for n in ast.walk(tree):
+                replace = (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "replace"
+                    and isinstance(n.func.value, ast.Name)
+                    and n.func.value.id == "os"
+                )
+                suffix = (
+                    isinstance(n, ast.Constant) and n not in docs
+                    and isinstance(n.value, str)
+                    and re.search(r"\.(tmp|old)\b", n.value)
+                )
+                if replace or suffix:
+                    found.append(rel)
+                    if not any((rel, fn) in helpers for fn in owner.get(n, [])):
+                        stray.append((rel, n.lineno))
+    assert "io.py" in found, "the scan found the shared helpers' work nowhere"
     assert stray == []
 
 

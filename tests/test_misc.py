@@ -156,6 +156,29 @@ def test_snapshot_id_changes_with_content(tmp_path):
     assert s1 != s2 and s2 == s3
 
 
+def test_snapshot_id_sees_same_size_rewrite(tmp_path):
+    """A same-size in-place rewrite changes ``snapshot_id``, which is
+    the TableLog id of the same file list (one fingerprint: relative
+    path, size and mtime)."""
+    import hashlib
+
+    from invalid_spark.io import TableLog
+
+    d = tmp_path / "t"
+    d.mkdir()
+    f = d / "a.parquet"
+    f.write_bytes(b"aaaa")
+    os.utime(f, ns=(1_000_000_000, 1_000_000_000))
+    s1 = snapshot_id(str(d))
+    f.write_bytes(b"bbbb")  # same 4 bytes, different content
+    os.utime(f, ns=(2_000_000_000, 2_000_000_000))
+    s2 = snapshot_id(str(d))
+    assert s1 != s2
+    assert s2 == hashlib.md5(b"a.parquet:4:2000000000").hexdigest()[:16]
+    assert s2 == TableLog(str(tmp_path / "log")).commit(str(d))
+    assert snapshot_id(str(f)) == s2
+
+
 def test_ks_pvalue_calibration():
     # d=0 → p=1; large d on large samples → p≈0; monotone in d
     assert mathutil.ks_pvalue(0.0, 100, 100) == 1.0

@@ -508,6 +508,7 @@ _dup_span_rows = st.lists(
 @given(_dup_span_rows)
 @example([("d1", "a b"), ("d1", "a b c a b c"), ("d3", "a b c a b c")])
 @example([("k1", "a b c"), ("k1", "a b c"), ("k2", "c a b c")])  # a repeated row
+@example([("k1", "a b c d"), ("k1", "a b c d"), ("k2", "a b c d e")])
 def test_dup_span_coverage_matches_reference(spark, rows):
     """``dup_span_stats`` covers what a plain-Python interval union
     covers, with a document being (key, text): a 3-gram position is
@@ -541,3 +542,4 @@ def test_dup_span_coverage_matches_reference(spark, rows):
         assert r["n_tokens"] == len(doc[1].split())
         assert r["covered_tokens"] <= r["n_tokens"]
         assert r["covered_tokens"] == covered(doc)
+        assert r["n_dup_positions"] <= r["n_positions"]

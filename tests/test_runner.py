@@ -813,6 +813,42 @@ def test_validate_suite_multi_table_and_resume(spark, tmp_path):
         assert r.units_done == [] and r.units_skipped
 
 
+def test_validate_suite_refuses_resume_after_same_size_rewrite(
+    spark, tmp_path
+):
+    """A table file rewritten in place with the same size and one
+    changed value is a new snapshot: the re-run into the same out_dir
+    refuses to resume the old manifest instead of skipping every unit
+    and keeping the stale pass verdict."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = tmp_path / "docs"
+    t.mkdir()
+    f = t / "part-0.parquet"
+
+    def write(lang):
+        pq.write_table(
+            pa.table({"doc_id": [1, 2, 3], "lang": ["en", "en", lang]}),
+            f, compression="none", use_dictionary=False,
+        )
+
+    rules = tmp_path / "rules.yaml"
+    rules.write_text("lang: {$type: $str, $of: [en]}\n")
+    suite = {"tables": {"docs": {"path": str(t), "rules": str(rules),
+                                 "row_key": "doc_id"}}}
+    out = str(tmp_path / "audit")
+    write("en")
+    res = runner.validate_suite(spark, suite, out)
+    assert runner.suite_summary(spark, res)["passed"] is True
+    st = f.stat()
+    write("xx")
+    os.utime(f, ns=(st.st_mtime_ns + 10**9,) * 2)
+    assert f.stat().st_size == st.st_size
+    with pytest.raises(ValueError, match="written for snapshot"):
+        runner.validate_suite(spark, suite, out)
+
+
 def test_validate_suite_fail_fast_table_reported_not_crash(spark, tmp_path):
     """A suite table whose rules fail-fast (missing required column)
     is reported passed=false / fail_fast=true in the summary instead

@@ -2737,6 +2737,23 @@ def test_dup_span_documents_are_key_and_text(spark):
         assert out[k]["coverage_frac"] == 1.0 and out[k]["flagged"]
 
 
+def test_dup_span_repeated_row_counts_each_position_once(spark):
+    """Rows that repeat both key and text are one document: each of its
+    duplicated positions counts once, not once per row, so
+    ``n_dup_positions`` never exceeds ``n_positions``."""
+    from invalid_spark.pipeline import dedup as D
+
+    df = spark.createDataFrame(
+        [("k1", "a b c d"), ("k1", "a b c d"), ("k2", "a b c d e")],
+        "doc_id string, text string",
+    )
+    got = sorted(
+        (r["id"], r["n_positions"], r["n_dup_positions"], r["covered_tokens"])
+        for r in D.dup_span_stats(df, n=3).collect()
+    )
+    assert got == [("k1", 2, 2, 4), ("k1", 2, 2, 4), ("k2", 3, 2, 4)]
+
+
 def test_unigram_logprob_planted(spark):
     """Unigram LM bits/token: hand-computed cross-entropy against
     the corpus's own token distribution; empty doc → NULL score."""

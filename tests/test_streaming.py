@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from invalid_spark import streaming, synth
+from invalid_spark import runner, streaming, synth
 from invalid_spark.checks import rows as rowchecks
 from invalid_spark.dsl import load_rules
 
@@ -77,6 +77,35 @@ def test_stream_matches_batch(spark, landing, tmp_path):
         map(tuple, bv.select(*cols).collect()), key=key
     )
     assert got.count() > 0
+
+
+def test_stream_pixel_rows_match_batch(spark, tmp_path):
+    """A ``$pixel`` rule runs on a stream as in a batch: the stream
+    emits exactly the rows ``runner.pixel_stage`` finds over the same
+    rows (a clean row, then w out of range, fmt bmp, corrupt bytes and
+    a flipped phash bit)."""
+    rules = load_rules("bytes: {$type: $bin, $pixel: {psnr_min: 40.0}}\n")
+    d = str(tmp_path / "landing")
+    synth.images_df(spark, 140, partitions=1).filter(
+        F.col("image_id").isin(
+            [f"img-{i:012d}" for i in (3, 102, 106, 112, 130)]
+        )
+    ).coalesce(1).write.parquet(d)
+    batch = spark.read.parquet(d)
+    want = runner.pixel_stage(
+        batch, rowchecks.compile_row_checks(batch, rules), "image_id", ""
+    )
+    v = streaming.validate_stream(
+        spark.readStream.schema(batch.schema).parquet(d), rules, "image_id"
+    )
+    out = str(tmp_path / "viol")
+    streaming.write_stream(v, out, str(tmp_path / "ckpt")).awaitTermination(120)
+    cols = ["row_key", "column", "rule_id", "error_type", "message", "observed"]
+    key = lambda t: tuple(map(str, t))
+    rows = lambda frame: sorted(map(tuple, frame.select(*cols).collect()), key=key)
+    expected = rows(want)
+    assert {r[3] for r in expected} >= {"decodeError", "pixelMismatch"}
+    assert rows(spark.read.parquet(out)) == expected
 
 
 def test_stream_resume_processes_only_new(spark, landing, tmp_path):
